@@ -9,15 +9,102 @@ no exact Spark analog — `update` output mode re-emits corrected window
 aggregates while the watermark holds the window open, which covers the
 reference's in-lateness updates; truly-late capture is a downstream
 filter against the observed watermark.
+
+Jobs that need full batch semantics per micro-batch (per-batch
+aggregation, driver-side sketch state) run under ``foreachBatch``
+through one loop, :func:`_foreach_batch`, which owns the monitors'
+exactly-once replay/restart contract.
 """
 
 from __future__ import annotations
 
+from typing import Any, NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..caching import release_scope
 from ..operators.topn import topn_counts_per_window
 from ..operators.windows import windowed_count, windowed_distinct
+
+
+class Snapshot(NamedTuple):
+    """A monitor ``seed`` stamped with the last epoch its payload
+    merged: ``Snapshot(epoch_id, payload)``, both taken from one
+    snapshot-hook (or sink) call. Valid only when resuming the
+    checkpoint that epoch came from — see :func:`_foreach_batch`."""
+
+    epoch: int
+    payload: Any
+
+
+def _payload(seed):
+    """A seed's state payload, whether or not it carries an epoch."""
+    return seed.payload if isinstance(seed, Snapshot) else seed
+
+
+def _foreach_batch(stream, sink, emit, fold=None, snapshot=None, seed=None, empty=None):
+    """Configure ``stream.writeStream.foreachBatch`` — the one
+    micro-batch loop behind every ``foreachBatch`` job in this module.
+    Returns the ``DataStreamWriter``; the caller sets trigger and
+    checkpoint and ``.start()``s it.
+
+    Per epoch, inside ``caching.release_scope()`` (a batch's internal
+    persists are released once its sink has run, so a long-running
+    query holds no growing block-store state):
+
+    1. ``fold(batch)`` merges the batch into the monitor's driver-side
+       state — only for an epoch id it has not merged yet;
+    2. ``emit(batch)`` builds the sink's frame from the current state
+       (a stateless job: from the batch alone); ``None`` means the
+       state is empty, and the sink gets one all-NULL row of the DDL
+       schema ``empty`` instead;
+    3. ``sink(frame, epoch_id)``, then ``snapshot(epoch_id)``.
+
+    Replay/restart contract — exactly-once per epoch, by epoch-keyed
+    idempotence (the Structured Streaming paper's design):
+
+    - ``foreachBatch`` is at-least-once: an epoch whose sink or
+      snapshot hook raised is redelivered with the SAME epoch id when
+      the query restarts on its checkpoint. Monitor merges are not
+      idempotent in general (Misra-Gries and Count-Min counters, KLL
+      compaction, counter sums), so ``fold`` runs only when the epoch
+      id differs from the last one merged, and always before the sink:
+      a redelivered epoch re-emits the current state without merging
+      again, and a failing sink can neither lose nor double a merge.
+      ``fold`` must leave the state untouched when it raises.
+    - The state lives in this process, not in the checkpoint. To
+      survive a process restart, persist what the snapshot hook (or,
+      where the emitted frame is the whole state, the sink) receives
+      and pass it back as the monitor's ``seed``:
+
+      - resuming the SAME checkpoint: pass ``Snapshot(epoch_id,
+        payload)`` with the epoch id that came with the payload, so a
+        redelivery of that epoch is not merged again;
+      - a FRESH checkpoint: pass the bare payload. A new checkpoint
+        numbers epochs from 0 again, so a ``Snapshot`` epoch would
+        skip a batch that was never merged; a bare payload means "no
+        epoch known" and every delivered batch merges.
+    """
+    last = {"epoch": seed.epoch if isinstance(seed, Snapshot) else None}
+
+    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+        with release_scope():
+            if fold is not None and epoch_id != last["epoch"]:
+                fold(batch_df)
+                last["epoch"] = epoch_id
+            out = emit(batch_df)
+            if out is None:
+                schema = StructType.fromDDL(empty)
+                out = batch_df.sparkSession.createDataFrame(
+                    [(None,) * len(schema.fields)], schema
+                )
+            sink(out, epoch_id)
+            if snapshot is not None:
+                snapshot(epoch_id)
+
+    return stream.writeStream.foreachBatch(_process)
 
 
 def hot_items_stream(user_behavior: DataFrame, delay: str = "1 second") -> DataFrame:
@@ -147,7 +234,6 @@ def incremental_dedup_stream(
     frame per batch. Returns the configured ``DataStreamWriter`` —
     caller sets trigger/checkpoint and ``.start()``s it.
     """
-    from ..caching import release_scope
     from ..operators.dedup import build_dedup_index, incremental_dedup
 
     if ref_index is None:
@@ -160,14 +246,13 @@ def incremental_dedup_stream(
         ref_index = build_dedup_index(reference, id_col, n, k, bands).persist()
         ref_index.count()
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            verdicts = incremental_dedup(
-                batch_df, reference, id_col, n, k, bands, threshold, ref_index=ref_index
-            )
-            sink(verdicts, epoch_id)
-
-    return docs_stream.writeStream.foreachBatch(_process)
+    return _foreach_batch(
+        docs_stream,
+        sink,
+        lambda batch_df: incremental_dedup(
+            batch_df, reference, id_col, n, k, bands, threshold, ref_index=ref_index
+        ),
+    )
 
 
 def media_phash_stream(
@@ -197,7 +282,6 @@ def media_phash_stream(
     configured ``DataStreamWriter`` — caller sets trigger/checkpoint
     and ``.start()``s it.
     """
-    from ..caching import release_scope
     from ..operators.multimodal import perceptual_hash, phash_incremental
 
     if ref_sig is None:
@@ -209,14 +293,13 @@ def media_phash_stream(
         ref_sig = perceptual_hash(reference).persist()
         ref_sig.count()
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            verdicts = phash_incremental(
-                batch_df, reference, max_hamming, ref_sig=ref_sig
-            )
-            sink(verdicts, epoch_id)
-
-    return media_stream.writeStream.foreachBatch(_process)
+    return _foreach_batch(
+        media_stream,
+        sink,
+        lambda batch_df: phash_incremental(
+            batch_df, reference, max_hamming, ref_sig=ref_sig
+        ),
+    )
 
 
 def winnow_decontaminate_stream(
@@ -260,7 +343,6 @@ def winnow_decontaminate_stream(
     ``writer.eval_index_handle.unpersist()`` after the query
     terminates (``query.awaitTermination()`` / a
     ``StreamingQueryListener`` onQueryTerminated hook)."""
-    from ..caching import release_scope
     from ..operators.text import (
         WINNOW_K,
         WINNOW_W,
@@ -282,14 +364,13 @@ def winnow_decontaminate_stream(
         eval_index = winnow_eval_index(eval_df, k=k, w=w).persist()
         eval_index.count()
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            flagged = winnow_decontaminate(
-                batch_df, k=k, w=w, eval_index=eval_index
-            )
-            sink(flagged, epoch_id)
-
-    writer = docs_stream.writeStream.foreachBatch(_process)
+    writer = _foreach_batch(
+        docs_stream,
+        sink,
+        lambda batch_df: winnow_decontaminate(
+            batch_df, k=k, w=w, eval_index=eval_index
+        ),
+    )
     # expose the (possibly internally persisted) index so the caller
     # can unpersist after query termination — see CACHE LIFECYCLE
     writer.eval_index_handle = eval_index
@@ -320,18 +401,15 @@ def winnow_decontaminate_multi_stream(
     ``sink(hits_df, epoch_id)`` receives one row per (contaminated
     batch doc, benchmark hit) with the per-benchmark evidence
     columns; clean docs emit nothing."""
-    from ..caching import release_scope
     from ..operators.text import WINNOW_K, WINNOW_W, winnow_decontaminate_multi
 
     k = WINNOW_K if k is None else k
     w = WINNOW_W if w is None else w
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            hits = winnow_decontaminate_multi(batch_df, eval_index, k=k, w=w)
-            sink(hits, epoch_id)
-
-    return docs_stream.writeStream.foreachBatch(_process)
+    return _foreach_batch(
+        docs_stream,
+        sink,
+        lambda batch_df: winnow_decontaminate_multi(batch_df, eval_index, k=k, w=w),
+    )
 
 
 def bucket_partials_stream(
@@ -545,7 +623,7 @@ def drift_monitor_stream(
         bounds = spark.createDataFrame(lazy_bounds.collect(), lazy_bounds.schema)
         ref_counts = spark.createDataFrame(lazy_counts.collect(), lazy_counts.schema)
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
+    def emit(batch_df: DataFrame) -> DataFrame:
         batch_counts = (
             batch_df.select(key_col, value_col)
             .crossJoin(F.broadcast(bounds))
@@ -572,12 +650,11 @@ def drift_monitor_stream(
                 F.coalesce("c_new", F.lit(0)).alias("c1"),
             )
         )
-        psi = psi_from_counts(filled, key_col, n_buckets).withColumnRenamed(
+        return psi_from_counts(filled, key_col, n_buckets).withColumnRenamed(
             "n_first", "n_reference"
         ).withColumnRenamed("n_second", "n_batch")
-        sink(psi, epoch_id)
 
-    return events_stream.writeStream.foreachBatch(_process)
+    return _foreach_batch(events_stream, sink, emit)
 
 
 def heavy_hitters_stream(
@@ -585,7 +662,7 @@ def heavy_hitters_stream(
     sink,
     col: str = "event_type",
     k: int = 16,
-    seed: "tuple[dict[str, int], int] | None" = None,
+    seed: "tuple[dict[str, int], int] | Snapshot | None" = None,
 ):
     """Continuous Misra-Gries heavy hitters over a stream: each
     micro-batch is sketched DISTRIBUTED (operators.sketches.misra_gries
@@ -603,63 +680,51 @@ def heavy_hitters_stream(
     shuffled state per batch is capped at k rows per partition no
     matter how many distinct keys the stream carries.
 
-    Restart contract: the running sketch lives in THIS process (a
-    foreachBatch closure), not in the checkpoint — after a restart the
-    stream resumes from the checkpoint offsets but the sketch restarts
-    empty unless seeded. The emitted ``(item, est, n_seen)`` frame IS
-    the whole state: persist the last epoch's frame wherever you like
-    and replay it into a restarted monitor via ``seed`` (a
-    ``({item: est}, n_seen)`` pair). A seeded monitor evolves
-    IDENTICALLY to one that never restarted — both hold a k-summary
-    and fold each batch's sketch in with the same PODS'12 merge — so
-    restart parity is an equality (pinned by
+    Replay and restart follow :func:`_foreach_batch`. The emitted
+    ``(item, est, n_seen)`` frame IS the whole state: ``seed`` takes
+    the last frame as a ``({item: est}, n_seen)`` pair. A seeded
+    monitor evolves IDENTICALLY to one that never restarted — both
+    hold a k-summary and fold each batch's sketch in with the same
+    PODS'12 merge — so restart parity is an equality (pinned by
     tests/test_streaming.py::test_heavy_hitters_stream_restart...),
     while accuracy vs TRUE counts keeps the usual n/(k+1) bound."""
     import pandas as pd
 
-    from ..caching import release_scope
     from ..operators.sketches import _compress, misra_gries
 
+    counts, n = _payload(seed) or ({}, 0)
     # drop the empty-state placeholder entry (item=None) a no-data
     # epoch emits — seeding from such a frame must not crash or
     # inject a phantom counter
-    seeded = {i: int(c) for i, c in (seed[0] if seed else {}).items() if i is not None}
-    state = {
-        "counts": pd.Series(seeded, dtype="int64"),
-        "n": seed[1] if seed else 0,
-    }
+    seeded = {i: int(c) for i, c in counts.items() if i is not None}
+    state = {"counts": pd.Series(seeded, dtype="int64"), "n": n}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            # one source scan per batch: the sketch and the batch total
-            # are two actions over the same persisted projection, and n
-            # counts only non-null keys — the sketch can never emit a
-            # null item, so a null-heavy batch must not inflate the
-            # n/(k+1) error budget
-            sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
-            try:
-                batch_rows = misra_gries(sel, col, k).collect()
-                state["n"] += sel.count()
-            finally:
-                sel.unpersist()
-            if batch_rows:
-                batch_sketch = pd.Series(
-                    {r.item: r.est for r in batch_rows}, dtype="int64"
-                )
-                merged = state["counts"].add(batch_sketch, fill_value=0)
-                state["counts"] = _compress(merged.astype("int64"), k)
-            out = spark.createDataFrame(
-                [
-                    (str(item), int(est), int(state["n"]))
-                    for item, est in state["counts"].items()
-                ]
-                or [(None, None, int(state["n"]))],
-                "item string, est long, n_seen long",
-            )
-            sink(out, epoch_id)
+    def fold(batch_df: DataFrame) -> None:
+        # one source scan per batch: the sketch and the batch total
+        # are two actions over the same persisted projection, and n
+        # counts only non-null keys — the sketch can never emit a
+        # null item, so a null-heavy batch must not inflate the
+        # n/(k+1) error budget
+        sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
+        try:
+            batch_rows = misra_gries(sel, col, k).collect()
+            state["n"] += sel.count()
+        finally:
+            sel.unpersist()
+        if batch_rows:
+            batch_sketch = pd.Series({r.item: r.est for r in batch_rows}, dtype="int64")
+            merged = state["counts"].add(batch_sketch, fill_value=0)
+            state["counts"] = _compress(merged.astype("int64"), k)
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def emit(batch_df: DataFrame) -> DataFrame:
+        n_seen = int(state["n"])
+        return batch_df.sparkSession.createDataFrame(
+            [(str(item), int(est), n_seen) for item, est in state["counts"].items()]
+            or [(None, None, n_seen)],
+            "item string, est long, n_seen long",
+        )
+
+    return _foreach_batch(events_stream, sink, emit, fold, seed=seed)
 
 
 def cms_stream(
@@ -669,7 +734,7 @@ def cms_stream(
     watch: list[str] | None = None,
     width: int = 512,
     depth: int = 4,
-    seed: "tuple[dict[tuple[int, int], int], int] | None" = None,
+    seed: "tuple[dict[tuple[int, int], int], int] | Snapshot | None" = None,
     counter_snapshot=None,
 ):
     """Continuous Count-Min frequency monitor: each micro-batch is
@@ -688,23 +753,22 @@ def cms_stream(
     surface the reference's per-window exact counts can't give over
     unbounded key spaces.
 
-    Restart contract: the counter table lives in this process, not the
-    checkpoint — and unlike heavy_hitters_stream the per-watch-item
-    estimates the sink sees CANNOT reconstruct it, so durability has
-    its own hooks: ``counter_snapshot(counters, n_seen, epoch_id)``
-    receives the full (r, b) -> c table after every batch (persist it
-    wherever you like — it is <= depth x width longs), and ``seed``
-    replays the last snapshot into a restarted monitor. Seeding is
+    Replay and restart follow :func:`_foreach_batch`. Unlike
+    heavy_hitters_stream the per-watch-item estimates the sink sees
+    CANNOT reconstruct the state, so durability has its own hook:
+    ``counter_snapshot(counters, n_seen, epoch_id)`` receives the full
+    (r, b) -> c table after every batch (<= depth x width longs), and
+    ``seed`` takes the ``(counters, n_seen)`` pair back. Seeding is
     exact, not approximate, because the CM merge is plain counter
     addition (pinned by the restart test in tests/test_streaming.py)."""
     import hashlib
 
-    from ..caching import release_scope
     from ..operators.sketches import count_min_sketch
 
     watch = list(watch or [])
-    counters: dict[tuple[int, int], int] = dict(seed[0]) if seed else {}
-    state = {"n": seed[1] if seed else 0}
+    seeded, n = _payload(seed) or ({}, 0)
+    counters: dict[tuple[int, int], int] = dict(seeded)
+    state = {"n": n}
 
     def _buckets(item: str) -> list[tuple[int, int]]:
         # the same md5-prefix hash count_min_sketch computes JVM-side
@@ -713,34 +777,28 @@ def cms_stream(
             for i in range(depth)
         ]
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
-            try:
-                for r in count_min_sketch(sel, col, width, depth).collect():
-                    key = (r["r"], r["b"])
-                    counters[key] = counters.get(key, 0) + int(r["c"])
-                state["n"] += sel.count()
-            finally:
-                sel.unpersist()
-            out = spark.createDataFrame(
-                [
-                    (
-                        w,
-                        min(counters.get(rb, 0) for rb in _buckets(w)),
-                        state["n"],
-                    )
-                    for w in watch
-                ]
-                or [(None, None, state["n"])],
-                "item string, est_c long, n_seen long",
-            )
-            sink(out, epoch_id)
-            if counter_snapshot is not None:
-                counter_snapshot(dict(counters), state["n"], epoch_id)
+    def fold(batch_df: DataFrame) -> None:
+        sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
+        try:
+            cells = count_min_sketch(sel, col, width, depth).collect()
+            state["n"] += sel.count()
+        finally:
+            sel.unpersist()
+        for r in cells:
+            key = (r["r"], r["b"])
+            counters[key] = counters.get(key, 0) + int(r["c"])
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def emit(batch_df: DataFrame) -> DataFrame:
+        return batch_df.sparkSession.createDataFrame(
+            [(w, min(counters.get(rb, 0) for rb in _buckets(w)), state["n"]) for w in watch]
+            or [(None, None, state["n"])],
+            "item string, est_c long, n_seen long",
+        )
+
+    snapshot = None if counter_snapshot is None else (
+        lambda epoch_id: counter_snapshot(dict(counters), state["n"], epoch_id)
+    )
+    return _foreach_batch(events_stream, sink, emit, fold, snapshot, seed)
 
 
 def reservoir_stream(
@@ -751,7 +809,7 @@ def reservoir_stream(
     stratum_col: str,
     m: int,
     ares_seed: int = 1,
-    seed: "list[tuple[str, int, float]] | None" = None,
+    seed: "list[tuple[str, int, float]] | Snapshot | None" = None,
     id_type: str = "long",
     stratum_type: str = "string",
 ):
@@ -769,13 +827,12 @@ def reservoir_stream(
     itself.
 
     ``sink(df, epoch_id)`` receives the current manifest
-    ``(stratum, id, wkey, rank)`` after every batch. Restart contract:
-    the manifest IS the state — pass the last emitted manifest's
-    ``(stratum, id, wkey)`` rows to a restarted monitor via ``seed``
-    and it continues exactly where the old one stopped (the manifest
-    carries the already-computed priority keys, so nothing needs the
-    original weight column back; the top-m merge rule above makes the
-    continuation identical to an uninterrupted run — pinned by
+    ``(stratum, id, wkey, rank)`` after every batch. Replay and
+    restart follow :func:`_foreach_batch`; the manifest IS the state,
+    so ``seed`` takes the last manifest's ``(stratum, id, wkey)`` rows
+    (they carry the already-computed priority keys, so nothing needs
+    the original weight column back; the top-m merge rule above makes
+    the continuation identical to an uninterrupted run — pinned by
     tests/test_streaming.py).
 
     REQUIRES ids unique per stratum: the merge dedupes bit-identical
@@ -790,7 +847,6 @@ def reservoir_stream(
     the driver-side manifest frame (the dq_monitor_stream group_type
     convention) — ids must still be NUMERIC (the A-Res key is
     arithmetic on the id; pre-hash string keys first)."""
-    from ..caching import release_scope
     from ..operators.sampling import weighted_sample
 
     if isinstance(seed, int):
@@ -802,42 +858,43 @@ def reservoir_stream(
             "(list of (stratum, id, wkey) rows); pass the A-Res hash "
             "seed as ares_seed=..."
         )
+    schema = f"{stratum_col} {stratum_type}, {id_col} {id_type}, wkey double, rank int"
     state: dict[str, list] = {}  # stratum -> [(wkey, id)] sorted desc
-    if seed:
-        for stratum, vid, wkey in seed:
-            if vid is None or wkey is None:
-                continue  # empty-state placeholder row, not a sample
+
+    def merge(samples) -> None:
+        for stratum, wkey, vid in samples:
             state.setdefault(stratum, []).append((wkey, vid))
+        for kept in state.values():
+            # dedupe (wkey, id) pairs before truncating: a batch
+            # replayed into a monitor seeded from a manifest that
+            # already holds it re-appends bit-identical pairs (wkey is
+            # a pure function of ares_seed and id) — without the set()
+            # a duplicate would occupy two ranks and evict a distinct
+            # sample
+            kept[:] = sorted(set(kept), key=lambda t: (-t[0], t[1]))[:m]
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            batch_top = weighted_sample(
-                batch_df, id_col, weight_sql, stratum_col, m, ares_seed
-            ).select(stratum_col, id_col, "wkey")
-            for r in batch_top.collect():
-                state.setdefault(r[stratum_col], []).append((r["wkey"], r[id_col]))
-            rows = []
-            for stratum, kept in state.items():
-                # dedupe (wkey, id) pairs before truncating: foreachBatch
-                # is at-least-once across restarts, and a replayed batch
-                # re-appends bit-identical pairs (wkey is a pure function
-                # of ares_seed and id) — without the set() a duplicate
-                # would occupy two ranks and evict a distinct sample
-                kept[:] = sorted(set(kept), key=lambda t: (-t[0], t[1]))
-                del kept[m:]
-                rows += [
-                    (stratum, vid, wkey, rank)
-                    for rank, (wkey, vid) in enumerate(kept, 1)
-                ]
-            out = spark.createDataFrame(
-                rows or [(None, None, None, None)],
-                f"{stratum_col} {stratum_type}, {id_col} {id_type},"
-                " wkey double, rank int",
-            )
-            sink(out, epoch_id)
+    # skip the empty-state placeholder row, which is not a sample
+    merge(
+        (s, wkey, vid)
+        for s, vid, wkey in _payload(seed) or []
+        if vid is not None and wkey is not None
+    )
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def fold(batch_df: DataFrame) -> None:
+        batch_top = weighted_sample(
+            batch_df, id_col, weight_sql, stratum_col, m, ares_seed
+        ).select(stratum_col, id_col, "wkey")
+        merge((r[stratum_col], r["wkey"], r[id_col]) for r in batch_top.collect())
+
+    def emit(batch_df: DataFrame) -> "DataFrame | None":
+        rows = [
+            (stratum, vid, wkey, rank)
+            for stratum, kept in state.items()
+            for rank, (wkey, vid) in enumerate(kept, 1)
+        ]
+        return batch_df.sparkSession.createDataFrame(rows, schema) if rows else None
+
+    return _foreach_batch(events_stream, sink, emit, fold, seed=seed, empty=schema)
 
 
 def kmv_stream(
@@ -846,7 +903,7 @@ def kmv_stream(
     set_col: str,
     val_sql: str,
     k: int = 128,
-    seed: "list[tuple[str, int]] | None" = None,
+    seed: "list[tuple[str, int]] | Snapshot | None" = None,
 ):
     """Continuous per-set distinct-cardinality monitor on the KMV
     sketch — the fourth member of the sketch-monitor family
@@ -869,47 +926,34 @@ def kmv_stream(
     by hash ascending) plus the set's current cardinality estimate,
     computed with the same integer arithmetic as ``kmv_est_expr`` —
     exact count below k kept hashes, else (k-1) * 2^32 div h_k.
-    Restart contract: the manifest IS the state — pass the last
-    emitted ``(s, h)`` rows back via ``seed`` (hashes carry over; no
-    raw values needed)."""
-    from ..caching import release_scope
+    Replay and restart follow :func:`_foreach_batch`; the manifest IS
+    the state, so ``seed`` takes the last emitted ``(s, h)`` rows
+    (hashes carry over; no raw values needed)."""
     from ..operators.sketches import CMS_SPACE, kmv_minima
 
+    schema = "s string, h long, rn int, est long"
     state: dict[str, list[int]] = {}  # set -> sorted unique hashes, <= k
-    if seed:
-        for s, h in seed:
-            if h is None:
-                continue  # empty-state placeholder row, not a minimum
+
+    def merge(minima) -> None:
+        for s, h in minima:
             state.setdefault(s, []).append(h)
-        for s in state:
-            state[s] = sorted(set(state[s]))[:k]
+        for s, hs in state.items():
+            state[s] = sorted(set(hs))[:k]
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            batch_min = kmv_minima(batch_df, set_col, val_sql, k)
-            for r in batch_min.collect():
-                state.setdefault(r["s"], []).append(r["h"])
-            rows = []
-            for s, hs in state.items():
-                merged = sorted(set(hs))[:k]
-                state[s] = merged
-                n_kept = len(merged)
-                est = (
-                    n_kept
-                    if n_kept < k
-                    else (k - 1) * CMS_SPACE // merged[-1]
-                )
-                rows += [
-                    (s, h, rn, est) for rn, h in enumerate(merged, 1)
-                ]
-            out = spark.createDataFrame(
-                rows or [(None, None, None, None)],
-                "s string, h long, rn int, est long",
-            )
-            sink(out, epoch_id)
+    # skip the empty-state placeholder row, which is not a minimum
+    merge((s, h) for s, h in _payload(seed) or [] if h is not None)
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def fold(batch_df: DataFrame) -> None:
+        merge((r["s"], r["h"]) for r in kmv_minima(batch_df, set_col, val_sql, k).collect())
+
+    def emit(batch_df: DataFrame) -> "DataFrame | None":
+        rows = []
+        for s, hs in state.items():
+            est = len(hs) if len(hs) < k else (k - 1) * CMS_SPACE // hs[-1]
+            rows += [(s, h, rn, est) for rn, h in enumerate(hs, 1)]
+        return batch_df.sparkSession.createDataFrame(rows, schema) if rows else None
+
+    return _foreach_batch(events_stream, sink, emit, fold, seed=seed, empty=schema)
 
 
 def kll_stream(
@@ -919,7 +963,7 @@ def kll_stream(
     val_col: str,
     quantiles: "tuple[float, ...]" = (0.5, 0.95, 0.99),
     k: int = 200,
-    seed: "list[tuple[str, bytes]] | None" = None,
+    seed: "list[tuple[str, bytes]] | Snapshot | None" = None,
     sketch_snapshot=None,
 ):
     """Continuous per-set QUANTILE monitor on the native Datasketches
@@ -945,85 +989,65 @@ def kll_stream(
     in the batch operator's docstring: repartitioning alone moves
     q95 ~0.1%), which is also why the registry row is rows-only.
 
-    Replay guard: the KLL merge is NOT idempotent (a re-merged batch
-    double-counts its values — unlike the KMV/A-Res merges, whose
-    keys are pure functions of the input and dedupe), and foreachBatch
-    retries a failed epoch with the SAME epoch_id — so the monitor
-    records the last epoch it merged and a redelivered epoch re-EMITS
-    current state without re-merging (pinned by the crash-replay
-    test). State is merged BEFORE the sink runs, so a sink failure
-    cannot lose a merge or double it.
-
-    Restart contract (the cms_stream shape — the emitted quantiles
-    cannot reconstruct the sketch): ``sketch_snapshot(state,
-    epoch_id)`` receives the full {set: bytes} map after every batch;
-    ``seed`` replays the last snapshot into a restarted monitor.
-    Quantile columns are named by the shared
+    Replay and restart follow :func:`_foreach_batch` (the KLL merge is
+    not idempotent: a re-merged batch double-counts its values). The
+    emitted quantiles cannot reconstruct the sketch, so
+    ``sketch_snapshot(state, epoch_id)`` receives the full
+    {set: bytes} map after every batch and ``seed`` takes its items
+    back. Quantile columns are named by the shared
     ``operators.sketches.kll_quantile_names`` so the stream and batch
     surfaces cannot drift.
 
     ``sink(df, epoch_id)`` receives ``(s, n_vals, q_<pct>...)`` per
     monitored set after every batch."""
-    from ..caching import release_scope
     from ..operators.sketches import kll_quantile_names
 
     names = kll_quantile_names(quantiles)
     state: dict[str, bytes] = {
-        s: bytes(b) for s, b in (seed or []) if s is not None and b is not None
+        s: bytes(b) for s, b in (_payload(seed) or []) if s is not None and b is not None
     }
-    last = {"epoch": None}
-    empty_schema = "s string, n_vals long, " + ", ".join(
-        f"{nm} double" for nm in names
+
+    def fold(batch_df: DataFrame) -> None:
+        cells = (
+            batch_df.filter(F.col(val_col).isNotNull())
+            .groupBy(F.col(set_col).alias("s"))
+            .agg(F.kll_sketch_agg_double(F.col(val_col), F.lit(k)).alias("sk"))
+            .collect()
+        )
+        if cells:
+            rows = [(r["s"], bytes(r["sk"])) for r in cells] + list(state.items())
+            merged = (
+                batch_df.sparkSession.createDataFrame(rows, "s string, sk binary")
+                .groupBy("s")
+                .agg(F.kll_merge_agg_double("sk").alias("msk"))
+                .collect()
+            )
+            for r in merged:
+                state[r["s"]] = bytes(r["msk"])
+
+    def emit(batch_df: DataFrame) -> "DataFrame | None":
+        if not state:
+            return None
+        # NULL set keys are a real group (Spark groupBy keeps them); a
+        # plain sort would raise on None vs str
+        frame = batch_df.sparkSession.createDataFrame(
+            sorted(state.items(), key=lambda kv: (kv[0] is None, kv[0])),
+            "s string, msk binary",
+        )
+        return frame.select(
+            "s",
+            F.kll_sketch_get_n_double("msk").cast("long").alias("n_vals"),
+            *[
+                F.kll_sketch_get_quantile_double("msk", F.lit(float(q))).alias(nm)
+                for q, nm in zip(quantiles, names)
+            ],
+        )
+
+    snapshot = None if sketch_snapshot is None else (
+        lambda epoch_id: sketch_snapshot(dict(state), epoch_id)
     )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            if epoch_id != last["epoch"]:
-                cells = (
-                    batch_df.filter(F.col(val_col).isNotNull())
-                    .groupBy(F.col(set_col).alias("s"))
-                    .agg(
-                        F.kll_sketch_agg_double(F.col(val_col), F.lit(k)).alias("sk")
-                    )
-                    .collect()
-                )
-                if cells:
-                    rows = [(r["s"], bytes(r["sk"])) for r in cells]
-                    rows += [(s, b) for s, b in state.items()]
-                    merged = (
-                        spark.createDataFrame(rows, "s string, sk binary")
-                        .groupBy("s")
-                        .agg(F.kll_merge_agg_double("sk").alias("msk"))
-                        .collect()
-                    )
-                    for r in merged:
-                        state[r["s"]] = bytes(r["msk"])
-                last["epoch"] = epoch_id
-            if state:
-                # NULL set keys are a real group (Spark groupBy keeps
-                # them); a plain sort would raise on None vs str
-                frame = spark.createDataFrame(
-                    sorted(state.items(), key=lambda kv: (kv[0] is None, kv[0])),
-                    "s string, msk binary",
-                )
-                out = frame.select(
-                    "s",
-                    F.kll_sketch_get_n_double("msk").cast("long").alias("n_vals"),
-                    *[
-                        F.kll_sketch_get_quantile_double("msk", F.lit(float(q))).alias(nm)
-                        for q, nm in zip(quantiles, names)
-                    ],
-                )
-            else:
-                out = spark.createDataFrame(
-                    [(None, None) + (None,) * len(names)], empty_schema
-                )
-            sink(out, epoch_id)
-            if sketch_snapshot is not None:
-                sketch_snapshot(dict(state), epoch_id)
-
-    return events_stream.writeStream.foreachBatch(_process)
+    empty = "s string, n_vals long, " + ", ".join(f"{nm} double" for nm in names)
+    return _foreach_batch(events_stream, sink, emit, fold, snapshot, seed, empty)
 
 
 def _merge_extreme(cur: float, v: float, kind: str) -> float:
@@ -1050,7 +1074,7 @@ def dq_monitor_stream(
     events_stream: DataFrame,
     sink,
     spec: "tuple[tuple, ...]",
-    seed: "dict | None" = None,
+    seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
     group_col: "str | None" = None,
     group_type: str = "string",
@@ -1085,15 +1109,11 @@ def dq_monitor_stream(
     batch operator's one-scan discipline) and collects exactly one
     row; driver state is one number per counter, bytes forever.
 
-    Replay guard (the kll_stream shape): counter addition is not
-    idempotent and foreachBatch redelivers a failed epoch with the
-    SAME epoch_id, so a redelivered epoch re-EMITS current state
-    without re-merging. State merges BEFORE the sink runs.
-
-    Restart contract: ``state_snapshot(state, epoch_id)`` receives the
-    full counter dict after every batch; passing it back as ``seed``
-    makes a restarted monitor evolve identically to one that never
-    stopped (counter merge is order-free).
+    Replay and restart follow :func:`_foreach_batch`:
+    ``state_snapshot(state, epoch_id)`` receives the full counter dict
+    after every batch, and ``seed`` takes it back (counter merge is
+    order-free, so a seeded monitor evolves identically to one that
+    never stopped).
 
     ``sink(df, epoch_id)`` receives the full (check_name, metric, lo,
     hi, passed) frame — constant |spec| rows — after every batch.
@@ -1111,8 +1131,6 @@ def dq_monitor_stream(
     manifest. Grouped parity to the batch audit and grouped
     snapshot/seed restart hold by the same counter-merge argument
     (pinned in tests/test_streaming.py)."""
-    from ..caching import release_scope
-
     kinds = {"completeness", "min", "max", "accepted"}
     names = []
     for entry in spec:
@@ -1125,131 +1143,101 @@ def dq_monitor_stream(
 
     # global mode: state is the flat counter dict; grouped mode: one
     # counter dict per group value (seed shape matches either mode)
+    seeded = _payload(seed) or {}
     if group_col is None:
-        state: dict = dict(seed) if seed else {}
+        state: dict = dict(seeded)
     else:
-        state = {g: dict(c) for g, c in (seed or {}).items()}
-    last = {"epoch": None}
+        state = {g: dict(c) for g, c in seeded.items()}
+
+    # one aggregate per state counter; completeness and accepted
+    # checks on one column share its non-NULL count
+    aggs = {"n": F.count(F.lit(1))}
+    for entry in spec:
+        kind, col = entry[0], entry[1]
+        if kind in ("completeness", "accepted"):
+            aggs[f"nn:{col}"] = F.count(col)
+        if kind == "accepted":
+            aggs[f"in:{col}"] = F.count(F.when(F.col(col).isin(*entry[2]), F.lit(1)))
+        if kind in ("min", "max"):
+            aggs[f"{kind}:{col}"] = (F.min if kind == "min" else F.max)(col).cast("double")
 
     def _merge_into(st: dict, row) -> None:
-        st["n"] = st.get("n", 0) + row["n"]
-        merged_nn = set()  # nn:<col> is SHARED by completeness+accepted
+        for key in aggs:
+            v = row[key]
+            if not key.startswith(("min:", "max:")):
+                st[key] = st.get(key, 0) + v
+            elif v is not None:
+                cur = st.get(key)
+                st[key] = float(v) if cur is None else _merge_extreme(cur, float(v), key[:3])
+
+    def fold(batch_df: DataFrame) -> None:
+        cols = [c.alias(key) for key, c in aggs.items()]
+        if group_col is None:
+            (row,) = batch_df.agg(*cols).collect()
+            _merge_into(state, row)
+        else:
+            # |groups|-bounded collect (semantic dimension)
+            for row in batch_df.groupBy(group_col).agg(*cols).collect():
+                _merge_into(state.setdefault(row[group_col], {}), row)
+
+    # (check_name, kind, a, b, lo, hi): ratio checks carry (numerator,
+    # denominator), value checks (value, NULL) — the metric/passed
+    # expressions in emit are the BATCH operator's, evaluated by the
+    # same engine
+    def _check_rows(st: dict) -> list:
+        out_rows = []
+        n = st.get("n", 0)
         for entry in spec:
             kind, col = entry[0], entry[1]
-            if kind in ("completeness", "accepted") and col not in merged_nn:
-                merged_nn.add(col)
-                k = f"nn:{col}"
-                st[k] = st.get(k, 0) + row[k.replace(":", "_")]
-            if kind == "accepted":
-                k = f"in:{col}"
-                st[k] = st.get(k, 0) + row[k.replace(":", "_")]
-            if kind in ("min", "max"):
-                k = f"{kind}:{col}"
-                v = row[k.replace(":", "_")]
-                if v is not None:
-                    cur = st.get(k)
-                    st[k] = float(v) if cur is None else _merge_extreme(cur, float(v), kind)
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            if epoch_id != last["epoch"]:
-                aggs = [F.count(F.lit(1)).alias("n")]
-                seen = set()
-                for entry in spec:
-                    kind, col = entry[0], entry[1]
-                    if kind in ("completeness", "accepted") and f"nn_{col}" not in seen:
-                        seen.add(f"nn_{col}")
-                        aggs.append(F.count(col).alias(f"nn_{col}"))
-                    if kind == "accepted":
-                        aggs.append(
-                            F.count(F.when(F.col(col).isin(*entry[2]), F.lit(1))).alias(
-                                f"in_{col}"
-                            )
-                        )
-                    if kind in ("min", "max"):
-                        fn = F.min if kind == "min" else F.max
-                        aggs.append(fn(col).cast("double").alias(f"{kind}_{col}"))
-                if group_col is None:
-                    (row,) = batch_df.agg(*aggs).collect()
-                    _merge_into(state, row)
-                else:
-                    # |groups|-bounded collect (semantic dimension)
-                    for row in batch_df.groupBy(group_col).agg(*aggs).collect():
-                        _merge_into(state.setdefault(row[group_col], {}), row)
-                last["epoch"] = epoch_id
-
-            # (check_name, kind, a, b, lo, hi): ratio checks carry
-            # (numerator, denominator), value checks (value, NULL) —
-            # the metric/passed expressions below are the BATCH
-            # operator's, evaluated by the same engine
-            def _check_rows(st: dict) -> list:
-                out_rows = []
-                n = st.get("n", 0)
-                for entry in spec:
-                    kind, col = entry[0], entry[1]
-                    nm = f"{kind}:{col}"
-                    if kind == "completeness":
-                        out_rows.append((nm, "ratio", float(st.get(f"nn:{col}", 0)), float(n), 1.0, 1.0))
-                    elif kind == "accepted":
-                        out_rows.append(
-                            (nm, "ratio", float(st.get(f"in:{col}", 0)),
-                             float(st.get(f"nn:{col}", 0)), 1.0, 1.0)
-                        )
-                    elif kind == "min":
-                        out_rows.append((nm, "value", st.get(nm), None, float(entry[2]), None))
-                    else:
-                        out_rows.append((nm, "value", st.get(nm), None, None, float(entry[2])))
-                return out_rows
-
-            schema = "check_name string, kind string, a double, b double, lo double, hi double"
-            lead = []
-            if group_col is None:
-                rows = _check_rows(state)
+            nm = f"{kind}:{col}"
+            if kind == "completeness":
+                out_rows.append((nm, "ratio", float(st.get(f"nn:{col}", 0)), float(n), 1.0, 1.0))
+            elif kind == "accepted":
+                out_rows.append(
+                    (nm, "ratio", float(st.get(f"in:{col}", 0)),
+                     float(st.get(f"nn:{col}", 0)), 1.0, 1.0)
+                )
+            elif kind == "min":
+                out_rows.append((nm, "value", st.get(nm), None, float(entry[2]), None))
             else:
-                rows = [
-                    (g,) + r
-                    for g in sorted(state, key=lambda x: (x is None, x))
-                    for r in _check_rows(state[g])
-                ]
-                schema = f"{group_col} {group_type}, " + schema
-                lead = [group_col]
-            frame = spark.createDataFrame(rows, schema)
-            metric = F.when(
-                F.col("kind") == "ratio",
-                F.when(F.col("b") > 0, F.round(F.col("a") / F.col("b"), 6)),
-            ).otherwise(F.round(F.col("a"), 6))
-            out = frame.select(
-                *lead,
-                "check_name",
-                metric.alias("metric"),
-                "lo",
-                "hi",
-            ).select(
-                *lead,
-                "check_name",
-                "metric",
-                "lo",
-                "hi",
-                F.when(F.col("metric").isNull(), F.lit(0))
-                .otherwise(
-                    (
-                        (F.col("lo").isNull() | (F.col("metric") >= F.col("lo")))
-                        & (F.col("hi").isNull() | (F.col("metric") <= F.col("hi")))
-                    ).cast("int")
-                )
-                .alias("passed"),
-            )
-            sink(out, epoch_id)
-            if state_snapshot is not None:
-                snap = (
-                    dict(state)
-                    if group_col is None
-                    else {g: dict(c) for g, c in state.items()}
-                )
-                state_snapshot(snap, epoch_id)
+                out_rows.append((nm, "value", st.get(nm), None, None, float(entry[2])))
+        return out_rows
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def emit(batch_df: DataFrame) -> DataFrame:
+        schema = "check_name string, kind string, a double, b double, lo double, hi double"
+        lead = []
+        if group_col is None:
+            rows = _check_rows(state)
+        else:
+            rows = [
+                (g,) + r
+                for g in sorted(state, key=lambda x: (x is None, x))
+                for r in _check_rows(state[g])
+            ]
+            schema = f"{group_col} {group_type}, " + schema
+            lead = [group_col]
+        frame = batch_df.sparkSession.createDataFrame(rows, schema)
+        metric = F.when(
+            F.col("kind") == "ratio",
+            F.when(F.col("b") > 0, F.round(F.col("a") / F.col("b"), 6)),
+        ).otherwise(F.round(F.col("a"), 6))
+        return frame.select(*lead, "check_name", metric.alias("metric"), "lo", "hi").withColumn(
+            "passed",
+            F.when(F.col("metric").isNull(), F.lit(0))
+            .otherwise(
+                (
+                    (F.col("lo").isNull() | (F.col("metric") >= F.col("lo")))
+                    & (F.col("hi").isNull() | (F.col("metric") <= F.col("hi")))
+                ).cast("int")
+            ),
+        )
+
+    def snapshot(epoch_id: int) -> None:
+        snap = dict(state) if group_col is None else {g: dict(c) for g, c in state.items()}
+        state_snapshot(snap, epoch_id)
+
+    hook = None if state_snapshot is None else snapshot
+    return _foreach_batch(events_stream, sink, emit, fold, hook, seed)
 
 
 def centroid_drift_stream(
@@ -1259,7 +1247,7 @@ def centroid_drift_stream(
     vec_col: str = "embedding",
     quant: float = 1e6,
     group_type: str = "string",
-    seed: "dict | None" = None,
+    seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
 ):
     """Continuous embedding-centroid drift monitor — the streaming twin
@@ -1282,56 +1270,52 @@ def centroid_drift_stream(
     map-side-combined (group, dim) sum and collects ≤ |groups|·dim
     rows (groups are a semantic dimension — the cms_stream watch-
     manifest contract); driver state is one (s, c) long pair per
-    (group, dim) cell. Replay guard and snapshot/seed restart follow
-    the dq_monitor_stream shape.
+    (group, dim) cell. Replay and restart follow
+    :func:`_foreach_batch`: ``state_snapshot(state, epoch_id)``
+    receives the cell dict after every batch, and ``seed`` takes it
+    back.
 
     ``sink(df, epoch_id)`` receives (group, n_vecs, cos_to_global,
     norm_ratio) — |groups| rows — after every batch."""
-    from ..caching import release_scope
     from ..operators.similarity import centroid_drift_from_sums, centroid_sums
 
     # state: {(g, pos): [s, c]} exact longs
-    state: dict = {k: list(v) for k, v in (seed or {}).items()}
-    last = {"epoch": None}
+    state: dict = {k: list(v) for k, v in (_payload(seed) or {}).items()}
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            if epoch_id != last["epoch"]:
-                rows = centroid_sums(batch_df, group_col, vec_col, quant).collect()
-                for r in rows:  # |groups| x dim — bounded collect
-                    if r["s"] is None:
-                        # every component NULL for this (g, pos): SQL
-                        # sum contributes nothing — adding None would
-                        # TypeError and kill the query instead
-                        continue
-                    cell = state.setdefault((r["g"], r["pos"]), [0, 0])
-                    cell[0] += r["s"]
-                    cell[1] += r["c"]
-                last["epoch"] = epoch_id
-            if state:
-                per = spark.createDataFrame(
-                    [
-                        (g, p, s, c)
-                        for (g, p), (s, c) in sorted(
-                            state.items(),
-                            key=lambda kv: (kv[0][0] is None, kv[0][0], kv[0][1]),
-                        )
-                    ],
-                    f"g {group_type}, pos int, s long, c long",
-                )
-                out = centroid_drift_from_sums(per, group_col)
-            else:
-                out = spark.createDataFrame(
-                    [(None, None, None, None)],
-                    f"{group_col} {group_type}, n_vecs long,"
-                    " cos_to_global double, norm_ratio double",
-                )
-            sink(out, epoch_id)
-            if state_snapshot is not None:
-                state_snapshot({k: tuple(v) for k, v in state.items()}, epoch_id)
+    def fold(batch_df: DataFrame) -> None:
+        rows = centroid_sums(batch_df, group_col, vec_col, quant).collect()
+        for r in rows:  # |groups| x dim — bounded collect
+            if r["s"] is None:
+                # every component NULL for this (g, pos): SQL sum
+                # contributes nothing — adding None would TypeError
+                # and kill the query instead
+                continue
+            cell = state.setdefault((r["g"], r["pos"]), [0, 0])
+            cell[0] += r["s"]
+            cell[1] += r["c"]
 
-    return events_stream.writeStream.foreachBatch(_process)
+    def emit(batch_df: DataFrame) -> "DataFrame | None":
+        if not state:
+            return None
+        per = batch_df.sparkSession.createDataFrame(
+            [
+                (g, p, s, c)
+                for (g, p), (s, c) in sorted(
+                    state.items(),
+                    key=lambda kv: (kv[0][0] is None, kv[0][0], kv[0][1]),
+                )
+            ],
+            f"g {group_type}, pos int, s long, c long",
+        )
+        return centroid_drift_from_sums(per, group_col)
+
+    snapshot = None if state_snapshot is None else (
+        lambda epoch_id: state_snapshot({k: tuple(v) for k, v in state.items()}, epoch_id)
+    )
+    empty = (
+        f"{group_col} {group_type}, n_vecs long, cos_to_global double, norm_ratio double"
+    )
+    return _foreach_batch(events_stream, sink, emit, fold, snapshot, seed, empty)
 
 
 def t_closeness_stream(
@@ -1342,7 +1326,7 @@ def t_closeness_stream(
     t: float = 0.2,
     quasi_types: "str | list[str]" = "string",
     sensitive_type: str = "bigint",
-    seed: "dict | None" = None,
+    seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
 ):
     """Continuous t-closeness monitor — the streaming twin of the batch
@@ -1365,12 +1349,13 @@ def t_closeness_stream(
     Scale shape: each micro-batch runs one map-side-combined
     (quasi…, value) count and collects ≤ |classes|·|values| rows
     (both semantic dimensions — the cms_stream watch-manifest
-    contract); driver state is one long per cell. Replay guard and
-    snapshot/seed restart follow the dq_monitor_stream shape.
+    contract); driver state is one long per cell. Replay and restart
+    follow :func:`_foreach_batch`: ``state_snapshot(state, epoch_id)``
+    receives the cell dict after every batch, and ``seed`` takes it
+    back.
 
     ``sink(df, epoch_id)`` receives (quasi…, class_size, t_tvd, t_emd,
     keep) — |classes| rows — after every batch."""
-    from ..caching import release_scope
     from ..operators.sampling import t_closeness
 
     quasi_cols = list(quasi_cols)
@@ -1379,46 +1364,30 @@ def t_closeness_stream(
         if isinstance(quasi_types, (list, tuple))
         else [quasi_types] * len(quasi_cols)
     )
-    cell_schema = (
-        ", ".join(f"{c} {ty}" for c, ty in zip(quasi_cols, qt))
-        + f", {sensitive_col} {sensitive_type}, _w long"
-    )
-    out_schema = (
-        ", ".join(f"{c} {ty}" for c, ty in zip(quasi_cols, qt))
-        + ", class_size long, t_tvd double, t_emd double, keep int"
-    )
+    quasi_schema = ", ".join(f"{c} {ty}" for c, ty in zip(quasi_cols, qt))
     # state: {(quasi…, value): n} exact longs
-    state: dict = dict(seed or {})
-    last = {"epoch": None}
+    state: dict = dict(_payload(seed) or {})
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        with release_scope():
-            spark = batch_df.sparkSession
-            if epoch_id != last["epoch"]:
-                rows = (
-                    batch_df.groupBy(*quasi_cols, sensitive_col).count().collect()
-                )
-                for r in rows:  # |classes| x |values| — bounded collect
-                    k = tuple(r[c] for c in quasi_cols) + (r[sensitive_col],)
-                    state[k] = state.get(k, 0) + r["count"]
-                last["epoch"] = epoch_id
-            if state:
-                cells = spark.createDataFrame(
-                    sorted(
-                        ((*k, n) for k, n in state.items()),
-                        key=lambda row: tuple((x is None, x) for x in row),
-                    ),
-                    cell_schema,
-                )
-                out = t_closeness(
-                    cells, quasi_cols, sensitive_col, t, weight_col="_w"
-                )
-            else:
-                out = spark.createDataFrame(
-                    [tuple([None] * (len(quasi_cols) + 4))], out_schema
-                )
-            sink(out, epoch_id)
-            if state_snapshot is not None:
-                state_snapshot(dict(state), epoch_id)
+    def fold(batch_df: DataFrame) -> None:
+        rows = batch_df.groupBy(*quasi_cols, sensitive_col).count().collect()
+        for r in rows:  # |classes| x |values| — bounded collect
+            k = tuple(r[c] for c in quasi_cols) + (r[sensitive_col],)
+            state[k] = state.get(k, 0) + r["count"]
 
-    return records_stream.writeStream.foreachBatch(_process)
+    def emit(batch_df: DataFrame) -> "DataFrame | None":
+        if not state:
+            return None
+        cells = batch_df.sparkSession.createDataFrame(
+            sorted(
+                ((*k, n) for k, n in state.items()),
+                key=lambda row: tuple((x is None, x) for x in row),
+            ),
+            f"{quasi_schema}, {sensitive_col} {sensitive_type}, _w long",
+        )
+        return t_closeness(cells, quasi_cols, sensitive_col, t, weight_col="_w")
+
+    snapshot = None if state_snapshot is None else (
+        lambda epoch_id: state_snapshot(dict(state), epoch_id)
+    )
+    empty = f"{quasi_schema}, class_size long, t_tvd double, t_emd double, keep int"
+    return _foreach_batch(records_stream, sink, emit, fold, snapshot, seed, empty)

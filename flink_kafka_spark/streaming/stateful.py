@@ -207,137 +207,6 @@ def order_timeout_stream(orders: DataFrame, timeout_s: int = 900) -> DataFrame:
     )
 
 
-def order_timeout_stream_tws(orders: DataFrame, timeout_s: int = 900) -> DataFrame:
-    """`order_timeout_stream`'s twin on Spark 4.x
-    ``transformWithStateInPandas`` — the r9 verdict item 7 spike. Same
-    four outcomes (OrderTimeOutOnProcess.java:75-131), same output
-    schema; the typed ValueState + explicit registerTimer/
-    handleExpiredTimer split maps Flink's KeyedProcessFunction
-    (onTimer vs processElement) more directly than
-    applyInPandasWithState's single-callback hasTimedOut flag.
-
-    DECISION (kept alongside, not migrated — see README §stateful):
-    the five production operators stay on applyInPandasWithState.
-    Three reasons, in order: (1) transformWithState's Python state
-    protocol imports google.protobuf at query start — a dependency
-    this runtime does not ship, so the operator cannot EXECUTE here
-    (the parity pytest importorskips on it and runs wherever protobuf
-    exists); (2) it requires the RocksDB state-store provider; (3)
-    Spark labels the API "Evolving" in 4.1. This twin keeps the
-    migration path written and row-checkable for runtimes that have
-    the dependency.
-
-    Differences the spike surfaced, for the eventual migration:
-    - timers ADD (multiple per key) instead of REPLACE, so a stale
-      timer can fire after the pair resolved — handleExpiredTimer must
-      re-check state (here: state cleared -> ignore);
-    - the watermark is read from TimerValues, not the state handle;
-    - per-key state schemas are named and typed up front
-      (getValueState(name, schema)) instead of riding the operator
-      call.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = ["order_id", "create_ts_s", "pay_ts_s", "result_type"]
-
-    class OrderTimeoutProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._pair = handle.getValueState("pair", "create_ts long, pay_ts long")
-
-        def _pending(self):
-            if not self._pair.exists():
-                return None, None
-            create_ts, pay_ts = self._pair.get()
-            return (
-                None if create_ts is None or create_ts < 0 else int(create_ts),
-                None if pay_ts is None or pay_ts < 0 else int(pay_ts),
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (order_id,) = key
-            out = []
-            create_ts, pay_ts = self._pending()
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                for ts_s, etype in zip(
-                    map(int, _epoch_s(pdf)), pdf["event_type"].to_numpy()
-                ):
-                    if etype == "create":
-                        if pay_ts is not None:
-                            tag = (
-                                "payed"
-                                if pay_ts <= ts_s + timeout_s
-                                else "payed but already timeout"
-                            )
-                            out.append((order_id, ts_s, pay_ts, tag))
-                            create_ts = pay_ts = None
-                        else:
-                            create_ts = ts_s
-                    else:
-                        if create_ts is not None:
-                            tag = (
-                                "payed"
-                                if ts_s <= create_ts + timeout_s
-                                else "payed but already timeout"
-                            )
-                            out.append((order_id, create_ts, ts_s, tag))
-                            create_ts = pay_ts = None
-                        else:
-                            pay_ts = ts_s
-            if create_ts is None and pay_ts is None:
-                self._pair.clear()  # resolved; a stale timer will no-op
-            else:
-                base = create_ts if create_ts is not None else pay_ts
-                timer_ms = (base + timeout_s) * 1000
-                if timer_ms <= timerValues.getCurrentWatermarkInMs():
-                    # arrived later than its own deadline: resolve now
-                    if pay_ts is not None and create_ts is None:
-                        out.append(
-                            (order_id, None, pay_ts, "payed but not found created log")
-                        )
-                    else:
-                        out.append((order_id, create_ts, None, "order timeout"))
-                    self._pair.clear()
-                else:
-                    # -1 sentinels: the typed long schema has no NULLs
-                    self._pair.update(
-                        (create_ts if create_ts is not None else -1,
-                         pay_ts if pay_ts is not None else -1)
-                    )
-                    self._handle.registerTimer(timer_ms)
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (order_id,) = key
-            create_ts, pay_ts = self._pending()
-            if create_ts is None and pay_ts is None:
-                return  # stale timer from a since-resolved pair
-            deadline = ((create_ts if create_ts is not None else pay_ts) + timeout_s) * 1000
-            if expiredTimerInfo.getExpiryTimeInMs() < deadline:
-                return  # superseded by a newer pending side
-            if pay_ts is not None and create_ts is None:
-                row = (order_id, None, pay_ts, "payed but not found created log")
-            else:
-                row = (order_id, create_ts, None, "order timeout")
-            self._pair.clear()
-            yield pd.DataFrame([row], columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return orders.groupBy("order_id").transformWithStateInPandas(
-        statefulProcessor=OrderTimeoutProcessor(),
-        outputStructType="order_id long, create_ts_s long, pay_ts_s long, result_type string",
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
 def tx_match_stream(
     orders: DataFrame,
     receipts: DataFrame,

@@ -4,6 +4,8 @@ test strategy (the reference itself has no tests — these encode its
 README golden semantics on small crafted fixtures)."""
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +17,7 @@ from flink_kafka_spark.schemas import (
     USER_BEHAVIOR,
     parse_csv_lines,
 )
+from flink_kafka_spark.streaming import jobs
 from flink_kafka_spark.streaming.jobs import hot_items_stream, rank_hot_items
 from flink_kafka_spark.streaming.sources import csv_replay_source
 from flink_kafka_spark.streaming.stateful import (
@@ -1224,66 +1227,6 @@ def test_session_stream_matches_batch_session_window(spark, tmp_path):
     assert got == want and len(got) >= 12
 
 
-# --- transformWithStateInPandas spike (Spark 4.x typed state + timers) ---
-
-
-def test_order_timeout_tws_matches_applyinpandas(spark, tmp_path):
-    """The transformWithStateInPandas twin must produce exactly the
-    rows the production applyInPandasWithState operator does on a
-    multi-batch replay covering all four outcomes plus out-of-order
-    pay-before-create (r9 verdict item 7 — decision note on the
-    operator's docstring). transformWithState's state protocol
-    imports google.protobuf at query start; this runtime doesn't ship
-    it, so the test skips here and executes on runtimes that do."""
-    pytest.importorskip("google.protobuf")
-    from flink_kafka_spark.streaming.stateful import order_timeout_stream_tws
-
-    t = 1_700_000_000
-    _write_lines(
-        str(tmp_path / "in" / "b1.csv"),
-        [
-            f"1,create,,{t}",
-            f"1,pay,tx1,{t + 100}",        # payed
-            f"2,create,,{t}",              # -> order timeout
-            f"4,pay,tx4,{t + 10}",         # -> payed but not found created log
-            f"5,pay,tx5,{t + 1000}",       # pay first ...
-            f"5,create,,{t + 20}",         # ... create arrives later, within 900? 1000-20=980 > 900
-        ],
-        mtime=1_000_000,
-    )
-    _write_lines(
-        str(tmp_path / "in" / "b2.csv"), [f"3,create,,{t + 10000}"], mtime=2_000_000
-    )
-
-    def run(op, name, provider=None):
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            stream = csv_replay_source(
-                spark, str(tmp_path / "in"), ORDER_EVENT, max_files_per_trigger=1
-            ).withWatermark("ts", "0 seconds")
-            _run_stream_until(spark, op(stream, timeout_s=900), name, 4)
-        finally:
-            if provider and old:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-            elif provider:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        return sorted(
-            map(tuple, spark.sql(f"SELECT * FROM {name}").collect())
-        )
-
-    want = run(order_timeout_stream, "tws_base_out")
-    got = run(
-        order_timeout_stream_tws,
-        "tws_new_out",
-        provider="org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    assert got == want
-    assert (5, t + 20, t + 1000, "payed but already timeout") in got
-    assert len(got) >= 4
-
-
 def test_cms_stream_exactly_equals_batch_sketch(spark, tmp_path):
     """Continuous CM sketch across micro-batches: the merge is counter
     ADDITION, so the streamed estimates after two batches must EQUAL
@@ -1821,28 +1764,148 @@ def test_kll_stream_exact_below_k_bounded_above_and_restarts(spark, tmp_path):
     check(seeded_final)
 
 
-def test_kll_stream_replay_after_sink_crash_merges_once(spark, tmp_path):
-    """foreachBatch retries a failed epoch with the SAME epoch_id; the
-    KLL merge is not idempotent, so the monitor's epoch guard must
-    absorb the redelivery: state is merged before the sink runs, and
-    the retried epoch re-emits without re-merging — n_vals after the
-    crash-restart equals the input count, not double it."""
+class _Monitor(NamedTuple):
+    """One stateful monitor fed 30 rows of ``row(i)`` in one epoch:
+    ``measure(rows, snap)`` reads the emitted rows and the last
+    snapshot-hook state, and equals ``want`` only when the epoch was
+    merged exactly once; ``payload(rows, snap)`` is the restart seed."""
+
+    schema: str
+    row: Callable
+    build: Callable  # (stream, sink, seed, hook) -> DataStreamWriter
+    measure: Callable
+    want: object
+    payload: Callable
+    hooked: bool  # has a snapshot hook; else the emitted frame is the state
+
+
+_MONITORS = {
+    "heavy_hitters": _Monitor(
+        "key string",
+        lambda i: {"key": f"k{i % 3}"},
+        lambda st, sink, seed, hook: jobs.heavy_hitters_stream(
+            st, sink, col="key", k=8, seed=seed
+        ),
+        lambda rows, snap: (rows[0]["n_seen"], {r["item"]: r["est"] for r in rows}),
+        (30, {"k0": 10, "k1": 10, "k2": 10}),
+        lambda rows, snap: ({r["item"]: r["est"] for r in rows}, rows[0]["n_seen"]),
+        False,
+    ),
+    "cms": _Monitor(
+        "key string",
+        lambda i: {"key": "mega"},
+        lambda st, sink, seed, hook: jobs.cms_stream(
+            st, sink, col="key", watch=["mega"], width=64, depth=3,
+            seed=seed, counter_snapshot=hook,
+        ),
+        lambda rows, snap: (rows[0]["n_seen"], rows[0]["est_c"], snap[1]),
+        (30, 30, 30),
+        lambda rows, snap: tuple(snap),
+        True,
+    ),
+    "reservoir": _Monitor(
+        "rid long, stratum string, w int",
+        lambda i: {"rid": i, "stratum": "a", "w": 1 + i % 5},
+        lambda st, sink, seed, hook: jobs.reservoir_stream(
+            st, sink, id_col="rid", weight_sql="w", stratum_col="stratum",
+            m=64, seed=seed,
+        ),
+        lambda rows, snap: sorted(r["rank"] for r in rows),
+        list(range(1, 31)),
+        lambda rows, snap: [(r["stratum"], r["rid"], r["wkey"]) for r in rows],
+        False,
+    ),
+    "kmv": _Monitor(
+        "s string, v string",
+        lambda i: {"s": "a", "v": f"v{i}"},
+        lambda st, sink, seed, hook: jobs.kmv_stream(
+            st, sink, set_col="s", val_sql="v", k=64, seed=seed
+        ),
+        lambda rows, snap: (len(rows), rows[0]["est"]),
+        (30, 30),
+        lambda rows, snap: [(r["s"], r["h"]) for r in rows],
+        False,
+    ),
+    "kll": _Monitor(
+        "s string, v double",
+        lambda i: {"s": "a", "v": float(i)},
+        lambda st, sink, seed, hook: jobs.kll_stream(
+            st, sink, set_col="s", val_col="v", k=64, seed=seed,
+            sketch_snapshot=hook,
+        ),
+        # exact path (30 < k): rank ceil(0.5*30)-1 of 0..29 -> 14.0
+        lambda rows, snap: (rows[0]["n_vals"], rows[0]["q_50"]),
+        (30, 14.0),
+        lambda rows, snap: list(snap[0].items()),
+        True,
+    ),
+    "dq": _Monitor(
+        "event_type string, value double",
+        lambda i: {"event_type": "a", "value": None if i % 3 else float(i)},
+        lambda st, sink, seed, hook: jobs.dq_monitor_stream(
+            st, sink, (("completeness", "value"),), seed=seed, state_snapshot=hook
+        ),
+        lambda rows, snap: (snap[0]["n"], snap[0]["nn:value"], rows[0]["metric"]),
+        (30, 10, 0.333333),
+        lambda rows, snap: snap[0],
+        True,
+    ),
+    "centroid_drift": _Monitor(
+        "label string, embedding array<float>",
+        lambda i: {"label": "a", "embedding": [1.0, float(i)]},
+        lambda st, sink, seed, hook: jobs.centroid_drift_stream(
+            st, sink, seed=seed, state_snapshot=hook
+        ),
+        lambda rows, snap: (rows[0]["n_vecs"], snap[0][("a", 0)]),
+        (30, (30_000_000, 30)),
+        lambda rows, snap: snap[0],
+        True,
+    ),
+    "t_closeness": _Monitor(
+        "q string, s bigint",
+        lambda i: {"q": "a", "s": i % 3},
+        lambda st, sink, seed, hook: jobs.t_closeness_stream(
+            st, sink, quasi_cols=["q"], sensitive_col="s", seed=seed,
+            state_snapshot=hook,
+        ),
+        lambda rows, snap: (rows[0]["class_size"], sum(snap[0].values())),
+        (30, 30),
+        lambda rows, snap: snap[0],
+        True,
+    ),
+}
+
+
+def _monitor_writer(spark, tmp_path, case, sink, seed, hook):
+    """``case``'s monitor over one 30-row file, availableNow on the
+    test's checkpoint — the same source and checkpoint every call."""
     import json
 
-    from flink_kafka_spark.streaming.jobs import kll_stream
+    d = tmp_path / "in"
+    if not d.exists():
+        d.mkdir()
+        (d / "f0.json").write_text(
+            "\n".join(json.dumps(case.row(i)) for i in range(30)) + "\n"
+        )
+    stream = spark.readStream.schema(case.schema).json(str(d))
+    return (
+        case.build(stream, sink, seed, hook)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
 
-    rows = [("a", float(v)) for v in range(30)]
-    d = tmp_path / "crash"
-    d.mkdir()
-    (d / "f0.json").write_text(
-        "\n".join(json.dumps({"s": s, "v": v}) for s, v in rows) + "\n"
-    )
-    stream = (
-        spark.readStream.schema("s string, v double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(d))
-    )
+
+@pytest.mark.parametrize("monitor", list(_MONITORS))
+def test_kll_stream_replay_after_sink_crash_merges_once(spark, tmp_path, monitor):
+    """foreachBatch retries a failed epoch with the SAME epoch_id, and
+    most monitor merges are not idempotent (Misra-Gries and Count-Min
+    counters, KLL compaction, counter sums): every monitor must absorb
+    the redelivery — state is merged before the sink runs, and the
+    retried epoch re-emits without re-merging, so the state after the
+    crash-restart counts the input once, not twice."""
+    case = _MONITORS[monitor]
     seen: dict[int, list] = {}
+    snaps: dict[int, tuple] = {}
     calls = {"n": 0}
 
     def crashing_sink(df, epoch_id):
@@ -1851,11 +1914,10 @@ def test_kll_stream_replay_after_sink_crash_merges_once(spark, tmp_path):
             raise RuntimeError("sink outage")
         seen[epoch_id] = df.collect()
 
-    writer = kll_stream(
-        stream, crashing_sink, set_col="s", val_col="v", k=64
-    ).trigger(availableNow=True).option(
-        "checkpointLocation", str(tmp_path / "ck_crash")
-    )
+    def hook(*args):
+        snaps[args[-1]] = args[:-1]
+
+    writer = _monitor_writer(spark, tmp_path, case, crashing_sink, None, hook)
     q = writer.start()
     try:
         q.awaitTermination(120)
@@ -1863,10 +1925,49 @@ def test_kll_stream_replay_after_sink_crash_merges_once(spark, tmp_path):
         pass  # the sink outage fails the first attempt
     q2 = writer.start()  # same closure state, same checkpoint
     q2.awaitTermination(120)
-    final = {r["s"]: r for r in seen[max(seen)]}
-    assert final["a"]["n_vals"] == 30  # merged once, not twice
-    # exact path (30 < k): rank ceil(0.5*30)-1 of values 0..29 -> 14.0
-    assert final["a"]["q_50"] == 14.0
+    assert calls["n"] >= 2 and len(seen) == 1
+    last = max(seen)
+    assert case.measure(seen[last], snaps.get(last)) == case.want  # merged once
+
+
+@pytest.mark.parametrize("monitor", list(_MONITORS))
+def test_monitor_restart_seeded_with_snapshot_merges_once(spark, tmp_path, monitor):
+    """The restart contract on the SAME checkpoint: the process dies
+    after the epoch merged and its state was handed out (by the
+    snapshot hook, or by the sink where the emitted frame is the
+    state), but before Spark committed the epoch. A NEW monitor seeded
+    with ``Snapshot(epoch, payload)`` gets that epoch redelivered and
+    must not merge it again."""
+    from pyspark.errors import StreamingQueryException
+
+    from flink_kafka_spark.streaming.jobs import Snapshot
+
+    case = _MONITORS[monitor]
+    seen: dict[int, list] = {}
+    snaps: dict[int, tuple] = {}
+    crash = {"on": True}
+
+    def sink(df, epoch_id):
+        seen[epoch_id] = df.collect()
+        if crash["on"] and not case.hooked:
+            raise RuntimeError("process dies after the sink")
+
+    def hook(*args):
+        snaps[args[-1]] = args[:-1]
+        if crash["on"]:
+            raise RuntimeError("process dies after the snapshot")
+
+    q = _monitor_writer(spark, tmp_path, case, sink, None, hook).start()
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    crash["on"] = False
+    (epoch,) = seen
+    seed = Snapshot(epoch, case.payload(seen[epoch], snaps.get(epoch)))
+    seen.clear()
+    q2 = _monitor_writer(spark, tmp_path, case, sink, seed, hook).start()
+    q2.awaitTermination(120)
+    assert list(seen) == [epoch]  # the same epoch, redelivered
+    assert case.measure(seen[epoch], snaps.get(epoch)) == case.want
 
 
 @pytest.mark.slow  # slow tier (r19): batch dq_expectations oracle + the remaining restart twins stay default
