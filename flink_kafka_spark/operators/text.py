@@ -2011,7 +2011,8 @@ def bpe_train_and_tokenize(
     table over a different corpus; this composition exists for the
     train-and-evaluate-on-the-training-corpus shape, where vocabulary
     equality makes the reuse exact (identity pinned by
-    tests/test_opt_r19.py against the two-step composition)."""
+    tests/test_textops_props.py::TestBpeTrainAndTokenize against the
+    two-step composition)."""
     _, state = bpe_learn_merges(
         docs, n_merges, text_col, return_vocab_state=True
     )

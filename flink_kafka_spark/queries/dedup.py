@@ -870,28 +870,31 @@ PR_DAMPING_PCT = 85
 PR_UNIT = 1_000_000_000
 
 
-def source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import pagerank
-
+def _source_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(edges, nodes) of the source-overlap graph: each overlapping
+    source pair in both directions, weighted by n_shared_shingles, and
+    every source as a node. Shared by :func:`source_pagerank` and its
+    plan-audit twin so the audited round reads the same edge set."""
     docs = load(spark, sf_dir, "documents")
     # the operator materializes its own |sources|²-bounded cache now,
     # so every consumer (here the fwd/rev union) reads pure cache —
     # the caller-side ov.count() workaround moved into the operator
     ov = source_overlap_matrix(docs)
-    e_fwd = ov.select(
-        F.col("source_a").alias("src"),
-        F.col("source_b").alias("dst"),
-        F.col("n_shared_shingles").alias("w"),
+    w = F.col("n_shared_shingles").alias("w")
+    edges = ov.select(
+        F.col("source_a").alias("src"), F.col("source_b").alias("dst"), w
+    ).unionByName(
+        ov.select(F.col("source_b").alias("src"), F.col("source_a").alias("dst"), w)
     )
-    e_rev = ov.select(
-        F.col("source_b").alias("src"),
-        F.col("source_a").alias("dst"),
-        F.col("n_shared_shingles").alias("w"),
-    )
-    nodes = docs.select("source").distinct()
+    return edges, docs.select("source").distinct()
+
+
+def source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.graph import pagerank
+
+    edges, nodes = _source_graph(spark, sf_dir)
     return pagerank(
-        e_fwd.unionByName(e_rev), nodes, "source",
-        PR_ITERATIONS, PR_DAMPING_PCT, PR_UNIT,
+        edges, nodes, "source", PR_ITERATIONS, PR_DAMPING_PCT, PR_UNIT,
     ).select(F.col("node").alias("source"), "rank_e9")
 
 
@@ -905,22 +908,9 @@ def source_pagerank_loop_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut)."""
     from ..operators.graph import pagerank_loop_body
 
-    docs = load(spark, sf_dir, "documents")
-    ov = source_overlap_matrix(docs)
-    e_fwd = ov.select(
-        F.col("source_a").alias("src"),
-        F.col("source_b").alias("dst"),
-        F.col("n_shared_shingles").alias("w"),
-    )
-    e_rev = ov.select(
-        F.col("source_b").alias("src"),
-        F.col("source_a").alias("dst"),
-        F.col("n_shared_shingles").alias("w"),
-    )
-    nodes = docs.select("source").distinct()
+    edges, nodes = _source_graph(spark, sf_dir)
     return pagerank_loop_body(
-        e_fwd.unionByName(e_rev), nodes, "source", PR_DAMPING_PCT, PR_UNIT,
-        cache_inputs=True,
+        edges, nodes, "source", PR_DAMPING_PCT, PR_UNIT, cache_inputs=True,
     )
 
 

@@ -2322,7 +2322,8 @@ def bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-then-tokenize on one corpus: since r19 the fused
     composition reuses the trainer's final vocabulary state instead of
     re-deriving it through every merge layer (result-identical —
-    pinned against the two-step composition in tests/test_opt_r19.py)."""
+    pinned against the two-step composition in
+    tests/test_textops_props.py::TestBpeTrainAndTokenize)."""
     from ..operators.text import bpe_train_and_tokenize
 
     docs = load(spark, sf_dir, "documents")

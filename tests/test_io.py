@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_spark.io import read_table, write_bucketed, write_partitioned
-from flink_kafka_spark.tables import load
+from flink_kafka_spark.tables import load, spread_scan
 
 
 def _plan(df) -> str:
@@ -279,3 +279,25 @@ def test_write_interleaved_materializes_the_stride_order(spark, sf_dir, tmp_path
         assert got == want, f"shard {shard} disk order != position order"
         seen.extend(got)
     assert sorted(seen) == sorted(r.doc_id for r in docs.select("doc_id").collect())
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+class TestSpreadScan:
+    """tables.spread_scan — the centralized small-scan fan-out gate."""
+
+    def test_spreads_single_file_scan_to_parallelism(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents")
+        par = spark.sparkContext.defaultParallelism
+        assert spread_scan(docs).rdd.getNumPartitions() == par
+
+    def test_noop_on_memory_backed_frame(self, spark):
+        # no input files -> layout unknowable -> frame returned as-is
+        df = spark.range(10)
+        assert spread_scan(df) is df
+
+    def test_row_multiset_preserved(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        assert _rows(spread_scan(docs)) == _rows(docs)

@@ -5,15 +5,15 @@ instead of surviving until a bench regression.
 
 Bounds are ceilings observed at sf0.001-0.1 (plan shapes are
 SF-independent for these queries: AQE runtime re-plans don't appear in
-the pre-execution explain output this audits)."""
+the initial plan the audit walks). tools/gen_plans.audit counts each
+distinct physical operator once, so a persisted frame read by several
+consumers contributes its build plan once."""
 
-import sys
+import pytest
 
-sys.path.insert(0, ".")
+from tools.gen_plans import audit
 
-from tools.gen_plans import audit  # noqa: E402
-
-from flink_kafka_spark.queries import all_queries  # noqa: E402
+from flink_kafka_spark.queries import all_queries
 
 # query -> (max exchanges, max sort-merge joins)
 #
@@ -65,12 +65,12 @@ PLAN_BOUNDS = {
     # incremental view maintenance: the fingerprint full-outer diff is
     # SMJ-bound like media_features_check (both sides corpus-sized);
     # the edit-sized probe joins AQE-broadcast at runtime. The static
-    # count includes the persisted changelog's lineage shown inline.
+    # count includes the persisted changelog's build plan, once.
     # (+2 exchanges r10: the advisory fix distincts the edit-sized
     # changed-id set before the minus join; +1 late-r10: the plus side
     # resolves the changelog to one winning op per id through an
     # edit-sized window — multi-op changelogs apply one final state)
-    "agg_incremental_update": (10, 6),
+    "agg_incremental_update": (10, 2),
     "customer_running_totals": (1, 0),  # per-key window, one shuffle
     # grid resample: obs agg (persisted, single scan) + distinct keys
     # + per-key ffill window; bounds ride a 1-row broadcast
@@ -193,7 +193,7 @@ PLAN_BOUNDS = {
     "order_ship_interval_join_binned": (0, 0),
     # full-outer reconciliation: SMJ IS the intended plan (both sides
     # same size, no broadcastable build) — 2 exchanges co-partition it
-    "order_line_reconciliation": (2, 2),
+    "order_line_reconciliation": (2, 1),
     "event_asof_order": (1, 0),
     "quantity_percentiles_approx_check": (3, 0),
     # cohort matrix: (user,week) distinct + user window + cohort count
@@ -263,9 +263,9 @@ PLAN_BOUNDS = {
     "inverted_index": (2, 0),  # narrow postings: per-row array_distinct; +spread
     "bm25_search": (3, 0),  # +spread x2 (both narrow passes inline the gated scan pre-AQE)
     # r18 stride interleave: per-source rn shuffle + export_shards'
-    # two-pass range machinery (range repartition + the pinned
-    # partitioning read twice pre-materialization); offsets broadcast
-    "source_interleave": (5, 0),
+    # two-pass range machinery (the persisted range repartition + the
+    # per-partition row_number regroup); offsets broadcast
+    "source_interleave": (3, 0),
     # r18 hybrid fusion: the two rankers' exchanges (BM25 stats fold +
     # top-k, dense per-query rank regroup) + ONE candidate-sized
     # fusion groupBy — the fused frames never exceed 2 x RRF_DEPTH
@@ -304,7 +304,7 @@ PLAN_BOUNDS = {
     # broadcasts. This pin would have caught the round-4 regression.
     "dedup_minhash_lsh": (3, 0),  # +spread x1 (banding pass; r19 dropped the
     # post-semi verify-pass spread — candidate-bounded, see normalized_tokens)
-    "dedup_simhash_check": (6, 0),  # +spread x2 (query + exact-baseline passes)
+    "dedup_simhash_check": (5, 0),  # +spread x2 (query + exact-baseline passes)
     # CC runs to convergence while the plan is BUILT (iterative
     # localCheckpoint loop); the residual plan joins the BROADCAST
     # label set (near-dup-graph-sized) against the corpus — zero
@@ -332,13 +332,13 @@ PLAN_BOUNDS = {
     # second SMJ is the doc-level rollup left join, which AQE
     # broadcast-swaps at runtime when matches are small. 2 of the 5
     # exchanges are the small-scan fan-out gate (skips at scale).
-    "dedup_incremental": (5, 2),  # +spread x2 (batch + reference banding;
+    "dedup_incremental": (5, 1),  # +spread x2 (batch + reference banding;
     # r19 dropped the two verify-pass spreads — candidate-bounded)
     # check sweep composes matches (executed ONCE, persisted for its
     # three consumers) + exact twin + rollup (same class as
     # dedup_minhash_lsh_check: stats-less derived-frame SMJs are
     # expected inside *_check verification queries)
-    "dedup_incremental_check": (24, 4),  # +spread x3 (banding passes only
+    "dedup_incremental_check": (24, 2),  # +spread x3 (banding passes only
     # since r19; the sweep's exact twin keeps its own corpus spreads)
     # ANN family: exact baselines are one top-k shuffle; the *_check
     # sweeps compare approx vs exact so they carry both plans' shuffles
@@ -359,30 +359,30 @@ PLAN_BOUNDS = {
     # SMJ is the INTENDED plan there (both sides are Q x C candidate
     # frames that scale with the query batch; broadcasting them would
     # cap Q)
-    "mmr_rerank": (4, 2),
-    "mmr_rerank_check": (7, 2),
+    "mmr_rerank": (4, 1),
+    "mmr_rerank_check": (6, 1),
     # A-Res weighted sample: narrow key projection + one stratum window
     "weighted_sample": (1, 0),
     # two-level epoch shuffle: ONE block hash-partition exchange + a
-    # per-partition sort — the whole point vs corpus_shuffle's 3
+    # per-partition sort — the whole point vs corpus_shuffle's 2
     "block_shuffle": (1, 0),
     # fingerprint full-outer on id: SMJ is the intended plan — both
     # snapshot sides are corpus-sized, nothing is broadcastable
-    "snapshot_diff": (2, 2),
+    "snapshot_diff": (2, 1),
     # roundtrip compose: the diff's full-outer + the changelog payload
     # join + the apply anti-join, each an SMJ between derived
     # corpus-sized frames pre-AQE (runtime broadcast-swaps the
     # edit-volume sides); exchanges are their co-partitionings
-    "changelog_roundtrip": (8, 8),
+    "changelog_roundtrip": (8, 4),
     # check: operator + independent recheck + all-pairs exact baseline
     # (labeled, check scale only) — derived-frame SMJs expected
-    "semantic_dedup_check": (8, 2),
-    "ann_lsh_check": (12, 4),
-    "ann_ivf_check": (12, 4),
-    "ann_pq_check": (12, 4),
-    "dedup_minhash_lsh_check": (18, 2),  # +spread x3 (r19: the query's
+    "semantic_dedup_check": (7, 1),
+    "ann_lsh_check": (12, 2),
+    "ann_ivf_check": (12, 2),
+    "ann_pq_check": (12, 2),
+    "dedup_minhash_lsh_check": (18, 1),  # +spread x3 (r19: the query's
     # verify-pass spread dropped — candidate-bounded)
-    "uv_approx_check": (6, 2),
+    "uv_approx_check": (6, 1),
     # text/decontam: broadcast benchmark shingles + one (id,1) shuffle
     "decontaminate": (4, 0),  # +spread x2 (train + eval shingle passes)
     # leakage-safe split: CC runs while the plan is BUILT; the residual
@@ -444,13 +444,13 @@ PLAN_BOUNDS = {
     # collapses it) + tiny distinct/window/final aggs; grid join must
     # stay broadcast
     "value_drift_psi": (4, 0),
-    # overlap matrix: per-shingle collect_set groupBy feeds the pair
-    # branch and the sizes branch (duplicated pre-AQE), + one pair
-    # count + one sizes count; size joins must stay broadcast
-    "source_overlap": (6, 0),
+    # overlap matrix: spread + per-shingle collect_set groupBy + ONE
+    # combined pair/size count, all inside the frame the operator
+    # persists and materializes; size joins must stay broadcast
+    "source_overlap": (3, 0),
     # sampling / release family
-    "export_shards": (3, 0),  # two-pass range partition
-    "corpus_shuffle": (3, 0),  # same two-pass machinery over the md5 key
+    "export_shards": (2, 0),  # two-pass range partition
+    "corpus_shuffle": (2, 0),  # same two-pass machinery over the md5 key
     "profile_documents": (2, 0),
     "sequence_packing": (1, 0),
     "mixture_resample": (3, 0),
@@ -460,7 +460,7 @@ PLAN_BOUNDS = {
     # long-form full-outer self-compare (numpy path vs JVM recompute):
     # both sides are docs×8 and full_outer can't broadcast, so the SMJ
     # co-partition IS the intended plan; check-only, never in bench
-    "media_features_check": (3, 2),
+    "media_features_check": (3, 1),
     "media_phash": (0, 0),  # narrow mapInPandas over a pushed 2-col scan
     # persisted signature table read by both self-join sides (one
     # payload-hash pass); 1 exchange = the pair-distinct
@@ -471,7 +471,7 @@ PLAN_BOUNDS = {
     # broadcast_ranks precedent); post-persist stats are unknown, so
     # the STATIC plan shows SMJs that AQE broadcasts at runtime when a
     # side is genuinely small (the media_features_check convention)
-    "media_phash_incremental": (3, 2),
+    "media_phash_incremental": (3, 1),
     # winnow decontamination: both sides' fingerprint distincts + the
     # fp_hash join + two id-level rollups over the persisted hit frame
     # + the final id join. Post-persist stats are unknown, so the
@@ -481,11 +481,11 @@ PLAN_BOUNDS = {
     # the hint for AQE-less pipelines). Every joined frame is
     # 40-bit-hash tuples from the ~2/(w+1) winnowed sub-sample — never
     # text, never the corpus.
-    "winnow_decontaminate": (8, 2),  # +spread x2 (train + eval fingerprint passes)
+    "winnow_decontaminate": (8, 1),  # +spread x2 (train + eval fingerprint passes)
     # the multi-benchmark generalization: same shape + the second
     # benchmark's fingerprint branch in the unioned index; post-join
     # frames hit-sized, keyed (doc, bench)
-    "winnow_decontaminate_multi": (10, 2),  # +spread x3 (train + 2 benchmark splits)
+    "winnow_decontaminate_multi": (10, 1),  # +spread x3 (train + 2 benchmark splits)
     # spans consumer: train fingerprints -> hash semi-join against the
     # eval index (broadcasts; the distinct eval hash frame is
     # benchmark-sized) -> matched-position distinct -> islands window.
@@ -493,7 +493,7 @@ PLAN_BOUNDS = {
     "winnow_contaminated_spans": (5, 0),  # +spread
     # excision: the spans pipeline + per-doc span-list rollup, then
     # the corpus joins the contamination-sized span lists broadcast
-    # (4 BHJ at test SF) and trims in a per-row HOF — the corpus
+    # (2 BHJ at test SF) and trims in a per-row HOF — the corpus
     # itself crosses no exchange
     "winnow_decontaminate_trim": (5, 0),  # +spread
 }
@@ -509,9 +509,6 @@ def test_every_registered_query_is_pinned():
     assert not unpinned, f"registered queries without a plan pin: {unpinned}"
 
 
-import pytest
-
-
 @pytest.fixture(scope="module")
 def plan_sweep(spark, sf_dir):
     """ONE registry sweep shared by the shape pins and the nested-loop
@@ -520,17 +517,13 @@ def plan_sweep(spark, sf_dir):
     bpe_train_merges, bpe_tokenize_stats, source_pagerank, the CC
     family — means fully EXECUTING the iterative computation twice
     per pytest run for identical plan text)."""
-    sweep: dict[str, tuple[dict, str]] = {}
-    for name, q in all_queries().items():
-        a = audit(q.fn(spark, sf_dir))  # audit carries the plan text
-        sweep[name] = (a, a["plan"])
-    return sweep
+    return {name: audit(q.fn(spark, sf_dir)) for name, q in all_queries().items()}
 
 
 def test_plan_shapes(plan_sweep):
     problems = []
     for name, (max_ex, max_smj) in PLAN_BOUNDS.items():
-        a = plan_sweep[name][0]
+        a = plan_sweep[name]
         if a["exchanges"] > max_ex:
             problems.append(f"{name}: {a['exchanges']} exchanges > {max_ex}")
         if a["smj"] > max_smj:
@@ -555,67 +548,62 @@ def test_plan_shapes(plan_sweep):
 # join until proven otherwise.
 BNLJ_BOUNDS = {
     # (s) scalar-broadcast class
-    "basket_lift": 2, "bm25_search": 2, "doc_bigram_logprob": 2,
+    "basket_lift": 1, "bm25_search": 1, "doc_bigram_logprob": 1,
     # (s) hybrid fusion inherits BOTH scalar-broadcast crosses: the
     # BM25 1-row stats fold and the dense side's broadcast query
-    # cross (each tree+detail double-counted -> 4)
-    "hybrid_rrf_search": 4,
-    "doc_logprob": 2, "events_gapfill": 2, "events_gapfill_interp": 2,
-    "heavy_hitters": 2, "mixture_resample": 2, "multi_query_search": 3,
-    "rfm_segments": 2, "source_divergence": 2, "tfidf_top_terms": 2,
-    "tpch_q11": 2, "tpch_q22": 2, "training_mix_snapshot": 2,
-    "word_pmi": 2, "value_drift_psi": 4,
+    # cross (one join each -> 2)
+    "hybrid_rrf_search": 2,
+    "doc_logprob": 1, "events_gapfill": 1, "events_gapfill_interp": 1,
+    "heavy_hitters": 1, "mixture_resample": 1, "multi_query_search": 1,
+    "rfm_segments": 1, "source_divergence": 1, "tfidf_top_terms": 1,
+    "tpch_q11": 1, "tpch_q22": 1, "training_mix_snapshot": 1,
+    "word_pmi": 1, "value_drift_psi": 2,
     # (c) exact-baseline / property-check class
-    "ann_cosine_topk": 2, "ann_cosine_topk_int8": 2,
-    "ann_cosine_topk_pq": 2, "mmr_rerank": 4,
-    "ann_lsh_check": 10, "ann_ivf_check": 10, "ann_pq_check": 14,
-    "mmr_rerank_check": 8, "semantic_dedup_check": 6,
-    "dedup_minhash_lsh_check": 4, "dedup_simhash_check": 4,
-    "dedup_incremental_check": 8, "heavy_hitters_check": 10,
+    "ann_cosine_topk": 1, "ann_cosine_topk_int8": 1,
+    "ann_cosine_topk_pq": 1, "mmr_rerank": 1,
+    "ann_lsh_check": 5, "ann_ivf_check": 5, "ann_pq_check": 7,
+    "mmr_rerank_check": 1, "semantic_dedup_check": 3,
+    "dedup_minhash_lsh_check": 2, "dedup_simhash_check": 2,
+    "dedup_incremental_check": 4, "heavy_hitters_check": 5,
     # (s)-adjacent: non-equi t1 < t2 pair enumeration over the distinct
     # event-type frame (a handful of rows at any scale — event types
     # are a semantic dimension, not data-sized) + the pair joins that
     # carry it; every build side is k x |types| at most
-    "kmv_set_cardinality": 6,
+    "kmv_set_cardinality": 3,
     # (s)-adjacent like kmv_set_cardinality: the non-equi set_a <
     # set_b pair enumeration over the per-SOURCE stats frame (20 rows
     # at any SF — sources are a semantic dimension) plus the joins
     # carrying the pair frame; every build side is |sets| or
     # k x |sets| rows
-    "kmv_pair_intersections": 6,
+    "kmv_pair_intersections": 3,
     # (s) scalar-broadcast class: the corpus-centroid frame is ONE row
-    # (a 64-element array) broadcast onto the |labels|-row side — one
-    # join, counted twice by the formatted plan's tree+detail sections
-    "embedding_drift": 2,
+    # (a 64-element array) broadcast onto the |labels|-row side — one join
+    "embedding_drift": 1,
     # (s) scalar-broadcast class: the 1-row global-bounds frame onto
-    # the orders scan (one join, tree+detail double count)
-    "zorder_layout": 2,
+    # the orders scan (one join)
+    "zorder_layout": 1,
     # (s) scalar-broadcast class: the 1-row global sensitive-value
     # histogram (ordered (value,count) list + total + m) crossed onto
-    # the |classes|-row frame (one join, tree+detail double count)
-    "t_closeness_audit": 2,
+    # the |classes|-row frame (one join)
+    "t_closeness_audit": 1,
     # (s) same 1-row histogram cross, inside the funnel's embedded
     # weighted t-closeness stage
-    "release_gate_snapshot": 2,
+    "release_gate_snapshot": 1,
 }
 
 
 def test_no_cartesian_or_unpinned_nested_loop_join(plan_sweep):
-    """Sweep of EVERY registered query's physical-plan text: no
+    """Sweep of EVERY registered query's physical plan: no
     CartesianProduct anywhere, and BroadcastNestedLoopJoin only in the
     allowlisted scalar-broadcast / check-baseline plans, within each
     plan's pinned ceiling."""
-    import re
-
     problems = []
-    for name, (_, plan) in plan_sweep.items():
-        cart = len(re.findall(r"CartesianProduct", plan))
-        bnlj = len(re.findall(r"BroadcastNestedLoopJoin", plan))
-        if cart:
-            problems.append(f"{name}: {cart} CartesianProduct")
-        if bnlj > BNLJ_BOUNDS.get(name, 0):
+    for name, a in plan_sweep.items():
+        if a["cartesian"]:
+            problems.append(f"{name}: {a['cartesian']} CartesianProduct")
+        if a["bnlj"] > BNLJ_BOUNDS.get(name, 0):
             problems.append(
-                f"{name}: {bnlj} BroadcastNestedLoopJoin > "
+                f"{name}: {a['bnlj']} BroadcastNestedLoopJoin > "
                 f"{BNLJ_BOUNDS.get(name, 0)} allowed"
             )
     assert not problems, "; ".join(problems)
@@ -627,7 +615,7 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
     CUT, so the registry sweep above audits only their residual plans
     (0 shuffles) while the real per-round cost — one edges-sized join
     plus one aggregate shuffle — lives in a loop body no registered
-    query's explain() can see. Pin ONE un-checkpointed round here via
+    query's plan can show. Pin ONE un-checkpointed round here via
     the shared-body audit surfaces (operators/graph.py:_pr_round /
     operators/dedup.py:_cc_round — the loop executes the SAME
     function, so the audited plan is the executed round by
@@ -640,8 +628,7 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
     hint-broadcast (a billion-node rank frame must shuffle, not
     collect through the driver — the r15 broadcast_ranks default), and
     the only hinted build in the PageRank round is the one-time wsum
-    frame. Join counts are doubled by the formatted plan's
-    tree+details sections (the BNLJ sweep's convention)."""
+    frame."""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark.operators.dedup import cc_loop_body
@@ -676,46 +663,51 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
         # threshold into every later test (session-scoped fixture)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
-    problems = []
-    # PageRank round, default hints OFF everywhere (r16: the wsum hint
-    # became opt-in too — a node-count-sized forced broadcast dies on
-    # the driver ceiling for a billion-node graph): NO broadcast node
-    # may appear; both the setup wsum join and the per-round rank join
-    # are shuffle joins the planner/AQE may upgrade at runtime.
-    if pr["broadcasts"] != 0:
-        problems.append(
-            f"pagerank round: {pr['broadcasts']} != 0 broadcast nodes — "
-            "a forced hint reached the rank or wsum side"
-        )
-    if pr["smj"] != 4 or pr["exchanges"] > 4:
-        problems.append(
-            f"pagerank round shape drifted: smj={pr['smj']} (want 4), "
-            f"exchanges={pr['exchanges']} (ceiling 4)"
-        )
-    # the canary that the mechanism detects forced hints at all: with
-    # BOTH opt-ins armed, both joins must show as broadcasts (4 = two
-    # joins, tree+detail doubled) and no SMJ remains
-    if pr_hinted["broadcasts"] != 4 or pr_hinted["smj"] != 0:
-        problems.append(
-            "hint-detection canary broken: broadcast_ranks+broadcast_wsum "
-            f"shows bc={pr_hinted['broadcasts']} (want 4), "
-            f"smj={pr_hinted['smj']} (want 0)"
-        )
-    # CC round (pointer jumping engaged — worst case): label joins are
-    # NEVER hint-broadcast; 3 SMJ nodes = msgs join duplicated across
-    # the self-join's two branches (ReusedExchange collapses at
-    # runtime) + the jump join itself.
-    if cc["broadcasts"] != 0 or cc["smj"] != 6 or cc["exchanges"] > 9:
-        problems.append(
-            f"cc jumping round shape drifted: bc={cc['broadcasts']} "
-            f"(want 0), smj={cc['smj']} (want 6), "
-            f"exchanges={cc['exchanges']} (ceiling 9)"
-        )
-    # plain round: one msgs join + the min-groupBy
-    if cc_plain["broadcasts"] != 0 or cc_plain["smj"] != 2 or cc_plain["exchanges"] > 4:
-        problems.append(
-            f"cc plain round shape drifted: bc={cc_plain['broadcasts']} "
-            f"(want 0), smj={cc_plain['smj']} (want 2), "
-            f"exchanges={cc_plain['exchanges']} (ceiling 4)"
-        )
+    # name -> (audit, broadcast joins, sort-merge joins, exchange ceiling)
+    shapes = {
+        # PageRank round, default hints OFF everywhere (r16: the wsum
+        # hint became opt-in too — a node-count-sized forced broadcast
+        # dies on the driver ceiling for a billion-node graph): NO
+        # broadcast node may appear; both the setup wsum join and the
+        # per-round rank join are shuffle joins the planner/AQE may
+        # upgrade at runtime.
+        "pagerank round": (pr, 0, 2, 4),
+        # the canary that the mechanism detects forced hints at all:
+        # with BOTH opt-ins armed, both joins must show as broadcasts
+        # and no SMJ remains
+        "hint-detection canary (broadcast_ranks+broadcast_wsum)": (pr_hinted, 2, 0, None),
+        # CC round (pointer jumping engaged — worst case): label joins
+        # are NEVER hint-broadcast; 3 SMJ nodes = msgs join duplicated
+        # across the self-join's two branches (ReusedExchange collapses
+        # at runtime) + the jump join itself.
+        "cc jumping round": (cc, 0, 3, 9),
+        # plain round: one msgs join + the min-groupBy
+        "cc plain round": (cc_plain, 0, 1, 4),
+    }
+    problems = [
+        f"{name} shape drifted: bc={a['broadcasts']} (want {bc}), "
+        f"smj={a['smj']} (want {smj}), exchanges={a['exchanges']} (ceiling {ex})"
+        for name, (a, bc, smj, ex) in shapes.items()
+        if a["broadcasts"] != bc or a["smj"] != smj or (ex is not None and a["exchanges"] > ex)
+    ]
     assert not problems, "; ".join(problems)
+
+
+def test_audit_is_stable_across_cache_materialization(spark):
+    """Auditing the same frame before and after its persisted input is
+    materialized gives the same counts: the walk reads AQE's initial
+    plan, which does not change once the cache has run (the cached
+    plan's final plan would add its exchanges a second time)."""
+    from pyspark.sql import functions as F
+
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    try:
+        df = agg.groupBy("count").agg(F.sum("k"))
+        before = audit(df)
+        agg.count()
+        after = audit(df)
+    finally:
+        agg.unpersist()
+    keys = ("exchanges", "broadcasts", "smj")
+    assert [after[k] for k in keys] == [before[k] for k in keys]
+    assert before["exchanges"] == 2

@@ -13,9 +13,10 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from flink_kafka_spark.operators.dedup import ngram_jaccard_pairs, shingle_prune_stats
-from flink_kafka_spark.operators.joins import interval_join, interval_join_binned
+from flink_kafka_spark.operators.dedup import ngram_jaccard_pairs, shingle_prune_stats, shingle_sets
+from flink_kafka_spark.operators.joins import fuzzy_match_pairs, interval_join, interval_join_binned
 from flink_kafka_spark.operators.patterns import consecutive_event_alert, create_pay_timeout
+from flink_kafka_spark.tables import load
 
 SETTINGS = dict(
     max_examples=12,
@@ -1918,3 +1919,56 @@ def test_source_interleave_virtual_time_prefix_counts_exact(spark, sizes, weight
         for s, n in zip(srcs, sizes):
             got = sum(1 for r in prefix if r["source"] == s)
             assert got == min(n, m * wmap[s]), (s, m, got)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+class TestBandedLevenshtein:
+    """fuzzy_match_pairs' banded 3-arg kernel must be pair-for-pair and
+    distance-for-distance identical to the unbounded kernel + <= filter
+    it replaced (the -1 band is exactly the discarded set)."""
+
+    @pytest.mark.parametrize("max_dist", [0, 1, 2, 3])
+    def test_matches_unbounded_kernel(self, spark, max_dist):
+        names = [
+            (1, "alpha beta"), (2, "alpha bete"), (3, "alpha betXY"),
+            (4, "alpha beta"), (5, "alphq betq"), (6, "gamma delta"),
+            (7, "gamma delt"), (8, "gamma d"), (9, "alpha"),
+        ]
+        df = spark.createDataFrame(names, "k long, name string")
+        got = _rows(fuzzy_match_pairs(df, "k", "name", max_dist=max_dist))
+        # reference: same blocking, unbounded levenshtein, explicit filter
+        blk = F.split(F.lower(F.col("name")), r"\s+").getItem(0)
+        a = df.select(F.col("k").alias("a_key"), F.col("name").alias("a_name"), blk.alias("_b"))
+        b = df.select(F.col("k").alias("b_key"), F.col("name").alias("b_name"), blk.alias("_b"))
+        ref = (
+            a.join(b, "_b")
+            .filter(F.col("a_key") < F.col("b_key"))
+            .filter(F.abs(F.length("a_name") - F.length("b_name")) <= max_dist)
+            .withColumn("lev_dist", F.levenshtein("a_name", "b_name"))
+            .filter(F.col("lev_dist") <= max_dist)
+            .select("a_key", "b_key", "a_name", "b_name",
+                    F.col("lev_dist").cast("int").alias("lev_dist"))
+        )
+        assert got == _rows(ref)
+
+
+class TestUnspreadVerifyPass:
+    """r19: the LSH verification passes (candidate-bounded by the
+    semi-filter) no longer take the layout spread — spread=False must
+    be a pure plan change, row-identical to the spread path."""
+
+    def test_shingle_sets_spread_flag_row_identity(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        assert _rows(shingle_sets(docs, "doc_id", spread=False)) == _rows(
+            shingle_sets(docs, "doc_id", spread=True)
+        )
+
+    def test_unspread_plan_has_no_round_robin(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        plan = shingle_sets(docs, "doc_id", spread=False)._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan
+        plan_spread = shingle_sets(docs, "doc_id", spread=True)._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan_spread

@@ -7,7 +7,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_spark.operators.similarity import quantize_embeddings
-from flink_kafka_spark.operators.text import chunk_documents, tfidf_top_terms
+from flink_kafka_spark.operators.sketches import count_min_sketch
+from flink_kafka_spark.operators.text import (
+    bpe_apply_merges,
+    bpe_learn_merges,
+    bpe_train_and_tokenize,
+    chunk_documents,
+    tfidf_top_terms,
+)
 from flink_kafka_spark.tables import load
 
 CHUNK, STRIDE = 64, 48
@@ -1579,3 +1586,119 @@ def test_rrf_fuse_and_interleave_reject_colliding_columns(spark):
     d = spark.createDataFrame([(1, "a")], "position long, source string")
     with pytest.raises(ValueError, match="collides"):
         source_interleave(d, id_col="position")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+class TestVectorizedBpeMergeStep:
+    """_bpe_merge_step's vectorized (left != right) formulation must be
+    element-for-element identical to the greedy fold it replaced —
+    including run pathologies, both-ends candidates and symbols that
+    already contain the pair string."""
+
+    FOLD_CASES = [
+        ["a", "b"], ["a", "b", "a", "b"], ["a", "a", "b"],
+        ["b", "a", "b", "a", "b"], ["a"], [], ["b", "b", "a"],
+        ["ab", "a", "b"], ["a", "ab", "b"], ["a", "b", "b"],
+        ["c", "a", "b", "c", "a", "b", "a"],
+    ]
+
+    @pytest.mark.parametrize("pair", [("a", "b"), ("b", "a"), ("ab", "a"), ("a", "ab"), ("c", "a")])
+    def test_matches_fold(self, spark, pair):
+        from flink_kafka_spark.operators.text import _bpe_merge_step
+
+        left, right = pair
+        a, b, ab = F.lit(left), F.lit(right), F.lit(left + right)
+        fold = F.aggregate(
+            "syms",
+            F.expr("cast(array() as array<string>)"),
+            lambda acc, x: F.when(
+                (F.try_element_at(acc, F.lit(-1)) == a) & (x == b),
+                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(ab)),
+            ).otherwise(F.concat(acc, F.array(x))),
+        )
+        df = spark.createDataFrame([(s,) for s in self.FOLD_CASES], "syms array<string>")
+        rows = df.select(
+            _bpe_merge_step("syms", left, right).alias("vec"), fold.alias("fold")
+        ).collect()
+        for r in rows:
+            assert r["vec"] == r["fold"]
+
+    def test_equal_pair_uses_fold_for_run_greediness(self, spark):
+        # left == right falls back to the fold: aaa -> [aa, a]
+        from flink_kafka_spark.operators.text import _bpe_merge_step
+
+        df = spark.createDataFrame([(["a", "a", "a"],)], "syms array<string>")
+        assert df.select(_bpe_merge_step("syms", "a", "a").alias("m")).first()["m"] == ["aa", "a"]
+
+
+class TestWeightedCms:
+    """count_min_sketch(weight_col=...) over the pre-aggregated vocab
+    must be cell-for-cell identical to the occurrence-stream sketch
+    (the CM merge property the cms_topk_estimates rewrite relies on)."""
+
+    def test_weighted_equals_occurrence_path(self, spark, sf_dir):
+        toks = (
+            load(spark, sf_dir, "documents")
+            .select(F.explode(F.split("text", " ")).alias("tok"))
+            .where(F.col("tok") != "")
+        )
+        occ = count_min_sketch(toks, "tok", width=64, depth=3)
+        vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
+        weighted = count_min_sketch(vocab, "tok", width=64, depth=3, weight_col="cnt")
+        assert _rows(weighted) == _rows(occ)
+
+
+class TestBpeTrainAndTokenize:
+    """r19: bpe_tokenize_stats reuses the trainer's final vocabulary
+    state instead of re-deriving it merge-layer by merge-layer. The
+    fused composition must be row-identical to the two-step one
+    (learn, collect the table, apply) — including the learned merge
+    table itself when state is requested."""
+
+    def test_fused_equals_two_step_composition(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents")
+        merges = [
+            (r["left"], r["right"])
+            for r in bpe_learn_merges(docs, n_merges=8).collect()
+        ]
+        two_step = _rows(bpe_apply_merges(docs, merges))
+        fused = _rows(bpe_train_and_tokenize(docs, n_merges=8))
+        assert fused == two_step
+
+    def test_state_request_leaves_merge_table_unchanged(self, spark, sf_dir):
+        docs = load(spark, sf_dir, "documents")
+        plain = _rows(bpe_learn_merges(docs, n_merges=4))
+        with_state, state = bpe_learn_merges(
+            docs, n_merges=4, return_vocab_state=True
+        )
+        assert _rows(with_state) == plain
+        # the state is the vocabulary with every merge applied: its
+        # token counts must match applying the merge table from scratch
+        from pyspark.sql import functions as F
+
+        merges = [(r[1], r[2]) for r in plain]
+        via_state = _rows(state.select("w", F.size("syms").alias("n")))
+        sym0 = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+        from flink_kafka_spark.operators.text import _bpe_merge_step, _bpe_words
+
+        vocab = _bpe_words(docs, "doc_id", "text").select("w").distinct().select(
+            "w", sym0.alias("_s")
+        )
+        for left, right in merges:
+            vocab = vocab.select("w", _bpe_merge_step("_s", left, right).alias("_s"))
+        from_scratch = _rows(vocab.select("w", F.size("_s").alias("n")))
+        assert via_state == from_scratch
+
+    def test_empty_corpus_state(self, spark):
+        docs = spark.createDataFrame(
+            [(1, ""), (2, None)], "doc_id long, text string"
+        )
+        table, state = bpe_learn_merges(docs, n_merges=3, return_vocab_state=True)
+        assert table.count() == 0
+        assert state.count() == 0
+        assert _rows(bpe_train_and_tokenize(docs, n_merges=3)) == _rows(
+            bpe_apply_merges(docs, [])
+        )

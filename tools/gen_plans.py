@@ -6,10 +6,7 @@ scan pushdown and column pruning per query. The raw numbers the
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -21,102 +18,81 @@ from bench import BENCH_QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# audit() key -> physical operator class it counts
+COUNTED = {
+    "exchanges": "ShuffleExchangeExec",
+    "broadcasts": "BroadcastHashJoinExec",
+    "smj": "SortMergeJoinExec",
+    "bnlj": "BroadcastNestedLoopJoinExec",
+    "cartesian": "CartesianProductExec",
+}
 
-def _cached_node_ids(plan: str) -> "set[int]":
-    """Node ids inside an InMemoryRelation subtree of the formatted
-    plan's TREE section — the cached build plan, executed once at
-    materialization, not per invocation of the explained frame. The
-    loop-body audit rows subtract these so a per-round row reports the
-    per-round cost, not the one-time edge-frame build inlined under
-    the persist (r15 verdict item 2)."""
-    ids: set[int] = set()
-    guard: "int | None" = None  # name-column depth of the active IMR
-    for line in plan.splitlines():
-        if re.match(r"^\(\d+\)", line):
-            break  # tree section over, detail blocks begin
-        name = re.search(r"[A-Za-z]", line)
-        node = re.search(r"\((\d+)\)\s*$", line)
-        if not name or not node:
+
+def _operators(df) -> list[tuple[str, object, bool]]:
+    """(class name, node, live) for every distinct operator of the
+    frame's physical plan, each counted once by JVM identity.
+
+    An AdaptiveSparkPlanExec is read through its initial plan (its
+    input plan has no exchanges yet, and its final plan exists only
+    once executed, so reading it would make counts depend on what ran
+    before). Every other node is followed through ``children`` and
+    ``innerChildren``, which reach cached InMemoryRelation plans and
+    subqueries. ``live`` is False below an InMemoryTableScanExec: that
+    cached build plan runs once at materialization, not per
+    invocation of the frame."""
+    ident = df.sparkSession._jvm.java.lang.System.identityHashCode
+    live, cached = [df._jdf.queryExecution().executedPlan()], []
+    seen: set[int] = set()
+    out = []
+    while live or cached:
+        is_live = bool(live)
+        node = (live or cached).pop()
+        key = ident(node)
+        if key in seen:
             continue
-        depth = name.start()
-        if guard is not None:
-            if depth > guard:
-                ids.add(int(node.group(1)))
-                continue
-            guard = None
-        if line[depth:].startswith("InMemoryRelation"):
-            guard = depth
-    return ids
+        seen.add(key)
+        name = node.getClass().getSimpleName()
+        out.append((name, node, is_live))
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.initialPlan()]
+        else:
+            kids = [
+                seq.apply(i)
+                for seq in (node.children(), node.innerChildren())
+                for i in range(seq.size())
+            ]
+        # reversed: pop() then visits children left to right
+        below = live if is_live and name != "InMemoryTableScanExec" else cached
+        below.extend(reversed(kids))
+    return out
+
+
+def _scan(node) -> str:
+    table = node.relation().location().rootPaths().head().getName()
+    pushed = ", pushed" if node.metadata().apply("PushedFilters") != "[]" else ""
+    return f"{table.removesuffix('.parquet')}({node.requiredSchema().length()} cols{pushed})"
 
 
 def audit(df) -> dict:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    cached = _cached_node_ids(plan)
-    # r16 advice: the indentation heuristic above is format-sensitive
-    # (an AQE Initial/Final re-print or cross-version drift could
-    # silently mis-scope the cached set and skew the loop-round rows).
-    # Cross-check prefix-immune: a bare substring probe (tree lines
-    # carry ':'/'+-' branch prefixes a line-anchored regex misses) on
-    # BOTH spellings the formatted plan uses — the tree's
-    # InMemoryRelation node and its InMemoryTableScan detail blocks.
-    if ("InMemoryRelation" in plan or "InMemoryTableScan" in plan) and not cached:
-        raise RuntimeError(
-            "plan-audit cached-node guard: InMemoryRelation/TableScan "
-            "present but no cached subtree ids matched — explain() format "
-            "drift; fix _cached_node_ids before trusting loop-round counts"
+    """Operator counts of ``df``'s physical plan (keys of COUNTED) and
+    its parquet scans, over the whole plan and, as ``live_*``, over
+    the per-invocation part only (cached build plans excluded)."""
+    ops = _operators(df)
+    out = {}
+    for prefix, kept in (("", ops), ("live_", [op for op in ops if op[2]])):
+        names = [name for name, _, _ in kept]
+        out.update({prefix + k: names.count(cls) for k, cls in COUNTED.items()})
+        out[prefix + "scans"] = ", ".join(
+            _scan(node) for name, node, _ in kept if name == "FileSourceScanExec"
         )
-
-    def _scan_list(live_only: bool) -> list:
-        out = []
-        for m in re.finditer(r"\((\d+)\) Scan parquet.*?(?=\n\(\d+\)|\Z)", plan, re.S):
-            if live_only and int(m.group(1)) in cached:
-                continue
-            block = m.group(0)
-            loc = re.search(r"file:[^\]]*/(\w+)\.parquet", block)
-            schema = re.search(r"ReadSchema: struct<([^>]*)>", block)
-            pushed = re.search(r"PushedFilters: \[([^\]]*)\]", block)
-            ncols = len(schema.group(1).split(",")) if schema and schema.group(1) else 0
-            out.append(
-                f"{loc.group(1) if loc else '?'}({ncols} cols"
-                + (", pushed" if pushed and pushed.group(1).strip() else "")
-                + ")"
-            )
-        return out
-
-    def _live(node: str) -> int:
-        return sum(
-            1
-            for m in re.finditer(rf"\((\d+)\) {node}", plan)
-            if int(m.group(1)) not in cached
-        )
-
-    return {
-        "exchanges": len(re.findall(r"\(\d+\) Exchange", plan)),
-        "broadcasts": len(re.findall(r"BroadcastHashJoin", plan)),
-        "smj": len(re.findall(r"SortMergeJoin", plan)),
-        "codegen": "WholeStageCodegen" in plan or True,  # formatted mode hides ids
-        "scans": ", ".join(_scan_list(live_only=False)),
-        # per-invocation counts with InMemoryRelation build plans
-        # excluded (detail headers only, so joins are single-counted —
-        # unlike the doubled tree+detail totals above)
-        "live_exchanges": _live("Exchange"),
-        "live_broadcasts": _live("BroadcastHashJoin"),
-        "live_smj": _live("SortMergeJoin"),
-        "live_scans": ", ".join(_scan_list(live_only=True)),
-        # full formatted plan text, so consumers that also grep the plan
-        # (the pytest BNLJ sweep) don't render explain() a second time
-        "plan": plan,
-    }
+    return out
 
 
 # Iterative queries return a localCheckpoint whose lineage is cut, so
 # their headline row above reads 0/0/0 — the loop body (where the
-# per-round cost lives) is explained through these un-checkpointed
-# plan-audit surfaces instead (r15 verdict item 2). Keys are display
-# names; values build ONE round's frame at SF_DIR.
+# per-round cost lives) is audited through these un-checkpointed
+# plan-audit surfaces instead. Keys are display names; values build
+# ONE round's frame at SF_DIR.
 def _loop_bodies() -> dict:
     from flink_kafka_spark.queries.dedup import (
         dedup_canonicalize_loop_body,
@@ -132,62 +108,45 @@ def _loop_bodies() -> dict:
 def main() -> None:
     spark = get_spark(app_name="plan_audit")
     qs = all_queries()
-    rows = []
-    for name in BENCH_QUERIES:
-        try:
-            a = audit(qs[name].fn(spark, SF_DIR))
-            rows.append((name, a))
-        except Exception as ex:  # pragma: no cover
-            rows.append((name, {"error": str(ex)[:80]}))
-    for name, fn in _loop_bodies().items():
-        try:
-            a = audit(fn(spark, SF_DIR))
-            # loop-body rows report PER-ROUND cost: the persisted edge
-            # frame's one-time build plan (inlined under the
-            # InMemoryRelation by explain) is excluded, and joins are
-            # single-counted (detail headers, not tree+detail)
-            rows.append(
-                (
-                    name,
-                    {
-                        **a,
-                        "exchanges": a["live_exchanges"],
-                        "broadcasts": a["live_broadcasts"],
-                        "smj": a["live_smj"],
-                        "scans": a["live_scans"] or "(cached edge frame only)",
-                    },
-                )
-            )
-        except Exception as ex:  # pragma: no cover
-            rows.append((name, {"error": str(ex)[:80]}))
-
     lines = [
         "# PLANS — physical-plan audit of the bench headline queries",
         "",
-        f"Generated by tools/gen_plans.py at {SF_DIR}. 'pushed' = the scan",
-        "carries PushedFilters; col counts show column pruning. Exchange =",
-        "shuffle boundary (AQE may further coalesce/convert at runtime).",
+        f"Generated by tools/gen_plans.py at {SF_DIR}. Counts walk the",
+        "physical plan tree (`queryExecution().executedPlan()`) and count",
+        "each distinct operator once. Adaptive (AQE) nodes are read",
+        "through their initial plan, the pre-execution plan; AQE may",
+        "still coalesce or convert at runtime. Cached (InMemoryRelation)",
+        "build plans and subqueries are included. shuffles =",
+        "ShuffleExchangeExec, broadcast joins = BroadcastHashJoinExec,",
+        "sort-merge joins = SortMergeJoinExec. Scans list each parquet",
+        "FileSourceScanExec: table, width of its required schema, and",
+        "'pushed' when it carries pushed filters.",
         "",
         "The `[loop round]` / `[cc round]` rows audit ONE un-checkpointed",
         "iteration of the PageRank / connected-components loops (their",
         "headline rows read 0/0/0 because the returned frame is a",
         "localCheckpoint whose lineage is cut). Those rows report",
-        "PER-ROUND cost: the persisted edge frame's one-time build plan",
-        "is excluded and join nodes are single-counted; multiply by the",
-        "iteration count (12 for pagerank, O(log diameter) for CC) for",
-        "the loop's total. Shapes are pinned by",
+        "PER-ROUND cost: the walk stops at the cache scan of the",
+        "persisted edge frame, so its one-time build plan is excluded;",
+        "multiply by the iteration count (12 for pagerank, O(log",
+        "diameter) for CC) for the loop's total. Shapes are pinned by",
         "tests/test_plans.py::test_iterative_loop_body_shapes.",
         "",
-        "| query | shuffles | broadcast-join nodes (incl. AQE re-plan) | sort-merge joins | scans (pruned cols) |",
+        "| query | shuffles | broadcast joins | sort-merge joins | scans (pruned cols) |",
         "|---|---|---|---|---|",
     ]
-    for name, a in rows:
-        if "error" in a:
-            lines.append(f"| {name} | — | — | — | ERROR {a['error']} |")
-        else:
-            lines.append(
-                f"| {name} | {a['exchanges']} | {a['broadcasts']} | {a['smj']} | {a['scans']} |"
-            )
+    # loop-body rows report PER-ROUND cost through the live_* counts
+    rows = [(name, qs[name].fn, "") for name in BENCH_QUERIES]
+    rows += [(name, fn, "live_") for name, fn in _loop_bodies().items()]
+    for name, fn, prefix in rows:
+        try:
+            a = audit(fn(spark, SF_DIR))
+        except Exception as ex:  # pragma: no cover
+            lines.append(f"| {name} | — | — | — | ERROR {str(ex)[:80]} |")
+            continue
+        counts = " | ".join(str(a[prefix + k]) for k in ("exchanges", "broadcasts", "smj"))
+        scans = a[prefix + "scans"] or "(cached edge frame only)"
+        lines.append(f"| {name} | {counts} | {scans} |")
     lines.append("")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:

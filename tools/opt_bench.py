@@ -2,16 +2,16 @@
 """Optimization-round iteration harness (r18): time a SUBSET of
 registered queries with the bench methodology (noop sink, sf0.1,
 median of N round-robin reps, warm-up pass) and optionally dump
-``explain("formatted")`` for each into plans/$SPARK_GRAFT_PLANS_ROUND/
-(default r19).
+``explain("formatted")`` for each into the untracked ``.plans/``
+directory at the repo root.
 
 This is a builder tool, not the driver contract — bench.py stays the
 one true bench. Usage:
 
     python tools/opt_bench.py q1 q2 ...            # time queries
     python tools/opt_bench.py --reps 5 q1 q2
-    python tools/opt_bench.py --explain before q1  # plans/r18/q1_before.txt
-    python tools/opt_bench.py --explain after q1   # plans/r18/q1_after.txt
+    python tools/opt_bench.py --explain before q1  # .plans/q1_before.txt
+    python tools/opt_bench.py --explain after q1   # .plans/q1_after.txt
 
 Timing and explain can be combined; explain runs after the timed reps
 so plan capture never pollutes the timings.
@@ -95,9 +95,7 @@ def main() -> None:
 
     if explain_tag:
         plans_dir = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "plans",
-            os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r19"),
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".plans"
         )
         os.makedirs(plans_dir, exist_ok=True)
         import contextlib
