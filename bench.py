@@ -13,7 +13,9 @@ round-over-round and 32-vs-8-core scaling comparisons get real
 per-query data again (r18 verdict item 3) without risking the parse.
 
 Each query executes fully via the `noop` sink (no driver-side collect,
-no result materialization cost in the timing).
+no result materialization cost in the timing), through
+``flink_kafka_spark.observe.run``: the timed window is the DataFrame
+build plus the action.
 
 Regression guardrail: per-query medians are compared against the
 committed baseline (BENCH_BASELINE.json, same sf only). Absolute
@@ -64,7 +66,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as _F  # noqa: E402
 
-from flink_kafka_spark.caching import release_all  # noqa: E402
+from flink_kafka_spark import observe  # noqa: E402
 from flink_kafka_spark.queries import all_queries  # noqa: E402
 from flink_kafka_spark.session import get_spark  # noqa: E402
 
@@ -320,15 +322,7 @@ def main() -> None:
     # compilation, parquet reader init, broadcast machinery) so the
     # timed runs measure steady-state throughput, not first-call
     # compilation. Not counted.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in BENCH_QUERIES:
-            try:
-                registry[name].fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
-    else:
-        spark.range(1).count()
+    observe.warm(spark, [registry[name] for name in BENCH_QUERIES])
 
     # calibration AFTER warm-up, in the same machine state as the
     # timed runs — this anchors the cross-session ratio comparison.
@@ -348,21 +342,18 @@ def main() -> None:
     # the phase taxes one rep of many queries and the median discards
     # it (observed: consecutive-rep benches flagged a different
     # untouched query as regressed on every invocation).
-    # Cache hygiene between queries: the _released query wrappers drop
-    # the previous invocation's tracked persists, and clearCache() +
-    # the persistent-RDD probe below guarantee nothing leaks from one
-    # timed query into the next (round-2 verdict item 2).
+    # Cache hygiene between queries: observe.run releases the tracked
+    # persists and clears the catalog cache after every run, and reports
+    # any RDD still persistent afterwards, so nothing leaks from one
+    # timed query into the next (round-2 verdict item 2). A leak found
+    # on any rep is reported.
     samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
     leaked: list[str] = []
-    for rep in range(3):
+    for _rep in range(3):
         for name in BENCH_QUERIES:
-            q = registry[name]
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-            release_all()
-            spark.catalog.clearCache()
-            if rep == 0 and spark.sparkContext._jsc.getPersistentRDDs().size() > 0:
+            rec = observe.run(spark, registry[name], sf_dir)
+            samples[name].append(rec["wall_s"])
+            if rec["leaked_rdds"] and name not in leaked:
                 leaked.append(name)
     timings = {name: round(sorted(runs)[1], 3) for name, runs in samples.items()}
 

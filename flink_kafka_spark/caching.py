@@ -17,9 +17,10 @@ Contract:
   when it starts (see ``queries/__init__.all_queries`` — by then the
   previous result has been materialized by its consumer), so sequential
   sweeps hold at most one query's working set;
-- batch harnesses (bench.py, tools/rehearsal.py) additionally call
-  :func:`release_all` after materializing each result, so nothing
-  lingers between timed queries.
+- batch harnesses additionally call :func:`release_all` after
+  materializing each result, so nothing lingers between timed queries:
+  bench.py and the profile and stress tools through
+  ``observe.run``, tools/rehearsal.py directly.
 
 RDD-level persists (``localCheckpoint`` in the connected-components
 loop) need the same lifecycle but are invisible to DataFrame
@@ -36,6 +37,8 @@ fresh frame by re-invoking the query, which every harness here does.
 """
 
 from __future__ import annotations
+
+import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,40 +96,19 @@ def track_rdds(ids, sc=None) -> None:
         _LIVE_RDDS.append((app, frozenset(ids)))
 
 
+@contextlib.contextmanager
 def release_scope():
-    """Context manager releasing only the persists tracked INSIDE the
-    scope, leaving earlier registrations alone — the micro-batch
-    lifecycle: a ``foreachBatch`` body runs an operator pipeline whose
-    internal persists are dead once the batch's sink materializes, but
-    a long-running streaming query must not release the enclosing
+    """Release only the persists tracked INSIDE the scope, leaving
+    earlier registrations alone — the micro-batch lifecycle: a
+    ``foreachBatch`` body runs an operator pipeline whose internal
+    persists are dead once the batch's sink materializes, but a
+    long-running streaming query must not release the enclosing
     session's tracked frames (release_all would)."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _scope():
-        mark, mark_r = len(_LIVE), len(_LIVE_RDDS)
-        try:
-            yield
-        finally:
-            while len(_LIVE) > mark:
-                df = _LIVE.pop()
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # session already stopped — nothing to release
-            while len(_LIVE_RDDS) > mark_r:
-                app, ids = _LIVE_RDDS.pop()
-                try:
-                    spark = SparkSession.getActiveSession()
-                    if (
-                        spark is not None
-                        and spark.sparkContext.applicationId == app
-                    ):
-                        unpersist_rdds(spark.sparkContext, ids)
-                except Exception:
-                    pass
-
-    return _scope()
+    mark = len(_LIVE), len(_LIVE_RDDS)
+    try:
+        yield
+    finally:
+        _release_since(*mark)
 
 
 def release_all() -> int:
@@ -134,15 +116,21 @@ def release_all() -> int:
     (non-blocking). Returns the number released. Safe to call at any
     query boundary — tracked frames' consumers have materialized by
     then."""
+    return _release_since(0, 0)
+
+
+def _release_since(mark: int, mark_r: int) -> int:
+    """Unpersist, newest first, the frames tracked after index ``mark``
+    and the RDD records after ``mark_r``; returns the number released."""
     n = 0
-    while _LIVE:
+    while len(_LIVE) > mark:
         df = _LIVE.pop()
         try:
             df.unpersist()
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
-    while _LIVE_RDDS:
+    while len(_LIVE_RDDS) > mark_r:
         app, ids = _LIVE_RDDS.pop()
         try:
             spark = SparkSession.getActiveSession()

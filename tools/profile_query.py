@@ -1,192 +1,99 @@
 #!/usr/bin/env python3
-"""Per-query time attribution for optimization work (guide §1/§7):
-runs named bench queries through the noop sink in a UI-enabled session
-and prints, for each, where the wall time went — per-stage task time
-vs DRIVER GAPS (time inside the query window covered by no running
-job: Catalyst analysis, AQE re-planning, collect processing, job
-submission latency). The bench itself keeps the UI off; this tool is
-the measurement harness the optimization rounds use to decide WHAT to
-change, not part of the driver contract.
+"""Per-query time attribution for optimization work (guide §1/§7).
 
-Usage: python tools/profile_query.py q1 [q2 ...] [--sf DIR] [--reps N]
+Runs the named queries through ``flink_kafka_spark.observe`` in the
+default (UI-off) session: one warm pass at sf0.001, then ``--reps``
+round-robin timed runs. For each query it prints where the last run's
+wall time went — per-stage executor time vs DRIVER GAPS (time inside
+the run covered by no running job: Catalyst analysis, AQE re-planning,
+collect processing, job submission latency), read from Spark's status
+stores. The last stdout line is JSON: median, min and all runs in
+seconds per query. This is the builder's measurement tool, not the
+driver contract; bench.py stays the one bench.
+
+Usage: python tools/profile_query.py q1 [q2 ...] --sf DIR [--reps N]
+           [--sql] [--explain TAG]
+
+--sql          also rank the last run's plan nodes by operator time
+--explain TAG  write the last run's final physical plan (formatted) to
+               .plans/<query>_<TAG>.txt at the repo root (gitignored)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-UI_PORT = 4055
-
-
-def _api(path: str):
-    with urllib.request.urlopen(f"http://localhost:{UI_PORT}/api/v1/{path}") as r:
-        return json.load(r)
+from flink_kafka_spark import observe  # noqa: E402
+from flink_kafka_spark.queries import all_queries  # noqa: E402
+from flink_kafka_spark.session import get_spark  # noqa: E402
 
 
-def _ms(iso: str) -> float:
-    # REST timestamps: "2026-08-18T00:00:00.000GMT"
-    from datetime import datetime, timezone
-
-    return (
-        datetime.strptime(iso.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z")
-        .astimezone(timezone.utc)
-        .timestamp()
+def _report(name: str, runs: list[float], rec: dict, r: dict, show_sql: bool) -> None:
+    print(
+        f"\n=== {name}: wall {rec['wall_s']:.3f}s (build {rec['build_s']:.3f}s, "
+        f"action {rec['action_s']:.3f}s; all reps {[round(w, 3) for w in runs]}), "
+        f"{r['jobs']} jobs, {r['stages']} stages, {r['tasks']} tasks, "
+        f"executorRunTime {r['executor_run_s']:.2f}s, cpu {r['executor_cpu_s']:.2f}s, "
+        f"spill {r['spill_bytes'] >> 10}K, driver gaps {r['driver_gap_s']:.2f}s"
     )
-
-
-def profile(names: list[str], sf_dir: str, reps: int) -> None:
-    from flink_kafka_spark.caching import release_all
-    from flink_kafka_spark.queries import all_queries
-    from flink_kafka_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="profile",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": str(UI_PORT)},
-    )
-    registry = all_queries()
-    app_id = spark.sparkContext.applicationId
-
-    # one warm pass (codegen/parquet-reader init), not measured
-    for name in names:
-        registry[name].fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        release_all()
-        spark.catalog.clearCache()
-
-    for name in names:
-        walls = []
-        for rep in range(reps):
-            spark.sparkContext.setJobDescription(f"profile:{name}:{rep}")
-            t0 = time.time()
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = time.time() - t0
-            t1 = time.time()
-            release_all()
-            spark.catalog.clearCache()
-            walls.append((t0, t1, wall))
-        spark.sparkContext.setJobDescription(None)
-
-        # attribute the LAST rep (steady state) via the REST API
-        t0, t1, wall = walls[-1]
-        jobs = [
-            j
-            for j in _api(f"applications/{app_id}/jobs")
-            if j.get("description", "").startswith(f"profile:{name}:{reps - 1}")
-        ]
-        jobs.sort(key=lambda j: _ms(j["submissionTime"]))
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = {
-            s["stageId"]: s
-            for s in _api(f"applications/{app_id}/stages?status=complete")
-            if s["stageId"] in stage_ids
-        }
-        # driver gaps: query window minus union of job [submit, complete]
-        covered = 0.0
-        prev_end = t0
-        for j in jobs:
-            js, je = _ms(j["submissionTime"]), _ms(j["completionTime"])
-            covered += max(0.0, min(je, t1) - max(js, prev_end))
-            prev_end = max(prev_end, je)
-        gaps = wall - covered
-        n_tasks = sum(s["numTasks"] for s in stages.values())
-        run_ms = sum(s["executorRunTime"] for s in stages.values())
+    for s in sorted(r["stage_rows"], key=lambda s: -s["duration_s"])[:12]:
         print(
-            f"\n=== {name}: wall {wall:.3f}s (all reps: "
-            f"{[round(w, 3) for *_, w in walls]}), {len(jobs)} jobs, "
-            f"{len(stages)} stages, {n_tasks} tasks, "
-            f"executorRunTime {run_ms / 1000:.2f}s, driver gaps {gaps:.2f}s"
+            f"  stage {s['stage']:>5} {s['duration_s']:6.3f}s tasks={s['tasks']:<3} "
+            f"run={s['executor_run_s']:6.2f}s shR={s['shuffle_read_bytes'] >> 10}K "
+            f"shW={s['shuffle_write_bytes'] >> 10}K  {s['name'][:60]}"
         )
-        ranked = sorted(
-            stages.values(),
-            key=lambda s: _ms(s["completionTime"]) - _ms(s["firstTaskLaunchedTime"])
-            if s.get("firstTaskLaunchedTime")
-            else 0,
-            reverse=True,
-        )
-        for s in ranked[:12]:
-            dur = (
-                _ms(s["completionTime"]) - _ms(s["firstTaskLaunchedTime"])
-                if s.get("firstTaskLaunchedTime")
-                else 0.0
-            )
-            nm = s["name"].split("\n")[0][:60]
-            print(
-                f"  stage {s['stageId']:>5} {dur:6.3f}s tasks={s['numTasks']:<3} "
-                f"run={s['executorRunTime'] / 1000:6.2f}s "
-                f"shR={s['shuffleReadBytes'] >> 10}K shW={s['shuffleWriteBytes'] >> 10}K "
-                f" {nm}"
-            )
-        if "--sql" in sys.argv:
-            _sql_nodes(app_id, t0, t1)
+    if show_sql:
+        print("  -- SQL plan nodes by operator time --")
+        for o in [o for o in r["operators"] if o["sec"] > 0.005][:15]:
+            print(f"  {o['sec']:7.2f}s  exec={o['execution']:<4} rows={o['rows']:<12} {o['node'][:70]}")
 
 
-def _sql_nodes(app_id: str, t0: float, t1: float) -> None:
-    """Operator-level attribution: SQL executions submitted inside the
-    query window, their plan nodes ranked by reported operator time."""
-    import re
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--sf", required=True, metavar="DIR", help="data directory")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--sql", action="store_true")
+    ap.add_argument("--explain", metavar="TAG")
+    args = ap.parse_intermixed_args()
 
-    execs = [
-        e
-        for e in _api(f"applications/{app_id}/sql?length=200&planDescription=false")
-        if t0 <= _ms(e["submissionTime"]) / 1 <= t1 or (
-            _ms(e["submissionTime"]) >= t0 and e.get("status") != "RUNNING"
-            and _ms(e["submissionTime"]) <= t1
-        )
-    ]
-    def total_sec(metrics, keys=("time total", "total time", "duration")):
-        out = 0.0
-        for m in metrics:
-            if any(k in m["name"] for k in keys):
-                v = m["value"].split("\n")[0].strip()
-                mm = re.match(r"([\d.]+)\s*(ms|s|m|h)", v)
-                if mm:
-                    mul = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0}[mm.group(2)]
-                    out += float(mm.group(1)) * mul
-        return out
+    spark = get_spark(app_name="profile")
+    registry = all_queries()
+    unknown = [n for n in args.names if n not in registry]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    queries = [registry[n] for n in args.names]
+    observe.warm(spark, queries)
 
-    nodes = []
-    for e in execs:
-        for n in e.get("nodes", []):
-            sec = total_sec(n.get("metrics", []))
-            rows = next(
-                (
-                    m["value"]
-                    for m in n.get("metrics", [])
-                    if m["name"] == "number of output rows"
-                ),
-                "",
-            )
-            if sec > 0.005:
-                nodes.append((sec, e["id"], n["nodeName"], rows.split("\n")[0]))
-    nodes.sort(reverse=True)
-    print("  -- SQL plan nodes by operator time --")
-    for sec, eid, nm, rows in nodes[:15]:
-        print(f"  {sec:7.2f}s  exec={eid:<4} rows={rows:<12} {nm[:70]}")
+    runs: dict[str, list[float]] = {n: [] for n in args.names}
+    last: dict[str, tuple[dict, dict]] = {}
+    for rep in range(args.reps):
+        for q in queries:
+            rec = observe.run(spark, q, args.sf)
+            runs[q.name].append(rec["wall_s"])
+            if rep == args.reps - 1:  # read before later runs age it out
+                last[q.name] = rec, observe.read(spark, rec, sql=args.sql or bool(args.explain))
+
+    for name, (rec, r) in last.items():
+        _report(name, runs[name], rec, r, args.sql)
+        if args.explain:
+            path = os.path.join(ROOT, ".plans", f"{name}_{args.explain}.txt")
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "w") as f:
+                f.write(r["plan"])
+            print(f"wrote {path}", file=sys.stderr)
+    print(json.dumps({
+        n: {"median": round(sorted(w)[len(w) // 2], 3), "min": round(min(w), 3),
+            "runs": [round(x, 3) for x in w]}
+        for n, w in runs.items() if w
+    }))
 
 
 if __name__ == "__main__":
-    sf_dir = "/root/testdata/sf0.1"
-    reps = 3
-    names: list[str] = []
-    argv = sys.argv[1:]
-    i = 0
-    while i < len(argv):
-        if argv[i] == "--sf":
-            sf_dir, i = argv[i + 1], i + 2
-        elif argv[i] == "--reps":
-            reps, i = int(argv[i + 1]), i + 2
-        elif argv[i] == "--sql":
-            i += 1
-        else:
-            names.append(argv[i])
-            i += 1
-    profile(names, sf_dir, reps)
+    main()

@@ -1221,12 +1221,17 @@ def curve_main() -> None:
     operator's documented intrinsic cost (measured by main()'s
     hot-block probe), not a hidden defect this probe should page on.
 
+    Each wall is ``observe.run``'s ``wall_s``: the DataFrame build plus
+    the noop action, the same window bench.py times. The release of
+    tracked persists and the catalog-cache clear that follow each run
+    are outside the wall.
+
     Usage: python tools/stress.py --curve [replicas]
     """
     import math
     import tempfile
 
-    from flink_kafka_spark.caching import release_all
+    from flink_kafka_spark import observe
     from flink_kafka_spark.queries import all_queries
 
     replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -1235,11 +1240,7 @@ def curve_main() -> None:
     qs = all_queries()
 
     def timed(name, sf_dir):
-        t0 = time.perf_counter()
-        qs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_all()
-        spark.catalog.clearCache()
-        return round(time.perf_counter() - t0, 2)
+        return round(observe.run(spark, qs[name], sf_dir)["wall_s"], 2)
 
     results: dict[str, dict] = {}
     with tempfile.TemporaryDirectory() as td:
@@ -1249,12 +1250,7 @@ def curve_main() -> None:
         build_s = round(time.perf_counter() - t0, 2)
         # warm each query shape once (codegen/reader init) — r9 lesson:
         # never time a session's first execution of a plan
-        for name in CURVE_QUERIES:
-            qs[name].fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            release_all()
-            spark.catalog.clearCache()
+        observe.warm(spark, [qs[name] for name in CURVE_QUERIES])
         failures = []
         for name in CURVE_QUERIES:
             t001 = timed(name, "/root/testdata/sf0.01")
