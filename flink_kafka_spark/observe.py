@@ -11,8 +11,9 @@ the session clean: no job group, no tracked or catalog-cached persists.
 ``statusTracker`` maps the group to its jobs and stages, and the
 context's status store holds each stage's task metrics. Both are kept
 with the UI off (the session default), so nothing goes over HTTP. With
-``sql=True`` it also reads per-operator metrics and the final physical
-plan from the SQL status store. Every value crosses py4j one call at
+``sql=True`` it also reads per-operator metrics, each execution's
+plan-graph operator counts and the final physical plan from the SQL
+status store. Every value crosses py4j one call at
 a time: on 4 cores a read took 45-409 ms for 4-66 jobs, and 0.1-3.3 s
 with ``sql=True``, so timing loops should not call it between runs.
 """
@@ -70,8 +71,9 @@ def read(spark, record: dict, sql: bool = False) -> dict:
     """Jobs, stages, tasks, executor time, shuffle and spill bytes and
     driver-gap seconds (wall time covered by no job) of one run, plus
     per-stage rows. ``sql=True`` adds ``operators`` (plan nodes ranked
-    by timing-metric seconds) and ``plan`` (the formatted final plan of
-    the run's last SQL execution)."""
+    by timing-metric seconds), ``executions`` (per SQL execution in id
+    order, its plan-audit counts, see :func:`_count_graph`) and
+    ``plan`` (the formatted final plan of the run's last execution)."""
     sc = spark.sparkContext
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     job_ids = tracker.getJobIdsForGroup(record["group"])
@@ -115,11 +117,13 @@ def read(spark, record: dict, sql: bool = False) -> dict:
 def _read_sql(spark, job_ids: set[int]) -> dict:
     store = spark._jsparkSession.sharedState().statusStore()
     execs = [e for e in _seq(store.executionsList()) if job_ids & _keys(e.jobs())]
-    ops = []
-    for e in execs:
+    ops, executions = [], []
+    for e in sorted(execs, key=lambda e: e.executionId()):
         eid = e.executionId()
         values = store.executionMetrics(eid)
-        for node in _seq(store.planGraph(eid).allNodes()):
+        graph = store.planGraph(eid)
+        nodes = _seq(graph.allNodes())
+        for node in nodes:
             sec, rows = 0.0, ""
             for m in _seq(node.metrics()):
                 v = values.get(m.accumulatorId())
@@ -130,9 +134,47 @@ def _read_sql(spark, job_ids: set[int]) -> dict:
                 elif m.name() == "number of output rows":
                     rows = v.get()
             ops.append({"execution": eid, "node": node.name(), "sec": sec, "rows": rows})
+        executions.append({"execution": eid, **_count_graph(nodes, _seq(graph.edges()))})
     ops.sort(key=lambda o: -o["sec"])
     last = max(execs, key=lambda e: e.executionId(), default=None)
-    return {"operators": ops, "plan": last.physicalPlanDescription() if last else ""}
+    return {"operators": ops, "executions": executions,
+            "plan": last.physicalPlanDescription() if last else ""}
+
+
+# plan-graph node name -> audit key (the keys of tools/gen_plans.COUNTED)
+_GRAPH_COUNTED = {
+    "Exchange": "exchanges",
+    "BroadcastHashJoin": "broadcasts",
+    "SortMergeJoin": "smj",
+    "BroadcastNestedLoopJoin": "bnlj",
+    "CartesianProduct": "cartesian",
+}
+
+
+def _count_graph(nodes, edges) -> dict:
+    """Audit counts of one execution's plan graph (the AQE final plan),
+    over every node and, as ``live_*``, over the nodes reached from the
+    root without passing an InMemoryTableScan: the graph also lists the
+    cached build plan below that scan, which ran once at
+    materialization. The graph keeps one node per distinct exchange."""
+    # split: a skew join is named "SortMergeJoin(skew=true)"
+    names = {n.id(): n.name().split("(")[0] for n in nodes}
+    inputs: dict[int, list[int]] = {}
+    for e in edges:
+        inputs.setdefault(e.toId(), []).append(e.fromId())
+    stack = list(names.keys() - {e.fromId() for e in edges})
+    live = set()
+    while stack:
+        nid = stack.pop()
+        if nid not in live:
+            live.add(nid)
+            if names.get(nid) != "InMemoryTableScan":
+                stack.extend(inputs.get(nid, ()))
+    out = {}
+    for prefix, ids in (("", names), ("live_", live)):
+        kept = [names.get(i) for i in ids]
+        out.update({prefix + k: kept.count(name) for name, k in _GRAPH_COUNTED.items()})
+    return out
 
 
 _DURATION = re.compile(r"(\d+(?:\.\d+)?) (ms|s|m|h)\b")

@@ -1300,92 +1300,6 @@ def connected_components(
     return in_graph.unionByName(singletons)
 
 
-def _sym_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """Symmetrized (src, dst) edge frame built with a single explode
-    pass (a union of two selects would compute the upstream pair
-    pipeline twice), pre-partitioned on src. Shared by the CC loop
-    (:func:`_cc_labels`, which persists it) and the plan-audit surface
-    (:func:`cc_loop_body`, which does not)."""
-    return (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .repartition("src")
-    )
-
-
-def _cc_round(sym: DataFrame, labels: DataFrame, jump: bool) -> DataFrame:
-    """One hash-to-min label-propagation round: neighbor messages over
-    the symmetrized edge frame folded with a min-groupBy, plus (when
-    ``jump``) the pointer-jumping shortcut L(v) <- L(L(v)) — a
-    self-join on comp; every comp value is itself an in-graph node id,
-    so the left join is total. Reach doubles per jumping round:
-    O(log diameter) rounds instead of O(diameter), the production CC
-    recipe for long transitive chains (Kiveris et al., "Connected
-    Components in MapReduce and Beyond" gets its log bound the same
-    way). Shared by the iteration loop in :func:`_cc_labels` and the
-    plan-audit surface :func:`cc_loop_body` so the audited plan IS the
-    executed round, by construction."""
-    msgs = sym.join(labels, sym.src == labels.node).select(
-        F.col("dst").alias("node"), F.col("comp")
-    )
-    prop = labels.union(msgs).groupBy("node").agg(F.min("comp").alias("comp"))
-    if jump:
-        hop = prop.select(
-            F.col("node").alias("via"), F.col("comp").alias("via_comp")
-        )
-        prop = prop.join(hop, prop.comp == hop.via, "left").select(
-            "node", F.least("comp", F.coalesce("via_comp", "comp")).alias("comp")
-        )
-    return prop
-
-
-def cc_loop_body(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    jump: bool = True,
-    cache_inputs: bool = False,
-) -> DataFrame:
-    """Plan-audit surface (r15 verdict item 2): one UN-CHECKPOINTED
-    label-propagation round, exactly as :func:`_cc_labels`'s loop
-    builds it (the shared :func:`_cc_round` body), applied to the
-    round-0 labels. The frame the CC loop RETURNS is a localCheckpoint
-    whose lineage is cut, so ``explain()`` on any CC consumer
-    (canonicalize, connected_components) never shows the loop body
-    where the per-round cost (one edges-sized join + one min-groupBy
-    shuffle, plus the jumping self-join) lives — PLANS.md and
-    tests/test_plans.py explain THIS frame instead. ``jump=True``
-    audits the worst-case round (pointer jumping engaged).
-    ``cache_inputs=False`` (the pytest pins): no persist, no job, raw
-    upstream lineage. ``cache_inputs=True`` (the PLANS.md rows):
-    persists ``sym`` exactly as :func:`_cc_labels` does, so the
-    explained plan reads it as InMemoryRelation and shows ONLY the
-    per-round cost; the persist is registered with caching.track and
-    released at the next registered-query boundary."""
-    sym = _sym_edges(edges, src_col, dst_col)
-    if cache_inputs:
-        from ..caching import track
-
-        sym = track(sym.persist())
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    return _cc_round(sym, labels, jump)
-
-
 def _cc_labels(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -1433,7 +1347,23 @@ def _cc_labels(
         out = df.localCheckpoint(eager=False)
         return out, frozenset(persistent_rdd_ids(sc) - before)
 
-    sym = _sym_edges(edges, src_col, dst_col).persist()
+    sym = (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+                    ),
+                    F.struct(
+                        F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
+                    ),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .repartition("src")
+        .persist()
+    )
     live_ids: frozenset[int] = frozenset()
     try:
         labels, live_ids = _chk(
@@ -1449,8 +1379,24 @@ def _cc_labels(
             # and never pays the extra self-join shuffle); only a
             # pathological chain (boilerplate mega-cluster) reaches the
             # jumping rounds, which is exactly when the O(diameter)
-            # loop (and its hard max_iter fail) needs the help.
-            prop = _cc_round(sym, labels, jump=i >= 2)
+            # loop (and its hard max_iter fail) needs the help. A
+            # jumping round adds L(v) <- L(L(v)): a self-join on comp
+            # (every comp is itself an in-graph node, so the left join
+            # is total) that doubles the reach per round, O(log
+            # diameter) rounds instead of O(diameter) (Kiveris et al.,
+            # "Connected Components in MapReduce and Beyond" gets its
+            # log bound the same way).
+            msgs = sym.join(labels, sym.src == labels.node).select(
+                F.col("dst").alias("node"), F.col("comp")
+            )
+            prop = labels.union(msgs).groupBy("node").agg(F.min("comp").alias("comp"))
+            if i >= 2:
+                hop = prop.select(
+                    F.col("node").alias("via"), F.col("comp").alias("via_comp")
+                )
+                prop = prop.join(hop, prop.comp == hop.via, "left").select(
+                    "node", F.least("comp", F.coalesce("via_comp", "comp")).alias("comp")
+                )
             labels, new_ids = _chk(prop)
             # fold the freshly registered checkpoint into the tracked
             # set BEFORE the probe action: localCheckpoint registers

@@ -20,90 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _pr_round(
-    e: DataFrame,
-    ranks: DataFrame,
-    zeros: DataFrame,
-    teleport: int,
-    damping_pct: int,
-    broadcast_ranks: bool = False,
-) -> DataFrame:
-    """One PageRank round: the rank-side join onto the persisted
-    (src, dst, w, wsum) edge frame, then the groupBy(dst) fold with the
-    zero-contribution rows unioned in (dangling nodes settle at the
-    teleport floor without any node-sized broadcast). Shared by the
-    iteration loop in :func:`pagerank` and the plan-audit surface
-    :func:`pagerank_loop_body` so the audited plan IS the executed
-    round, by construction."""
-    rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-    contrib = e.join(rank_side, e["src"] == ranks["node"]).select(
-        F.col("dst").alias("node"), F.expr("(r * w) div wsum").alias("c")
-    )
-    return (
-        contrib.unionByName(zeros)
-        .groupBy("node")
-        .agg(F.sum("c").alias("s"))
-        .select(
-            "node",
-            (F.lit(teleport) + F.expr(f"({damping_pct} * s) div 100"))
-            .cast("long")
-            .alias("r"),
-        )
-    )
-
-
-def pagerank_loop_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "id",
-    damping_pct: int = 85,
-    unit: int = 1_000_000_000,
-    broadcast_ranks: bool = False,
-    broadcast_wsum: bool = False,
-    cache_inputs: bool = False,
-) -> DataFrame:
-    """Plan-audit surface (r15 verdict item 2): the UN-CHECKPOINTED
-    frame of one iteration round, exactly as :func:`pagerank`'s loop
-    builds it (the shared :func:`_pr_round` body), applied to the
-    round-0 rank frame. ``explain()`` on the frame :func:`pagerank`
-    RETURNS sees only a localCheckpoint scan — the lineage cut that
-    keeps Catalyst analysis O(1) also blinds every plan audit to the
-    loop body, which is where PageRank's actual per-round cost (one
-    edges-sized join + one groupBy(dst) shuffle) lives. PLANS.md and
-    tests/test_plans.py explain THIS frame instead.
-
-    With ``cache_inputs=False`` (the pytest pins) nothing persists and
-    no job runs: plan shape only, upstream lineage shown raw.
-    ``cache_inputs=True`` (the PLANS.md rows) persists the precomputed
-    edge and node frames exactly as :func:`pagerank` does, so the
-    explained plan reads them as InMemoryRelation and shows ONLY the
-    per-round cost — the number a capacity plan multiplies by the
-    iteration count. Either way teleport/base divide by the
-    driver-scalar node count, pinned to 1 here so no count() job runs
-    (plan shape is independent of literal values); persists are
-    registered with caching.track and released at the next registered-
-    query boundary."""
-    node_frame = nodes.select(F.col(id_col).alias("node"))
-    wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    wsum_side = F.broadcast(wsum) if broadcast_wsum else wsum
-    # mirror pagerank()'s src pre-partitioning so the audited round
-    # IS the executed round (the shared-_pr_round contract)
-    e = (
-        edges.join(wsum_side, "src")
-        .select("src", "dst", "w", "wsum")
-        .repartition("src")
-    )
-    if cache_inputs:
-        from ..caching import track
-
-        node_frame = track(node_frame.persist())
-        e = track(e.persist())
-    ranks = node_frame.withColumn("r", F.lit(unit).cast("long"))
-    zeros = node_frame.select("node", F.lit(0).cast("long").alias("c"))
-    teleport = (100 - damping_pct) * unit // 100
-    return _pr_round(e, ranks, zeros, teleport, damping_pct, broadcast_ranks)
-
-
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
@@ -132,7 +48,9 @@ def pagerank(
     not filter contributions), and a src outside ``nodes`` silently
     contributes nothing after round 0 — while N/teleport are computed
     from ``nodes`` alone either way. All in-repo callers derive nodes
-    and edges from the same frame; external callers must too.
+    and edges from the same frame; external callers must too. An empty
+    ``nodes`` with no edges gives an empty ranking; with edges it fails
+    the dst check.
 
     Scale shape: the weighted-out-degree join is precomputed ONCE into
     a persisted (src, dst, w, wsum) frame; each round then costs one
@@ -181,11 +99,6 @@ def pagerank(
 
     node_frame = track(nodes.select(F.col(id_col).alias("node")).persist())
     n = node_frame.count()
-    if n == 0:
-        raise ValueError(
-            "pagerank: empty node frame — nothing to rank (base rank "
-            "unit div N is undefined)"
-        )
     # loud precondition: every edge dst must be a declared node. The
     # old node_frame-LEFT-JOIN formulation silently DROPPED outside
     # dsts each round; the zeros-union rewrite would instead emit
@@ -202,6 +115,8 @@ def pagerank(
             "pagerank: edges reference dst nodes absent from `nodes` — "
             "pass a node frame covering every dst endpoint"
         )
+    if n == 0:  # empty graph: an empty ranking (unit div N is undefined)
+        return node_frame.select("node", F.lit(0).cast("long").alias("rank_e9"))
     base = unit // n
     teleport = (100 - damping_pct) * base // 100
 
@@ -219,7 +134,7 @@ def pagerank(
     wsum_side = F.broadcast(wsum) if broadcast_wsum else wsum
     # pre-partitioned on src before the persist (r18, guide §2.4
     # "two operations keyed the same way can share one exchange") —
-    # the CC loop's _sym_edges discipline applied here: every round
+    # the CC loop's symmetrized-edge layout applied here: every round
     # joins the rank frame on e.src, so a persisted hash(src) layout
     # lets the planner satisfy the join's edge-side distribution from
     # the cache instead of re-exchanging the (billion-edge at scale)
@@ -251,7 +166,23 @@ def pagerank(
     # the driver even for a billion-node graph.
     zeros = node_frame.select("node", F.lit(0).cast("long").alias("c"))
     for i in range(iterations):
-        ranks = _pr_round(e, ranks, zeros, teleport, damping_pct, broadcast_ranks)
+        # one round: the rank-side join onto the persisted edge frame,
+        # then the groupBy(dst) fold with the zero rows unioned in
+        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+        contrib = e.join(rank_side, e["src"] == ranks["node"]).select(
+            F.col("dst").alias("node"), F.expr("(r * w) div wsum").alias("c")
+        )
+        ranks = (
+            contrib.unionByName(zeros)
+            .groupBy("node")
+            .agg(F.sum("c").alias("s"))
+            .select(
+                "node",
+                (F.lit(teleport) + F.expr(f"({damping_pct} * s) div 100"))
+                .cast("long")
+                .alias("r"),
+            )
+        )
         if (i + 1) % CHK_EVERY == 0 or i + 1 == iterations:
             ranks, new_ids = _chk(ranks)
             ranks.count()  # materialize the new cut (a localCheckpoint

@@ -206,6 +206,12 @@ def kmv_hash_sql(val_sql: str) -> str:
     )
 
 
+# Ceiling on kmv_minima's per-task partial state, in int64 hash values
+# (sets seen by one task x k): 2^27 values is 1 GiB per Python worker.
+# A task past it raises instead of running out of memory.
+KMV_TASK_STATE_MAX = 1 << 27
+
+
 def kmv_minima(
     df: DataFrame, set_col: str, val_sql: str, k: int = 128
 ) -> DataFrame:
@@ -244,7 +250,9 @@ def kmv_minima(
     every partitioning (what lets a DuckDB oracle compute the naive
     ROW_NUMBER form and still match exactly; pinned by the
     partition-independence and cross-batch-merge pytests). No size
-    estimate, no margin, no loud-failure path needed.
+    estimate and no margin are needed. The one loud failure is the
+    state guard: a task holding more than KMV_TASK_STATE_MAX values
+    (|sets| x k) raises RuntimeError.
 
     Operating ceiling (unchanged): hashes live in 32-bit space
     (CMS_SPACE = 2^32), so md5-prefix collisions bias the estimate as
@@ -257,6 +265,7 @@ def kmv_minima(
         F.col(set_col).alias("s"), F.expr(kmv_hash_sql(val_sql)).alias("h")
     )
     out_schema = hashed.schema
+    ceiling = KMV_TASK_STATE_MAX
 
     def _partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # per-task state: set -> sorted int64 array of <= k smallest
@@ -272,6 +281,11 @@ def kmv_minima(
                 if cur is not None:
                     cand = np.unique(np.concatenate((cur, cand)))[:k]
                 state[s] = cand
+            if len(state) * k > ceiling:
+                raise RuntimeError(
+                    f"kmv_minima: {len(state)} sets x k={k} exceed the per-task "
+                    f"state ceiling of {ceiling} values (KMV_TASK_STATE_MAX)"
+                )
         if state:
             yield pd.DataFrame(
                 {

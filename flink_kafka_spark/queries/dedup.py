@@ -870,15 +870,12 @@ PR_DAMPING_PCT = 85
 PR_UNIT = 1_000_000_000
 
 
-def _source_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(edges, nodes) of the source-overlap graph: each overlapping
-    source pair in both directions, weighted by n_shared_shingles, and
-    every source as a node. Shared by :func:`source_pagerank` and its
-    plan-audit twin so the audited round reads the same edge set."""
+def source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.graph import pagerank
+
     docs = load(spark, sf_dir, "documents")
-    # the operator materializes its own |sources|²-bounded cache now,
-    # so every consumer (here the fwd/rev union) reads pure cache —
-    # the caller-side ov.count() workaround moved into the operator
+    # the operator materializes its own |sources|²-bounded cache, so
+    # both edge directions (the fwd/rev union) read pure cache
     ov = source_overlap_matrix(docs)
     w = F.col("n_shared_shingles").alias("w")
     edges = ov.select(
@@ -886,48 +883,10 @@ def _source_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     ).unionByName(
         ov.select(F.col("source_b").alias("src"), F.col("source_a").alias("dst"), w)
     )
-    return edges, docs.select("source").distinct()
-
-
-def source_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import pagerank
-
-    edges, nodes = _source_graph(spark, sf_dir)
     return pagerank(
-        edges, nodes, "source", PR_ITERATIONS, PR_DAMPING_PCT, PR_UNIT,
+        edges, docs.select("source").distinct(), "source",
+        PR_ITERATIONS, PR_DAMPING_PCT, PR_UNIT,
     ).select(F.col("node").alias("source"), "rank_e9")
-
-
-def source_pagerank_loop_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-audit twin of :func:`source_pagerank` (NOT a registered
-    query — no result rows to oracle): the un-checkpointed frame of
-    one PageRank round over the same source-overlap edge set, for
-    PLANS.md and the test_plans loop-shape pins. See
-    operators/graph.py:pagerank_loop_body for why the returned frame
-    of the real query cannot be audited (localCheckpoint lineage
-    cut)."""
-    from ..operators.graph import pagerank_loop_body
-
-    edges, nodes = _source_graph(spark, sf_dir)
-    return pagerank_loop_body(
-        edges, nodes, "source", PR_DAMPING_PCT, PR_UNIT, cache_inputs=True,
-    )
-
-
-def dedup_canonicalize_loop_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-audit twin of :func:`dedup_canonicalize`'s connected-
-    components core (NOT a registered query): one un-checkpointed
-    hash-to-min round (pointer jumping engaged — the worst-case round)
-    over the same n-gram-Jaccard pair edges. The canonicalize PLANS.md
-    row shows only the post-loop quality joins because the CC loop
-    returns a localCheckpoint; this row shows the loop body itself."""
-    from ..operators.dedup import cc_loop_body
-
-    docs = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD)
-    return cc_loop_body(
-        pairs, src_col="id_a", dst_col="id_b", jump=True, cache_inputs=True
-    )
 
 
 def _pagerank_oracle(iterations: int, damping: int, unit: int) -> str:

@@ -609,53 +609,54 @@ def test_no_cartesian_or_unpinned_nested_loop_join(plan_sweep):
     assert not problems, "; ".join(problems)
 
 
-def test_iterative_loop_body_shapes(spark, sf_dir):
-    """r15 verdict item 2: the iterative operators (PageRank, the CC
-    hash-to-min loop) return localCheckpoint frames whose lineage is
-    CUT, so the registry sweep above audits only their residual plans
-    (0 shuffles) while the real per-round cost — one edges-sized join
-    plus one aggregate shuffle — lives in a loop body no registered
-    query's plan can show. Pin ONE un-checkpointed round here via
-    the shared-body audit surfaces (operators/graph.py:_pr_round /
-    operators/dedup.py:_cc_round — the loop executes the SAME
-    function, so the audited plan is the executed round by
-    construction).
+def test_iterative_loop_body_shapes(spark):
+    """The iterative operators (PageRank, the CC hash-to-min loop)
+    return localCheckpoint frames whose lineage is cut, so the registry
+    sweep above sees only their residual plans. This test runs the real
+    operators on a 16-node chain and pins the executed plan of every
+    loop-round execution (the AQE final plan, live part only: the
+    persisted edge frame's build plan is below its cache scan).
 
-    Auto-broadcast is disabled for the audit, which makes the pins
-    data-size-independent HINT detection: any BroadcastHashJoin left
-    in the plan comes from a forced hint. The scale contract being
-    pinned: the rank/label side of the per-round join is NEVER
-    hint-broadcast (a billion-node rank frame must shuffle, not
-    collect through the driver — the r15 broadcast_ranks default), and
-    the only hinted build in the PageRank round is the one-time wsum
-    frame."""
+    Auto-broadcast is off for the runs, so any BroadcastHashJoin comes
+    from a forced hint. The scale contract pinned here: the rank/label
+    side of a round's join is never hint-broadcast (a billion-node rank
+    frame must shuffle, not collect through the driver)."""
     from pyspark.sql import functions as F
 
-    from flink_kafka_spark.operators.dedup import cc_loop_body
-    from flink_kafka_spark.operators.graph import pagerank_loop_body
-    from flink_kafka_spark.tables import load
+    from flink_kafka_spark import observe
+    from flink_kafka_spark.operators.dedup import connected_components
+    from flink_kafka_spark.operators.graph import pagerank
+    from flink_kafka_spark.queries import Query
+    from tools.gen_plans import loop_rounds
 
-    docs = load(spark, sf_dir, "documents")
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        (F.col("doc_id") + 1).alias("dst"),
-        F.lit(1).cast("long").alias("w"),
-    )
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    pairs = docs.select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    )
+    def chain(spark):  # (edges, nodes): i -> i+1 over 16 nodes
+        nodes = spark.range(16).select(F.col("id"))
+        edges = nodes.filter("id < 15").select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst"),
+            F.lit(1).cast("long").alias("w"),
+        )
+        return edges, nodes
+
+    def pr(spark, _):
+        return pagerank(*chain(spark), iterations=6)
+
+    def pr_hinted(spark, _):
+        return pagerank(*chain(spark), iterations=6, broadcast_ranks=True, broadcast_wsum=True)
+
+    def cc(spark, _):
+        edges, nodes = chain(spark)
+        pairs = edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+        return connected_components(pairs, nodes, id_col="id")
+
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try:
-        pr = audit(pagerank_loop_body(edges, nodes))
-        pr_hinted = audit(
-            pagerank_loop_body(
-                edges, nodes, broadcast_ranks=True, broadcast_wsum=True
-            )
-        )
-        cc = audit(cc_loop_body(pairs, jump=True))
-        cc_plain = audit(cc_loop_body(pairs, jump=False))
+        rounds = {
+            fn.__name__: loop_rounds(observe.read(
+                spark, observe.run(spark, Query(fn.__name__, fn), ""), sql=True
+            )["executions"])
+            for fn in (pr, pr_hinted, cc)
+        }
     finally:
         # restore the SESSION'S configured value, not Spark's default:
         # conf.unset would fall back to the 10 MB ConfigEntry default
@@ -663,34 +664,27 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
         # threshold into every later test (session-scoped fixture)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
-    # name -> (audit, broadcast joins, sort-merge joins, exchange ceiling)
-    shapes = {
-        # PageRank round, default hints OFF everywhere (r16: the wsum
-        # hint became opt-in too — a node-count-sized forced broadcast
-        # dies on the driver ceiling for a billion-node graph): NO
-        # broadcast node may appear; both the setup wsum join and the
-        # per-round rank join are shuffle joins the planner/AQE may
-        # upgrade at runtime.
-        "pagerank round": (pr, 0, 2, 4),
-        # the canary that the mechanism detects forced hints at all:
-        # with BOTH opt-ins armed, both joins must show as broadcasts
-        # and no SMJ remains
-        "hint-detection canary (broadcast_ranks+broadcast_wsum)": (pr_hinted, 2, 0, None),
-        # CC round (pointer jumping engaged — worst case): label joins
-        # are NEVER hint-broadcast; 3 SMJ nodes = msgs join duplicated
-        # across the self-join's two branches (ReusedExchange collapses
-        # at runtime) + the jump join itself.
-        "cc jumping round": (cc, 0, 3, 9),
-        # plain round: one msgs join + the min-groupBy
-        "cc plain round": (cc_plain, 0, 1, 4),
-    }
-    problems = [
-        f"{name} shape drifted: bc={a['broadcasts']} (want {bc}), "
-        f"smj={a['smj']} (want {smj}), exchanges={a['exchanges']} (ceiling {ex})"
-        for name, (a, bc, smj, ex) in shapes.items()
-        if a["broadcasts"] != bc or a["smj"] != smj or (ex is not None and a["exchanges"] > ex)
-    ]
-    assert not problems, "; ".join(problems)
+    pr, hinted, cc = rounds["pr"], rounds["pr_hinted"], rounds["cc"]
+
+    def joins(execs):  # (live broadcast joins, live SMJ) per execution
+        return [(e["live_broadcasts"], e["live_smj"]) for e in execs]
+
+    # 6 PageRank rounds run as 2 executions of CHK_EVERY = 3 rounds.
+    # Default: one shuffle join per round, and no broadcast anywhere,
+    # the cached setup join included.
+    assert joins(pr) == [(0, 3)] * 2
+    assert all(e["broadcasts"] == 0 and e["live_exchanges"] <= 4 for e in pr)
+    # the canary that forced hints show at all: every hinted round
+    # broadcasts its rank side, no SMJ remains, and the cached edge
+    # frame's build plan shows the wsum broadcast
+    assert joins(hinted) == [(3, 0)] * 2
+    assert all(e["broadcasts"] > e["live_broadcasts"] and e["live_exchanges"] <= 4 for e in hinted)
+    # CC: 2 plain rounds (the msgs join + the min-groupBy), then
+    # jumping rounds until convergence, which add the pointer-jumping
+    # self-join (its two sides share the min-groupBy's exchange)
+    assert len(cc) > 2
+    assert joins(cc) == [(0, 1)] * 2 + [(0, 3)] * (len(cc) - 2)
+    assert all(e["live_exchanges"] <= (2 if i < 2 else 4) for i, e in enumerate(cc))
 
 
 def test_audit_is_stable_across_cache_materialization(spark):
@@ -711,3 +705,22 @@ def test_audit_is_stable_across_cache_materialization(spark):
     keys = ("exchanges", "broadcasts", "smj")
     assert [after[k] for k in keys] == [before[k] for k in keys]
     assert before["exchanges"] == 2
+
+
+def test_executed_live_counts_stop_at_the_cache(spark):
+    """The executed-plan twin of the test above: a run over a persisted
+    frame whose build has a shuffle shows that shuffle in the plan
+    graph's ``exchanges`` but not in ``live_exchanges``, because the
+    build ran once at materialization."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_spark import observe
+    from flink_kafka_spark.queries import Query
+
+    def build(spark, _):
+        agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count().persist()
+        return agg.groupBy("count").agg(F.sum("k"))
+
+    rec = observe.run(spark, Query("cached_agg", build), "")
+    [e] = observe.read(spark, rec, sql=True)["executions"]
+    assert (e["exchanges"], e["live_exchanges"]) == (2, 1)

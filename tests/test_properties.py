@@ -1777,6 +1777,25 @@ def test_pagerank_rejects_undeclared_dst_nodes(spark):
     assert {r["node"] for r in ranks} == {"a", "b"}
 
 
+def test_pagerank_empty_input_gives_an_empty_ranking(spark):
+    """No nodes and no edges rank nothing: an empty (node, rank_e9)
+    frame, as connected_components gives 0 rows. Edges over an empty
+    node frame still fail the undeclared-dst precondition."""
+    import pytest as _pytest
+
+    from flink_kafka_spark.operators.graph import pagerank
+
+    ndf = spark.createDataFrame([], "id string")
+    edf = spark.createDataFrame([], "src string, dst string, w long")
+    ranks = pagerank(edf, ndf, "id")
+    assert ranks.columns == ["node", "rank_e9"]
+    assert ranks.collect() == []
+
+    edf = spark.createDataFrame([("a", "b", 1)], "src string, dst string, w long")
+    with _pytest.raises(ValueError, match="dst nodes absent"):
+        pagerank(edf, ndf, "id")
+
+
 def test_gapfill_interp_shares_ffill_grid_row_identically(spark, sf_dir):
     """Twin-retirement qualifier (r17, RETIRED_TWINS: events_gapfill):
     resample_ffill and resample_interp are the same operator up to the

@@ -896,6 +896,23 @@ def test_kmv_minima_cross_batch_merge_and_null_semantics(spark):
     assert got == want  # null-keyed rows gone, minima exact, merge clean
 
 
+def test_kmv_minima_state_guard_fails_loudly(spark, monkeypatch):
+    """A task whose partial state (|sets| x k values) passes
+    KMV_TASK_STATE_MAX raises, naming the set count, k and the ceiling;
+    one under it runs. The ceiling is read when kmv_minima is called."""
+    from flink_kafka_spark.operators import sketches
+
+    monkeypatch.setattr(sketches, "KMV_TASK_STATE_MAX", 40)
+    k = 16
+    rows = [(s, f"v{i}") for s in "abc" for i in range(20)]
+    df = spark.createDataFrame(rows, "s string, v string").coalesce(1)
+    under = sketches.kmv_minima(df.filter("s != 'c'"), "s", "v", k)
+    assert under.count() == 2 * k
+    over = sketches.kmv_minima(df, "s", "v", k)
+    with pytest.raises(Exception, match="3 sets x k=16 exceed the per-task state ceiling of 40"):
+        over.collect()
+
+
 def test_kmv_pair_intersections_exact_and_estimated_match_python_replay(spark):
     """KMV set algebra: est_a/est_b/est_union/est_intersection and the
     r13 difference columns est_a_minus_b/est_b_minus_a must bit-match

@@ -11,6 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from flink_kafka_spark import observe  # noqa: E402
 from flink_kafka_spark.queries import all_queries  # noqa: E402
 from flink_kafka_spark.session import get_spark  # noqa: E402
 
@@ -88,21 +89,16 @@ def audit(df) -> dict:
     return out
 
 
-# Iterative queries return a localCheckpoint whose lineage is cut, so
-# their headline row above reads 0/0/0 — the loop body (where the
-# per-round cost lives) is audited through these un-checkpointed
-# plan-audit surfaces instead. Keys are display names; values build
-# ONE round's frame at SF_DIR.
-def _loop_bodies() -> dict:
-    from flink_kafka_spark.queries.dedup import (
-        dedup_canonicalize_loop_body,
-        source_pagerank_loop_body,
-    )
+def loop_rounds(executions: list[dict]) -> list[dict]:
+    """The loop-round executions among ``observe.read(..., sql=True)``'s
+    ``executions``. The PageRank and CC loops cut each round batch with
+    a lazy localCheckpoint, so a round batch runs as one execution with
+    a live join, and the loop's next action (the count or convergence
+    probe that materializes the cut) is an execution without one."""
+    def joins(e):
+        return e["live_broadcasts"] + e["live_smj"]
 
-    return {
-        "source_pagerank[loop round]": source_pagerank_loop_body,
-        "dedup_canonicalize[cc round]": dedup_canonicalize_loop_body,
-    }
+    return [e for e, nxt in zip(executions, executions[1:]) if joins(e) and not joins(nxt)]
 
 
 def main() -> None:
@@ -122,31 +118,34 @@ def main() -> None:
         "FileSourceScanExec: table, width of its required schema, and",
         "'pushed' when it carries pushed filters.",
         "",
-        "The `[loop round]` / `[cc round]` rows audit ONE un-checkpointed",
-        "iteration of the PageRank / connected-components loops (their",
-        "headline rows read 0/0/0 because the returned frame is a",
-        "localCheckpoint whose lineage is cut). Those rows report",
-        "PER-ROUND cost: the walk stops at the cache scan of the",
-        "persisted edge frame, so its one-time build plan is excluded;",
-        "multiply by the iteration count (12 for pagerank, O(log",
-        "diameter) for CC) for the loop's total. Shapes are pinned by",
+        "The `[loop rounds]` rows are executed plans: each query runs once",
+        "through `observe.run`, and `observe.read` counts each SQL",
+        "execution's plan graph, which is the AQE final plan. A row shows",
+        "the heaviest loop-round execution's live counts (the walk stops at",
+        "the cache scan of the persisted edge frame, so its one-time build",
+        "plan is excluded) and how many loop-round executions ran. A",
+        "PageRank execution runs 3 rounds (CHK_EVERY); a CC execution runs",
+        "one. Shapes on a fixture graph are pinned by",
         "tests/test_plans.py::test_iterative_loop_body_shapes.",
         "",
         "| query | shuffles | broadcast joins | sort-merge joins | scans (pruned cols) |",
         "|---|---|---|---|---|",
     ]
-    # loop-body rows report PER-ROUND cost through the live_* counts
-    rows = [(name, qs[name].fn, "") for name in BENCH_QUERIES]
-    rows += [(name, fn, "live_") for name, fn in _loop_bodies().items()]
-    for name, fn, prefix in rows:
+    for name in BENCH_QUERIES:
         try:
-            a = audit(fn(spark, SF_DIR))
+            a = audit(qs[name].fn(spark, SF_DIR))
         except Exception as ex:  # pragma: no cover
             lines.append(f"| {name} | — | — | — | ERROR {str(ex)[:80]} |")
             continue
-        counts = " | ".join(str(a[prefix + k]) for k in ("exchanges", "broadcasts", "smj"))
-        scans = a[prefix + "scans"] or "(cached edge frame only)"
-        lines.append(f"| {name} | {counts} | {scans} |")
+        counts = " | ".join(str(a[k]) for k in ("exchanges", "broadcasts", "smj"))
+        lines.append(f"| {name} | {counts} | {a['scans'] or '—'} |")
+    # iterative queries return a localCheckpoint whose lineage is cut,
+    # so their headline rows read 0/0/0; their loop rows come from a run
+    for name in ("source_pagerank", "dedup_canonicalize"):
+        rounds = loop_rounds(observe.read(spark, observe.run(spark, qs[name], SF_DIR), sql=True)["executions"])
+        top = max(rounds, key=lambda e: sum(e[f"live_{k}"] for k in COUNTED))
+        counts = " | ".join(str(top[f"live_{k}"]) for k in ("exchanges", "broadcasts", "smj"))
+        lines.append(f"| {name}[loop rounds] | {counts} | {len(rounds)} loop-round executions |")
     lines.append("")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:

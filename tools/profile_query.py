@@ -14,7 +14,8 @@ driver contract; bench.py stays the one bench.
 Usage: python tools/profile_query.py q1 [q2 ...] --sf DIR [--reps N]
            [--sql] [--explain TAG]
 
---sql          also rank the last run's plan nodes by operator time
+--sql          also rank the last run's plan nodes by operator time and
+               print each SQL execution's non-zero live plan counts
 --explain TAG  write the last run's final physical plan (formatted) to
                .plans/<query>_<TAG>.txt at the repo root (gitignored)
 """
@@ -52,6 +53,10 @@ def _report(name: str, runs: list[float], rec: dict, r: dict, show_sql: bool) ->
         print("  -- SQL plan nodes by operator time --")
         for o in [o for o in r["operators"] if o["sec"] > 0.005][:15]:
             print(f"  {o['sec']:7.2f}s  exec={o['execution']:<4} rows={o['rows']:<12} {o['node'][:70]}")
+        print("  -- SQL executions: non-zero live plan counts --")
+        for e in r["executions"]:
+            live = " ".join(f"{k[5:]}={v}" for k, v in e.items() if k.startswith("live_") and v)
+            print(f"  exec={e['execution']:<4} {live or '-'}")
 
 
 def main() -> None:
