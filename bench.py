@@ -6,11 +6,10 @@ total_sec, "unit": "sec", "queries": {name: sec}, "sf": ..., "cpus":
 N} (also written to BENCH_DETAIL.json), then a compact summary line
 guaranteed to fit the driver's 2,000-byte stdout tail — the driver
 parses the LAST line, and the full per-query maps outgrew the tail at
-75 queries (r10: `parsed: null`). Since r19 the compact line carries
-the most-expensive-first PREFIX of the per-query seconds map that fits
-the byte budget (plus "queries_omitted"), so the driver's PERF
-round-over-round and 32-vs-8-core scaling comparisons get real
-per-query data again (r18 verdict item 3) without risking the parse.
+75 queries. The compact line carries the most-expensive-first PREFIX
+of the per-query seconds map that fits the byte budget (plus
+"queries_omitted"), so run-over-run and cross-core-count comparisons
+get real per-query data without risking the parse.
 
 Each query executes fully via the `noop` sink (no driver-side collect,
 no result materialization cost in the timing), through
@@ -19,9 +18,9 @@ build plus the action.
 
 Regression guardrail: per-query medians are compared against the
 committed baseline (BENCH_BASELINE.json, same sf only). Absolute
-seconds on a shared box swing several-x with ambient load (round-2
-verdict: the same suite measured 13.8 s, 27.1 s and 65.7 s under
-different machine states with no code change), so the comparison is
+seconds on a shared box swing several-x with ambient load (the same
+suite once measured 13.8 s, 27.1 s and 65.7 s under different machine
+states with no code change), so the comparison is
 NORMALIZED: every bench session times a fixed calibration workload
 (pure Spark, independent of this repo's code) and queries are compared
 by their ratio to it — machine slowness cancels, code slowness does
@@ -34,25 +33,25 @@ regressions instead (pre-commit usage). Sub-0.5 s baselines are exempt
 predates calibration (no "calibration_sec"), the guardrail falls back
 to absolute seconds.
 
-BASELINE FREEZE POLICY (round-6 verdict item 3): BENCH_BASELINE.json
+BASELINE FREEZE POLICY: BENCH_BASELINE.json
 is FROZEN. A baseline that tracks current performance can only ever
 see one round of drift, so re-recording it requires (a) a commit
 message stating the plan-shape justification (a query's pinned plan
 changed, or a query was added/removed from BENCH_QUERIES with no
-prior baseline entry), and (b) keeping the superseded file in-tree as
-BENCH_BASELINE_r{N}.json so cross-round drift stays measurable.
+prior baseline entry), and (b) leaving the superseded file to git
+history, where drift across re-records stays measurable.
 Queries absent from the baseline (newly benched) are skipped by the
 guardrail until the next justified re-record — that is intentional,
 not a reason to refresh.
 
-RECORDING PRECONDITION (round-14 lesson): before recording, confirm
+RECORDING PRECONDITION: before recording, confirm
 the in-run calibration agrees with a few STANDALONE _calibrate probes
 taken minutes apart. Calibration (a CPU-burst shuffle) degrades ~2x
 faster under box contention than the mixed parquet/query walls do, so
 a record taken on a contended box bakes in an inflated calibration:
 every later normalized comparison reads high, and once the two
 calibrations differ by >1.5x the comparable-box waiver disables the
-raw backstop too — the r14 first record produced 57 false regressions
+raw backstop too — one contended record produced 57 false regressions
 on unchanged code exactly this way."""
 
 from __future__ import annotations
@@ -99,52 +98,44 @@ BENCH_QUERIES = [
     "sequence_packing",
     "mixture_resample",
     "funnel_conversions",
-    # round-2 additions (no round-1 baseline; guardrail skips them)
     "decontaminate",
     "uv_bloom",
     "inverted_index",
     "bm25_search",
     "embedding_quantize",
-    # round-5 addition (baselined at next re-record). The PQ ANN path
-    # stays out: its 8 KMeans fits per invocation are training cost,
-    # not query cost, and would dominate the bench's time budget.
+    # the connected-components canonicalizer. The PQ ANN path stays
+    # out: its 8 KMeans fits per invocation are training cost, not
+    # query cost, and would dominate the bench's time budget.
     "dedup_canonicalize",
-    # round-7 addition: the mega-cluster-safe keep-best twin, benched
-    # alongside its default-plan sibling so the min_by + broadcast
-    # winner plan gets a wall-time datapoint (round-6 verdict item 7).
-    # No baseline entry yet — guardrail skips it until a justified
-    # re-record.
+    # the mega-cluster-safe keep-best twin, benched alongside its
+    # default-plan sibling so the min_by + broadcast winner plan gets a
+    # wall-time datapoint.
     "dedup_canonicalize_skew",
-    # round-7 additions: the three new dedup shapes — span-level
-    # substring stats (explode-heaviest plan in the registry), the
-    # span-excising trim, and incremental batch-vs-reference near-dup.
-    # No baseline entries yet.
+    # the three dedup span shapes — span-level substring stats
+    # (explode-heaviest plan in the registry), the span-excising trim,
+    # and incremental batch-vs-reference near-dup.
     "dedup_span_stats",
     "dedup_span_trim",
     "dedup_incremental",
-    # round-7 third wave: the containment twin (same bucket-pairing
-    # plan as dedup_ngram_jaccard, different score) and SemDeDup
-    # (the KMeans fit is intrinsic to the operator — unlike PQ's 8
-    # codebook fits, it's one k=8 fit, so it stays in the timing).
-    # No baseline entries yet; guardrail skips them.
+    # the containment twin (same bucket-pairing plan as
+    # dedup_ngram_jaccard, different score) and SemDeDup (the KMeans
+    # fit is intrinsic to the operator — unlike PQ's 8 codebook fits,
+    # it's one k=8 fit, so it stays in the timing).
     "dedup_containment",
     "semantic_dedup",
-    # round-7 fourth-sixth waves: the MG sketch (mapInPandas partials),
-    # vocab-bounded PMI pair counts, the per-user transition window,
-    # MMR's cogrouped greedy, the A-Res sample window, and the
-    # fingerprint full-outer diff. No baseline entries yet; guardrail
-    # skips them until the next justified re-record.
+    # the MG sketch (mapInPandas partials), vocab-bounded PMI pair
+    # counts, the per-user transition window, MMR's cogrouped greedy,
+    # the A-Res sample window, and the fingerprint full-outer diff.
     "heavy_hitters",
     "word_pmi",
     "event_transitions",
     "mmr_rerank",
     "weighted_sample",
     "snapshot_diff",
-    # round-7 seventh wave: the interpolated bigram LM (the registry's
-    # biggest LM join), the hashed classifier gate (pure-scan floor —
-    # the cheapest possible corpus pass, a useful lower-bound row), the
-    # vocab OOV audit, blocked fuzzy linkage, and PSI drift. No
-    # baseline entries yet; guardrail skips them.
+    # the interpolated bigram LM (the registry's biggest LM join), the
+    # hashed classifier gate (pure-scan floor — the cheapest possible
+    # corpus pass, a useful lower-bound row), the vocab OOV audit,
+    # blocked fuzzy linkage, and PSI drift.
     "doc_bigram_logprob",
     "clf_quality_score",
     "vocab_oov_rate",
@@ -155,24 +146,22 @@ BENCH_QUERIES = [
     "doc_semantic_pairs",
     # the full assembly compose (gates + decontam + mixture + split).
     "training_mix_snapshot",
-    # round-7 late additions with distinct plan shapes: four window
-    # passes on one shuffle, and the diff-ship-apply SMJ compose.
+    # distinct window plan shapes: four window passes on one shuffle,
+    # and the diff-ship-apply SMJ compose.
     "scd2_history",
     "changelog_roundtrip",
-    # round-8: the four correlated-subquery TPC-H shapes that complete
-    # the q1-q22 block, all built on the derived-partsupp bridge (one
-    # map-side-combined lineitem shuffle). No baseline entries yet;
-    # guardrail skips them until the next justified re-record.
+    # the four correlated-subquery TPC-H shapes that complete the
+    # q1-q22 block, all built on the derived-partsupp bridge (one
+    # map-side-combined lineitem shuffle).
     "tpch_q2",
     "tpch_q9",
     "tpch_q11",
     "tpch_q20",
-    # round-8: index-driven batch retrieval after the query-term
-    # pre-filter below the dfreq window. No baseline entry yet.
+    # index-driven batch retrieval after the query-term pre-filter
+    # below the dfreq window.
     "multi_query_search",
-    # round-9 additions: grid resample + ffill, RANGE-interval moving
-    # aggregate, first-arrival dedup, BPE pair induction. No baseline
-    # entries yet — guardrail skips them until a justified re-record.
+    # grid resample + ffill, RANGE-interval moving aggregate,
+    # first-arrival dedup, BPE pair induction.
     "events_gapfill",
     "orders_moving_revenue",
     "events_dedup_late",
@@ -183,89 +172,77 @@ BENCH_QUERIES = [
     "agg_incremental_update",
     "events_gapfill_interp",
     "events_key_skew",
-    # round-10 additions: histogram-quantile curriculum buckets and
-    # the iterative BPE merge trainer (driver-loop; plan built by
-    # running the rounds). No baseline entries yet — guardrail skips.
+    # histogram-quantile curriculum buckets and the iterative BPE merge
+    # trainer (driver-loop; plan built by running the rounds).
     "quality_curriculum",
     "bpe_train_merges",
-    # round-10 sketch family: CM sketch estimates and KMV set algebra
-    # (each carries its exact check-scale baseline in-plan). No
-    # baseline entries yet — guardrail skips.
+    # sketch family: CM sketch estimates and KMV set algebra (each
+    # carries its exact check-scale baseline in-plan).
     "cms_topk_estimates",
     "kmv_set_cardinality",
-    # round-10 iterative graph op (12 fixed-point rounds over the
-    # source-overlap graph; CC-style checkpoint loop). No baseline.
+    # iterative graph op (12 fixed-point rounds over the source-overlap
+    # graph; CC-style checkpoint loop).
     "source_pagerank",
-    # round-10 tokenizer round-trip (learn merges, then tokenize the
-    # corpus with one composed JVM fold). No baseline.
+    # tokenizer round-trip (learn merges, then tokenize the corpus with
+    # one composed JVM fold).
     "bpe_tokenize_stats",
-    # round-10 native Datasketches HLL sub-sketch rollup. No baseline.
+    # native Datasketches HLL sub-sketch rollup.
     "uv_hll_rollup",
-    # round-10 per-group percentile winsorization. No baseline.
+    # per-group percentile winsorization.
     "events_value_winsorize",
-    # round-13 sketch registrations: KMV pair-intersection set algebra
-    # over source shingle vocabularies (full oracle) and the native
-    # KLL quantile rollup (rows-only, pytest value bounds). No
-    # baseline entries yet — guardrail skips.
+    # KMV pair-intersection set algebra over source shingle
+    # vocabularies (full oracle) and the native KLL quantile rollup
+    # (rows-only, pytest value bounds).
     "kmv_pair_intersections",
     "kll_quantile_rollup",
-    # round-13 additions: the one-scan DQ expectation audit (stack
-    # pivot over a single aggregate — the cheapest multi-metric pass
-    # shape) and per-label centroid drift (posexplode + integer-exact
-    # (label, dim) sums, corpus centroid reused from the same frame).
-    # No baseline entries yet — guardrail skips.
+    # the one-scan DQ expectation audit (stack pivot over a single
+    # aggregate — the cheapest multi-metric pass shape) and per-label
+    # centroid drift (posexplode + integer-exact (label, dim) sums,
+    # corpus centroid reused from the same frame).
     "dq_expectations",
     "embedding_drift",
-    # round-13: the l-diversity release gate — three windows on one
-    # quasi-key shuffle (the k_anonymity shape plus diversity). No
-    # baseline entry — guardrail skips.
+    # the l-diversity release gate — three windows on one quasi-key
+    # shuffle (the k_anonymity shape plus diversity).
     "l_diversity_audit",
-    # round-13: the Morton z-order layout audit — pure-codegen key
-    # against broadcast bounds + one bucket agg. No baseline entry.
+    # the Morton z-order layout audit — pure-codegen key against
+    # broadcast bounds + one bucket agg.
     "zorder_layout",
-    # round-13 compose flagship: dedup -> privacy funnel in one scan.
+    # compose flagship: dedup -> privacy funnel in one scan.
     "release_gate_snapshot",
-    # round-13: leave-one-out hour-of-week anomaly scores (one corpus
-    # shuffle + a tiny seasonal window regroup). No baseline entry.
+    # leave-one-out hour-of-week anomaly scores (one corpus shuffle + a
+    # tiny seasonal window regroup).
     "seasonal_anomalies",
-    # round-14: t-closeness (privacy triad completion) — one corpus
-    # cell shuffle, then sketch-sized distance algebra. No baseline
-    # entry yet — guardrail skips until the next justified re-record.
+    # t-closeness (privacy triad completion) — one corpus cell shuffle,
+    # then sketch-sized distance algebra.
     "t_closeness_audit",
-    # round-15: media perceptual-hash near-dup (one payload-hash pass,
-    # persisted signatures, pigeonhole chunk buckets) and its
-    # incremental batch-vs-reference twin. No baseline entries yet —
-    # guardrail skips.
+    # media perceptual-hash near-dup (one payload-hash pass, persisted
+    # signatures, pigeonhole chunk buckets) and its incremental
+    # batch-vs-reference twin.
     "media_phash_dedup",
     "media_phash_incremental",
-    # round-16: winnowing fingerprints (MOSS selection) — zero-shuffle
-    # per-row array pipeline over one pushed scan — and the overlap
-    # detector built on the winnowed sub-sample (containment_pairs'
-    # bucket-join shape over ~2/(w+1) of the items). No baseline
-    # entries yet — guardrail skips.
+    # winnowing fingerprints (MOSS selection) — zero-shuffle per-row
+    # array pipeline over one pushed scan — and the overlap detector
+    # built on the winnowed sub-sample (containment_pairs' bucket-join
+    # shape over ~2/(w+1) of the items).
     "doc_winnow_fingerprint",
     "winnow_overlap_pairs",
-    # round-16: two-level epoch shuffle — one block exchange vs the
-    # global permutation's range machinery. No baseline entry yet.
+    # two-level epoch shuffle — one block exchange vs the global
+    # permutation's range machinery.
     "block_shuffle",
-    # round-17: train/eval decontamination on the winnowed sub-sample
-    # (stored-index capable) and its spans/excision consumer. No
-    # baseline entries yet — guardrail skips.
+    # train/eval decontamination on the winnowed sub-sample (stored-
+    # index capable) and its spans/excision consumer.
     "winnow_decontaminate",
     "winnow_contaminated_spans",
     "winnow_decontaminate_trim",
-    # round-18: hybrid sparse+dense retrieval — BM25 + exact-cosine
-    # candidate lists fused by integer-exact reciprocal-rank fusion
-    # (candidate-bounded frames; the walls are the two rankers). No
-    # baseline entry yet — guardrail skips.
+    # hybrid sparse+dense retrieval — BM25 + exact-cosine candidate
+    # lists fused by integer-exact reciprocal-rank fusion
+    # (candidate-bounded frames; the walls are the two rankers).
     "hybrid_rrf_search",
-    # round-18: stride-scheduled weighted source interleave (one
-    # per-source rn shuffle + the export_shards range machinery). No
-    # baseline entry yet — guardrail skips.
+    # stride-scheduled weighted source interleave (one per-source rn
+    # shuffle + the export_shards range machinery).
     "source_interleave",
-    # round-18: one-pass multi-benchmark decontamination (two synthetic
-    # benchmark splits; corpus-scale cost independent of benchmark
-    # count). No baseline entry yet — guardrail skips.
+    # one-pass multi-benchmark decontamination (two synthetic benchmark
+    # splits; corpus-scale cost independent of benchmark count).
     "winnow_decontaminate_multi",
 ]
 
@@ -299,7 +276,6 @@ def main() -> None:
     # the session's REAL core count (local[N] => N), recorded in both
     # output lines so the driver can (a) join per-query seconds across
     # its 32-core and low-core runs and (b) see which run is which
-    # (r18 verdict item 3)
     cpus = spark.sparkContext.defaultParallelism
     # The CC-backed queries release their localCheckpoint-backed label
     # RDDs at every query boundary BY DESIGN (caching.py contract:
@@ -309,8 +285,8 @@ def main() -> None:
     # lineage has been truncated and cannot be recomputed after
     # unpersisting" — which is the expected voice of that hygiene, not
     # a problem, and dozens of them drown the bench tail where the
-    # driver's probes and REAL warnings surface (round-6 verdict item
-    # 1). Silence exactly that logger; everything else stays at WARN.
+    # driver's probes and REAL warnings surface. Silence exactly that
+    # logger; everything else stays at WARN.
     jvm = spark.sparkContext._jvm
     jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.rdd.MapPartitionsRDD",
@@ -345,7 +321,7 @@ def main() -> None:
     # Cache hygiene between queries: observe.run releases the tracked
     # persists and clears the catalog cache after every run, and reports
     # any RDD still persistent afterwards, so nothing leaks from one
-    # timed query into the next (round-2 verdict item 2). A leak found
+    # timed query into the next. A leak found
     # on any rep is reported.
     samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
     leaked: list[str] = []
@@ -375,9 +351,9 @@ def main() -> None:
     # The vs-baseline guardrail is only meaningful at the baseline's
     # core count: at a lower count the calibration workload SPEEDS UP
     # (fewer tasks, less scheduling overhead) while real queries slow
-    # down, so cal-unit ratios explode — the driver's 8-core r18 run
-    # produced 45 bogus "regressions" exactly this way (r18 verdict
-    # item 5). Skip the comparison entirely on a mismatched run and
+    # down, so cal-unit ratios explode — an 8-core run against the
+    # 32-core baseline produced 45 bogus "regressions" exactly this way.
+    # Skip the comparison entirely on a mismatched run and
     # say so in the output instead of emitting noise.
     base_cpus = baseline[2]
     if base_cpus is not None and cpus != base_cpus:
@@ -398,10 +374,9 @@ def main() -> None:
         detail["regressions"] = regressions
         print(f"REGRESSION vs BENCH_BASELINE.json: {regressions}", file=sys.stderr)
     # Per-query maps go FIRST on stdout and to BENCH_DETAIL.json; the
-    # LAST stdout line is a compact machine JSON (r10 verdict item 1):
-    # the driver records only a 2,000-byte stdout tail, and the full
-    # 75-query map alone is >2 KB, so a single fat line loses the parse
-    # (BENCH_r10.json came back `parsed: null`).
+    # LAST stdout line is a compact machine JSON: the driver records
+    # only a 2,000-byte stdout tail, and the full 75-query map alone is
+    # >2 KB, so a single fat line loses the parse.
     print(json.dumps(detail))
     # stdout is the contract, the file a convenience: a failed write
     # (read-only checkout, disk-full) must not abort before the
@@ -423,8 +398,8 @@ def _compact_line(detail: dict) -> dict:
     even at worst-case field widths, so BENCH_QUERIES growth can't
     re-break the driver's parse.
 
-    Per-query seconds (r18 verdict item 3 — PERF had n_common 0 for two
-    rounds because the last line carried no "queries" map): the FULL
+    Per-query seconds (a last line without a "queries" map leaves the
+    driver no per-query rows to compare): the FULL
     95-entry map cannot fit — its names alone serialize past 1,850
     bytes — so the line carries the most-expensive-first prefix that
     fits the byte budget, with "queries_omitted" counting the cut
@@ -514,8 +489,8 @@ def _vs_baseline(
     loaded: "tuple[dict[str, float], float | None]",
 ) -> dict:
     """Per-query raw and calibration-normalized ratios vs the frozen
-    baseline, emitted IN the bench JSON (r9 verdict item 8) so drift
-    is auto-annotated instead of re-derived by hand each round. raw =
+    baseline, emitted IN the bench JSON so drift is auto-annotated
+    instead of re-derived by hand after each run. raw =
     t/b; norm = (t/cal)/(b/base_cal) — the box-independent accounting
     the regression gate uses. Informational only: the gate's verdict
     stays in 'regressions'."""
@@ -587,7 +562,7 @@ def _regressions(
             # threshold by the calibration ratio would close it — but
             # also reduce to norm-only on ANY faster box, which is
             # the false-positive storm a non-representative baseline
-            # calibration produced this round (57 flags on unchanged
+            # calibration once produced (57 flags on unchanged
             # code). With a representative baseline the ratio stays
             # near 1 and the dual gate does its job.
             ratio_now, ratio_base = t / calibration, b / base_cal

@@ -394,7 +394,7 @@ def _salted_min_sigs(hash_arr, k: int):
     (~1 s of driver time per invocation), and ``transform`` evaluates
     its lambda interpreted, per element. One Arrow batch transfer of
     the already-hashed longs + flat uint64 vector ops is faster on
-    both sides and keeps the plan tree tiny (round-3 verdict #2). Same
+    both sides and keeps the plan tree tiny. Same
     pattern as the SimHash kernel below."""
     import numpy as np
 
@@ -523,7 +523,7 @@ def minhash_lsh_pairs(
     # never full corpus text shuffled to keep almost nothing),
     # consumed exactly once by the band bucketing below — so nothing
     # corpus-sized is ever persisted and there is no multi-consumer
-    # cache race (round-3 verdict #2: the previous shape persisted
+    # cache race (the previous shape persisted
     # (id, shingle_arr, signature) and paid a whole extra eager-count
     # pass just to fill the cache). The salted-min + band fold runs in
     # the Arrow kernel (see :func:`_band_hashes_udf`).
@@ -573,8 +573,8 @@ def minhash_lsh_pairs(
     # shingle arrays. The candidates-only `sets` frame is itself
     # persisted because TWO consumers follow (the id_a and id_b
     # broadcast builds): without the persist the corpus scan +
-    # candidate tokenization subtree ran twice (round-4 verdict #1 —
-    # the single normalized regression in the suite). The persist is
+    # candidate tokenization subtree ran twice (once the single
+    # normalized regression in the suite). The persist is
     # lazy on purpose — the first broadcast build fills the cache and
     # the block-manager's per-block locks make a concurrent second
     # build wait-and-read, so an eager count() would only add a job.
@@ -1200,7 +1200,7 @@ def canonicalize_clusters(
     # quality onto it broadcasts, the rank window shuffles only graph
     # members, and every isolated doc short-circuits to keep=1 with
     # cluster_id = its own id — no corpus-sized cluster_id shuffle at
-    # all (round-5 verdict item 3: the previous union-then-rank plan
+    # all (the previous union-then-rank plan
     # windowed the whole corpus through 2 stats-less SMJs). The corpus
     # is scanned twice (once per branch) — two narrow parquet scans
     # beat persisting a corpus-sized quality frame at 100 TB. Boundary:
@@ -1324,7 +1324,7 @@ def _cc_labels(
     only ever shrink) — no per-round join against the previous labels
     needed.
 
-    Checkpoint lifecycle (round-5 verdict item 1): localCheckpoint
+    Checkpoint lifecycle: localCheckpoint
     persists live in ``sc.getPersistentRDDs()`` where DataFrame
     ``unpersist()``/``clearCache()`` can't reach them, so each round's
     checkpoint RDD ids are captured (the persist registers

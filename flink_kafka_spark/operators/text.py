@@ -1160,8 +1160,8 @@ def bm25_search(
     scored = base.crossJoin(F.broadcast(stats)).withColumn("_raw", F.expr(contribs))
     # Rank the k surviving rows WITHOUT a window function: an
     # unpartitioned Window.orderBy — even over k rows — runs a
-    # WindowExec that logs "No Partition Defined" on every execution
-    # (round-3 verdict #4). Instead coalesce the top-k to one sorted
+    # WindowExec that logs "No Partition Defined" on every execution.
+    # Instead coalesce the top-k to one sorted
     # partition and read the row index off monotonically_increasing_id.
     #
     # IMPLEMENTATION-DETAIL CONTRACT (not a documented Spark

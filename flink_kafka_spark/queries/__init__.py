@@ -34,120 +34,13 @@ class Query:
 
 
 # The driver's correctness harness hashes exactly the FIRST 50 entries
-# of ``queries()`` in registry order, so the window below is curated so
-# every component family — reference §2 surface, dedup, similarity,
-# retrieval, sampling/release, multimodal, relational — has at least
-# one full-oracle row inside it, and every ``*_check`` property oracle
-# for the approx paths is included (round-2 verdict item 1). Queries
-# past the window keep full pytest + rehearsal coverage at every scale
-# factor; they are rotation candidates, not unverified code.
-#
-# ROTATION POLICY (round-4 verdict #6, cadence amended r10): each
-# round, rotate rows that were driver-green in BOTH of the two
-# preceding rounds out of the window, replacing them with registered
-# queries currently outside it. Cadence (machine-checked by
-# tests/test_oracle.py::test_no_full_oracle_row_skips_driver_hashing_
-# beyond_cadence): a NEVER-hashed full-oracle registration must enter
-# the window its own round (or be capacity-deferred at most 3); an
-# active row may sit out at most 6 consecutive rounds — the original
-# "~3 rounds" promise is infeasible at 149 full-oracle rows (max
-# 3-round coverage through a 50-slot window at twice-green turnover
-# is 100 rows); row-linked twins may retire from the window with a
-# named co-covering row (RETIRED_TWINS), still oracle-verified by
-# every pytest/rehearsal sweep. Constraints that bound each rotation:
-# - every ``*_check`` property oracle stays in (they are the only
-#   driver verification the hash-dependent approx paths have);
-# - each family keeps >=1 full-oracle row (test_driver_window_covers_
-#   every_family);
-# - a rotated-out query must have its semantics co-covered by a
-#   staying row or a pytest;
-# - new full-oracle registrations enter the window the same round
-#   ("immediate-hash rule"), after sf0.01 rehearsal.
-#
-# The per-wave history — every OUT with its co-coverage note, every IN,
-# and the never-hashed queue — lives in ROTATION_LEDGER.md (round-7
-# verdict item 8: the ledger was outgrowing this header).
-#
-# ROUND-18 ROTATION — the written r18 wave executes exactly as
-# scheduled (ROTATION_LEDGER.md §Round 17 "WRITTEN r18-r20 SCHEDULE";
-# opening cadence-audit table in §Round 18): the 18 cadence-due rows
-# (the r12-last-hash block: basket_lift .. training_mix_snapshot,
-# tpch_q2/q9/q11/q20, source_pagerank) enter, the two r17
-# CAPACITY_DEFERRED registrations (winnow_contaminated_spans,
-# winnow_decontaminate_trim) take their first hash on their written
-# deadline, and the 4 single-green r17 first-hash rows (doc_winnow_
-# fingerprint, winnow_overlap_pairs, block_shuffle,
-# winnow_decontaminate) carry — they may not leave under either
-# departure rule. That is 12 checks + 4 carried + 2 deferrals + 18
-# due = 36 slots; the 14 spare slots take PULL-FORWARDS from the
-# 39-row r20 wave: inverted_index (the retrieval-family anchor the
-# written schedule names — multi_query_search leaves at 9 greens) +
-# 12 cheap bench rows (embedding_quantize, tpch_q6,
-# media_decode_meta, unique_visitors, hot_items_sql, channel_stats,
-# order_timeout, login_fail_detect, funnel_conversions,
-# ann_cosine_topk, tpch_q3, sessionize) + release_gate_snapshot,
-# which re-hashes THIS round because its semantics changed (the r18
-# leak-gate stage — see the in-window comment), shrinking the
-# r19-entry target from 25 to the 26-row wave remainder so r20's
-# organic due list is EMPTY. OUT: every r17 IN with >= 3 lifetime
-# greens (the seasoned-row amendment's first full-scale use) plus
-# media_phash_incremental (greens r16+r17 — the classic
-# twice-consecutive rule).
-#
-# SEASONED-ROW AMENDMENT (adopted r17; arithmetic in
-# ROTATION_LEDGER.md §Round 17): the twice-consecutive-green
-# departure rule forces every IN to occupy its slot for 2 rounds,
-# capping rotation throughput at (50-12)/2 = 19 INs/round — below
-# the 24/round the 156-row registry needs, and fatally below the
-# burst demand on the books (23 rows due r18, ~41 due r20): the
-# written schedule under the old rule ends r20 with ~20 rows overdue
-# no matter how the slots are packed. Amended departure rule: a row
-# with >= 3 LIFETIME green driver hashes may rotate out after a
-# single green (its latest hash); rows with < 3 lifetime greens keep
-# the twice-consecutive requirement. Rationale: the two-green rule
-# exists to catch first-registration flakiness; a row on its 3rd+
-# green has the same evidence the twin-retirement rule already
-# accepts after ONE green, plus the every-session DuckDB sweep.
-# With the amendment, rotation throughput doubles to 38/round and
-# the written r18-r20 schedule clears every due wave with slack.
-#
-# CAPACITY POLICY AMENDMENT (r15 verdict item 7, adopted r16): the
-# 6-round cadence supports at most 175 full-oracle rows through a
-# 50-slot window (50 + 5*25). At 154 rows the headroom is 21, and
-# new families arrive ~5-8 rows/round. Rules, effective r16:
-# (a) REGISTRATION PACING — a round may register at most 3 new
-#     full-oracle rows (the immediate-hash rule caps this anyway:
-#     each IN needs an OUT slot, and deferrals max out at 3 rounds);
-# (b) TWIN-FIRST — a new row that is a parameterized/hinted/skew twin
-#     of an existing row MUST ship with the row-identity pytest that
-#     qualifies it for RETIRED_TWINS, and retires after its FIRST
-#     green driver hash (precedents: global_stats_fine,
-#     order_ship_interval_join_binned, dedup_canonicalize_skew);
-# (c) CEILING TRIPWIRE — when the full-oracle count reaches 170,
-#     registration freezes until retirements bring it back under;
-#     a pytest asserts the count stays <= 170
-#     (tests/test_oracle.py::test_full_oracle_count_under_ceiling).
-# ROUND-19 ROTATION — the written r19 wave (ROTATION_LEDGER.md
-# §Round 17 "WRITTEN r18-r20 SCHEDULE"; §Round 18 "r19 wave absorbs
-# all three deferrals"): organic due = 0 this round; every non-check
-# r18 row except the three carries below leaves — the 4 carried r17
-# winnow rows at two consecutive greens (r17+r18, the classic rule),
-# the 18 r18-due rows, inverted_index and the 12 cheap pull-forwards
-# after their single r18 green under the seasoned-row amendment
-# (every one an r12-or-earlier registrant with >= 3 lifetime greens).
-# IN: the full 26-row r20 wave (r14-last-hash block) so r20's organic
-# due list is EMPTY, plus the three r18 CAPACITY_DEFERRED
-# registrations on first hash (deadline r21 — absorbed early per the
-# written plan). CARRIED: winnow_contaminated_spans /
-# winnow_decontaminate_trim (single r18 green — may not leave under
-# either rule; they reach two consecutive greens here and exit at
-# r20) and release_gate_snapshot (single green on its CHANGED r18
-# oracle — lifetime greens predate the semantics change, so the
-# seasoned amendment is not applied to it; prudence over throughput).
-# The 6 remaining slots pull forward bm25_search (the whole r21
-# organic wave) and 5 r22-wave rows, led by kmv_pair_intersections —
-# restructured THIS round (array pair algebra), so its fresh hash
-# puts the rewrite under the driver's own verification immediately.
+# of ``queries()`` in registry order; ``DRIVER_WINDOW`` lists them. The
+# window holds every ``*_check`` property oracle (the hash-dependent
+# approx paths have no other driver verification) and at least one
+# full-oracle row from every component family: reference §2 surface,
+# dedup, similarity, retrieval, sampling/release, multimodal and
+# relational (test_driver_window_covers_every_family). Queries past the
+# window are still compared against DuckDB by tests/test_oracle.py.
 DRIVER_WINDOW: tuple[str, ...] = (
     # pinned property checks (the approx paths' only driver verification)
     "uv_approx_check",
@@ -162,20 +55,13 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "semantic_dedup_check",
     "heavy_hitters_check",
     "media_features_check",
-    # carried r18 first-hash rows (single green — may not leave under
-    # either departure rule; they reach 2 consecutive greens here and
-    # exit at r20)
+    # full-oracle rows
     "winnow_contaminated_spans",
     "winnow_decontaminate_trim",
-    # carried re-registration (single green on the r18-changed oracle)
     "release_gate_snapshot",
-    # the r18 capacity deferrals — first hash, ahead of their r21
-    # deadline (never-hashed queue empties)
     "hybrid_rrf_search",
     "source_interleave",
     "winnow_decontaminate_multi",
-    # the 26-row r20 wave (last hashed r14), entered a round early so
-    # the r20 organic due list is empty
     "click_blacklist",
     "dataset_split",
     "decontaminate",
@@ -202,10 +88,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "tpch_q4",
     "tpch_q5",
     "tpch_q7",
-    # r21-wave pull-forward (its whole organic wave)
     "bm25_search",
-    # r22-wave pull-forwards: the r19-restructured sketch row first,
-    # then cheap rows to spread the r22 burst
     "kmv_pair_intersections",
     "dq_expectations",
     "doc_fingerprint",

@@ -1149,7 +1149,7 @@ QUERIES.append(
 # and every clip/sum is integer arithmetic until the terminal mean.
 
 def events_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # SCALE CONTRACT (r10 verdict item 3): `percentile()` is EXACT and
+    # SCALE CONTRACT: `percentile()` is EXACT and
     # buffers one counter per distinct value per group in the agg
     # buffer. That is safe here BY CONSTRUCTION, not by luck: the
     # buffered domain is the e4-quantized value — bounded by the

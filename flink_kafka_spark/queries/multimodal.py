@@ -78,7 +78,7 @@ def media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strided byte-mean feature vectors in LONG form
     ``(doc_id, dim_idx, val)`` — one row per vector component, so the
     driver's pandas canonicalizer can sort/hash every cell (array
-    columns are not hashable there; round-7 verdict item 1). The numpy
+    columns are not hashable there). The numpy
     mapInPandas path stays the thing under test; only the registered
     projection flattens."""
     from pyspark.sql import functions as F

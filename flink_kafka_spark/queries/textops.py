@@ -2616,8 +2616,8 @@ from ..operators.text import winnow_decontaminate  # noqa: E402
 
 
 def winnow_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-vs-eval decontamination on the winnowed sub-sample (r17):
-    the incremental consumer the r16 verdict asked for — every 97th
+    """Train-vs-eval decontamination on the winnowed sub-sample, the
+    incremental consumer of the winnow fingerprints — every 97th
     document plays the held-out benchmark (the decontaminate split),
     the rest the training batch; contaminated train docs surface with
     per-doc evidence under the w + k - 1 = 11-token guarantee. The

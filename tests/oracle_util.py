@@ -16,7 +16,7 @@ compares:
   before repr (both engines' drivers render them equivalently).
 
 A dtype drift (decimal-object vs float64, int64 vs float64) now fails
-pytest instead of surviving until CORRECTNESS_r{N}.json.
+pytest instead of surviving until the driver's value hash.
 """
 
 from __future__ import annotations

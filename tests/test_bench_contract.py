@@ -68,8 +68,8 @@ def test_compact_line_keeps_summary_fields():
 
 
 def test_compact_line_carries_budget_capped_per_query_seconds():
-    """r18 verdict item 3: the driver's PERF comparison had n_common 0
-    for two rounds because the last line carried no per-query seconds.
+    """The driver's per-query comparison found no common rows while the
+    last line carried no per-query seconds.
     The compact line now carries the most-expensive-first prefix of the
     per-query map that fits the byte budget, exact values, count of
     the omitted tail."""
@@ -112,21 +112,19 @@ def test_vs_baseline_survives_zero_timing(monkeypatch):
 def test_load_baseline_exposes_recording_cpus():
     """The frozen baseline records the core count it was measured at;
     bench.main() suppresses the vs-baseline guardrail when the session
-    runs at a different count (the 8-core calibration artifact, r18
-    verdict item 5)."""
+    runs at a different count (calibration ratios are not comparable
+    across core counts)."""
     queries, cal, cpus = bench._load_baseline("0.1")
     assert queries and cal
     assert cpus == 32
 
 
 def test_readme_bench_block_is_generated_and_renderable():
-    """r13 verdict item 6: the README's end-of-round bench paragraph is
-    GENERATED from the recorded JSON (tools/gen_bench.py), never
-    hand-typed. Pin the marker block's presence and that the generator
-    renders cleanly from the committed files; freshness itself is the
-    end-of-round `python tools/gen_bench.py --check` step (the driver
-    rewrites BENCH_DETAIL.json each round, so a freshness assert here
-    would flake on ordering)."""
+    """The README's bench paragraph is GENERATED from the recorded JSON
+    (tools/gen_bench.py), never hand-typed. Pin the marker block's
+    presence, that the generator renders cleanly from the committed
+    files, and that the committed block is fresh (what
+    `python tools/gen_bench.py --check` asserts)."""
     import pathlib
     import sys
 
@@ -143,8 +141,21 @@ def test_readme_bench_block_is_generated_and_renderable():
     block = gen_bench.render()
     assert block.startswith(gen_bench.BEGIN) and block.endswith(gen_bench.END)
     assert "Latest recorded bench" in block
+    committed = text[text.index(gen_bench.BEGIN):text.index(gen_bench.END) + len(gen_bench.END)]
+    assert committed == block, "README bench block is stale — run tools/gen_bench.py"
     # every per-query number in the block must come from the JSON, so
     # the five-most-expensive names it lists must be benched queries
     detail = json.loads((repo / "BENCH_DETAIL.json").read_text())
     for name, _ in sorted(detail["queries"].items(), key=lambda kv: -kv[1])[:5]:
         assert f"`{name}`" in block
+
+
+def test_no_round_named_files():
+    """Records are named for what they hold, not for the run that wrote
+    them: git history keeps superseded files, so no file at the repo
+    root carries a round suffix."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    offenders = sorted(p.name for p in repo.glob("*_r[0-9]*"))
+    assert not offenders, f"round-named files at the repo root: {offenders}"

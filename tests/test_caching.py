@@ -1,5 +1,5 @@
 """Operator-internal persists must be released at the next query
-boundary (round-2 verdict item 2): a long-lived session sweeping many
+boundary: a long-lived session sweeping many
 queries — the driver's correctness pass, bench.py — must not
 accumulate cached blocks. ``observe.run``, the harnesses' run path,
 counts leaked RDDs and releases even when a build fails, and

@@ -356,7 +356,7 @@ def test_wav_header_duration_is_a_real_container_parse():
 
 
 def test_real_codec_image_e2e(spark):
-    """r15 verdict item 4/6: opportunistic end-to-end decode through
+    """Opportunistic end-to-end decode through
     the REAL Pillow codec — skips cleanly where PIL is absent (this
     sandbox), runs the full Spark mapInPandas pipeline where it
     exists: a generated 2x2 PNG decodes to width=height=2 and the

@@ -43,7 +43,7 @@ def test_harness_rejects_dtype_drift(spark, sf_dir, spark_sql, oracle_sql):
 def test_driver_window_covers_every_family():
     """The driver hashes exactly the first 50 registry entries; pin the
     curated window so a careless registration can't silently push a
-    family back out of driver verification (round-2 verdict item 1)."""
+    family back out of driver verification."""
     from flink_kafka_spark.queries import DRIVER_WINDOW
 
     names = list(QUERIES)
@@ -58,7 +58,7 @@ def test_driver_window_covers_every_family():
 
     # at least one FULL-oracle row per component family inside the window
     # (member lists enumerate the family's registered queries — extend
-    # them when registering, so a rotation can't empty a family)
+    # them when registering, so a window edit can't empty a family)
     families = {
         "dedup": ["dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh_check",
                   "dedup_simhash_check", "dedup_clusters", "dedup_embedding_cosine",
@@ -116,221 +116,20 @@ def test_no_registered_query_emits_nested_columns(spark, sf_dir):
     their plan is BUILT, so this sweep runs those pipelines at
     sf0.001 — inherent to asking for their schema, not an accident.
 
-    Default tier (r19 verify-window split): only the rows WITHOUT a
-    DuckDB oracle — for every full-oracle row the default-tier oracle
-    sweep's pandas canonicalization would itself die on a nested cell,
-    so this check is redundant there; the ~15 rows-only queries are
-    this test's unique coverage. The slow-tier twin below still sweeps
+    Default tier: only the rows WITHOUT a DuckDB oracle — for every
+    full-oracle row the default-tier oracle sweep's pandas
+    canonicalization would itself die on a nested cell, so this check
+    is redundant there; the ~15 rows-only queries are this test's
+    unique coverage. The slow-tier twin below still sweeps
     everything."""
     _assert_flat_schemas(
         spark, sf_dir, [(n, q) for n, q in QUERIES.items() if not q.oracle]
     )
 
 
-@pytest.mark.slow  # slow tier (r19): the full-registry sweep; the
+@pytest.mark.slow  # slow tier: the full-registry sweep; the
 # default tier covers the rows the oracle sweep's canonicalizer
 # wouldn't already catch
 def test_no_registered_query_emits_nested_columns_full(spark, sf_dir):
     _assert_flat_schemas(spark, sf_dir, list(QUERIES.items()))
 
-
-# Full-oracle registrations that exceeded the current round's window
-# capacity (the documented r7/r9 precedent). Every entry carries the
-# round it was registered; the cadence test fails the entry itself if
-# it is still outside the window 3 recorded rounds later — a deferral
-# can be late, never forgotten.
-CAPACITY_DEFERRED: dict[str, int] = {
-    # (r10's five deferred registrations — quality_curriculum,
-    # cms_topk_estimates, kmv_set_cardinality, source_pagerank,
-    # events_value_winsorize — entered the r11 window on schedule.)
-    # r13: the mandatory 24-row drain (ROTATION_LEDGER §Round 13) fills
-    # every slot, so this round's new full-oracle registrations defer;
-    # they enter at r14 alongside the r8-stale wave.
-    # (the six r13 deferrals — dq_expectations, embedding_drift,
-    # l_diversity_audit, zorder_layout, release_gate_snapshot,
-    # seasonal_anomalies — and r14's t_closeness_audit all entered the
-    # r15 window.)
-    # r15: the wave (8 debt + 6 deferrals + t_closeness + 3
-    # pull-forwards) plus the same-round media_phash/media_phash_dedup
-    # registrations fill every slot, so the round's THIRD registration
-    # deferred; it entered the r16 window on schedule (the
-    # canonicalize_skew twin retirement produced its slot) — the
-    # never-hashed queue is empty as of r16.
-    "media_phash_incremental": 15,
-    # (r16's three deferrals — doc_winnow_fingerprint,
-    # winnow_overlap_pairs, block_shuffle — entered the r17 window on
-    # the drain schedule, one round inside their r19 deadline. r17's
-    # first registration, winnow_decontaminate, entered the same
-    # round under the immediate-hash rule — no deferral needed.)
-    # (r17 registrations #2 and #3 — winnow_contaminated_spans and
-    # winnow_decontaminate_trim, the spans/excision consumers of
-    # winnow_decontaminate — entered the r18 window on their written
-    # deadline: the never-hashed queue is empty as of r18.)
-    # r18 registration #1 (pacing 1 of 3): hybrid sparse+dense
-    # retrieval via integer-exact reciprocal-rank fusion. The r18
-    # window is fully committed (18 due + 2 deferral first-hashes +
-    # the release_gate_snapshot semantics re-hash), so it defers to
-    # the r19 wave, which has ~10 spare slots after the 26-row r20
-    # pull-in (ROTATION_LEDGER §Round 18).
-    "hybrid_rrf_search": 18,
-    # r18 registration #2 (pacing 2 of 3): stride-scheduled weighted
-    # source interleave — the loader-side ordering complement of
-    # mixture_resample. Same full-window deferral as #1; the r19 wave
-    # absorbs both.
-    "source_interleave": 18,
-    # r18 registration #3 — the pacing limit is now exactly reached
-    # (the r16/r17 precedent wording applies verbatim): one-pass
-    # multi-benchmark decontamination with per-benchmark attribution.
-    # Same r19-wave entry as #1 and #2.
-    "winnow_decontaminate_multi": 18,
-}
-
-# Twin rows retired from re-hash cadence (r10 policy codification):
-# each is row-linked to a named in-cadence row by a standing pytest or
-# is a pure projection/composition of in-cadence rows, and every one
-# still runs the full DuckDB-oracle compare in each session's
-# tools/rehearsal.py sweep — retirement skips the driver WINDOW, not
-# verification.
-RETIRED_TWINS: dict[str, str] = {
-    "hot_items_report": "formatting of hot_items_topn (golden-report pytest)",
-    "global_stats_fine": "salted row-identity twin of global_stats",
-    "order_ship_interval_join_binned": "row-identical hypothesis twin of order_ship_interval_join",
-    "ann_cosine_topk_int8": "int8 twin of ann_cosine_topk (quantization bound pytest)",
-    "high_value_purchases": "P1/P2 parse path (apache.log reference-parity pytest)",
-    "dedup_prune_stats": "1-row stats projection of the dedup_exact pipeline",
-    "dedup_clusters": "composed inside dedup_canonicalize (same pairs->CC pipeline)",
-    "text_stats": "narrow projection of the text-scan family (lang_id/text_quality)",
-    "corpus_prep": "composition of pii_scan+repetition_stats+text_quality filters",
-    # r16: skew-hinted twin of dedup_canonicalize; the safe-path
-    # row-identity pytest (test_properties.py::
-    # test_canonicalize_skew_safe_path_is_row_identical) pins both
-    # paths identical every session, and the twin carries 4 green
-    # driver hashes (r7/r8/r13/r15). Its slot went to the registry's
-    # last never-hashed row (media_phash_incremental).
-    "dedup_canonicalize_skew": "skew-hinted row-identity twin of dedup_canonicalize",
-    # r17 (judge item 5): resample_ffill and resample_interp share the
-    # grid densification and (key, bucket) aggregate — the shared
-    # (event_type, bucket_s, cnt) columns are pinned row-identical on
-    # real data every session (test_properties.py::
-    # test_gapfill_interp_shares_ffill_grid_row_identically); the
-    # ffill-specific columns stay under the row's own DuckDB oracle in
-    # the per-session sweep. 2 green hashes (r9/r10).
-    "events_gapfill": "shared-grid twin of events_gapfill_interp (grid/cnt row-identity pytest)",
-    # r17: the unpivot row is DEFINED as pivot->melt == plain GROUP BY;
-    # the closure is pinned row-identical on real data every session
-    # (test_properties.py::test_unpivot_is_pivot_closure_row_
-    # identically), so orders_status_pivot's hash co-verifies the
-    # melt. 2 green hashes (r9/r10).
-    "orders_status_unpivot": "pivot->melt closure twin of orders_status_pivot (closure row-identity pytest)",
-    # r17 (r18-prep audit, judge's written schedule): uv_bloom SHARES
-    # unique_visitors' exact oracle (fpp < 1e-9 at this scale — the
-    # query docstring's argument) and is pinned row-identical every
-    # session (test_properties.py::
-    # test_uv_bloom_row_identical_to_unique_visitors). Retiring it now
-    # shaves the r20 wave (it was due r20, with 8 lifetime greens).
-    "uv_bloom": "Bloom-membership row-identity twin of unique_visitors (shared exact oracle)",
-}
-
-# Pre-r10 cadence debt: rows whose absence already exceeded the bound
-# when the cadence test was introduced, each with the round it MUST
-# re-enter the window by. An overdue entry fails the test — debt can
-# be late, never forgotten.
-CADENCE_DEBT: dict[str, int] = {
-    # (quantity_percentiles and customer_running_totals, last hashed
-    # r2, re-entered the window in r11 on their written deadline.)
-    # (r14's 8 overflow rows — bpe_token_count, clf_quality_score,
-    # doc_logprob, event_transitions, filter_threshold_sweep,
-    # orders_rollup, traffic_anomalies, value_drift_psi — entered the
-    # r15 window on their written deadline.)
-    # (r16's 20-row debt — the r10-stale wave deferred when the r16
-    # OUT pool was structurally 2 slots — settled on its written r17
-    # deadline: all 20 entered the r17 window, except events_gapfill
-    # and orders_status_unpivot, which retired as twins instead — see
-    # RETIRED_TWINS. The r17 drain also absorbed the 9 newly-due r11
-    # rows and the 3 r16 capacity deferrals: 0 DUE/OVERDUE at r17
-    # close per tools/cadence_audit.py.)
-}
-
-# Re-hash cadence bound. The policy header's original "~3 rounds" is
-# infeasible at the current registry size: 149 full-oracle rows (r13)
-# cannot cycle through a 50-slot window in 3 rounds when only
-# twice-green rows may leave (max 3-round coverage = 50 + 2*25 = 100
-# rows). Six rounds cover 50 + 5*25 = 175 > 149 with slack for
-# checks/anchors — 26 rows of headroom; a future round that pushes
-# the full-oracle count toward 175 must widen the window or retire
-# twins instead. (r17 SEASONED-ROW AMENDMENT, queries/__init__.py
-# header: a row with >= 3 lifetime greens may leave after a single
-# green, doubling per-round rotation throughput to 38 — the bound
-# here is unchanged; the amendment only relaxes DEPARTURES, letting
-# the bursty due waves on the books actually fit the bound.)
-CADENCE_MAX_ABSENT = 6
-
-
-def test_no_full_oracle_row_skips_driver_hashing_beyond_cadence():
-    """r9 verdict item 2: the written r10 rotation schedule silently
-    dropped two never-hashed rows (retention_cohorts,
-    source_divergence) — a queue slotting bug ledger prose could not
-    catch. Reconstruct each query's hash history from the in-repo
-    CORRECTNESS_r*.json files, treat the CURRENT DRIVER_WINDOW as the
-    in-flight round's appearance, and fail if (a) a full-oracle
-    registration has never been hashed and is not in the current
-    window (strict — the bug class above; CAPACITY_DEFERRED grants at
-    most 3 rounds), or (b) an active row has been absent more than
-    CADENCE_MAX_ABSENT consecutive rounds (RETIRED_TWINS exempt,
-    CADENCE_DEBT entries run on their written deadline instead)."""
-    import json
-    import pathlib
-
-    from flink_kafka_spark.queries import DRIVER_WINDOW
-    from tools.cadence_audit import hash_history
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    # ONE reconstruction of round -> hashed-green names, shared with
-    # the ledger's audit tool so the enforcing test and the reporting
-    # tool can never drift apart (the r12 off-by-one class)
-    rounds = hash_history(repo)
-    assert rounds, "no CORRECTNESS_r*.json found — cadence unverifiable"
-    current = max(rounds) + 1
-
-    late = []
-    for name, q in QUERIES.items():
-        if q.oracle is None:
-            continue  # rows-only registrations are rehearsal/pytest turf
-        if name in DRIVER_WINDOW:
-            continue  # appears in the in-flight round
-        hashed = [r for r, names in rounds.items() if name in names]
-        if not hashed:
-            deferred = CAPACITY_DEFERRED.get(name)
-            if deferred is None:
-                late.append(f"{name}: never driver-hashed and not in the current window")
-            elif current - deferred > 3:
-                late.append(f"{name}: capacity-deferred since r{deferred}, still unhashed")
-            continue
-        if name in RETIRED_TWINS:
-            continue
-        if name in CADENCE_DEBT:
-            if current > CADENCE_DEBT[name]:
-                late.append(f"{name}: cadence debt due r{CADENCE_DEBT[name]} is overdue")
-            continue
-        absences = current - max(hashed)
-        if absences > CADENCE_MAX_ABSENT:
-            late.append(f"{name}: absent {absences} consecutive rounds")
-    assert not late, "rotation cadence violated:\n" + "\n".join(sorted(late))
-
-
-def test_full_oracle_count_under_ceiling():
-    """r15 verdict item 7 / r16 capacity policy amendment: the 6-round
-    cadence mathematically supports at most 175 full-oracle rows
-    through a 50-slot twice-green window (50 + 5*25). The tripwire
-    fires at 170 — five rows of margin — freezing registration until
-    twin retirements bring the count back down. RETIRED_TWINS rows
-    don't consume cadence capacity (they never re-enter the window),
-    so they are excluded."""
-    full_oracle = [
-        n for n, q in QUERIES.items()
-        if q.oracle is not None and n not in RETIRED_TWINS
-    ]
-    assert len(full_oracle) <= 170, (
-        f"{len(full_oracle)} full-oracle rows exceed the 170 registration "
-        "ceiling — retire twins (RETIRED_TWINS) before registering more"
-    )

@@ -1,6 +1,6 @@
 """Seeded convention-fuzz sweep: Spark vs DuckDB over generated
 filter × group-key × window-width × aggregate combinations on the
-``events`` table (r11 verdict item 6), plus a join-shaped sweep over
+``events`` table, plus a join-shaped sweep over
 orders⋈lineitem / customer⋈orders that drives the same conventions
 through shuffle joins with keys drawn from both sides, plus a
 window-function sweep (row_number/rank/lag/running frames) that pins

@@ -308,8 +308,8 @@ PLAN_BOUNDS = {
     # CC runs to convergence while the plan is BUILT (iterative
     # localCheckpoint loop); the residual plan joins the BROADCAST
     # label set (near-dup-graph-sized) against the corpus — zero
-    # shuffles, zero SMJ (round-5 verdict item 3 tightened these
-    # from (2,2)/uncovered)
+    # shuffles, zero SMJ (tightened from (2,2)/uncovered when the
+    # union-then-rank plan went)
     "dedup_clusters": (0, 0),
     # residual plan: broadcast label join + rank window over graph
     # members only (1 exchange on cluster_id, tiny) + broadcast
@@ -531,7 +531,7 @@ def test_plan_shapes(plan_sweep):
     assert not problems, "; ".join(problems)
 
 
-# Per-query BroadcastNestedLoopJoin ceilings (r9 verdict item 3: the
+# Per-query BroadcastNestedLoopJoin ceilings (the
 # old 4-query sample let a broadcast-HASH join degrade to a
 # nested-loop join in the other 144 queries without failing pytest —
 # BNLJ adds neither an exchange nor an SMJ, so PLAN_BOUNDS can't see

@@ -584,7 +584,7 @@ def test_cc_pointer_jumping_converges_on_a_pathological_chain(spark):
     (L(v) <- L(L(v)) from round 3 on) doubles label reach per round, so
     the loop must converge in ~log2(1000) ~ 10 jumping rounds — this
     test failing means the shortcut join was dropped or de-gated. The
-    100k-node twin lives in tools/stress.py (round-6 verdict #4)."""
+    100k-node twin lives in tools/stress.py."""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark.operators.dedup import connected_components
@@ -1797,15 +1797,13 @@ def test_pagerank_empty_input_gives_an_empty_ranking(spark):
 
 
 def test_gapfill_interp_shares_ffill_grid_row_identically(spark, sf_dir):
-    """Twin-retirement qualifier (r17, RETIRED_TWINS: events_gapfill):
-    resample_ffill and resample_interp are the same operator up to the
-    fill rule — one grid densification, one (key, bucket) aggregate —
-    so their shared columns ``(event_type, bucket_s, cnt)`` must be
-    ROW-IDENTICAL on the real events table. With this pinned every
-    session, events_gapfill_interp's driver hash verifies the whole
-    shared grid pipeline; the ffill-specific columns (filled_avg,
-    gap_buckets) stay under events_gapfill's own DuckDB oracle in the
-    per-session sweep, like every retired twin."""
+    """resample_ffill and resample_interp are the same operator up to
+    the fill rule — one grid densification, one (key, bucket) aggregate
+    — so events_gapfill and events_gapfill_interp must agree
+    ROW-IDENTICALLY on their shared columns ``(event_type, bucket_s,
+    cnt)`` over the real events table. The ffill-specific columns
+    (filled_avg, gap_buckets) stay under events_gapfill's own DuckDB
+    oracle."""
     from flink_kafka_spark.queries.analytics import (
         events_gapfill,
         events_gapfill_interp,
@@ -1828,12 +1826,10 @@ def test_gapfill_interp_shares_ffill_grid_row_identically(spark, sf_dir):
 
 
 def test_unpivot_is_pivot_closure_row_identically(spark, sf_dir):
-    """Twin-retirement qualifier (r17, RETIRED_TWINS:
-    orders_status_unpivot): the unpivot row is DEFINED as the closure
-    pivot -> melt == plain (month, status) GROUP BY; pin that closure
-    as row identity on the real orders table, so orders_status_pivot's
-    driver hash co-verifies the melt. (The query's own DuckDB oracle —
-    the plain GROUP BY — still runs in every session's sweep.)"""
+    """orders_status_unpivot is DEFINED as the closure pivot -> melt ==
+    plain (month, status) GROUP BY; pin that closure as row identity on
+    the real orders table. (The query's own DuckDB oracle — the plain
+    GROUP BY — is compared separately.)"""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark.queries.analytics import orders_status_unpivot
@@ -1858,15 +1854,13 @@ def test_unpivot_is_pivot_closure_row_identically(spark, sf_dir):
 
 
 def test_uv_bloom_row_identical_to_unique_visitors(spark, sf_dir):
-    """Twin-retirement qualifier (r17, RETIRED_TWINS: uv_bloom): the
-    Bloom-membership UV variant (the reference's
+    """The Bloom-membership UV variant uv_bloom (the reference's
     UvWithBloomFilter.java semantics — bit-test + count++) shares its
     exact COUNT(DISTINCT) oracle with unique_visitors because at this
     corpus scale the 2^22-bit filter's fpp < 1e-9: false positives
     undercount with probability ~0 per window. Pin the two queries
-    ROW-IDENTICAL on real data every session, so unique_visitors'
-    driver hash co-verifies the Bloom path (which also keeps its own
-    oracle row in the per-session sweep)."""
+    ROW-IDENTICAL on real data (the Bloom path also keeps its own
+    oracle row)."""
     from flink_kafka_spark.queries.streamlike import unique_visitors, uv_bloom
 
     bloom = {tuple(r) for r in uv_bloom(spark, sf_dir).collect()}

@@ -722,7 +722,7 @@ def test_uv_bloom_stream_matches_exact(spark, tmp_path):
 
 
 def test_uv_bloom_stream_state_eviction(spark, tmp_path):
-    """The per-window bitmap dies with its window (round-3 verdict #1):
+    """The per-window bitmap dies with its window:
     once the watermark passes window_end + lateness, the event-time
     timer fires and the window's state row is removed. This fixes
     unbounded growth the reference actually exhibits — UvWithBloom-
@@ -1178,7 +1178,7 @@ def test_session_stream_matches_batch_session_window(spark, tmp_path):
     """Twin parity for the native session_window operator: the
     streaming session_stats_stream and a batch session_window
     aggregation over the SAME replayed events must agree on every
-    closed session (r9 verdict item 4 — session_windows_native claims
+    closed session (session_windows_native claims
     a streaming-capable plan; this executes that claim)."""
     from flink_kafka_spark.streaming.jobs import session_stats_stream
 
@@ -1416,7 +1416,7 @@ def test_reservoir_stream_exactly_equals_batch_sample(spark, tmp_path):
 
 
 def test_heavy_hitters_stream_restart_seeded_from_emitted_frame(spark, tmp_path):
-    """r10 verdict item 6: the MG monitor's emitted (item, est, n_seen)
+    """The MG monitor's emitted (item, est, n_seen)
     frame IS re-seedable state. A new monitor seeded from the last
     emitted frame must end bit-identical to one uninterrupted monitor
     that saw both streams — both hold a k-summary and fold batches in

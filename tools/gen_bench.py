@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Regenerate the README's end-of-round bench paragraph from the
-recorded JSON (r13 verdict item 6: one source of truth per round — the
-committed BENCH_DETAIL.json — no hand-typed per-query numbers).
+"""Regenerate the README's bench paragraph from the recorded JSON (one
+source of truth — the committed BENCH_DETAIL.json — no hand-typed
+per-query numbers).
 
 Usage:
     python tools/gen_bench.py            # rewrite the README block
@@ -9,7 +9,8 @@ Usage:
 
 The block lives between BENCH:BEGIN / BENCH:END markers; everything in
 it is derived from BENCH_DETAIL.json + BENCH_BASELINE.json at
-generation time. Run after the round's final `python bench.py`.
+generation time. Run after any `python bench.py` that rewrites
+BENCH_DETAIL.json.
 """
 
 from __future__ import annotations
@@ -32,9 +33,9 @@ def render() -> str:
     lines = [
         BEGIN,
         "",
-        f"**Latest recorded bench** ({len(q)} queries, sf{detail['sf']}): "
-        f"total {detail['value']:.1f} s, calibration "
-        f"{detail['calibration_sec']:.3f} s.",
+        f"**Latest recorded bench** ({len(q)} queries, sf{detail['sf']}, "
+        f"{detail['cpus']} cores): total {detail['value']:.1f} s, "
+        f"calibration {detail['calibration_sec']:.3f} s.",
     ]
     if vs:
         worst = vs.get("worst") or {}

@@ -1,7 +1,7 @@
-"""Wall-time datapoints for the four applyInPandasWithState paths
-(round-7 verdict #5): login_fail / order_timeout / tx_match /
-blacklist replayed under ``trigger(availableNow)`` at sf0.1 volume
-(100k events, matching events.parquet at that SF) into a noop sink.
+"""Wall-time datapoints for the four applyInPandasWithState paths:
+login_fail / order_timeout / tx_match / blacklist replayed under
+``trigger(availableNow)`` at sf0.1 volume (100k events, matching
+events.parquet at that SF) into a noop sink.
 
 These rows have NO bench-baseline entry by policy (the frozen-baseline
 guardrail skips new rows); they are recorded in README's bench section
@@ -395,7 +395,7 @@ def main() -> None:
             timings[name] = round(time.perf_counter() - t0, 2)
             state[name] = {"driver_manifest_rows": peak.get("manifest_rows", 0)}
 
-        # --- streaming media near-dup filter (r15 verdict item 8) ---
+        # --- streaming media near-dup filter ---
         # the media twin of incremental dedup: ~n/50 payloads (~180 B
         # each) replayed in 4 micro-batches against a 1000-payload
         # reference whose signature index is hashed ONCE before the

@@ -117,7 +117,7 @@ def main() -> None:
     timings[f"canonicalize_{n_docs}"] = round(time.perf_counter() - t0, 2)
     assert stats.n == n_docs // 10 and stats.wrong_winner == 0, tuple(stats)
 
-    # pointer-jumping adversarial probe (round-6 verdict #4): ONE chain
+    # pointer-jumping adversarial probe: ONE chain
     # of 100k nodes — diameter 10^5, the worst case for hash-to-min
     # label propagation, whose plain loop needs O(diameter) rounds and
     # would hit ANY practical round cap. Pointer jumping (L(v) <-
@@ -321,7 +321,7 @@ def main() -> None:
     timings[f"bm25_search_{n_docs}"] = round(time.perf_counter() - t0, 2)
     assert len(hits) == 10 and all(r.score > 0 for r in hits), hits
 
-    # fuzzy-linkage hot-block probe (round-7 verdict #6): plant a
+    # fuzzy-linkage hot-block probe: plant a
     # catalog where 20% of rows share one first token — the
     # block-quadratic shape the operator docstring warns about. The
     # hot block is H = n/5 rows -> ~H² = 100M raw candidates at the
@@ -851,7 +851,7 @@ def main() -> None:
         run_stream(blacklist_stream(clicks, threshold=100), os.path.join(tmp, "ck2"))
         timings[f"blacklist_stream_{n_stream}"] = round(time.perf_counter() - t0, 2)
 
-        # sequence_match_stream timer-arming probe (round-4 verdict #3):
+        # sequence_match_stream timer-arming probe:
         # n_seq keys each hold ONE live chain while ~40 filler-only
         # micro-batches advance the watermark. Timers armed at the
         # earliest actionable instant mean those batches fire NO keys
@@ -1146,51 +1146,50 @@ CURVE_QUERIES = (
     "fuzzy_part_matches",
     "training_mix_snapshot",
     "events_gapfill",
-    # r10 verdict item 4: the three biggest new walls — iterative
-    # (trainer argmax / fixed-point rounds) and threshold-prefiltered
-    # operators whose linearity was argued from plans, now measured
+    # the biggest walls among the iterative (trainer argmax /
+    # fixed-point rounds) and threshold-prefiltered operators whose
+    # linearity was argued from plans, now measured
     "bpe_tokenize_stats",
     "source_pagerank",
     "kmv_set_cardinality",
-    # r12 verdict item 6: the two r13 registrations — pair cost must
+    # the KMV pair algebra and the KLL rollup — pair cost must
     # stay sketch-sized (flat in corpus growth) and the KLL rollup is
     # two map-side-combined sketch shuffles (linear scan term only)
     "kmv_pair_intersections",
     "kll_quantile_rollup",
-    # r14 registrations: the t-closeness distance machinery (and its
+    # the t-closeness distance machinery (and its
     # embedded reuse inside the release funnel) must stay cell-framed —
     # everything past the one corpus shuffle is |classes|x|values|
     # rows, so walls should be flat in corpus growth
     "t_closeness_audit",
     "release_gate_snapshot",
-    # r15 registrations: the media perceptual-hash family — one
+    # the media perceptual-hash family — one
     # payload-hash pass + chunk-bucket pair join (and, incremental,
     # the cross-corpus bucket join against the half-corpus reference)
     # must scale with the corpus scan, never with candidate pairs
     "media_phash_dedup",
     "media_phash_incremental",
-    # r16 registrations: winnowing is a zero-shuffle per-row array
+    # winnowing is a zero-shuffle per-row array
     # pipeline (wall must track the scan, alpha ~1) and the overlap
     # detector's bucket fan-out is stop_df-bounded, so pair cost must
     # not go quadratic as replicas multiply within-bucket doc counts
     "doc_winnow_fingerprint",
     "winnow_overlap_pairs",
-    # r17 registration: decontamination fingerprints both sides and
+    # decontamination fingerprints both sides and
     # joins on the hash — the train side must track the scan and the
     # join stay eval-index-bounded (replica shards keep the eval
     # subset proportional, so matched pairs grow linearly, never
     # cross-shard)
     "winnow_decontaminate",
-    # r17 registrations, curved before their r18 first hash (r17
-    # verdict item 7 — the r16 quadratic was invisible until the
-    # curve ran): span localization's islands window partitions over
+    # curved before their first driver hash (the winnowing HOF
+    # quadratic was invisible until the curve ran): span
+    # localization's islands window partitions over
     # MATCHED positions only (contamination-sized, proportional under
     # replica shards) and the trim's token filter is a per-row HOF —
     # both must track the corpus scan
     "winnow_contaminated_spans",
     "winnow_decontaminate_trim",
-    # r18 registrations, curved before their r19 first hash (the same
-    # pre-hash discipline): fusion frames are candidate-bounded (wall
+    # curved before their first driver hash too: fusion frames are candidate-bounded (wall
     # should be scan-flat), the stride interleave is one rn shuffle +
     # the range-partition rank (log-factor at worst), and the
     # multi-benchmark detector must track the single detector's
@@ -1206,9 +1205,8 @@ ALPHA_MAX = 1.6
 
 
 def curve_main() -> None:
-    """Scaling-curve probe (r9 verdict item 6): run the curated
-    CURVE_QUERIES wall set (top walls + plan-argued operators) at
-    sf0.01, sf0.1 and a materialized
+    """Scaling-curve probe: run the curated CURVE_QUERIES wall set (top
+    walls + plan-argued operators) at sf0.01, sf0.1 and a materialized
     ~sf0.3 (3 disjoint replica shards of sf0.1), and assert the
     sf0.1 -> sf0.3 wall-time exponent stays ~linear — the ground-truth
     check for hidden quadratics that plan audits cannot see.
