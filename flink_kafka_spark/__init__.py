@@ -11,6 +11,9 @@ Architecture (see SURVEY.md §7):
 
 - ``session``    — tuned SparkSession factory (AQE, UTC, arrow).
 - ``tables``     — testdata/fixture loaders + temp-view registration.
+- ``zipcache``   — lazy zipimporter cache invalidation, installed on
+  import so every Python worker that unpickles an engine UDF skips
+  PySpark's per-task re-read of ``pyspark.zip``.
 - ``operators/`` — reusable ``DataFrame -> DataFrame`` building blocks,
   one module per capability family (windows, topn, joins, patterns,
   fraud, dedup, similarity, text, multimodal). Batch and streaming
@@ -28,3 +31,7 @@ Everything here is built only on the public Apache Spark / PySpark API.
 """
 
 __version__ = "0.1.0"
+
+from flink_kafka_spark import zipcache as _zipcache
+
+_zipcache.install()

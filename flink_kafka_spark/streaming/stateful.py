@@ -16,23 +16,41 @@ Semantics ported (and cited) from the reference:
 All outputs use the engine's tagged-union convention: one stream with
 a ``result_type`` column (side outputs = downstream filters).
 
-Scale notes: state is one small tuple per live key, dropped on match/
-timeout/success — bounded by construction. Each operator is a single
-shuffle on its key; batches arrive per-key as Arrow frames. Rows are
-processed in event-time order within each micro-batch (explicit sort)
-so out-of-order arrival inside a batch can't corrupt the state
-machine.
+Scale notes: login-fail and blacklist keep one small tuple per live
+key, dropped on success/timeout — bounded by construction, and each
+is a single shuffle on its key with per-key Arrow frames. Order
+timeout and tx reconciliation share ``_pair_match``, whose state is
+one row per shard (``N_SHARDS`` key-hash shards) holding the shard's
+pending keys: a batch costs O(pending keys in the touched shards)
+plus one Python call per touched or due shard, not one per key. The
+gain depends on a batch's keys being many against the pending keys it
+carries: every batch re-reads and rewrites each touched shard, about
+1 µs a pending key. With 200-order batches over 300k pending keys on
+4 cores that stays under Spark's fixed micro-batch cost. Millions of
+pending keys per shard are unmeasured; there per-key state may win.
+At most ``N_SHARDS`` tasks run the matcher, whatever the cluster
+size. The count is a constant, not read from the session, because a
+restarted query must hash keys to the shards its checkpoint holds.
+Checkpoints of those two written before the shard state cannot be
+resumed: their state key and schema changed. Rows are processed in
+event-time order within each micro-batch (explicit sort) so
+out-of-order arrival inside a batch can't corrupt the state machine.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from itertools import compress
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# shards of the key-hash-sharded operators (_pair_match, late_split_stream)
+N_SHARDS = 32
 
 
 def _epoch_s(pdf: pd.DataFrame, col: str = "ts") -> np.ndarray:
@@ -120,90 +138,158 @@ def login_fail_stream(events: DataFrame, max_gap_s: int = 2, max_fails: int = 2)
     )
 
 
+def _pair_match(
+    tagged: DataFrame,
+    key_col: str,
+    key_type: str,
+    cols: tuple[str, str],
+    waits: tuple[int, int],
+    lone: tuple[str, str],
+    matched: Callable[[int, int], str],
+) -> DataFrame:
+    """The two-sided matcher behind order_timeout_stream and
+    tx_match_stream: per key, the first-arriving side waits for its
+    partner under an event-time timer.
+
+    ``tagged`` holds ``key_col``, ``ts`` and ``_second`` (True for a
+    second-side row). Per key, rows apply in ``ts`` order (stable, so
+    ties keep arrival order): a row whose partner is pending emits
+    ``(key, first_ts, second_ts, matched(first_ts, second_ts))`` and
+    clears the key; otherwise it becomes the key's pending side,
+    replacing an earlier row of its own side. A lone side's timer is
+    its ts plus its side's wait; when it fires the key emits its
+    ``lone`` result with the other ts NULL. A key the batch touched
+    resolves at once if its timer is at or before the watermark; an
+    untouched key fires once its timer is before the watermark, which
+    is Spark's own rule for a per-key event-time timeout.
+
+    State is one row per shard (``pmod(xxhash64(key), N_SHARDS)``):
+    the pending keys, their ts and their side as one Arrow IPC blob,
+    with the shard's timeout at its earliest pending timer. Python runs
+    once per touched or due shard instead of once per key, so the
+    per-group serialization cost no longer scales with live keys. A
+    touched shard still carries all of its pending keys through Python
+    and back, but each costs a copy, not a step: only the batch's own
+    rows run a Python loop, the rest are timed with array operations,
+    and the blob crosses the JVM in one piece, where array columns
+    would be converted element by element.
+    """
+    out_cols = [key_col, *cols, "result_type"]
+    wait_ms = np.array(waits, dtype=np.int64) * 1000
+    key_arrow = {"long": pa.int64(), "string": pa.string()}[key_type]
+    shard_schema = pa.schema([("key", key_arrow), ("ts", pa.int64()), ("second", pa.bool_())])
+    # Arrow hands a long column holding NULLs over as float64, which
+    # rounds ids above 2^53: a NULL key travels as a flag instead
+    sharded = tagged.select(
+        F.coalesce(key_col, F.lit(0).cast(key_type)).alias(key_col),
+        F.col(key_col).isNull().alias("_null"),
+        "ts",
+        "_second",
+        F.pmod(F.xxhash64(key_col), F.lit(N_SHARDS)).alias("_shard"),
+    )
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            shard = pa.ipc.open_stream(state.get[0]).read_next_batch()
+            keys = shard.column(0).to_pylist()
+            ts = shard.column(1).to_numpy()
+            second = shard.column(2).to_numpy(zero_copy_only=False)
+        else:
+            keys, ts, second = [], np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
+        touched = np.zeros(len(keys), dtype=bool)
+        out = []
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        if frames:
+            pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+            pdf = pdf.iloc[np.argsort(pdf["ts"].to_numpy(), kind="stable")]
+            at = dict(zip(keys, range(len(keys))))
+            live = {}  # key the batch touched -> its pending (ts, second) or None
+            for k, null, t, s in zip(
+                pdf[key_col].tolist(),
+                pdf["_null"].tolist(),
+                _epoch_s(pdf).tolist(),
+                pdf["_second"].tolist(),
+            ):
+                if null:
+                    k = None
+                if k in live:
+                    cur = live[k]
+                elif k in at:
+                    cur = int(ts[at[k]]), bool(second[at[k]])
+                else:
+                    cur = None
+                if cur is not None and cur[1] != s:
+                    first_ts, second_ts = (cur[0], t) if s else (t, cur[0])
+                    out.append((k, first_ts, second_ts, matched(first_ts, second_ts)))
+                    live[k] = None
+                else:
+                    live[k] = t, s
+            keep = np.ones(len(keys), dtype=bool)
+            keep[[at[k] for k in live if k in at]] = False
+            added = [(k, v) for k, v in live.items() if v is not None]
+            keys = [*compress(keys, keep), *(k for k, _ in added)]
+            ts = np.concatenate([ts[keep], np.array([v[0] for _, v in added], dtype=np.int64)])
+            second = np.concatenate([second[keep], np.array([v[1] for _, v in added], dtype=bool)])
+            touched = np.arange(len(keys)) >= len(keys) - len(added)
+        timer = ts * 1000 + wait_ms[second.astype(np.intp)]
+        wm_ms = state.getCurrentWatermarkMs()
+        due = (timer < wm_ms) | ((timer == wm_ms) & touched)
+        for i in np.flatnonzero(due).tolist():
+            t, s = int(ts[i]), bool(second[i])
+            out.append((keys[i], None if s else t, t if s else None, lone[s]))
+        if not due.all():
+            wait = ~due
+            shard = pa.record_batch(
+                [pa.array(list(compress(keys, wait)), key_arrow), ts[wait], second[wait]],
+                schema=shard_schema,
+            )
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, shard_schema) as writer:
+                writer.write_batch(shard)
+            state.update((sink.getvalue().to_pybytes(),))
+            state.setTimeoutTimestamp(int(timer[wait].min()))
+        elif state.exists:
+            state.remove()
+        if out:
+            # object columns keep long keys above 2^53 exact next to a NULL
+            yield pd.DataFrame(out, columns=out_cols, dtype=object)
+
+    return sharded.groupBy("_shard").applyInPandasWithState(
+        fn,
+        f"{key_col} {key_type}, {cols[0]} long, {cols[1]} long, result_type string",
+        "shard binary",
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
+    )
+
+
 def order_timeout_stream(orders: DataFrame, timeout_s: int = 900) -> DataFrame:
     """T3/T4: per order_id, match create→pay within ``timeout_s``
     event-time seconds. Four outcomes (OrderTimeOutOnProcess.java:
     75-131): 'payed', 'payed but already timeout', 'payed but not
     found created log', 'order timeout' (via event-time timer at
-    create_ts + timeout).
+    create_ts + timeout; a lone pay waits as long). Either side may
+    arrive first (…java:75-97); any event_type other than 'create' is
+    a pay.
 
     Input: order_event schema with watermark. Output: (order_id,
     create_ts_s, pay_ts_s, result_type).
     """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (order_id,) = key
-        out = []
-        if state.hasTimedOut:
-            create_ts, pay_ts = state.get
-            # timer fired: one side still missing (…java:117-131)
-            if pay_ts is not None and create_ts is None:
-                out.append((order_id, None, pay_ts, "payed but not found created log"))
-            elif create_ts is not None:
-                out.append((order_id, create_ts, None, "order timeout"))
-            state.remove()
-        else:
-            create_ts, pay_ts = state.get if state.exists else (None, None)
-            # per-key frames are 1-2 events; the win is dropping the
-            # per-row Series construction of iterrows(), not the loop
-            for pdf in pdfs:
-                pdf = pdf.sort_values("ts")
-                for ts_s, etype in zip(
-                    map(int, _epoch_s(pdf)), pdf["event_type"].to_numpy()
-                ):
-                    if etype == "create":
-                        if pay_ts is not None:  # pay arrived first (…java:86-97)
-                            tag = (
-                                "payed"
-                                if pay_ts <= ts_s + timeout_s
-                                else "payed but already timeout"
-                            )
-                            out.append((order_id, ts_s, pay_ts, tag))
-                            create_ts = pay_ts = None
-                        else:
-                            create_ts = ts_s
-                    else:  # pay
-                        if create_ts is not None:  # (…java:75-85)
-                            tag = (
-                                "payed"
-                                if ts_s <= create_ts + timeout_s
-                                else "payed but already timeout"
-                            )
-                            out.append((order_id, create_ts, ts_s, tag))
-                            create_ts = pay_ts = None
-                        else:
-                            pay_ts = ts_s
-            if create_ts is None and pay_ts is None:
-                if state.exists:
-                    state.remove()
-            else:
-                base = create_ts if create_ts is not None else pay_ts
-                timer_ms = (base + timeout_s) * 1000
-                if timer_ms <= state.getCurrentWatermarkMs():
-                    # event arrived with its timer already expired
-                    # (late vs watermark): resolve immediately
-                    if pay_ts is not None and create_ts is None:
-                        out.append((order_id, None, pay_ts, "payed but not found created log"))
-                    else:
-                        out.append((order_id, create_ts, None, "order timeout"))
-                    if state.exists:
-                        state.remove()
-                else:
-                    state.update((create_ts, pay_ts))
-                    state.setTimeoutTimestamp(timer_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["order_id", "create_ts_s", "pay_ts_s", "result_type"]
-            )
-
-    return orders.groupBy("order_id").applyInPandasWithState(
-        fn,
-        "order_id long, create_ts_s long, pay_ts_s long, result_type string",
-        "create_ts long, pay_ts long",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    tagged = orders.select(
+        "order_id", "ts", (~F.col("event_type").eqNullSafe("create")).alias("_second")
+    )
+    return _pair_match(
+        tagged,
+        "order_id",
+        "long",
+        ("create_ts_s", "pay_ts_s"),
+        (timeout_s, timeout_s),
+        ("order timeout", "payed but not found created log"),
+        lambda create_ts, pay_ts: (
+            "payed" if pay_ts <= create_ts + timeout_s else "payed but already timeout"
+        ),
     )
 
 
@@ -226,70 +312,17 @@ def tx_match_stream(
     Output: (tx_id, pay_ts_s, receipt_ts_s, result_type).
     """
     pays = orders.filter((F.col("event_type") == "pay") & (F.col("tx_id") != "")).select(
-        "tx_id", F.lit("pay").alias("side"), "ts"
+        "tx_id", "ts", F.lit(False).alias("_second")
     )
-    rec = receipts.select("tx_id", F.lit("receipt").alias("side"), "ts")
-    both = pays.unionByName(rec)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (tx_id,) = key
-        out = []
-        if state.hasTimedOut:
-            pay_ts, receipt_ts = state.get
-            if pay_ts is not None:
-                out.append((tx_id, pay_ts, None, "unmatched_pay"))
-            if receipt_ts is not None:
-                out.append((tx_id, None, receipt_ts, "unmatched_receipt"))
-            state.remove()
-        else:
-            pay_ts, receipt_ts = state.get if state.exists else (None, None)
-            for pdf in pdfs:
-                pdf = pdf.sort_values("ts")
-                for ts_s, side in zip(
-                    map(int, _epoch_s(pdf)), pdf["side"].to_numpy()
-                ):
-                    if side == "pay":
-                        if receipt_ts is not None:
-                            out.append((tx_id, ts_s, receipt_ts, "matched"))
-                            pay_ts = receipt_ts = None
-                        else:
-                            pay_ts = ts_s
-                    else:
-                        if pay_ts is not None:
-                            out.append((tx_id, pay_ts, ts_s, "matched"))
-                            pay_ts = receipt_ts = None
-                        else:
-                            receipt_ts = ts_s
-            if pay_ts is None and receipt_ts is None:
-                if state.exists:
-                    state.remove()
-            else:
-                wait = pay_wait_s if pay_ts is not None else receipt_wait_s
-                base = pay_ts if pay_ts is not None else receipt_ts
-                timer_ms = (base + wait) * 1000
-                if timer_ms <= state.getCurrentWatermarkMs():
-                    if pay_ts is not None:
-                        out.append((tx_id, pay_ts, None, "unmatched_pay"))
-                    if receipt_ts is not None:
-                        out.append((tx_id, None, receipt_ts, "unmatched_receipt"))
-                    if state.exists:
-                        state.remove()
-                else:
-                    state.update((pay_ts, receipt_ts))
-                    state.setTimeoutTimestamp(timer_ms)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["tx_id", "pay_ts_s", "receipt_ts_s", "result_type"]
-            )
-
-    return both.groupBy("tx_id").applyInPandasWithState(
-        fn,
-        "tx_id string, pay_ts_s long, receipt_ts_s long, result_type string",
-        "pay_ts long, receipt_ts long",
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+    rec = receipts.select("tx_id", "ts", F.lit(True).alias("_second"))
+    return _pair_match(
+        pays.unionByName(rec),
+        "tx_id",
+        "string",
+        ("pay_ts_s", "receipt_ts_s"),
+        (pay_wait_s, receipt_wait_s),
+        ("unmatched_pay", "unmatched_receipt"),
+        lambda pay_ts, receipt_ts: "matched",
     )
 
 
@@ -379,7 +412,7 @@ def late_split_stream(
     key_col: str = "user_id",
     delay_s: int = 0,
     allowed_lateness_s: int = 60,
-    n_shards: int = 32,
+    n_shards: int = N_SHARDS,
 ) -> DataFrame:
     """W9: true late-data side output (HotPages.java:68,78-79,83 —
     ``allowedLateness(1m)`` + ``sideOutputLateData(lateTag)``). Every

@@ -4,6 +4,7 @@ test strategy (the reference itself has no tests — these encode its
 README golden semantics on small crafted fixtures)."""
 
 import os
+from collections import Counter
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -197,14 +198,20 @@ def test_login_fail_stream(spark, tmp_path):
 def test_order_timeout_stream(spark, tmp_path):
     t = 1_700_000_000
     # batch 1: order 1 create+pay (payed); order 2 create only (will time out);
-    #          order 4 pay only (never created)
+    #          order 4 pay only (never created); order 5 paid after its
+    #          timeout; order 6's pay precedes its create in event time
+    #          and is listed first
     _write_lines(
         str(tmp_path / "in" / "b1.csv"),
         [
+            f"6,pay,tx6,{t + 5}",
             f"1,create,,{t}",
             f"1,pay,tx1,{t + 100}",
             f"2,create,,{t}",
             f"4,pay,tx4,{t + 10}",
+            f"5,create,,{t}",
+            f"5,pay,tx5,{t + 1000}",
+            f"6,create,,{t + 30}",
         ],
         mtime=1_000_000,
     )
@@ -216,11 +223,15 @@ def test_order_timeout_stream(spark, tmp_path):
     stream = csv_replay_source(
         spark, str(tmp_path / "in"), ORDER_EVENT, max_files_per_trigger=1
     ).withWatermark("ts", "0 seconds")
-    _run_stream_until(spark, order_timeout_stream(stream, timeout_s=900), "orders_out", 3)
+    _run_stream_until(spark, order_timeout_stream(stream, timeout_s=900), "orders_out", 5)
     got = sorted(map(tuple, spark.sql("SELECT * FROM orders_out").collect()))
-    assert (1, t, t + 100, "payed") in got
-    assert (2, t, None, "order timeout") in got
-    assert (4, None, t + 10, "payed but not found created log") in got
+    assert got == [
+        (1, t, t + 100, "payed"),
+        (2, t, None, "order timeout"),
+        (4, None, t + 10, "payed but not found created log"),
+        (5, t, t + 1000, "payed but already timeout"),
+        (6, t + 30, t + 5, "payed"),
+    ]
 
 
 # --- two-stream reconciliation (J2) ---
@@ -264,6 +275,239 @@ def test_tx_match_stream(spark, tmp_path):
     assert ("txA", t, t + 1, "matched") in got
     assert ("txB", t + 2, None, "unmatched_pay") in got
     assert ("txC", None, t + 3, "unmatched_receipt") in got
+
+
+# --- the shared pair matcher against a per-key model ---
+
+
+def _pair_model(runs, sources, waits, lone, matched):
+    """Expected rows of order_timeout_stream / tx_match_stream: a pure
+    Python model of the per-key matcher under Spark's micro-batch
+    rules, with no shards.
+
+    ``runs`` are replays on one checkpoint, each a list of batches of
+    ``(source, key, second_side, ts_ms)`` rows; a run ends with the
+    no-data batch that fires due timers. Batch N has watermark W_N (ms)
+    from earlier batches: each source's max ts since the run started
+    (a source with none counts 0), the min over sources, never moving
+    back. The stateful operator drops rows at or before W_(N-1). Per
+    key, rows apply in ts order: a row meets a pending partner and
+    emits the pair, else it becomes the pending side of its key. Then
+    a pending side's timer (ts_s + its side's wait, in ms) resolves a
+    touched key if <= W_N and an untouched key if < W_N.
+
+    Returns the rows and counts of the cases the data exercised."""
+    state, want, cover = {}, [], Counter()
+    wm = prev_wm = 0
+    for run in runs:
+        seen = {}
+        for batch in [*run, []]:
+            per_key = {}
+            for _, key, second, ts_ms in sorted(batch, key=lambda r: r[3]):
+                if ts_ms <= prev_wm:
+                    cover["dropped late"] += 1
+                else:
+                    per_key.setdefault(key, []).append((second, ts_ms // 1000))
+            for key, rows in per_key.items():
+                first_ts, second_ts = state.pop(key, (None, None))
+                for second, ts in rows:
+                    if second and first_ts is not None:
+                        want.append((key, first_ts, ts, matched(first_ts, ts)))
+                        first_ts = None
+                    elif not second and second_ts is not None:
+                        cover["second side first"] += 1
+                        want.append((key, ts, second_ts, matched(ts, second_ts)))
+                        second_ts = None
+                    elif second:
+                        second_ts = ts
+                    else:
+                        first_ts = ts
+                if first_ts is not None or second_ts is not None:
+                    state[key] = (first_ts, second_ts)
+            for key, (first_ts, second_ts) in list(state.items()):
+                side = 0 if first_ts is not None else 1
+                timer = ((first_ts, second_ts)[side] + waits[side]) * 1000
+                if timer < wm or (timer == wm and key in per_key):
+                    cover["due on touch" if key in per_key else "timer fired"] += 1
+                    cover["touched at watermark"] += timer == wm
+                    want.append((key, first_ts, second_ts, lone[side]))
+                    del state[key]
+                else:
+                    cover["untouched at watermark kept"] += timer == wm
+            prev_wm = wm
+            for src, _, _, ts_ms in batch:
+                seen[src] = max(seen.get(src, ts_ms), ts_ms)
+            wm = max(wm, min(seen.get(s, 0) for s in sources))
+    cover["restarts"] = len(runs) - 1
+    return want, cover
+
+
+def _pair_batches(rng, t0, key_of, plants):
+    """Four seeded batches of (source, key, second_side, ts_ms) rows.
+    Batch b holds 40 rows over keys 0..59 in [t0 + 10b, t0 + 10b + 8) s,
+    a quarter of them (from batch 1 on) up to 20 s behind that window;
+    ``plants`` adds fixed rows per batch. Timestamps are distinct, so
+    the expected rows do not depend on shuffle arrival order."""
+    used = {ts for rows in plants.values() for *_, ts in rows}
+    batches = []
+    for b in range(4):
+        base, rows = t0 + 10 * b, list(plants.get(b, []))
+        for _ in range(40):
+            lo = base - 20 if b and rng.random() < 0.25 else base
+            ts = rng.randrange(lo * 1000, (base + 8) * 1000)
+            while ts in used:
+                ts += 1
+            used.add(ts)
+            rows.append((*key_of(rng.randrange(60), rng.random() < 0.5), ts))
+        rng.shuffle(rows)
+        batches.append(rows)
+    return batches
+
+
+def _shard_mate(spark, key, candidates):
+    """The first of ``candidates`` in ``key``'s pair-matcher shard."""
+    from flink_kafka_spark.streaming.stateful import N_SHARDS
+
+    def shard(k):
+        lit = F.lit(k).cast("long") if k is None or isinstance(k, int) else F.lit(k)
+        return F.pmod(F.xxhash64(lit), F.lit(N_SHARDS))
+
+    row = spark.range(1).select(shard(key), *map(shard, candidates)).first()
+    return next(c for c, s in zip(candidates, row[1:]) if s == row[0])
+
+
+def _replay_runs(spark, tmp_path, runs, build, line):
+    """Replays each run's batches (one file per source per micro-batch)
+    on one checkpoint, restarting between runs. processAllAvailable
+    returns after the no-data batch that fires the due timers."""
+    got, mtime = {}, 1_000_000
+    for r, run in enumerate(runs):
+        for b, rows in enumerate(run):
+            for src in {row[0] for row in rows}:
+                lines = [line(row) for row in rows if row[0] == src]
+                _write_lines(str(tmp_path / src / f"r{r}b{b}.csv"), lines, mtime=mtime)
+            mtime += 1000
+        q = (
+            build()
+            .writeStream.foreachBatch(
+                lambda df, epoch: got.__setitem__(epoch, [tuple(x) for x in df.collect()])
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(processingTime="100 milliseconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    return [row for rows in got.values() for row in rows]
+
+
+@pytest.mark.parametrize("detector", ["order_timeout", "tx_match"])
+def test_pair_matcher_matches_per_key_model(spark, tmp_path, detector):
+    """order_timeout_stream and tx_match_stream keep one state row per
+    key-hash shard; their rows must equal the per-key model's exactly
+    over four out-of-order micro-batches (late pays, rows dropped
+    behind the watermark, timers equal to the watermark, both sides
+    arriving first, ids above 2^53 beside a NULL key) with a restart
+    from the checkpoint after batch 2."""
+    import random
+
+    t0, rng = 1_700_000_000, random.Random(f"pair-{detector}")
+
+    def src(name, schema):
+        return csv_replay_source(
+            spark, str(tmp_path / name), schema, sec_ts=False, max_files_per_trigger=1
+        ).withWatermark("ts", "0 seconds")
+
+    # batch 0 ends exactly at t0 + 8 s on every source, so W_1 is there:
+    # key 1000's timer equals it untouched, key 1002's when touched
+    if detector == "order_timeout":
+        timeout_s = 5
+        sources, waits = ("orders",), (timeout_s, timeout_s)
+        lone = ("order timeout", "payed but not found created log")
+
+        def matched(create_ts, pay_ts):
+            return "payed" if pay_ts <= create_ts + timeout_s else "payed but already timeout"
+
+        def key_of(i, second):
+            return "orders", i, second
+
+        plants = {
+            0: [("orders", 1000, False, (t0 + 3) * 1000), ("orders", 1001, False, (t0 + 8) * 1000)],
+            1: [("orders", 1002, False, (t0 + 3) * 1000)],
+            2: [("orders", None, False, (t0 + 20) * 1000 + 7), ("orders", None, True, (t0 + 21) * 1000)],
+        }
+        # odd ids above 2^53 (no float64 holds them) in the NULL key's
+        # shard and batch: a key column that went through float64 would
+        # split this pair and print wrong ids
+        big = _shard_mate(spark, None, [2**53 + 1 + 2 * i for i in range(400)])
+        lone_big = _shard_mate(spark, None, [big + 2 + 2 * i for i in range(400)])
+        plants[2] += [
+            ("orders", big, False, (t0 + 20) * 1000 + 9),
+            ("orders", big, True, (t0 + 21) * 1000 + 11),
+            ("orders", lone_big, False, (t0 + 20) * 1000 + 13),
+        ]
+
+        def build():  # order_id -1 stands for a NULL key, which CSV cannot carry
+            orders = src("orders", ORDER_EVENT).withColumn("order_id", F.expr("nullif(order_id, -1)"))
+            return order_timeout_stream(orders, timeout_s=timeout_s)
+
+        def line(row):
+            _, key, second, ts = row
+            return f"{-1 if key is None else key},{'pay' if second else 'create'},tx,{ts}"
+    else:
+        sources, waits = ("pays", "receipts"), (5, 3)
+        lone = ("unmatched_pay", "unmatched_receipt")
+
+        def matched(pay_ts, receipt_ts):
+            return "matched"
+
+        def key_of(i, second):
+            return ("receipts" if second else "pays"), f"tx{i}", second
+
+        plants = {
+            0: [
+                ("pays", "tx1000", False, (t0 + 3) * 1000),
+                ("pays", "tx1001", False, (t0 + 8) * 1000),
+                ("receipts", "tx1003", True, (t0 + 8) * 1000),
+            ],
+            1: [("receipts", "tx1002", True, (t0 + 5) * 1000)],
+        }
+
+        def build():
+            return tx_match_stream(src("pays", ORDER_EVENT), src("receipts", RECEIPT_EVENT))
+
+        def line(row):
+            src_name, key, _, ts = row
+            return f"1,pay,{key},{ts}" if src_name == "pays" else f"{key},wechat,{ts}"
+
+    # batch 1 ends exactly at t0 + 18 s on every source, where key 1004
+    # (first side at t0 + 13 s) waits through the no-data batch and the
+    # restart; batch 2 touches another key of its shard and batch 3
+    # brings its partner, so a shard that fired it early would split
+    # the pair
+    waiting = key_of(1004, False)
+    mate = _shard_mate(spark, waiting[1], [key_of(i, False)[1] for i in range(2000, 2200)])
+    plants[1] += [(*waiting, (t0 + 13) * 1000)] + [
+        (*key_of(1005 + side, side), (t0 + 18) * 1000) for side in (False, True)
+    ]
+    plants[2] = plants.get(2, []) + [(waiting[0], mate, False, (t0 + 22) * 1000 + 1)]
+    plants[3] = [(*key_of(1004, True), (t0 + 32) * 1000 + 3)]
+    batches = _pair_batches(rng, t0, key_of, plants)
+    runs = [batches[:2], batches[2:]]
+    want, cover = _pair_model(runs, sources, waits, lone, matched)
+    assert (waiting[1], t0 + 13, t0 + 32, matched(t0 + 13, t0 + 32)) in want
+    for case in ("dropped late", "second side first", "due on touch", "timer fired",
+                 "touched at watermark", "untouched at watermark kept", "restarts"):
+        assert cover[case] > 0, (case, cover)
+    if detector == "order_timeout":
+        assert any(r[3] == "payed but already timeout" for r in want)
+        assert any(r[0] is None for r in want)
+        assert (big, t0 + 20, t0 + 21, "payed") in want
+        assert (lone_big, t0 + 20, None, "order timeout") in want
+    got = _replay_runs(spark, tmp_path, runs, build, line)
+    assert Counter(got) == Counter(want)
 
 
 # --- streaming exact dedup with watermark-bounded state ---

@@ -1,7 +1,8 @@
 """Wall-time datapoints for the four applyInPandasWithState paths:
 login_fail / order_timeout / tx_match / blacklist replayed under
 ``trigger(availableNow)`` at sf0.1 volume (100k events, matching
-events.parquet at that SF) into a noop sink.
+events.parquet at that SF) into a noop sink. order_timeout also runs
+in a steady state: 20 small micro-batches over ~3n/8 pending orders.
 
 These rows have NO bench-baseline entry by policy (the frozen-baseline
 guardrail skips new rows); they are recorded in README's bench section
@@ -164,6 +165,41 @@ def main() -> None:
             order_timeout_stream(stream, timeout_s=900), os.path.join(tmp, "ck_order"), listener
         )
         timings["order_timeout_stream"] = round(time.perf_counter() - t0, 2)
+
+        # steady state: n/2 orders within one 900 s timeout, three
+        # quarters never paid (~3n/8 pending at once), then 20
+        # micro-batches of 200 orders (one file per trigger) on the same
+        # checkpoint. Only those 20 are timed: each carries the whole
+        # pending set while touching few of its keys.
+        steady_src = os.path.join(tmp, "steady")
+        os.makedirs(steady_src)
+        rate = n / 2 / 900  # creates per event-second
+
+        def steady_file(name: str, ids: range, mtime: int) -> None:
+            path = os.path.join(steady_src, name)
+            with open(path, "w") as f:
+                for i in ids:
+                    ts = BASE_TS + int(i / rate)
+                    f.write(f"{i},create,,{ts}\n")
+                    if i % 4 == 1:  # a quarter pay 30 s later
+                        f.write(f"{i},pay,tx{i},{ts + 30}\n")
+            os.utime(path, (mtime, mtime))
+
+        steady_file("backlog.csv", range(n // 2), 1)
+        stream = csv_replay_source(
+            spark, steady_src, ORDER_EVENT, max_files_per_trigger=1
+        ).withWatermark("ts", "1 second")
+        steady = order_timeout_stream(stream, timeout_s=900)
+        run_stream(steady, os.path.join(tmp, "ck_steady"), listener)
+        for b in range(20):
+            lo = n // 2 + 200 * b
+            steady_file(f"b{b:02d}.csv", range(lo, lo + 200), 2 + b)
+        listener.terminated.clear()  # the restart keeps the query id
+        t0 = time.perf_counter()
+        state["order_timeout_steady_stream"] = run_stream(
+            steady, os.path.join(tmp, "ck_steady"), listener
+        )
+        timings["order_timeout_steady_stream"] = round(time.perf_counter() - t0, 2)
 
         # tx reconciliation: half the txs get a receipt 5s later
         txo_src = os.path.join(tmp, "txo")
