@@ -1,5 +1,5 @@
-"""Batch I/O helpers: partitioned and bucketed parquet, symmetric
-read/write.
+"""Batch I/O helpers: driver-side rows as local frames, partitioned
+and bucketed parquet, symmetric read/write.
 
 At 100 TB the dominant costs are scan bytes and shuffle bytes. These
 helpers encode the two storage-side levers:
@@ -20,8 +20,64 @@ parallelism, too many makes small files.
 
 from __future__ import annotations
 
+import datetime
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: "StructType | str"
+) -> DataFrame:
+    """A DataFrame of driver-side Python ``rows`` (tuples in ``schema``
+    column order; ``schema`` a StructType or DDL string) — the one way
+    the engine turns driver values into a frame.
+
+    The rows become a ``pyarrow.Table`` typed column by column from the
+    Spark schema, so no pandas dtype inference runs (a ``long`` above
+    2^53 next to a NULL stays exact instead of rounding through
+    float64, and an empty frame keeps its types). A ``timestamp``
+    value is moved to UTC first: a naive one is local time, as the
+    list path and ``collect()`` read it, and pyarrow would read its
+    wall clock as UTC (and drop an aware one's fixed offset), so
+    collected timestamps fed back keep their instant whatever the
+    host's zone. Below
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark plans
+    the table as a ``LocalRelation``: an action over it runs in the
+    driver, with no Spark job. ``createDataFrame`` over a plain Python
+    list instead parallelizes the rows into ``defaultParallelism``
+    pickled slices, and every action over them pays a wide stage of
+    Python-worker round-trips — 1–2 jobs and ~0.4 s for a 16-row frame
+    on 4 cores, against ~25 ms here. Above the threshold Spark
+    parallelizes the Arrow batches itself, so large inputs stay
+    scale-safe."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                [_utc(x) for x in c] if getattr(f.type, "tz", None) else c,
+                type=f.type,
+            )
+            for c, f in zip(cols, arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _utc(x):
+    # a naive datetime is local time, like TimestampType.toInternal's
+    # time.mktime
+    return None if x is None else x.astimezone(datetime.timezone.utc)
 
 
 def write_partitioned(

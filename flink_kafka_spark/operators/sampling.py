@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
+
 _KNUTH = 2654435761  # 2^32 * golden ratio conjugate
 
 
@@ -260,18 +262,7 @@ def export_shards(
     for pid, n in sizes:
         offsets.append((pid, acc))
         acc += n
-    # pandas/Arrow construction => a true LocalTableScan; the plain
-    # list path parallelizes into defaultParallelism pickled slices,
-    # so the broadcast build paid a wide stage of Python-worker
-    # round-trips to read a handful of offset rows (r19)
-    import pandas as pd
-
-    off_df = df.sparkSession.createDataFrame(
-        pd.DataFrame(offsets, columns=["_pid", "_offset"]).astype(
-            {"_pid": "int32", "_offset": "int64"}
-        ),
-        "_pid int, _offset long",
-    )
+    off_df = local_frame(df.sparkSession, offsets, "_pid int, _offset long")
     w = Window.partitionBy("_pid").orderBy(F.col(order_col).asc())
     return (
         parts.withColumn("_rn", F.row_number().over(w))

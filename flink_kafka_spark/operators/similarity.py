@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..io import local_frame
+
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
 _NORM = "sqrt(aggregate(transform({v}, x -> x * x), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))"
 
@@ -153,17 +155,8 @@ def build_ivf_index(
     The (n_cells, seed) parameters are baked into the stored cells;
     ``nprobe`` stays a query-time knob."""
     assigned, centroids = ivf_cells(corpus, id_col, vec_col, n_cells, seed)
-    # pandas/Arrow construction => LocalTableScan (the list path
-    # parallelizes into pickled slices whose every read is a wide
-    # stage of Python-worker round-trips, r19); nested double arrays
-    # cross Arrow cleanly
-    import pandas as pd
-
-    cent = corpus.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {"cell": range(len(centroids)), "centroid": [list(c) for c in centroids]}
-        ).astype({"cell": "int32"}),
-        "cell int, centroid array<double>",
+    cent = local_frame(
+        corpus.sparkSession, enumerate(centroids), "cell int, centroid array<double>"
     )
     return assigned.select("cell", id_col, "v"), cent
 

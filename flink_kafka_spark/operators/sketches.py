@@ -43,15 +43,45 @@ def _compress(counts: pd.Series, k: int) -> pd.Series:
     return kept[kept > 0]
 
 
+def mg_partials(df: DataFrame, col: str, k: int) -> DataFrame:
+    """Each partition's Misra-Gries k-summary of ``df[col]`` (cast to
+    string, NULLs dropped) as <= k ``(item, partial)`` rows, plus one
+    ``(NULL, n)`` row holding the partition's non-null row count (the
+    sketch never holds a NULL item, so the two cannot collide) — the
+    narrow first half of :func:`misra_gries`. The per-partition
+    histogram is a C-speed ``value_counts``, compressed once. Summing
+    the partials by item and applying :func:`_compress` is the whole
+    combine: the PODS'12 merge of k-summaries, equal to
+    :func:`misra_gries`' distributed re-compression."""
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: pd.Series | None = None
+        for pdf in batches:
+            c = pdf[col].value_counts()
+            acc = c if acc is None else acc.add(c, fill_value=0)
+        if acc is not None and len(acc):
+            acc = acc.astype("int64")
+            part = _compress(acc, k)
+            yield pd.DataFrame(
+                {
+                    "item": [*part.index.astype(str), None],
+                    "partial": [*part.values, int(acc.sum())],
+                }
+            )
+
+    return df.select(F.col(col).cast("string").alias(col)).mapInPandas(
+        partials, schema="item string, partial long"
+    )
+
+
 def misra_gries(df: DataFrame, col: str, k: int = 16) -> DataFrame:
     """Approximate heavy hitters of ``df[col]``: one row per surviving
     item with its (under-)estimated count, ``est <= true <= est +
     n/(k+1)``.
 
-    Plan: a narrow ``mapInPandas`` turns each partition into <= k
-    (item, partial) rows — the per-partition histogram is a C-speed
-    ``value_counts``, compressed once — then ONE shuffle over those
-    tiny partials sums and re-compresses globally. Total shuffled
+    Plan: :func:`mg_partials`' narrow ``mapInPandas`` turns each
+    partition into <= k (item, partial) rows, then ONE shuffle over
+    those tiny partials sums and re-compresses globally. Total shuffled
     bytes are O(k x partitions), never O(distinct items); no state
     larger than k rows ever sits on one task. Estimates (and which
     borderline items survive) depend on how rows were partitioned, so
@@ -64,21 +94,9 @@ def misra_gries(df: DataFrame, col: str, k: int = 16) -> DataFrame:
     over non-null rows only, or the n/(k+1) budget inflates and a
     NULL-heavy column can manufacture spurious coverage misses
     (heavy_hitters_stream already counts n post-filter)."""
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.Series | None = None
-        for pdf in batches:
-            c = pdf[col].value_counts()
-            acc = c if acc is None else acc.add(c, fill_value=0)
-        if acc is not None and len(acc):
-            part = _compress(acc.astype("int64"), k)
-            yield pd.DataFrame({"item": part.index.astype(str), "partial": part.values})
-
     from ..caching import track
 
-    parts = df.select(F.col(col).cast("string").alias(col)).mapInPandas(
-        partials, schema="item string, partial long"
-    )
+    parts = mg_partials(df, col, k).filter(F.col("item").isNotNull())
     # persist the <= k x P summed partials: two consumers (the top-k
     # ranking and the (k+1)-th-threshold subquery) would otherwise each
     # re-run the corpus-wide partials pass

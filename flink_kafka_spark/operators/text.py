@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
+
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation.
 # (space spelled literally in the class — avoids backslash-escape
 # divergence between Spark SQL and DuckDB string literals)
@@ -1851,27 +1853,7 @@ def bpe_learn_merges(
     except BaseException:
         unpersist_rdds(sc, prev_ids | cur_ids)
         raise
-    # Build the merge table through the pandas/Arrow path: it becomes
-    # a true LocalTableScan. createDataFrame over a plain Python list
-    # parallelizes it into defaultParallelism pickled slices instead —
-    # every consumer action then pays a 32-task stage whose tasks each
-    # round-trip a Python worker to unpickle a handful of rows
-    # (measured r19: 1.3 s per action for 8 rows; a coalesce(1) over
-    # it serializes those worker round-trips and is 6x worse again;
-    # the LocalTableScan is ~20x faster than either and never touches
-    # an executor).
-    import pandas as pd
-
-    merge_table = spark.createDataFrame(
-        pd.DataFrame(merges, columns=["round", "left", "right", "freq"]).astype(
-            {"round": "int64", "freq": "int64"}
-            if merges
-            # dtyped empty frame: all-object empty pandas falls off the
-            # Arrow path back to the parallelized-RDD plan
-            else {"round": "int64", "left": "str", "right": "str", "freq": "int64"}
-        ),
-        "round long, left string, right string, freq long",
-    )
+    merge_table = local_frame(spark, merges, "round long, left string, right string, freq long")
     if return_vocab_state:
         # the final round's checkpoint is LAZY and still unmaterialized
         # here — recomputing it later needs the PREVIOUS round's blocks

@@ -14,6 +14,7 @@ from ..operators.similarity import (
     cosine_topk_pq,
     semantic_dedup,
 )
+from ..io import local_frame
 from ..tables import load
 from . import Query
 
@@ -402,7 +403,6 @@ def mmr_rerank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference greedy collects the per-query candidate frames
     (Q x C and Q x C² bounded rows), never the corpus."""
     import numpy as np
-    import pandas as pd
 
     from ..caching import track
     from ..operators.similarity import _DOT, _NORM, _as_double, mmr_rerank
@@ -508,8 +508,8 @@ def mmr_rerank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             expected.append(
                 (qid, ids[best], step + 1, math.floor(sc * 1e6 + 0.5) / 1e6)
             )
-    exp_df = spark.createDataFrame(
-        pd.DataFrame(expected, columns=["query_id", "neighbor_id", "mmr_rank", "score"])
+    exp_df = local_frame(
+        spark, expected, "query_id long, neighbor_id long, mmr_rank long, score double"
     )
     # SYMMETRIC mismatch count: a row absent on EITHER side is a miss.
     # The old |union| - |expected| accounting was one-sided — an

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..caching import release_scope
+from ..io import local_frame
 from ..operators.topn import topn_counts_per_window
 from ..operators.windows import windowed_count, windowed_distinct
 
@@ -97,9 +98,7 @@ def _foreach_batch(stream, sink, emit, fold=None, snapshot=None, seed=None, empt
             out = emit(batch_df)
             if out is None:
                 schema = StructType.fromDDL(empty)
-                out = batch_df.sparkSession.createDataFrame(
-                    [(None,) * len(schema.fields)], schema
-                )
+                out = local_frame(batch_df.sparkSession, [(None,) * len(schema)], schema)
             sink(out, epoch_id)
             if snapshot is not None:
                 snapshot(epoch_id)
@@ -620,8 +619,8 @@ def drift_monitor_stream(
             reference, key_col, value_col, n_buckets
         )
         spark = reference.sparkSession
-        bounds = spark.createDataFrame(lazy_bounds.collect(), lazy_bounds.schema)
-        ref_counts = spark.createDataFrame(lazy_counts.collect(), lazy_counts.schema)
+        bounds = local_frame(spark, lazy_bounds.collect(), lazy_bounds.schema)
+        ref_counts = local_frame(spark, lazy_counts.collect(), lazy_counts.schema)
 
     def emit(batch_df: DataFrame) -> DataFrame:
         batch_counts = (
@@ -665,19 +664,21 @@ def heavy_hitters_stream(
     seed: "tuple[dict[str, int], int] | Snapshot | None" = None,
 ):
     """Continuous Misra-Gries heavy hitters over a stream: each
-    micro-batch is sketched DISTRIBUTED (operators.sketches.misra_gries
-    — per-partition C-speed partials, one ≤ k×P-row combine), then
-    merged into the running k-summary, which is held driver-side
-    because the PODS'12 mergeable-summaries theorem makes that both
-    sound and tiny: merging k-summaries (add counters, re-compress to
-    k) preserves the global ``est ≤ true ≤ est + n/(k+1)`` bound
-    REGARDLESS of the merge tree, and the running state is ≤ k
-    counters — bytes, not data. ``sink(df, epoch_id)`` receives the
-    current sketch as ``(item, est, n_seen)`` after every batch.
+    micro-batch is sketched in ONE distributed pass
+    (operators.sketches.mg_partials — per-partition C-speed k-summaries
+    plus each partition's row count, collected as ≤ (k+1)×P rows and
+    combined on the driver), then merged into the running k-summary,
+    which is held driver-side because the PODS'12 mergeable-summaries
+    theorem makes that both sound and tiny: merging k-summaries (add
+    counters, re-compress to k) preserves the global
+    ``est ≤ true ≤ est + n/(k+1)`` bound REGARDLESS of the merge tree,
+    and the running state is ≤ k counters — bytes, not data.
+    ``sink(df, epoch_id)`` receives the current sketch as
+    ``(item, est, n_seen)`` after every batch.
 
     This is the streaming answer the reference's per-window exact
-    Top-N (HotItems) cannot give at 100 TB/day key cardinalities: the
-    shuffled state per batch is capped at k rows per partition no
+    Top-N (HotItems) cannot give at 100 TB/day key cardinalities: what
+    a batch sends to the driver is capped at k+1 rows per partition no
     matter how many distinct keys the stream carries.
 
     Replay and restart follow :func:`_foreach_batch`. The emitted
@@ -690,7 +691,7 @@ def heavy_hitters_stream(
     while accuracy vs TRUE counts keeps the usual n/(k+1) bound."""
     import pandas as pd
 
-    from ..operators.sketches import _compress, misra_gries
+    from ..operators.sketches import _compress, mg_partials
 
     counts, n = _payload(seed) or ({}, 0)
     # drop the empty-state placeholder entry (item=None) a no-data
@@ -700,25 +701,29 @@ def heavy_hitters_stream(
     state = {"counts": pd.Series(seeded, dtype="int64"), "n": n}
 
     def fold(batch_df: DataFrame) -> None:
-        # one source scan per batch: the sketch and the batch total
-        # are two actions over the same persisted projection, and n
-        # counts only non-null keys — the sketch can never emit a
-        # null item, so a null-heavy batch must not inflate the
-        # n/(k+1) error budget
-        sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
-        try:
-            batch_rows = misra_gries(sel, col, k).collect()
-            state["n"] += sel.count()
-        finally:
-            sel.unpersist()
-        if batch_rows:
-            batch_sketch = pd.Series({r.item: r.est for r in batch_rows}, dtype="int64")
+        # one Spark job per batch: the per-partition k-summaries and
+        # row counts are collected together and merged here — summing
+        # partials and re-compressing to k is exactly misra_gries'
+        # distributed combine. n counts only non-null keys: the
+        # sketch can never emit a null item, so a null-heavy batch
+        # must not inflate the n/(k+1) error budget
+        sums: dict[str, int] = {}
+        batch_n = 0
+        for item, partial in mg_partials(batch_df, col, k).collect():
+            if item is None:
+                batch_n += partial
+            else:
+                sums[item] = sums.get(item, 0) + partial
+        state["n"] += batch_n
+        if sums:
+            batch_sketch = _compress(pd.Series(sums, dtype="int64"), k)
             merged = state["counts"].add(batch_sketch, fill_value=0)
             state["counts"] = _compress(merged.astype("int64"), k)
 
     def emit(batch_df: DataFrame) -> DataFrame:
         n_seen = int(state["n"])
-        return batch_df.sparkSession.createDataFrame(
+        return local_frame(
+            batch_df.sparkSession,
             [(str(item), int(est), n_seen) for item, est in state["counts"].items()]
             or [(None, None, n_seen)],
             "item string, est long, n_seen long",
@@ -778,18 +783,18 @@ def cms_stream(
         ]
 
     def fold(batch_df: DataFrame) -> None:
-        sel = batch_df.select(col).filter(F.col(col).isNotNull()).persist()
-        try:
-            cells = count_min_sketch(sel, col, width, depth).collect()
-            state["n"] += sel.count()
-        finally:
-            sel.unpersist()
+        sel = batch_df.filter(F.col(col).isNotNull())
+        cells = count_min_sketch(sel, col, width, depth).collect()
         for r in cells:
             key = (r["r"], r["b"])
             counters[key] = counters.get(key, 0) + int(r["c"])
+        # every non-null item adds exactly 1 to one counter of each
+        # hash row, so hash row 0's counters sum to the batch total
+        state["n"] += sum(int(r["c"]) for r in cells if r["r"] == 0)
 
     def emit(batch_df: DataFrame) -> DataFrame:
-        return batch_df.sparkSession.createDataFrame(
+        return local_frame(
+            batch_df.sparkSession,
             [(w, min(counters.get(rb, 0) for rb in _buckets(w)), state["n"]) for w in watch]
             or [(None, None, state["n"])],
             "item string, est_c long, n_seen long",
@@ -892,7 +897,7 @@ def reservoir_stream(
             for stratum, kept in state.items()
             for rank, (wkey, vid) in enumerate(kept, 1)
         ]
-        return batch_df.sparkSession.createDataFrame(rows, schema) if rows else None
+        return local_frame(batch_df.sparkSession, rows, schema) if rows else None
 
     return _foreach_batch(events_stream, sink, emit, fold, seed=seed, empty=schema)
 
@@ -951,7 +956,7 @@ def kmv_stream(
         for s, hs in state.items():
             est = len(hs) if len(hs) < k else (k - 1) * CMS_SPACE // hs[-1]
             rows += [(s, h, rn, est) for rn, h in enumerate(hs, 1)]
-        return batch_df.sparkSession.createDataFrame(rows, schema) if rows else None
+        return local_frame(batch_df.sparkSession, rows, schema) if rows else None
 
     return _foreach_batch(events_stream, sink, emit, fold, seed=seed, empty=schema)
 
@@ -1017,7 +1022,7 @@ def kll_stream(
         if cells:
             rows = [(r["s"], bytes(r["sk"])) for r in cells] + list(state.items())
             merged = (
-                batch_df.sparkSession.createDataFrame(rows, "s string, sk binary")
+                local_frame(batch_df.sparkSession, rows, "s string, sk binary")
                 .groupBy("s")
                 .agg(F.kll_merge_agg_double("sk").alias("msk"))
                 .collect()
@@ -1030,7 +1035,8 @@ def kll_stream(
             return None
         # NULL set keys are a real group (Spark groupBy keeps them); a
         # plain sort would raise on None vs str
-        frame = batch_df.sparkSession.createDataFrame(
+        frame = local_frame(
+            batch_df.sparkSession,
             sorted(state.items(), key=lambda kv: (kv[0] is None, kv[0])),
             "s string, msk binary",
         )
@@ -1216,7 +1222,7 @@ def dq_monitor_stream(
             ]
             schema = f"{group_col} {group_type}, " + schema
             lead = [group_col]
-        frame = batch_df.sparkSession.createDataFrame(rows, schema)
+        frame = local_frame(batch_df.sparkSession, rows, schema)
         metric = F.when(
             F.col("kind") == "ratio",
             F.when(F.col("b") > 0, F.round(F.col("a") / F.col("b"), 6)),
@@ -1297,7 +1303,8 @@ def centroid_drift_stream(
     def emit(batch_df: DataFrame) -> "DataFrame | None":
         if not state:
             return None
-        per = batch_df.sparkSession.createDataFrame(
+        per = local_frame(
+            batch_df.sparkSession,
             [
                 (g, p, s, c)
                 for (g, p), (s, c) in sorted(
@@ -1377,7 +1384,8 @@ def t_closeness_stream(
     def emit(batch_df: DataFrame) -> "DataFrame | None":
         if not state:
             return None
-        cells = batch_df.sparkSession.createDataFrame(
+        cells = local_frame(
+            batch_df.sparkSession,
             sorted(
                 ((*k, n) for k, n in state.items()),
                 key=lambda row: tuple((x is None, x) for x in row),

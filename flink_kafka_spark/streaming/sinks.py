@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..io import local_frame
+
 
 def console_sink(df: DataFrame, mode: str = "update", truncate: bool = False) -> DataStreamWriter:
     """K1: .print() → console sink (mode 'complete'/'update' stands in
@@ -126,7 +128,7 @@ def changelog_sink(
             if have_snap:
                 prev = spark.read.parquet(snap_dir)
             else:
-                prev = spark.createDataFrame([], batch.schema)
+                prev = local_frame(spark, [], batch.schema)
             p = prev.select(
                 *key_cols, *[F.col(v).alias(f"_prev_{v}") for v in value_cols]
             )

@@ -159,3 +159,32 @@ def test_no_round_named_files():
     repo = pathlib.Path(__file__).resolve().parent.parent
     offenders = sorted(p.name for p in repo.glob("*_r[0-9]*"))
     assert not offenders, f"round-named files at the repo root: {offenders}"
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    """The engine turns driver-side rows into a DataFrame only through
+    ``io.local_frame``, a LocalRelation whose actions run no Spark job.
+    ``createDataFrame`` over a Python list parallelizes the rows into
+    pickled slices, and every action over them pays a wide stage of
+    Python-worker round trips; this scan keeps that path out."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "flink_kafka_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if path == pkg / "io.py" and isinstance(fn, ast.FunctionDef)
+            and fn.name == "local_frame"
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{path.relative_to(pkg.parent)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame" and id(n) not in allowed
+        ]
+    assert not offenders, f"createDataFrame outside io.local_frame: {offenders}"

@@ -301,3 +301,58 @@ class TestSpreadScan:
     def test_row_multiset_preserved(self, spark, sf_dir):
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         assert _rows(spread_scan(docs)) == _rows(docs)
+
+
+def test_local_frame_equals_the_list_path_and_runs_no_job(spark):
+    """``io.local_frame`` holds the same rows as ``createDataFrame``
+    over a Python list, typed from the schema alone: a long above 2^53
+    next to a NULL stays exact (pandas dtype inference would round it
+    through float64), and binary, array<double>, timestamp and date
+    columns keep their values and instants. A naive datetime (what
+    ``collect()`` returns) is local time on both paths, and an aware
+    one keeps its offset, checked under a non-UTC process zone. The frame is a LocalRelation, so collecting
+    it runs no Spark job."""
+    import datetime as dt
+    import os
+    import time
+
+    from flink_kafka_spark.io import local_frame
+
+    utc, plus2 = dt.timezone.utc, dt.timezone(dt.timedelta(hours=2))
+    schema = "id long, s string, sk binary, v array<double>, ts timestamp, d date"
+    ts = [
+        dt.datetime(2020, 1, 2, 3, 4, 5, 6, tzinfo=utc),
+        dt.datetime(1969, 12, 31, 23, 59, 59, tzinfo=utc),
+    ]
+    rows = [
+        (2**53 + 1, "a", b"\x00\xff", [1.0, -2.5], ts[0], dt.date(2020, 1, 2)),
+        (None, None, None, None, None, None),
+        (-(2**62) - 1, "é", b"", [], ts[1], dt.date(1900, 1, 1)),
+        (6, "+02:00", None, None, dt.datetime(2021, 7, 1, 4, tzinfo=plus2), None),
+        (7, "naive", None, [0.5], dt.datetime(2021, 6, 30, 22, 15, 1, 250), None),
+    ]
+    sc = spark.sparkContext
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "EST5EDT,M3.2.0,M11.1.0"
+    time.tzset()
+    try:
+        for data in ([], rows):
+            want = spark.createDataFrame(data, schema)
+            group = f"local_frame_{len(data)}"
+            sc.setJobGroup(group, "local_frame")
+            try:
+                got = local_frame(spark, data, schema)
+                got_rows = got.collect()
+            finally:
+                sc._jsc.clearJobGroup()
+            assert got_rows == want.collect()
+            assert got.schema == want.schema
+            assert got._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert got_rows[-1].ts == rows[-1][4]  # the naive row round-trips
+    finally:
+        if tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()

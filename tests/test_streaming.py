@@ -1714,6 +1714,62 @@ def test_heavy_hitters_stream_restart_seeded_from_emitted_frame(spark, tmp_path)
     assert seeded_final[0].n_seen == control_final[0].n_seen == len(rows_a) + len(rows_b)
 
 
+def test_heavy_hitters_fold_equals_misra_gries_on_the_same_partitions(spark, tmp_path):
+    """The monitor's fold is ONE collected pass of per-partition
+    k-summaries plus row counts, combined on the driver. Over the same
+    partitions (one per file, in the stream and in a batch read) its
+    batch sketch must equal the distributed ``misra_gries`` exactly,
+    with ties at the (k+1)-th count, which drop to 0 and vanish on both
+    paths, and n must be the non-null count."""
+    import collections
+    import json
+    import random
+
+    from flink_kafka_spark.operators.sketches import mg_partials, misra_gries
+    from flink_kafka_spark.streaming.jobs import heavy_hitters_stream
+
+    k = 4
+    heavy = [  # per file; each also gets a singleton tail and NULL keys
+        {"a": 9, "b": 6, "c": 5, "d": 5},
+        {"e": 7, "f": 5, "g": 5, "h": 5},
+        {"a": 5, "b": 4, "c": 3, "d": 3},
+        {"a": 3, "b": 2, "e": 2, "f": 2},
+    ]
+    rng = random.Random(11)
+    d = tmp_path / "in"
+    d.mkdir()
+    for fi, counts in enumerate(heavy):
+        keys = [x for x, c in counts.items() for _ in range(c)]
+        keys += [f"t{fi}_{i}" for i in range(5)] + [None] * 3
+        rng.shuffle(keys)
+        (d / f"f{fi}.json").write_text("\n".join(json.dumps({"key": x}) for x in keys) + "\n")
+
+    batch = spark.read.schema("key string").json(str(d))
+    assert batch.rdd.getNumPartitions() == 4
+    summed = collections.Counter()
+    for item, partial in mg_partials(batch, "key", k).collect():
+        summed[item] += partial
+    n = summed.pop(None)
+    ranked = sorted(summed.values(), reverse=True)
+    assert ranked[k - 1] == ranked[k]  # a tie at the (k+1)-th count
+    want = {r.item: r.est for r in misra_gries(batch, "key", k).collect()}
+
+    seen: dict[int, list] = {}
+    q = (
+        heavy_hitters_stream(
+            spark.readStream.schema("key string").json(str(d)),
+            lambda df, e: seen.__setitem__(e, df.collect()), col="key", k=k,
+        )
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+    assert list(seen) == [0]
+    assert {r.item: r.est for r in seen[0]} == want and want
+    assert seen[0][0].n_seen == n == batch.filter("key IS NOT NULL").count()
+
+
 def test_reservoir_stream_restart_seeded_from_manifest_is_exact(spark, tmp_path):
     """ADVICE r10: the reservoir restart contract is now executable —
     the emitted manifest carries wkey, so seeding a new monitor from
@@ -2137,6 +2193,22 @@ def _monitor_writer(spark, tmp_path, case, sink, seed, hook):
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
     )
+
+
+@pytest.mark.parametrize("monitor,jobs", [("heavy_hitters", 1), ("cms", 2)])
+def test_sketch_monitor_epoch_job_count(spark, tmp_path, monitor, jobs):
+    """One epoch of a sketch monitor runs only its fold's sketch: one
+    job for heavy hitters' collected partials pass, two for Count-Min's
+    ``count_min_sketch`` (its shuffle's map stage and its result under
+    AQE). No persist, no separate count, and the emitted frame is a
+    LocalRelation, so even a sink that collects it adds no job.
+    StreamExecution runs a query's batches under its run id as the job
+    group."""
+    case = _MONITORS[monitor]
+    q = _monitor_writer(spark, tmp_path, case, lambda df, e: df.collect(), None, None).start()
+    q.awaitTermination(120)
+    assert [p.batchId for p in q.recentProgress] == [0]
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))) == jobs
 
 
 @pytest.mark.parametrize("monitor", list(_MONITORS))
