@@ -18,8 +18,9 @@ Contract:
   sweeps hold at most one query's working set;
 - batch harnesses additionally call :func:`release_all` after
   materializing each result, so nothing lingers between timed queries:
-  bench.py and the profile and stress tools through
-  ``observe.run``, tools/rehearsal.py directly.
+  bench.py, the profile tool, and every row and ``--curve`` query of
+  the stress tool through ``observe.run``; tools/rehearsal.py
+  directly.
 
 RDD-level persists (``localCheckpoint`` in the connected-components
 loop) need the same lifecycle but are invisible to DataFrame

@@ -1,30 +1,125 @@
 #!/usr/bin/env python3
-"""Scale probe: run headline operator shapes on synthetic data 10-100x
-larger than sf0.1 (generated distributed via spark.range — no files),
-printing one JSON line of timings. Evidence that the operator shapes
-scale, complementing bench.py's fixed-SF measurements.
+"""Scale probes: one table of rows, each run through ``observe.run``.
 
-Usage: python tools/stress.py [n_events] [n_docs]
+A row is a generator function registered with :func:`row`. Its body
+up to the one ``yield`` builds the row's synthetic input (generated
+distributed via ``spark.range`` or replay files, sized by ``scale``;
+untimed). It yields the timed build and action, a callable run as a
+``Query`` by :func:`observe.run`: a returned DataFrame is written to
+the ``noop`` sink as the run's action; any other value is the result
+of an action the callable ran itself (the run's action then writes an
+empty frame) and is sent back into the generator. The body after
+the ``yield`` checks the probe's invariants (exact-count reference
+jobs run there, outside the window) and may return extra JSON fields.
+Every row gets a job group, the release of tracked persists and the
+catalog cache after it, and its ``leaked_rdds`` count; a leak fails the
+run as a broken invariant does. Rows share no frames: the release
+after a row destroys checkpoint-backed frames it made (caching.py).
+
+At scale 1 the event probes run 10M events (100x the sf0.1 events
+table), the document probes 50k docs (10x sf0.1) and the stream
+replays 100k rows (sf0.1 volume).
+
+Usage:
+  python tools/stress.py [scale]          one JSON line per row, then a summary line
+  python tools/stress.py --curve [replicas]
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
+import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
-from flink_kafka_spark.operators.dedup import (  # noqa: E402
-    connected_components,
-    minhash_lsh_pairs,
+from flink_kafka_spark import observe  # noqa: E402
+from flink_kafka_spark.operators import (  # noqa: E402
+    dedup,
+    graph,
+    joins,
+    layout,
+    multimodal,
+    sampling,
+    similarity,
+    sketches,
+    text,
+    timeseries,
+    topn,
+    windows,
 )
-from flink_kafka_spark.operators.topn import topn_counts_per_window  # noqa: E402
-from flink_kafka_spark.operators.windows import windowed_count, windowed_distinct  # noqa: E402
+from flink_kafka_spark.queries import Query  # noqa: E402
+from flink_kafka_spark.queries.analytics import value_drift_psi as psi_query  # noqa: E402
+from flink_kafka_spark.schemas import AD_CLICK, LOGIN_EVENT, ORDER_EVENT, RECEIPT_EVENT  # noqa: E402
 from flink_kafka_spark.session import get_spark  # noqa: E402
+from flink_kafka_spark.streaming import jobs, stateful  # noqa: E402
+from flink_kafka_spark.streaming.sources import csv_replay_source  # noqa: E402
+
+EVENTS, DOCS, STREAM = 10_000_000, 50_000, 100_000
+BASE_TS = 1_700_000_000
+
+ROWS: dict = {}
+
+
+def row(fn, name: str | None = None):
+    """Register a probe generator ``fn(spark, scale, tmp)`` under its
+    function name (or ``name``); ``tmp`` is the row's own directory."""
+    name = name or fn.__name__
+    if name in ROWS:
+        raise ValueError(f"duplicate row {name}")
+    ROWS[name] = fn
+    return fn
+
+
+def size(scale: float, base: int, floor: int = 0, step: int = 10) -> int:
+    """``base * scale`` rounded down to a multiple of ``step`` (the planted
+    structures come in whole groups of ``step``), at least ``floor``
+    and one group."""
+    return max(floor, step, int(base * scale) // step * step)
+
+
+def measure(spark, query, sf_dir: str) -> dict:
+    """``observe.run``, failing on persistent RDDs left after the run."""
+    rec = observe.run(spark, query, sf_dir)
+    assert rec["leaked_rdds"] == 0, (query.name, rec["leaked_rdds"])
+    return rec
+
+
+def run_row(spark, name: str, scale: float) -> dict:
+    """Build row ``name``'s input, time its build and action through
+    :func:`measure`, check it, and return its JSON record."""
+    with tempfile.TemporaryDirectory() as tmp:
+        probe = ROWS[name](spark, scale, tmp)
+        try:
+            timed = next(probe)
+            result = []
+
+            def build(spark, sf_dir):
+                result.append(timed())
+                return result[0] if isinstance(result[0], DataFrame) else spark.range(0)
+
+            rec = measure(spark, Query(name, build), tmp)
+            try:
+                probe.send(result[0])
+                raise RuntimeError(f"row {name} yields more than once")
+            except StopIteration as done:
+                extra = done.value or {}
+        finally:
+            probe.close()  # restores what the row pinned, also on failure
+    out = {"row": name, "scale": scale, "leaked_rdds": rec["leaked_rdds"]}
+    out.update((k, round(rec[k], 2)) for k in ("wall_s", "build_s", "action_s"))
+    return {**out, **extra}
+
+
+# --- input generators -------------------------------------------------------
 
 
 def synth_events(spark, n: int):
@@ -33,7 +128,7 @@ def synth_events(spark, n: int):
     return spark.range(n).select(
         F.col("id").alias("event_id"),
         F.timestamp_seconds(
-            F.lit(1_700_000_000) + F.pmod(F.xxhash64("id"), F.lit(604_800))
+            F.lit(BASE_TS) + F.pmod(F.xxhash64("id"), F.lit(604_800))
         ).alias("ts"),
         F.pmod(F.xxhash64("id", F.lit(1)), F.lit(10_000)).alias("user_id"),
         F.element_at(
@@ -45,7 +140,8 @@ def synth_events(spark, n: int):
 
 def synth_docs(spark, n: int):
     """Synthetic documents: ~40-token bodies from a deterministic
-    vocabulary, with every 10th doc a near-duplicate of its neighbor."""
+    vocabulary, with every 10th doc a near-duplicate of its neighbor
+    (doc 10k+9 is a verbatim copy of doc 10k+1)."""
     words = F.expr(
         "transform(sequence(0, 39), i -> concat('w', pmod(xxhash64(id - pmod(id, 10) "
         "+ CASE WHEN pmod(id, 10) = 9 THEN 1 ELSE pmod(id, 10) END, i), 500)))"
@@ -55,299 +151,47 @@ def synth_docs(spark, n: int):
     )
 
 
-def main() -> None:
-    n_events = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
-    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
-    spark = get_spark(app_name="stress")
-    timings = {}
-
-    ev = synth_events(spark, n_events)
-    t0 = time.perf_counter()
-    counts = windowed_count(ev, "ts", "1 hour", "15 minutes", keys=["user_id"])
-    topn_counts_per_window(counts, "user_id", 5).write.format("noop").mode("overwrite").save()
-    timings[f"hot_items_topn_{n_events}"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    windowed_distinct(ev, "ts", "1 day", "user_id", approximate=True).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    timings[f"uv_approx_{n_events}"] = round(time.perf_counter() - t0, 2)
-
-    docs = synth_docs(spark, n_docs)
-    t0 = time.perf_counter()
-    pairs = minhash_lsh_pairs(docs, threshold=0.5)
-    n_pairs = pairs.count()
-    timings[f"minhash_lsh_{n_docs}"] = round(time.perf_counter() - t0, 2)
-
-    # connected components on a graph with known structure: chains of
-    # length 10 (every doc i linked to i+1 except at decade borders)
-    # -> exactly n/10 components, diameter 9 forces multiple rounds
-    t0 = time.perf_counter()
+def chain_graph(spark, n: int):
+    """Chains of length 10 (every doc i linked to i+1 except at decade
+    borders): exactly n/10 components of diameter 9."""
     edges = (
-        spark.range(n_docs)
+        spark.range(n)
         .filter("pmod(id, 10) < 9")
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     )
-    nodes = spark.range(n_docs).select(F.col("id").alias("doc_id"))
-    cc = connected_components(edges, nodes, id_col="doc_id")
-    n_components = cc.select("cluster_id").distinct().count()
-    timings[f"connected_components_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_components == n_docs // 10, n_components
+    return edges, spark.range(n).select(F.col("id").alias("doc_id"))
 
-    # canonicalize (keep-best) on planted clusters: same chain graph ->
-    # n/10 clusters of 10; the quality column plants ONE known winner
-    # per cluster (the member whose within-cluster offset equals
-    # cluster_index mod 10), so the probe asserts EXACT keep-set
-    # recovery — winner identity, not just row counts — while timing
-    # the composed labels->broadcast-join->rank pipeline at scale.
-    from flink_kafka_spark.operators.dedup import canonicalize_clusters
 
-    t0 = time.perf_counter()
-    winner = F.pmod(F.col("doc_id"), F.lit(10)) == F.pmod(
-        F.floor(F.col("doc_id") / 10), F.lit(10)
-    )
-    planted = F.when(winner, F.lit(1.0)).otherwise(F.lit(0.1))
-    keep = canonicalize_clusters(nodes, edges, id_col="doc_id", quality=planted).filter(
-        "keep = 1"
-    )
-    stats = keep.agg(
-        F.count("*").alias("n"),
-        F.sum((~winner).cast("int")).alias("wrong_winner"),
-    ).collect()[0]
-    timings[f"canonicalize_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert stats.n == n_docs // 10 and stats.wrong_winner == 0, tuple(stats)
+MEGA = ["mega_a", "mega_b", "mega_c"]
 
-    # pointer-jumping adversarial probe: ONE chain
-    # of 100k nodes — diameter 10^5, the worst case for hash-to-min
-    # label propagation, whose plain loop needs O(diameter) rounds and
-    # would hit ANY practical round cap. Pointer jumping (L(v) <-
-    # L(L(v)) from round 3 on) doubles label reach per round, so the
-    # loop must converge in ~log2(10^5) ~ 17 jumping rounds; max_iter
-    # 25 makes the assertion mechanical — without the shortcut join
-    # this raises the non-convergence RuntimeError instead of passing
-    # slowly. The diameter-9 chains above barely enter the jumping
-    # rounds; this is the shape the O(log d) claim exists for.
-    n_chain = 100_000
-    t0 = time.perf_counter()
-    chain_edges = spark.range(n_chain - 1).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    chain_nodes = spark.range(n_chain).select(F.col("id").alias("doc_id"))
-    cc_chain = connected_components(
-        chain_edges, chain_nodes, id_col="doc_id", max_iter=25
-    )
-    n_comp = cc_chain.select("cluster_id").distinct().count()
-    timings[f"cc_single_chain_{n_chain}"] = round(time.perf_counter() - t0, 2)
-    assert n_comp == 1, n_comp
 
-    # span-level substring dedup at the full doc count: every 10th doc
-    # is a near-verbatim copy of its neighbor, so ~2 docs per decade
-    # share most 10-token spans — n_dup_spans must be nonzero for at
-    # least the planted fraction, and the explode volume (~31 spans/doc)
-    # is the probe's real subject: the plan must stay (hash, id, count)
-    # shuffles with no corpus-text movement.
-    from flink_kafka_spark.operators.dedup import span_dup_stats
-
-    t0 = time.perf_counter()
-    span_stats = span_dup_stats(docs, n=10)
-    n_dup_docs = span_stats.filter("n_dup_spans > 0").count()
-    timings[f"span_dup_stats_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_dup_docs >= n_docs // 10, n_dup_docs  # every planted pair flagged
-
-    # span trim at the full doc count: doc 10k+9 is a verbatim copy of
-    # doc 10k+1, so the non-owner copy must trim to NOTHING (all its
-    # spans are owned by the lower id) while the owner keeps every
-    # token — exact excision ground truth at 100k docs.
-    from flink_kafka_spark.operators.dedup import trim_duplicated_spans
-
-    t0 = time.perf_counter()
-    trimmed = trim_duplicated_spans(docs, n=10)
-    n_emptied = trimmed.filter(
-        "pmod(doc_id, 10) = 9 AND n_removed_tokens = n_tokens"
-    ).count()
-    timings[f"span_trim_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_emptied == n_docs // 10, n_emptied
-
-    # incremental dedup: the synthetic construction makes doc 10k+9 a
-    # verbatim copy of doc 10k+1, so splitting "the copies" (pmod 9)
-    # off as tonight's batch against everything else as the reference
-    # puts every planted pair ACROSS the split: all n/10 batch docs
-    # must come back non-novel (identical docs collide in every band —
-    # recall 1 at jaccard 1.0).
-    from flink_kafka_spark.operators.dedup import incremental_dedup
-
-    t0 = time.perf_counter()
-    inc = incremental_dedup(
-        docs.filter("pmod(doc_id, 10) = 9"),
-        docs.filter("pmod(doc_id, 10) != 9"),
-        threshold=0.5,
-    )
-    n_flagged = inc.filter("is_novel = 0").count()
-    timings[f"incremental_dedup_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_flagged == n_docs // 10, n_flagged
-
-    # containment at the full doc count: doc 10k+9 is a VERBATIM copy
-    # of doc 10k+1, so every planted pair must surface with containment
-    # exactly 1.0 — same bucket-pairing shape as the Jaccard probe, so
-    # the timing difference isolates the score change.
-    from flink_kafka_spark.operators.dedup import containment_pairs
-
-    t0 = time.perf_counter()
-    cont = containment_pairs(docs, threshold=0.6)
-    n_full = cont.filter(
-        "pmod(id_a, 10) = 1 AND id_b = id_a + 8 AND containment = 1.0"
-    ).count()
-    timings[f"containment_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_full == n_docs // 10, n_full
-
-    # quality-threshold sweep at the full doc count: 11 grid rows, the
-    # t=0 row must account for every doc, and pass counts must be
-    # monotone non-increasing in t (the suffix-sum correctness at a
-    # scale where a bucket-boundary bug would actually show).
-    from flink_kafka_spark.operators.text import quality_threshold_sweep
-
-    t0 = time.perf_counter()
-    sweep = sorted(
-        quality_threshold_sweep(docs, steps=10).collect(), key=lambda r: r.threshold
-    )
-    timings[f"threshold_sweep_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert len(sweep) == 11 and sweep[0].n_docs_pass == n_docs
-    assert all(
-        a.n_docs_pass >= b.n_docs_pass and a.n_tokens_pass >= b.n_tokens_pass
-        for a, b in zip(sweep, sweep[1:])
+def mega_tokens(spark, n: int):
+    """~1M distinct tail keys plus 3 planted mega-keys (30% of tokens)."""
+    return spark.range(n).select(
+        F.when(F.pmod(F.xxhash64("id"), F.lit(10)) < 3,
+               F.element_at(F.array(*[F.lit(m) for m in MEGA]),
+                            (F.pmod(F.xxhash64("id", F.lit(2)), F.lit(3)) + 1).cast("int")))
+        .otherwise(F.concat(F.lit("tail_"),
+                            F.pmod(F.xxhash64("id", F.lit(3)), F.lit(1_000_000)).cast("string")))
+        .alias("tok")
     )
 
-    # SemDeDup at 100k embeddings with planted ground truth: 10k groups
-    # of 10, each group a deterministic ±1/√64 base direction with
-    # member j flipping component j — cos(member j>0, member 0) =
-    # 62/64 ≥ τ=0.9 (and cross-member 60/64 also prunes, which is
-    # fine: members only ever prune members) while cross-group cos
-    # needs 61-of-64 sign agreement between independent ±1 directions
-    # (P ≈ 2.4e-15/pair — unreachable at ~20M within-cell pairs; the
-    # earlier dim-32 construction admitted genuine 31/32 collisions at
-    # P ≈ 7.7e-9, which DID fire at this scale, and whether the
-    # colliding pair shared a cell made the probe k-means-flaky). So
-    # the min-id survivor rule must NEVER prune a group head, and must
-    # prune ~90% of the corpus — up to k-means cell straddle (a group
-    # split across cells can't see all its prunes; measured straddle
-    # loss ≈ a few %, bound leaves margin).
-    from flink_kafka_spark.operators.similarity import semantic_dedup
 
-    n_vecs = 100_000
-    t0 = time.perf_counter()
-    emb = spark.range(n_vecs).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), c -> "
-            " CAST(pmod(xxhash64(floor(id / 10), c), 2) * 2 - 1 AS DOUBLE)"
-            " * (CASE WHEN pmod(id, 10) > 0 AND c = pmod(id, 10) THEN -1.0 ELSE 1.0 END))"
-        ).alias("embedding"),
-    )
-    sd = semantic_dedup(emb, n_cells=256, threshold=0.9)
-    sd_stats = sd.agg(
-        F.count("*").alias("n"),
-        F.sum(((F.col("keep") == 0) & (F.pmod("vec_id", F.lit(10)) == 0)).cast("int")).alias(
-            "pruned_heads"
-        ),
-        F.sum((F.col("keep") == 0).cast("int")).alias("pruned"),
-    ).collect()[0]
-    timings[f"semantic_dedup_{n_vecs}"] = round(time.perf_counter() - t0, 2)
-    assert sd_stats.n == n_vecs and sd_stats.pruned_heads == 0, tuple(sd_stats)
-    assert sd_stats.pruned >= 0.75 * (n_vecs * 9 // 10), sd_stats.pruned
+def exact_mega(toks) -> dict:
+    return {
+        r["tok"]: r["c"]
+        for r in toks.filter(F.col("tok").isin(MEGA)).groupBy("tok").agg(
+            F.count(F.lit(1)).alias("c")).collect()
+    }
 
-    # unigram-LM scoring at the full doc count: the synthetic vocab is
-    # 500 near-uniformly-used words, so every doc's average negative
-    # log-prob must sit near ln(500) ~ 6.21 — a ground-truth band, not
-    # just a row count. The probe's real subject is the two-shuffle
-    # shape: one token groupBy for the LM, one per-doc rollup, LM
-    # broadcast between them.
-    from flink_kafka_spark.operators.text import unigram_logprob
 
-    t0 = time.perf_counter()
-    lp = unigram_logprob(docs)
-    lp_stats = lp.agg(
-        F.count("*").alias("n"), F.avg("avg_neg_logprob").alias("m")
-    ).collect()[0]
-    timings[f"doc_logprob_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert lp_stats.n == n_docs and 5.5 < lp_stats.m < 7.0, tuple(lp_stats)
-
-    # cross-source overlap matrix with 20 planted sources over ONE
-    # shared vocabulary: all 190 unordered pairs must appear with
-    # nonzero jaccard. Times the per-shingle collect_set + pair-explode
-    # shape (~38 shingles/doc exploding off a 100k-doc scan) — the
-    # plan's per-shingle state is bounded by the source count.
-    from flink_kafka_spark.operators.dedup import source_overlap_matrix
-
-    t0 = time.perf_counter()
-    sourced = docs.withColumn(
-        "source", F.concat(F.lit("src"), F.pmod(F.col("doc_id"), F.lit(20)))
-    )
-    ov = source_overlap_matrix(sourced).collect()
-    timings[f"source_overlap_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    # full 190-pair saturation is a DENSITY property of the default
-    # corpus size; a smaller CLI n_docs legitimately yields fewer
-    # overlapping pairs (observed: 13 at n_docs=2000)
-    assert all(r.jaccard > 0 for r in ov), "zero-jaccard pair emitted"
-    assert len(ov) == 190 if n_docs >= 50_000 else len(ov) <= 190, len(ov)
-
-    # leakage-safe split on the known chain graph: every decade chain
-    # is one cluster, so all 10 members must co-assign — zero pairs may
-    # straddle a split boundary (the anti-leakage guarantee at 100k
-    # nodes), and the three splits must all be non-empty.
-    from flink_kafka_spark.operators.sampling import grouped_split
-
-    t0 = time.perf_counter()
-    sp = grouped_split(cc, "cluster_id")
-    ed_a = sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sa"))
-    ed_b = sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("sb"))
-    crossed = edges.join(ed_a, "id_a").join(ed_b, "id_b").filter("sa <> sb").count()
-    n_splits = sp.select("split").distinct().count()
-    timings[f"leakage_safe_split_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert crossed == 0 and n_splits == 3, (crossed, n_splits)
-
-    # retrieval ops at 10x the sf0.1 corpus: the inverted index is the
-    # explode-heavy shape (vocab 500, ~40 tokens/doc -> ~2M postings),
-    # BM25 is two narrow passes + a broadcast stats row. Both must stay
-    # explode/scan-bound, no driver collects.
-    from flink_kafka_spark.operators.text import bm25_search, inverted_index
-
-    t0 = time.perf_counter()
-    n_postings = inverted_index(docs, min_df=2).count()
-    timings[f"inverted_index_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert n_postings > n_docs, n_postings  # every doc posts >=1 shared term
-
-    t0 = time.perf_counter()
-    hits = bm25_search(docs, ["w1", "w2", "w3"], k=10).collect()
-    timings[f"bm25_search_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    assert len(hits) == 10 and all(r.score > 0 for r in hits), hits
-
-    # fuzzy-linkage hot-block probe: plant a
-    # catalog where 20% of rows share one first token — the
-    # block-quadratic shape the operator docstring warns about. The
-    # hot block is H = n/5 rows -> ~H² = 100M raw candidates at the
-    # default 50k. Two cost regimes, probed separately:
-    # - OUT-OF-BAND candidate mass (join output discarded by the
-    #   length-band filter): max_block folds the band into the join
-    #   key, removing it losslessly — this catalog plants lengths in
-    #   steps of 4 (> max_dist), so nearly all of the 100M candidate
-    #   pairs are out-of-band and the cap's saving is the observable
-    #   (measured ~2x wall at 50k; the ratio grows with H since
-    #   uncapped mass is H² vs capped H²/buckets).
-    # - IN-BAND verify mass (pairs the band admits): irreducible under
-    #   ANY lossless refinement — the selectivity of the blocking key
-    #   is the only lever (which is why fuzzy_part_matches uses a
-    #   composite key AND arms max_block).
-    # The probe asserts the capped pair set is IDENTICAL (the lossless
-    # claim of test_fuzzy_match_pairs_hot_block_cap_is_lossless, at
-    # scale) and the wall saving is real.
-    from flink_kafka_spark.operators.joins import fuzzy_match_pairs
-
-    n_fuzzy = 50_000
-    catalog = spark.range(n_fuzzy).select(
+def hot_block_catalog(spark, n: int):
+    """A persisted catalog where 20% of rows share one first token, with
+    the hot rows' lengths stepping by 4 over ~40 band buckets."""
+    catalog = spark.range(n).select(
         F.col("id"),
         F.when(
             F.pmod("id", F.lit(5)) == 0,
-            # hot first token; lengths step by 4 over ~40 band buckets
             F.concat(
                 F.lit("hot "),
                 F.repeat(
@@ -367,129 +211,420 @@ def main() -> None:
         .alias("name"),
     ).persist()
     catalog.count()
-    t0 = time.perf_counter()
-    n_uncapped = fuzzy_match_pairs(catalog, "id", "name").count()
-    t_uncapped = round(time.perf_counter() - t0, 2)
-    timings[f"fuzzy_hot_block_uncapped_{n_fuzzy}"] = t_uncapped
-    t0 = time.perf_counter()
-    n_capped = fuzzy_match_pairs(catalog, "id", "name", max_block=1000).count()
-    t_capped = round(time.perf_counter() - t0, 2)
-    timings[f"fuzzy_hot_block_capped_{n_fuzzy}"] = t_capped
-    assert n_capped == n_uncapped, (n_capped, n_uncapped)
-    # the timing claim is reported, not hard-asserted: wall ratios on
-    # this box flap with ambient load (bench-baseline policy), and a
-    # spurious trip here would kill the whole sweep after its
-    # expensive earlier probes; the lossless invariant above is the
-    # correctness gate
-    print(
-        f"fuzzy hot-block cap ratio: {t_uncapped}s uncapped / {t_capped}s capped",
-        file=sys.stderr,
-    )
-    catalog.unpersist()
+    return catalog
 
-    # AQE skew-join probe: README's "residual join skew by AQE
-    # skew-join" claim, demonstrated rather than asserted. A planted
-    # 30%-hot key forces one reduce partition to dwarf the rest in a
-    # fact-fact SMJ (broadcast disabled, skew thresholds scaled to the
-    # probe size); the FINAL adaptive plan must carry the skew=true
-    # split marker. The tiny post-join filter keeps the collect
-    # driver-safe while executing through the SAME QueryExecution —
-    # a noop write would finalize a different one and never show the
-    # adaptive plan.
-    skew_saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        )
+
+def lm_docs(spark, n: int):
+    """Fluent docs walk a fixed 500-token cycle; every 10th doc takes a
+    perfect-shuffle permutation of the SAME 40 offsets (evens take
+    0..19, odds take 20..39): identical token bag, every transition a
+    ±20-ish jump the fluent corpus never makes."""
+    fluent = F.expr("transform(sequence(0, 39), i -> concat('w', pmod(id + i, 500)))")
+    scrambled = F.expr(
+        "transform(sequence(0, 39), i -> concat('w', pmod(id + "
+        "CASE WHEN pmod(i, 2) = 0 THEN CAST(floor(i / 2) AS INT) "
+        "ELSE 20 + CAST(floor((i - 1) / 2) AS INT) END, 500)))"
+    )
+    return spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", F.when(F.pmod("id", F.lit(10)) == 9, scrambled).otherwise(fluent)
+        ).alias("text"),
+    )
+
+
+def write_lines(df, path: str) -> str:
+    """Write a one-column ``value`` frame as 4 text files to replay."""
+    df.repartition(4).write.mode("overwrite").text(path)
+    return path
+
+
+def csv_lines(*cols):
+    return F.concat_ws(",", *[c.cast("string") for c in cols]).alias("value")
+
+
+# --- batch rows -------------------------------------------------------------
+
+
+@row
+def hot_items_topn(spark, s, tmp):
+    ev = synth_events(spark, size(s, EVENTS))
+    yield lambda: topn.topn_counts_per_window(
+        windows.windowed_count(ev, "ts", "1 hour", "15 minutes", keys=["user_id"]),
+        "user_id", 5,
+    )
+
+
+@row
+def uv_approx(spark, s, tmp):
+    ev = synth_events(spark, size(s, EVENTS))
+    yield lambda: windows.windowed_distinct(ev, "ts", "1 day", "user_id", approximate=True)
+
+
+@row
+def minhash_lsh(spark, s, tmp):
+    docs = synth_docs(spark, size(s, DOCS))
+    n_pairs = yield lambda: dedup.minhash_lsh_pairs(docs, threshold=0.5).count()
+    return {"near_dup_pairs": n_pairs}
+
+
+@row
+def connected_components(spark, s, tmp):
+    # diameter 9 forces multiple rounds
+    n = size(s, DOCS)
+    edges, nodes = chain_graph(spark, n)
+    n_components = yield lambda: dedup.connected_components(
+        edges, nodes, id_col="doc_id"
+    ).select("cluster_id").distinct().count()
+    assert n_components == n // 10, n_components
+
+
+@row
+def canonicalize(spark, s, tmp):
+    # keep-best on planted clusters: the chain graph's n/10 clusters of
+    # 10, and the quality column plants ONE known winner per cluster
+    # (the member whose within-cluster offset equals cluster_index mod
+    # 10), so the row checks EXACT keep-set recovery — winner identity,
+    # not just row counts — of the labels->broadcast-join->rank pipeline
+    n = size(s, DOCS)
+    edges, nodes = chain_graph(spark, n)
+    winner = F.pmod(F.col("doc_id"), F.lit(10)) == F.pmod(
+        F.floor(F.col("doc_id") / 10), F.lit(10)
+    )
+    planted = F.when(winner, F.lit(1.0)).otherwise(F.lit(0.1))
+    stats = yield lambda: dedup.canonicalize_clusters(
+        nodes, edges, id_col="doc_id", quality=planted
+    ).filter("keep = 1").agg(
+        F.count("*").alias("n"),
+        F.sum((~winner).cast("int")).alias("wrong_winner"),
+    ).collect()[0]
+    assert stats.n == n // 10 and stats.wrong_winner == 0, tuple(stats)
+
+
+@row
+def cc_single_chain(spark, s, tmp):
+    # pointer-jumping adversarial probe: ONE chain of 100k nodes —
+    # diameter 10^5, the worst case for hash-to-min label propagation,
+    # whose plain loop needs O(diameter) rounds and would hit ANY
+    # practical round cap. Pointer jumping (L(v) <- L(L(v)) from round
+    # 3 on) doubles label reach per round, so the loop must converge in
+    # ~log2(10^5) ~ 17 jumping rounds; max_iter 25 makes the check
+    # mechanical — without the shortcut join this raises the
+    # non-convergence RuntimeError instead of passing slowly.
+    n_chain = size(s, 100_000)
+    chain_edges = spark.range(n_chain - 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    chain_nodes = spark.range(n_chain).select(F.col("id").alias("doc_id"))
+    n_comp = yield lambda: dedup.connected_components(
+        chain_edges, chain_nodes, id_col="doc_id", max_iter=25
+    ).select("cluster_id").distinct().count()
+    assert n_comp == 1, n_comp
+
+
+@row
+def span_dup_stats(spark, s, tmp):
+    # ~2 docs per decade share most 10-token spans, so n_dup_spans must
+    # be nonzero for at least the planted fraction; the explode volume
+    # (~31 spans/doc) is the probe's real subject: the plan must stay
+    # (hash, id, count) shuffles with no corpus-text movement
+    n = size(s, DOCS)
+    docs = synth_docs(spark, n)
+    n_dup_docs = yield lambda: dedup.span_dup_stats(docs, n=10).filter(
+        "n_dup_spans > 0"
+    ).count()
+    assert n_dup_docs >= n // 10, n_dup_docs  # every planted pair flagged
+
+
+@row
+def span_trim(spark, s, tmp):
+    # the non-owner copy (doc 10k+9) must trim to NOTHING (all its spans
+    # are owned by the lower id) while the owner keeps every token
+    n = size(s, DOCS)
+    docs = synth_docs(spark, n)
+    n_emptied = yield lambda: dedup.trim_duplicated_spans(docs, n=10).filter(
+        "pmod(doc_id, 10) = 9 AND n_removed_tokens = n_tokens"
+    ).count()
+    assert n_emptied == n // 10, n_emptied
+
+
+@row
+def incremental_dedup(spark, s, tmp):
+    # the copies (pmod 9) as tonight's batch against everything else as
+    # the reference puts every planted pair ACROSS the split: all n/10
+    # batch docs must come back non-novel (identical docs collide in
+    # every band — recall 1 at jaccard 1.0)
+    n = size(s, DOCS)
+    docs = synth_docs(spark, n)
+    n_flagged = yield lambda: dedup.incremental_dedup(
+        docs.filter("pmod(doc_id, 10) = 9"),
+        docs.filter("pmod(doc_id, 10) != 9"),
+        threshold=0.5,
+    ).filter("is_novel = 0").count()
+    assert n_flagged == n // 10, n_flagged
+
+
+@row
+def containment(spark, s, tmp):
+    # every planted verbatim pair must surface with containment exactly
+    # 1.0 — the Jaccard probe's bucket-pairing shape, so the timing
+    # difference isolates the score change
+    n = size(s, DOCS)
+    docs = synth_docs(spark, n)
+    n_full = yield lambda: dedup.containment_pairs(docs, threshold=0.6).filter(
+        "pmod(id_a, 10) = 1 AND id_b = id_a + 8 AND containment = 1.0"
+    ).count()
+    assert n_full == n // 10, n_full
+
+
+@row
+def threshold_sweep(spark, s, tmp):
+    # 11 grid rows, the t=0 row must account for every doc, and pass
+    # counts must be monotone non-increasing in t (the suffix-sum
+    # correctness at a scale where a bucket-boundary bug would show)
+    n_docs = size(s, DOCS)
+    docs = synth_docs(spark, n_docs)
+    sweep = yield lambda: sorted(
+        text.quality_threshold_sweep(docs, steps=10).collect(), key=lambda r: r.threshold
+    )
+    assert len(sweep) == 11 and sweep[0].n_docs_pass == n_docs
+    assert all(
+        a.n_docs_pass >= b.n_docs_pass and a.n_tokens_pass >= b.n_tokens_pass
+        for a, b in zip(sweep, sweep[1:])
+    )
+
+
+@row
+def semantic_dedup(spark, s, tmp):
+    # SemDeDup with planted ground truth: groups of 10, each a
+    # deterministic ±1/√64 base direction with member j flipping
+    # component j — cos(member j>0, member 0) = 62/64 ≥ τ=0.9 (and
+    # cross-member 60/64 also prunes, which is fine: members only ever
+    # prune members) while cross-group cos needs 61-of-64 sign agreement
+    # between independent ±1 directions (P ≈ 2.4e-15/pair — unreachable
+    # at ~20M within-cell pairs; a dim-32 construction admitted genuine
+    # 31/32 collisions at P ≈ 7.7e-9, which DID fire at 100k). So the
+    # min-id survivor rule must NEVER prune a group head, and must prune
+    # ~90% of the corpus — up to k-means cell straddle (a group split
+    # across cells can't see all its prunes; measured straddle loss ≈ a
+    # few %, the bound leaves margin).
+    n_vecs = size(s, 100_000)
+    emb = spark.range(n_vecs).select(
+        F.col("id").alias("vec_id"),
+        F.expr(
+            "transform(sequence(0, 63), c -> "
+            " CAST(pmod(xxhash64(floor(id / 10), c), 2) * 2 - 1 AS DOUBLE)"
+            " * (CASE WHEN pmod(id, 10) > 0 AND c = pmod(id, 10) THEN -1.0 ELSE 1.0 END))"
+        ).alias("embedding"),
+    )
+    sd_stats = yield lambda: similarity.semantic_dedup(emb, n_cells=256, threshold=0.9).agg(
+        F.count("*").alias("n"),
+        F.sum(((F.col("keep") == 0) & (F.pmod("vec_id", F.lit(10)) == 0)).cast("int")).alias(
+            "pruned_heads"
+        ),
+        F.sum((F.col("keep") == 0).cast("int")).alias("pruned"),
+    ).collect()[0]
+    assert sd_stats.n == n_vecs and sd_stats.pruned_heads == 0, tuple(sd_stats)
+    assert sd_stats.pruned >= 0.75 * (n_vecs * 9 // 10), sd_stats.pruned
+
+
+@row
+def doc_logprob(spark, s, tmp):
+    # the synthetic vocab is 500 near-uniformly-used words, so every
+    # doc's average negative log-prob must sit near ln(500) ~ 6.21. The
+    # subject is the two-shuffle shape: one token groupBy for the LM,
+    # one per-doc rollup, LM broadcast between them.
+    n_docs = size(s, DOCS)
+    docs = synth_docs(spark, n_docs)
+    lp_stats = yield lambda: text.unigram_logprob(docs).agg(
+        F.count("*").alias("n"), F.avg("avg_neg_logprob").alias("m")
+    ).collect()[0]
+    assert lp_stats.n == n_docs and 5.5 < lp_stats.m < 7.0, tuple(lp_stats)
+
+
+@row
+def source_overlap(spark, s, tmp):
+    # 20 planted sources over ONE shared vocabulary: all 190 unordered
+    # pairs must appear with nonzero jaccard. Times the per-shingle
+    # collect_set + pair-explode shape; per-shingle state is bounded by
+    # the source count. Full 190-pair saturation is a DENSITY property:
+    # it holds from 50k docs (13 pairs were observed at 2,000), hence
+    # the floor.
+    sourced = synth_docs(spark, size(s, DOCS, floor=50_000)).withColumn(
+        "source", F.concat(F.lit("src"), F.pmod(F.col("doc_id"), F.lit(20)))
+    )
+    ov = yield lambda: dedup.source_overlap_matrix(sourced).collect()
+    assert all(r.jaccard > 0 for r in ov), "zero-jaccard pair emitted"
+    assert len(ov) == 190, len(ov)
+
+
+@row
+def leakage_safe_split(spark, s, tmp):
+    # every decade chain is one cluster, so all 10 members must
+    # co-assign — zero pairs may straddle a split boundary — and the
+    # three splits must all be non-empty. The labels are the row's
+    # input; the split and its checks are timed.
+    edges, nodes = chain_graph(spark, size(s, DOCS))
+    cc = dedup.connected_components(edges, nodes, id_col="doc_id")
+
+    def split():
+        sp = sampling.grouped_split(cc, "cluster_id")
+        ed_a = sp.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sa"))
+        ed_b = sp.select(F.col("doc_id").alias("id_b"), F.col("split").alias("sb"))
+        crossed = edges.join(ed_a, "id_a").join(ed_b, "id_b").filter("sa <> sb").count()
+        return crossed, sp.select("split").distinct().count()
+
+    crossed, n_splits = yield split
+    assert crossed == 0 and n_splits == 3, (crossed, n_splits)
+
+
+@row
+def inverted_index(spark, s, tmp):
+    # the explode-heavy retrieval shape (vocab 500, ~40 tokens/doc);
+    # must stay explode/scan-bound, no driver collects
+    n_docs = size(s, DOCS)
+    docs = synth_docs(spark, n_docs)
+    n_postings = yield lambda: text.inverted_index(docs, min_df=2).count()
+    assert n_postings > n_docs, n_postings  # every doc posts >=1 shared term
+
+
+@row
+def bm25_search(spark, s, tmp):
+    # two narrow passes + a broadcast stats row
+    docs = synth_docs(spark, size(s, DOCS))
+    hits = yield lambda: text.bm25_search(docs, ["w1", "w2", "w3"], k=10).collect()
+    assert len(hits) == 10 and all(r.score > 0 for r in hits), hits
+
+
+# Fuzzy-linkage hot-block probe: 20% of the catalog shares one first
+# token — the block-quadratic shape the operator docstring warns about
+# (H = n/5 rows -> ~H² = 100M raw candidates at 50k). Two regimes:
+# - OUT-OF-BAND candidate mass (join output discarded by the
+#   length-band filter): max_block folds the band into the join key,
+#   removing it losslessly — the catalog plants lengths in steps of 4
+#   (> max_dist), so nearly all candidates are out-of-band and the
+#   cap's saving is the observable (the ratio grows with H, since
+#   uncapped mass is H² vs capped H²/buckets). The cap is scaled with
+#   the catalog so it arms at every scale.
+# - IN-BAND verify mass (pairs the band admits): irreducible under ANY
+#   lossless refinement; the blocking key's selectivity is the only
+#   lever (which is why fuzzy_part_matches uses a composite key AND
+#   arms max_block).
+# The capped row checks the capped pair set is IDENTICAL in size (the
+# lossless claim of test_fuzzy_match_pairs_hot_block_cap_is_lossless,
+# at scale). The wall ratio is reported in the summary line, not
+# asserted: wall ratios flap with ambient load.
+
+
+@row
+def fuzzy_hot_block_uncapped(spark, s, tmp):
+    catalog = hot_block_catalog(spark, size(s, 50_000))
+    yield lambda: joins.fuzzy_match_pairs(catalog, "id", "name").count()
+
+
+@row
+def fuzzy_hot_block_capped(spark, s, tmp):
+    catalog = hot_block_catalog(spark, size(s, 50_000))
+    n_capped = yield lambda: joins.fuzzy_match_pairs(
+        catalog, "id", "name", max_block=size(s, 1000)
+    ).count()
+    n_uncapped = joins.fuzzy_match_pairs(catalog, "id", "name").count()
+    assert n_capped == n_uncapped, (n_capped, n_uncapped)
+
+
+@row
+def aqe_skew_join(spark, s, tmp):
+    # README's "residual join skew by AQE skew-join" claim, demonstrated
+    # rather than asserted. A planted 30%-hot key forces one reduce
+    # partition to dwarf the rest in a fact-fact SMJ (broadcast
+    # disabled); the FINAL adaptive plan must carry the skew=true split
+    # marker. The partition count is pinned: with 4-8 partitions the hot
+    # partition is only ~2.7x the median, under AQE's factor of 5. Skew
+    # thresholds scale with the row's size. The tiny post-join filter
+    # keeps the collect driver-safe while executing through the SAME
+    # QueryExecution — a noop write would finalize a different one and
+    # never show the adaptive plan. Its modulus m (a multiple of 10,
+    # coprime to 3) is a fifth of the rows, so exactly 5 ids (id ≡
+    # 7/3 mod m, none hot) pass.
+    m = size(s, 1_000_000)
+    m += 10 * (m % 3 == 0)
+    threshold = (1 << 20) * m // 1_000_000
+    pinned = {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(threshold),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(threshold // 2),
     }
+    saved = {k: spark.conf.get(k, None) for k in pinned}
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512k")
-        n_skew = 5_000_000
-        sa = spark.range(n_skew).select(
+        for k, v in pinned.items():
+            spark.conf.set(k, v)
+        sa = spark.range(5 * m).select(
             F.when(F.pmod("id", F.lit(10)) < 3, F.lit(0)).otherwise(F.col("id")).alias("k"),
             F.col("id").alias("va"),
         )
-        sb = spark.range(n_skew).select(F.col("id").alias("k"), (F.col("id") * 2).alias("vb"))
-        sj = sa.join(sb, "k").filter((F.col("va") + F.col("vb")) % 1_000_000 == 7)
-        t0 = time.perf_counter()
-        skew_rows = sj.collect()
-        timings[f"aqe_skew_join_{n_skew}"] = round(time.perf_counter() - t0, 2)
+        sb = spark.range(5 * m).select(F.col("id").alias("k"), (F.col("id") * 2).alias("vb"))
+        sj = sa.join(sb, "k").filter((F.col("va") + F.col("vb")) % m == 7)
+        skew_rows = yield sj.collect
         skew_plan = sj._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in skew_plan
         assert "skew=true" in skew_plan, "AQE skew split did not engage"
         assert len(skew_rows) == 5, len(skew_rows)
     finally:
-        for k, v in skew_saved.items():
+        for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
 
-    # Misra-Gries sketch at cardinality the exact groupBy would choke
-    # on: ~1M distinct tail keys + 3 planted mega-keys over n_events
-    # tokens. The probe asserts the PODS'12 guarantees at scale: the
-    # mega-keys (each > n/(k+1)) all survive and no estimate violates
-    # the n/(k+1) undercount bound vs their exact counts.
-    from flink_kafka_spark.operators.sketches import misra_gries
 
-    mega = ["mega_a", "mega_b", "mega_c"]
-    toks = spark.range(n_events).select(
-        F.when(F.pmod(F.xxhash64("id"), F.lit(10)) < 3,
-               F.element_at(F.array(*[F.lit(m) for m in mega]),
-                            (F.pmod(F.xxhash64("id", F.lit(2)), F.lit(3)) + 1).cast("int")))
-        .otherwise(F.concat(F.lit("tail_"),
-                            F.pmod(F.xxhash64("id", F.lit(3)), F.lit(1_000_000)).cast("string")))
-        .alias("tok")
-    )
-    t0 = time.perf_counter()
-    sketch = {r["item"]: r["est"] for r in misra_gries(toks, "tok", k=16).collect()}
-    timings[f"misra_gries_{n_events}"] = round(time.perf_counter() - t0, 2)
-    exact_mega = {
-        r["tok"]: r["c"]
-        for r in toks.filter(F.col("tok").isin(mega)).groupBy("tok").agg(
-            F.count(F.lit(1)).alias("c")).collect()
-    }
-    for m in mega:
+@row
+def misra_gries(spark, s, tmp):
+    # Misra-Gries at cardinality the exact groupBy would choke on: the
+    # PODS'12 guarantees at scale — the mega-keys (each > n/(k+1)) all
+    # survive and no estimate violates the n/(k+1) undercount bound
+    n_events = size(s, EVENTS)
+    toks = mega_tokens(spark, n_events)
+    rows = yield lambda: sketches.misra_gries(toks, "tok", k=16).collect()
+    sketch = {r["item"]: r["est"] for r in rows}
+    exact = exact_mega(toks)
+    for m in MEGA:
         assert m in sketch, (m, sorted(sketch))
-        assert sketch[m] <= exact_mega[m]
-        assert (exact_mega[m] - sketch[m]) * 17 <= n_events, (m, sketch[m], exact_mega[m])
+        assert sketch[m] <= exact[m]
+        assert (exact[m] - sketch[m]) * 17 <= n_events, (m, sketch[m], exact[m])
 
-    # Count-Min sketch over the same ~1M-distinct token stream: the
-    # whole shuffle is the <= d*w counter frame (32k keys at 4x8192)
-    # regardless of the 1M-key space. Asserts the one-sided guarantee
-    # (never undercounts) and a 4N/w overcount ceiling on the planted
-    # mega-keys — each of the 4 rows exceeds 4x its mean collision
-    # mass with prob ~1/4, all four simultaneously ~(1/4)^4.
-    from flink_kafka_spark.operators.sketches import cms_estimate, count_min_sketch
 
+@row
+def count_min(spark, s, tmp):
+    # the whole shuffle is the <= d*w counter frame (32k keys at
+    # 4x8192) regardless of the 1M-key space. Checks the one-sided
+    # guarantee (never undercounts) and a 4N/w overcount ceiling on the
+    # mega-keys — each of the 4 rows exceeds 4x its mean collision mass
+    # with prob ~1/4, all four simultaneously ~(1/4)^4.
+    n_events = size(s, EVENTS)
+    toks = mega_tokens(spark, n_events)
     cms_w, cms_d = 8192, 4
-    t0 = time.perf_counter()
-    cms = count_min_sketch(toks, "tok", cms_w, cms_d)
-    mega_df = spark.createDataFrame([(m,) for m in mega], "tok string")
-    ests = {
-        r["tok"]: r["est_c"]
-        for r in cms_estimate(cms, mega_df, "tok", cms_w, cms_d).collect()
-    }
-    timings[f"count_min_{n_events}"] = round(time.perf_counter() - t0, 2)
-    for m in mega:
-        assert ests[m] >= exact_mega[m], (m, ests[m], exact_mega[m])
-        assert ests[m] - exact_mega[m] <= 4 * n_events // cms_w, (
-            m, ests[m], exact_mega[m])
 
-    # KMV distinct sketch at ~1M true distinct: the threshold prefilter
-    # must leave only O(k) survivors per set for the window sort (the
-    # scale path), the estimate must land within 5.6 sigma (~50%) of
-    # the exact countDistinct, and a below-k set stays EXACT.
-    from flink_kafka_spark.operators.sketches import kmv_estimate, kmv_minima
+    def estimate():
+        cms = sketches.count_min_sketch(toks, "tok", cms_w, cms_d)
+        mega_df = spark.createDataFrame([(m,) for m in MEGA], "tok string")
+        return sketches.cms_estimate(cms, mega_df, "tok", cms_w, cms_d).collect()
 
+    ests = {r["tok"]: r["est_c"] for r in (yield estimate)}
+    exact = exact_mega(toks)
+    for m in MEGA:
+        assert ests[m] >= exact[m], (m, ests[m], exact[m])
+        assert ests[m] - exact[m] <= 4 * n_events // cms_w, (m, ests[m], exact[m])
+
+
+@row
+def kmv(spark, s, tmp):
+    # the threshold prefilter must leave only O(k) survivors per set for
+    # the window sort (the scale path), the estimate must land within
+    # 5.6 sigma (~50%) of the exact countDistinct, and a below-k set
+    # stays EXACT
     kmv_k = 128
-    sets = spark.range(n_events).select(
+    sets = spark.range(size(s, EVENTS)).select(
         F.when(F.pmod(F.xxhash64("id", F.lit(7)), F.lit(100)) < 1, F.lit("small"))
         .otherwise(F.lit("big"))
         .alias("s"),
@@ -499,10 +634,10 @@ def main() -> None:
         .cast("string")
         .alias("v"),
     )
-    t0 = time.perf_counter()
-    kept = kmv_minima(sets, "s", "v", kmv_k)
-    kmv_est = {r["s"]: r["est"] for r in kmv_estimate(kept, kmv_k).collect()}
-    timings[f"kmv_{n_events}"] = round(time.perf_counter() - t0, 2)
+    rows = yield lambda: sketches.kmv_estimate(
+        sketches.kmv_minima(sets, "s", "v", kmv_k), kmv_k
+    ).collect()
+    kmv_est = {r["s"]: r["est"] for r in rows}
     exact_kmv = {
         r["s"]: r["c"]
         for r in sets.groupBy("s").agg(F.countDistinct("v").alias("c")).collect()
@@ -511,38 +646,30 @@ def main() -> None:
     rel = abs(kmv_est["big"] - exact_kmv["big"]) / exact_kmv["big"]
     assert rel < 0.5, (kmv_est["big"], exact_kmv["big"], rel)
 
-    # KMV pair set-algebra on a planted overlap: a = [0, 600k),
-    # b = [400k, 1M) -> |a∩b| = 200k, |a∪b| = 1M (Jaccard 0.2), plus
-    # two below-k sets overlapping on 15 values (exact path). The
-    # pair computation consumes ONLY the k-row sketches — its wall
-    # time must not grow with the sets' cardinality (recorded, and
-    # the operator's only non-sketch input is the minima frame by
-    # construction).
-    from flink_kafka_spark.operators.sketches import kmv_pair_intersections
 
-    ab = spark.range(1_000_000).select(
-        F.when(F.col("id") < 600_000, F.lit("a")).otherwise(F.lit("b")).alias("s"),
+@row
+def kmv_pair_intersections(spark, s, tmp):
+    # planted overlap: a = [0, 0.6n), b = [0.4n, n) -> |a∩b| = 0.2n,
+    # |a∪b| = n (Jaccard 0.2), plus two below-k sets overlapping on 15
+    # values (exact path). The pair computation consumes ONLY the k-row
+    # sketches, which are materialized as the row's input: timing
+    # kmv_minima would charge the corpus scan to the pair algebra.
+    kmv_k, n = 128, size(s, 1_000_000)
+    lo, hi = n * 4 // 10, n * 6 // 10
+    ab = spark.range(n).select(
+        F.when(F.col("id") < hi, F.lit("a")).otherwise(F.lit("b")).alias("s"),
         F.col("id").cast("string").alias("v"),
     ).unionByName(
-        spark.range(400_000, 600_000).select(
-            F.lit("b").alias("s"), F.col("id").cast("string").alias("v")
-        )
+        spark.range(lo, hi).select(F.lit("b").alias("s"), F.col("id").cast("string").alias("v"))
     ).unionByName(
         spark.range(40).select(F.lit("c").alias("s"), F.col("id").cast("string").alias("v"))
     ).unionByName(
         spark.range(25, 65).select(F.lit("d").alias("s"), F.col("id").cast("string").alias("v"))
     )
-    # materialize the sketches BEFORE the clock starts: kmv_minima is
-    # lazy, so timing its build would charge the 1.24M-row scan to the
-    # pair algebra and contradict the sketch-only claim above
-    pair_minima = kmv_minima(ab, "s", "v", kmv_k).persist()
+    pair_minima = sketches.kmv_minima(ab, "s", "v", kmv_k).persist()
     pair_minima.count()
-    t0 = time.perf_counter()
-    got_pairs = {
-        (r["set_a"], r["set_b"]): r for r in kmv_pair_intersections(pair_minima, kmv_k).collect()
-    }
-    timings["kmv_pair_intersections_1M"] = round(time.perf_counter() - t0, 2)
-    pair_minima.unpersist()
+    rows = yield lambda: sketches.kmv_pair_intersections(pair_minima, kmv_k).collect()
+    got_pairs = {(r["set_a"], r["set_b"]): r for r in rows}
     exact_small = got_pairs[("c", "d")]
     assert (exact_small["est_union"], exact_small["est_intersection"]) == (65, 15), (
         tuple(exact_small)
@@ -552,136 +679,109 @@ def main() -> None:
         tuple(exact_small)
     )
     big = got_pairs[("a", "b")]
-    assert abs(big["est_union"] - 1_000_000) / 1_000_000 < 0.5, tuple(big)
-    assert abs(big["est_intersection"] - 200_000) / 200_000 < 0.6, tuple(big)
-    # planted differences: a\b = 400k (ids 0..399999), b\a = 400k
-    assert abs(big["est_a_minus_b"] - 400_000) / 400_000 < 0.6, tuple(big)
-    assert abs(big["est_b_minus_a"] - 400_000) / 400_000 < 0.6, tuple(big)
+    assert abs(big["est_union"] - n) / n < 0.5, tuple(big)
+    assert abs(big["est_intersection"] - (hi - lo)) / (hi - lo) < 0.6, tuple(big)
+    # planted differences: a\b = [0, 0.4n), b\a = [0.6n, n)
+    assert abs(big["est_a_minus_b"] - lo) / lo < 0.6, tuple(big)
+    assert abs(big["est_b_minus_a"] - (n - hi)) / (n - hi) < 0.6, tuple(big)
 
-    # PageRank on a planted 100k-node hub graph: 1000 hubs, each the
-    # center of a 99-leaf star (leaves point only at their hub, hubs
-    # chain hub -> next hub so mass circulates among hubs and never
-    # returns to a leaf). Ground truth is a total order, not a timing:
-    # every leaf's rank is EXACTLY the teleport floor (no in-edges),
-    # every hub collects 99 leaf contributions and must out-rank every
-    # leaf; floor-division-only arithmetic can lose mass, never mint it.
-    from flink_kafka_spark.operators.graph import pagerank
 
-    n_nodes = 100_000
+@row
+def pagerank(spark, s, tmp):
+    # hub graph: hubs every 100 ids, each the center of a 99-leaf star
+    # (leaves point only at their hub, hubs chain hub -> next hub so
+    # mass circulates among hubs and never returns to a leaf). Ground
+    # truth is a total order: every leaf's rank is EXACTLY the teleport
+    # floor (no in-edges), every hub collects 99 leaf contributions and
+    # must out-rank every leaf; floor-division-only arithmetic can lose
+    # mass, never mint it.
+    n_nodes = size(s, 100_000, step=100)
     pr_unit = 1_000_000_000
     teleport_floor = 15 * (pr_unit // n_nodes) // 100
     hubs = spark.range(n_nodes).filter(F.pmod("id", F.lit(100)) == 0)
     leaves = spark.range(n_nodes).filter(F.pmod("id", F.lit(100)) != 0)
     hub_of = (F.col("id") - F.pmod("id", F.lit(100))).alias("hub")
-    pr_edges = (
-        leaves.select(F.col("id").alias("src"), hub_of.alias("dst"), F.lit(1).alias("w"))
-        .unionByName(
-            hubs.select(
-                F.col("id").alias("src"),
-                F.pmod(F.col("id") + 100, F.lit(n_nodes)).alias("dst"),
-                F.lit(1).alias("w"),
-            )
+    pr_edges = leaves.select(
+        F.col("id").alias("src"), hub_of.alias("dst"), F.lit(1).alias("w")
+    ).unionByName(
+        hubs.select(
+            F.col("id").alias("src"),
+            F.pmod(F.col("id") + 100, F.lit(n_nodes)).alias("dst"),
+            F.lit(1).alias("w"),
         )
     )
     pr_nodes = spark.range(n_nodes).select(F.col("id"))
-    t0 = time.perf_counter()
-    pr = pagerank(pr_edges, pr_nodes, "id", iterations=12)
     is_hub = F.pmod("node", F.lit(100)) == 0
-    stats = pr.select(
+    stats = yield lambda: graph.pagerank(pr_edges, pr_nodes, "id", iterations=12).select(
         F.min(F.when(is_hub, F.col("rank_e9"))).alias("hub_min"),
         F.max(F.when(~is_hub, F.col("rank_e9"))).alias("leaf_max"),
         F.min(F.when(~is_hub, F.col("rank_e9"))).alias("leaf_min"),
         F.sum("rank_e9").alias("mass"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    timings[f"pagerank_{n_nodes}"] = round(time.perf_counter() - t0, 2)
     assert stats.n == n_nodes
     assert stats.leaf_min == stats.leaf_max == teleport_floor, tuple(stats)
     assert stats.hub_min > stats.leaf_max, (stats.hub_min, stats.leaf_max)
     assert stats.mass <= pr_unit, stats.mass
 
-    # MMR over a 200-query batch against a 100k x 64 corpus (fresh
-    # pseudo-random directions): the greedy is per-query-parallel, so
-    # wall time should track the brute-force candidate stage, not
-    # k x Q.
-    from flink_kafka_spark.operators.similarity import mmr_rerank
 
-    n_mmr_vecs = 100_000
-    vecs = spark.range(n_mmr_vecs).select(
+@row
+def mmr_rerank(spark, s, tmp):
+    # a 200-query batch against a corpus of fresh pseudo-random
+    # directions: the greedy is per-query-parallel, so wall time should
+    # track the brute-force candidate stage, not k x Q
+    # at least the 200 query ids, with room for 40 candidates each
+    vecs = spark.range(size(s, 100_000, floor=1000)).select(
         F.col("id").alias("vec_id"),
         F.expr(
             "transform(sequence(0, 63), j -> CAST(pmod(xxhash64(concat(CAST(id AS STRING), "
             "'|', CAST(j AS STRING))), 1000) AS FLOAT) / 1000.0 - 0.5)"
         ).alias("embedding"),
     )
-    t0 = time.perf_counter()
-    mmr_rows = mmr_rerank(
+    mmr_rows = yield lambda: similarity.mmr_rerank(
         vecs.filter(F.col("vec_id") < 200), vecs, k=8, n_candidates=40
     ).count()
-    timings[f"mmr_rerank_200x{n_mmr_vecs}"] = round(time.perf_counter() - t0, 2)
     assert mmr_rows == 200 * 8, mmr_rows
 
-    # bigram LM on a corpus with planted word-order structure: fluent
-    # docs walk a fixed 500-token cycle (every transition deterministic
-    # -> near-probability-1 under the model), every 10th doc reverses
-    # alternate halves (same token bag, broken transitions). The probe
-    # asserts PERFECT SEPARATION — every scrambled doc scores above
-    # every fluent doc — which is exactly the signal the unigram
-    # operator cannot produce (identical bags score identically there).
-    from flink_kafka_spark.operators.text import bigram_logprob
 
-    n_lm = 2 * n_docs
-    fluent_words = F.expr(
-        "transform(sequence(0, 39), i -> concat('w', pmod(id + i, 500)))"
-    )
-    # perfect-shuffle permutation of the SAME 40 offsets (evens take
-    # 0..19, odds take 20..39): identical token bag, every transition
-    # a ±20-ish jump the fluent corpus never makes
-    scrambled_words = F.expr(
-        "transform(sequence(0, 39), i -> concat('w', pmod(id + "
-        "CASE WHEN pmod(i, 2) = 0 THEN CAST(floor(i / 2) AS INT) "
-        "ELSE 20 + CAST(floor((i - 1) / 2) AS INT) END, 500)))"
-    )
-    lm_docs = spark.range(n_lm).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ", F.when(F.pmod("id", F.lit(10)) == 9, scrambled_words).otherwise(fluent_words)
-        ).alias("text"),
-    )
-    t0 = time.perf_counter()
-    sep = (
-        bigram_logprob(lm_docs)
-        .select(
-            F.min(
-                F.when(F.pmod("doc_id", F.lit(10)) == 9, F.col("avg_neg_logprob"))
-            ).alias("min_scrambled"),
-            F.max(
-                F.when(F.pmod("doc_id", F.lit(10)) != 9, F.col("avg_neg_logprob"))
-            ).alias("max_fluent"),
-        )
-        .collect()[0]
-    )
-    timings[f"bigram_logprob_{n_lm}"] = round(time.perf_counter() - t0, 2)
+@row
+def bigram_logprob(spark, s, tmp):
+    # PERFECT SEPARATION — every scrambled doc scores above every fluent
+    # doc — which is exactly the signal the unigram operator cannot
+    # produce (identical bags score identically there)
+    docs = lm_docs(spark, 2 * size(s, DOCS))
+    sep = yield lambda: text.bigram_logprob(docs).select(
+        F.min(
+            F.when(F.pmod("doc_id", F.lit(10)) == 9, F.col("avg_neg_logprob"))
+        ).alias("min_scrambled"),
+        F.max(
+            F.when(F.pmod("doc_id", F.lit(10)) != 9, F.col("avg_neg_logprob"))
+        ).alias("max_fluent"),
+    ).collect()[0]
     assert sep.min_scrambled > sep.max_fluent, tuple(sep)
 
-    # hashed classifier + vocab audit over the same 100k corpus. The
-    # classifier probe asserts the integer-exact contract holds at
-    # scale (scores in (0,1), every doc scored); the vocab probe has
-    # exact ground truth — the synthetic vocabulary is exactly w0..w499,
-    # so against vocab_size=500 every 7th doc's planted unique token is
-    # the ONLY out-of-vocabulary occurrence in the corpus.
-    from flink_kafka_spark.operators.text import classifier_score, vocab_coverage
 
-    t0 = time.perf_counter()
-    clf = classifier_score(lm_docs).agg(
+@row
+def classifier_score(spark, s, tmp):
+    # the integer-exact contract holds at scale: scores in (0,1), every
+    # doc scored
+    n_lm = 2 * size(s, DOCS)
+    docs = lm_docs(spark, n_lm)
+    clf = yield lambda: text.classifier_score(docs).agg(
         F.count("*").alias("n"),
         F.min("clf_score").alias("lo"),
         F.max("clf_score").alias("hi"),
     ).collect()[0]
-    timings[f"classifier_score_{n_lm}"] = round(time.perf_counter() - t0, 2)
     assert clf.n == n_lm and 0.0 < clf.lo <= clf.hi < 1.0, tuple(clf)
 
-    oov_docs = lm_docs.select(
+
+@row
+def vocab_coverage(spark, s, tmp):
+    # the synthetic vocabulary is exactly w0..w499, so against
+    # vocab_size=500 every 7th doc's planted unique token is the ONLY
+    # out-of-vocabulary occurrence in the corpus
+    n_lm = 2 * size(s, DOCS)
+    oov_docs = lm_docs(spark, n_lm).select(
         "doc_id",
         F.when(
             F.pmod("doc_id", F.lit(7)) == 0,
@@ -690,22 +790,21 @@ def main() -> None:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    t0 = time.perf_counter()
-    oov = vocab_coverage(oov_docs, vocab_size=500).agg(
+    oov = yield lambda: text.vocab_coverage(oov_docs, vocab_size=500).agg(
         F.sum("n_oov").alias("total_oov"),
         F.sum((F.col("n_oov") > 0).cast("int")).alias("docs_with_oov"),
     ).collect()[0]
-    timings[f"vocab_coverage_{n_lm}"] = round(time.perf_counter() - t0, 2)
     n_planted = (n_lm + 6) // 7
     assert (oov.total_oov, oov.docs_with_oov) == (n_planted, n_planted), tuple(oov)
 
-    # blocked fuzzy linkage at 200k rows / 100k blocks: each block
-    # holds exactly one planted pair one edit apart ('mk one' vs
-    # 'mk ones'), so the exact pair set is known — n/2 pairs, every
-    # distance 1, zero cross-block leakage.
-    from flink_kafka_spark.operators.joins import fuzzy_match_pairs
 
-    n_link = 200_000
+@row
+def fuzzy_link(spark, s, tmp):
+    # blocked fuzzy linkage, n/2 blocks: each block holds exactly one
+    # planted pair one edit apart ('mk one' vs 'mk ones'), so the exact
+    # pair set is known — n/2 pairs, every distance 1, zero cross-block
+    # leakage
+    n_link = size(s, 200_000)
     catalog = spark.range(n_link).select(
         F.col("id").alias("rec_id"),
         F.concat(
@@ -716,213 +815,97 @@ def main() -> None:
             ),
         ).alias("name"),
     )
-    t0 = time.perf_counter()
-    linked = fuzzy_match_pairs(catalog, "rec_id", "name", max_dist=2).agg(
+    linked = yield lambda: joins.fuzzy_match_pairs(catalog, "rec_id", "name", max_dist=2).agg(
         F.count("*").alias("n"), F.max("lev_dist").alias("dmax")
     ).collect()[0]
-    timings[f"fuzzy_link_{n_link}"] = round(time.perf_counter() - t0, 2)
     assert (linked.n, linked.dmax) == (n_link // 2, 1), tuple(linked)
 
-    # the full no-model compose path at corpus scale: text -> hashed
-    # embeddings -> SRP blocking -> blocked cosine pairs. The planted
-    # near-dup pairs (every 10th doc duplicating its decade's seed
-    # doc) have IDENTICAL token bags, so their hashed embeddings are
-    # bit-identical (integer sums), land in the same SRP bucket by
-    # construction, and must come back at cosine 1.0 — while two
-    # random 40-token draws from a 500-token vocabulary share far too
-    # little to cross 0.95. Exact pair-set recovery, composed from
-    # three operators that have never seen each other's internals.
-    from flink_kafka_spark.operators.dedup import embedding_cosine_pairs
-    from flink_kafka_spark.operators.similarity import srp_bucket
-    from flink_kafka_spark.operators.text import hashed_doc_embedding_vec
 
-    t0 = time.perf_counter()
-    hashed = hashed_doc_embedding_vec(docs, dim=64)
-    # persist the embedded+blocked corpus (the doc_semantic_pairs
-    # production pattern): the pair join consumes it on both sides,
-    # and without this each side replays the full embedder pipeline.
-    # 12 planes (4096 buckets), not the query's 8: bucket granularity
-    # is THE quadratic-term lever — 256 buckets over 100k docs means
-    # ~390-doc blocks and ~20M cosine pairs (~55 s measured), 4096
-    # buckets ~24-doc blocks and ~1M pairs. Identical-embedding
-    # planted pairs collide at any plane count, so the exact-recovery
-    # assertion is granularity-independent.
-    blocked = srp_bucket(hashed, "doc_id", "embedding", n_planes=12).persist()
-    emb_pairs = embedding_cosine_pairs(
-        blocked, "doc_id", "v", block_col="bucket", threshold=0.95
-    )
-    pair_stats = emb_pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            (
-                (F.pmod("id_a", F.lit(10)) == 1)
-                & (F.col("id_b") == F.col("id_a") + 8)
-                & (F.col("cosine") == 1.0)
-            ).cast("int")
-        ).alias("n_planted"),
-    ).collect()[0]
-    timings[f"hashed_embed_dedup_{n_docs}"] = round(time.perf_counter() - t0, 2)
-    blocked.unpersist()
+@row
+def hashed_embed_dedup(spark, s, tmp):
+    # the no-model compose path: text -> hashed embeddings -> SRP
+    # blocking -> blocked cosine pairs. The planted near-dup pairs have
+    # IDENTICAL token bags, so their hashed embeddings are bit-identical
+    # (integer sums), land in the same SRP bucket by construction, and
+    # must come back at cosine 1.0 — while two random 40-token draws
+    # from a 500-token vocabulary share far too little to cross 0.95.
+    n_docs = size(s, DOCS)
+    docs = synth_docs(spark, n_docs)
+
+    def pairs():
+        hashed = text.hashed_doc_embedding_vec(docs, dim=64)
+        # persisted (the doc_semantic_pairs production pattern): the pair
+        # join consumes it on both sides. 12 planes (4096 buckets), not
+        # the query's 8: bucket granularity is THE quadratic-term lever —
+        # 256 buckets over 100k docs means ~390-doc blocks and ~20M
+        # cosine pairs, 4096 buckets ~24-doc blocks and ~1M pairs.
+        # Identical-embedding pairs collide at any plane count.
+        blocked = similarity.srp_bucket(hashed, "doc_id", "embedding", n_planes=12).persist()
+        return dedup.embedding_cosine_pairs(
+            blocked, "doc_id", "v", block_col="bucket", threshold=0.95
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                (
+                    (F.pmod("id_a", F.lit(10)) == 1)
+                    & (F.col("id_b") == F.col("id_a") + 8)
+                    & (F.col("cosine") == 1.0)
+                ).cast("int")
+            ).alias("n_planted"),
+        ).collect()[0]
+
+    pair_stats = yield pairs
     assert pair_stats.n == pair_stats.n_planted == n_docs // 10, tuple(pair_stats)
 
-    # PSI drift at the event scale: one event type's value distribution
-    # jumps between stream halves (planted), the rest are stationary by
-    # construction — the planted type must clear the 0.25 alarm line
-    # and every stationary type must sit under 0.01.
-    from flink_kafka_spark.queries.analytics import value_drift_psi as _psi_q
-    import tempfile as _tf
 
-    drift_ev = synth_events(spark, n_events).select(
+@row
+def value_drift_psi(spark, s, tmp):
+    # one event type's value distribution jumps between stream halves
+    # (planted), the rest are stationary by construction — the planted
+    # type must clear the 0.25 alarm line and every stationary type must
+    # sit under 0.01. The events table is the row's input directory.
+    synth_events(spark, size(s, EVENTS)).select(
         "event_id",
         "ts",
         "user_id",
         "event_type",
         F.when(
             (F.col("event_type") == "error")
-            & (F.unix_timestamp("ts") >= F.lit(1_700_000_000 + 302_400)),
+            & (F.unix_timestamp("ts") >= F.lit(BASE_TS + 302_400)),
             F.lit(450.0) + F.pmod(F.xxhash64("event_id"), F.lit(50)).cast("double"),
         )
         .otherwise(F.pmod(F.xxhash64("event_id", F.lit(3)), F.lit(100)).cast("double"))
         .alias("value"),
         F.lit("").alias("props"),
-    )
-    with _tf.TemporaryDirectory() as td:
-        drift_ev.write.mode("overwrite").parquet(f"{td}/events.parquet")
-        t0 = time.perf_counter()
-        psi_rows = {r.event_type: r.psi for r in _psi_q(spark, td).collect()}
-        timings[f"value_drift_psi_{n_events}"] = round(time.perf_counter() - t0, 2)
+    ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
+    rows = yield lambda: psi_query(spark, tmp).collect()
+    psi_rows = {r.event_type: r.psi for r in rows}
     assert psi_rows["error"] > 0.25, psi_rows
     assert all(v < 0.01 for t, v in psi_rows.items() if t != "error"), psi_rows
 
-    # streaming stateful ops (round-2 vectorization evidence): per-key
-    # Arrow frames of thousands of rows exercise the numpy batch scans
-    # that replaced the per-row iterrows() loops — the round-1 scale
-    # bottleneck. File replay -> applyInPandasWithState -> noop sink.
-    n_stream = int(sys.argv[3]) if len(sys.argv) > 3 else 500_000
-    import tempfile
 
-    from flink_kafka_spark.schemas import AD_CLICK, LOGIN_EVENT
-    from flink_kafka_spark.streaming.sources import csv_replay_source
-    from flink_kafka_spark.streaming.stateful import blacklist_stream, login_fail_stream
-
-    def run_stream(df, ckpt):
-        q = (
-            df.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        login_src = os.path.join(tmp, "login")
-        spark.range(n_stream).select(
-            F.concat_ws(
-                ",",
-                F.pmod(F.col("id"), F.lit(200)).cast("string"),
-                F.lit("ip"),
-                F.when(F.pmod(F.xxhash64("id"), F.lit(4)) == 0, "success").otherwise("fail"),
-                (F.lit(1_700_000_000) + (F.col("id") / 200).cast("long")).cast("string"),
-            ).alias("value")
-        ).coalesce(4).write.mode("overwrite").text(login_src)
-        t0 = time.perf_counter()
-        stream = csv_replay_source(spark, login_src, LOGIN_EVENT).withWatermark(
-            "ts", "1 second"
-        )
-        run_stream(login_fail_stream(stream, max_gap_s=2), os.path.join(tmp, "ck1"))
-        timings[f"login_fail_stream_{n_stream}"] = round(time.perf_counter() - t0, 2)
-
-        click_src = os.path.join(tmp, "clicks")
-        spark.range(n_stream).select(
-            F.concat_ws(
-                ",",
-                F.pmod(F.col("id"), F.lit(100)).cast("string"),
-                F.pmod(F.col("id"), F.lit(10)).cast("string"),
-                F.lit("p"),
-                F.lit("c"),
-                (F.lit(1_700_000_000) + (F.col("id") / 1000).cast("long")).cast("string"),
-            ).alias("value")
-        ).coalesce(4).write.mode("overwrite").text(click_src)
-        t0 = time.perf_counter()
-        clicks = csv_replay_source(spark, click_src, AD_CLICK).withWatermark(
-            "ts", "1 second"
-        )
-        run_stream(blacklist_stream(clicks, threshold=100), os.path.join(tmp, "ck2"))
-        timings[f"blacklist_stream_{n_stream}"] = round(time.perf_counter() - t0, 2)
-
-        # sequence_match_stream timer-arming probe:
-        # n_seq keys each hold ONE live chain while ~40 filler-only
-        # micro-batches advance the watermark. Timers armed at the
-        # earliest actionable instant mean those batches fire NO keys
-        # (nothing is actionable until the success events land); the
-        # old watermark+1s arming re-fired every live key every batch —
-        # O(keys x batches) state-function invocations. The wall time
-        # of the filler phase is the observable.
-        n_seq = 10_000
-        base = 1_700_000_000
-        seq_src = os.path.join(tmp, "seq")
-        os.makedirs(seq_src)
-
-        def write_file(name: str, lines: list[str], order: int) -> None:
-            p = os.path.join(seq_src, name)
-            with open(p, "w") as f:
-                f.write("\n".join(lines) + "\n")
-            os.utime(p, (1_000_000 + order, 1_000_000 + order))  # replay order
-
-        write_file("b000.csv", [f"{u},ip,fail,{base}" for u in range(n_seq)], 0)
-        for i in range(40):  # one sentinel line per file -> one batch each
-            write_file(f"b{i + 1:03d}.csv", [f"999999,ip,success,{base + 100 + i * 10}"], i + 1)
-        write_file(
-            "b998.csv", [f"{u},ip,success,{base + 600}" for u in range(n_seq)], 98
-        )
-        # trailing sentinel: watermark past the successes
-        write_file("b999.csv", [f"999999,ip,success,{base + 5000}"], 99)
-        from flink_kafka_spark.streaming.stateful import sequence_match_stream
-
-        t0 = time.perf_counter()
-        seq_stream = csv_replay_source(
-            spark, seq_src, LOGIN_EVENT, max_files_per_trigger=1
-        ).withWatermark("ts", "1 second")
-        matches = sequence_match_stream(
-            seq_stream, "user_id", "ts",
-            [("fail", "login_state = 'fail'"), ("ok", "login_state = 'success'")],
-            within_s=3600,
-        )
-        q = (
-            matches.writeStream.outputMode("append").format("memory")
-            .queryName("seq_stress").option("checkpointLocation", os.path.join(tmp, "ck3"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(600)
-        timings[f"sequence_match_stream_{n_seq}x42"] = round(time.perf_counter() - t0, 2)
-        n_matches = spark.sql("SELECT count(*) c FROM seq_stress").collect()[0].c
-        assert n_matches == n_seq, n_matches
-
-    # --- grid resample + ffill: grid is resolution-bounded, not
-    # corpus-bounded. 10M events collapse onto 1000 keys x 1-min
-    # buckets over the week (~10.08M grid rows — deliberately the
-    # same order as the input, the worst honest ratio for this
-    # operator). Ground truth: natural key 0 is removed and replanted
-    # as a SINGLE observation (value 42) at the stream's first instant
-    # — its entire remaining grid must come back 0-count with 42.0
-    # carried forward and a gap that grows to the full week (~10k
-    # buckets), probing the ffill window across a maximal gap.
-    from flink_kafka_spark.operators.timeseries import resample_ffill
-
-    t0 = time.perf_counter()
+@row
+def resample_ffill(spark, s, tmp):
+    # the grid is resolution-bounded, not corpus-bounded: events collapse
+    # onto 1000 keys x 1-min buckets over the week (~10.08M grid rows —
+    # at 10M events the same order as the input, the worst honest ratio
+    # for this operator). Key 0 is removed and replanted as a SINGLE
+    # observation (value 42) at the stream's first instant — its entire
+    # remaining grid must come back 0-count with 42.0 carried forward
+    # and a gap that grows to the full week (~10k buckets), probing the
+    # ffill window across a maximal gap.
     planted = spark.range(1).select(
         F.lit(0).cast("long").alias("gkey"),
-        F.timestamp_seconds(F.lit(1_700_000_000)).alias("ts"),
+        F.timestamp_seconds(F.lit(BASE_TS)).alias("ts"),
         F.lit(42.0).alias("gv"),
     )
-    tev = ev.select(
+    # all 1000 hash keys materialize from 100k events on (~100 a key)
+    tev = synth_events(spark, size(s, EVENTS, floor=100_000)).select(
         F.pmod(F.xxhash64("event_id", F.lit(7)), F.lit(1000)).alias("gkey"),
         "ts",
         (F.pmod(F.xxhash64("event_id", F.lit(8)), F.lit(1000)) / 100.0).alias("gv"),
     ).filter(F.col("gkey") != 0).unionByName(planted)
-    grid = resample_ffill(tev, "gkey", "ts", "gv", 60)
-    agg = grid.agg(
+    agg = yield lambda: timeseries.resample_ffill(tev, "gkey", "ts", "gv", 60).agg(
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.when(F.col("gkey") == 0, 1).otherwise(0)).alias("k0_rows"),
         F.sum(F.when((F.col("gkey") == 0) & (F.col("cnt") == 0), 1).otherwise(0)).alias("k0_empty"),
@@ -930,94 +913,80 @@ def main() -> None:
         F.min(F.when((F.col("gkey") == 0) & (F.col("cnt") == 0), F.col("filled_avg"))).alias("k0_fill_min"),
         F.max(F.when((F.col("gkey") == 0) & (F.col("cnt") == 0), F.col("filled_avg"))).alias("k0_fill_max"),
     ).collect()[0]
-    timings[f"resample_ffill_{n_events}"] = round(time.perf_counter() - t0, 2)
     # the planted observation sits in the global FIRST bucket, so key
     # 0's grid = 1 observed + (n_buckets - 1) empty, gap peaking at
     # n_buckets - 1, and the carried mean is exactly 42.0 throughout.
-    # Bucket count comes from key 0's own rows; rows = keys_present x
-    # buckets always, and all 1000 hash keys materialize only at the
-    # default event volume (smaller CLI inputs may miss some)
+    # Bucket count comes from key 0's own rows; rows = keys x buckets.
     n_buckets = agg["k0_rows"]
     assert n_buckets > 0 and agg["rows"] % n_buckets == 0, (agg["rows"], n_buckets)
-    if n_events >= 10_000_000:
-        assert agg["rows"] == n_buckets * 1000, agg["rows"]
+    assert agg["rows"] == n_buckets * 1000, agg["rows"]
     assert agg["k0_empty"] == n_buckets - 1
     assert agg["k0_gap"] == n_buckets - 1, agg["k0_gap"]
     assert agg["k0_fill_min"] == agg["k0_fill_max"] == 42.0
 
-    # z-order locality at 10M rows over a known 4096 x 2048 grid: the
-    # key is a pure codegen expression against broadcast bounds, so
-    # wall time must track the scan, and the geometry is exact — 64
-    # buckets over 12+11 interleaved bits carve tiles bounded by
-    # 512 x 512 (z-curve runs, not perfect squares, but each bucket's
-    # extent is <= 2 tiles per dim); the 1-D baseline's second dim
-    # would span the full 2048.
-    from flink_kafka_spark.operators.layout import zorder_locality
 
+@row
+def zorder_locality(spark, s, tmp):
+    # a known 4096 x 2048 grid: the key is a pure codegen expression
+    # against broadcast bounds, so wall time must track the scan, and
+    # the geometry is exact — 64 buckets over 12+11 interleaved bits
+    # carve tiles bounded by 512 x 512 (z-curve runs, not perfect
+    # squares, but each bucket's extent is <= 2 tiles per dim); the 1-D
+    # baseline's second dim would span the full 2048
+    n_events = size(s, EVENTS)
     zdf = spark.range(n_events).select(
         F.pmod(F.xxhash64("id", F.lit(11)), F.lit(4096)).alias("zx"),
         F.pmod(F.xxhash64("id", F.lit(12)), F.lit(2048)).alias("zy"),
     )
-    t0 = time.perf_counter()
-    zrows = zorder_locality(zdf, ["zx", "zy"], bits=12, n_buckets=64).collect()
-    timings[f"zorder_locality_{n_events}"] = round(time.perf_counter() - t0, 2)
+    zrows = yield lambda: layout.zorder_locality(zdf, ["zx", "zy"], bits=12, n_buckets=64).collect()
     assert sum(r["n_rows"] for r in zrows) == n_events
     for r in zrows:
         assert r["max_zx"] - r["min_zx"] <= 1024, dict(r.asDict())
         assert r["max_zy"] - r["min_zy"] <= 1024, dict(r.asDict())
 
-    # t-closeness mega-class probe: one quasi class carries 90% of a
-    # 10M-row audit (the boilerplate-source shape the docstring's skew
-    # claim is about: nothing after the (class, value) cell agg is
-    # row-bounded — cells here are 101 classes x 32 values, so the wall
-    # must track the one scan+shuffle). Geometry is exact: ids arrive
-    # in blocks of 32 consecutive values, every block contributing one
-    # full uniform pass over the value domain to its class, so EVERY
-    # class's distribution equals the global uniform and both distances
-    # are exactly 0.0 for all 101 classes — keep-all, bit-exact.
-    from flink_kafka_spark.operators.sampling import t_closeness
 
-    n_tc = n_events - (n_events % 320)
-    if n_tc:
-        blk = F.floor(F.col("id") / 32)
-        tdf = spark.range(n_tc).select(
-            F.when(F.pmod(blk, 10) < 9, F.lit("mega"))
-            .otherwise(
-                F.concat(F.lit("c"), F.pmod(F.floor(blk / 10), 100).cast("string"))
-            )
-            .alias("q"),
-            F.pmod("id", F.lit(32)).alias("v"),
-        )
-        t0 = time.perf_counter()
-        trows = t_closeness(tdf, ["q"], "v", t=0.2).collect()
-        timings[f"t_closeness_skew_{n_events}"] = round(time.perf_counter() - t0, 2)
-        # expected geometry from n_tc alone (n_tc % 320 == 0, so the
-        # block count divides by 10): mega + min(blocks/10, 100) tail
-        # classes at the default 10M this is the 101 the docstring
-        # describes; smaller CLI n_events scale down, never misfire
-        n_blocks = n_tc // 32
-        n_classes = 1 + min(n_blocks // 10, 100)
-        assert len(trows) == n_classes, (len(trows), n_classes)
-        assert sum(r["class_size"] for r in trows) == n_tc
-        mega = next(r for r in trows if r["q"] == "mega")
-        assert mega["class_size"] == n_tc * 9 // 10, mega["class_size"]
-        assert all(
-            r["t_tvd"] == 0.0 and r["t_emd"] == 0.0 and r["keep"] == 1
-            for r in trows
-        ), [r for r in trows if r["keep"] != 1][:3]
+@row
+def t_closeness_skew(spark, s, tmp):
+    # one quasi class carries 90% of the audit (the boilerplate-source
+    # shape the docstring's skew claim is about: nothing after the
+    # (class, value) cell agg is row-bounded — cells are <= 101 classes
+    # x 32 values, so the wall must track the one scan+shuffle). Ids
+    # arrive in blocks of 32 consecutive values, every block
+    # contributing one full uniform pass over the value domain to its
+    # class, so EVERY class's distribution equals the global uniform and
+    # both distances are exactly 0.0 for all classes — keep-all,
+    # bit-exact. A multiple of 320 rows makes the blocks divide by 10.
+    n_tc = size(s, EVENTS, step=320)
+    blk = F.floor(F.col("id") / 32)
+    tdf = spark.range(n_tc).select(
+        F.when(F.pmod(blk, 10) < 9, F.lit("mega"))
+        .otherwise(F.concat(F.lit("c"), F.pmod(F.floor(blk / 10), 100).cast("string")))
+        .alias("q"),
+        F.pmod("id", F.lit(32)).alias("v"),
+    )
+    trows = yield lambda: sampling.t_closeness(tdf, ["q"], "v", t=0.2).collect()
+    # mega + min(blocks/10, 100) tail classes: 101 at 10M rows
+    n_classes = 1 + min(n_tc // 32 // 10, 100)
+    assert len(trows) == n_classes, (len(trows), n_classes)
+    assert sum(r["class_size"] for r in trows) == n_tc
+    mega = next(r for r in trows if r["q"] == "mega")
+    assert mega["class_size"] == n_tc * 9 // 10, mega["class_size"]
+    assert all(
+        r["t_tvd"] == 0.0 and r["t_emd"] == 0.0 and r["keep"] == 1
+        for r in trows
+    ), [r for r in trows if r["keep"] != 1][:3]
 
-    # media perceptual-hash dedup at the full doc count: 128-byte
-    # pseudo-random payloads, doc 10k+9 a VERBATIM byte copy of doc
-    # 10k+1 — so exactly n/10 Hamming-0 pairs are planted, and a
-    # random cross-pair needs a 64-bit hash within Hamming 3 of
-    # another (P ~ 2.4e-15/pair: unreachable at ~1e9 pairs). The
-    # probe therefore asserts the EXACT pair set, which exercises
-    # both pigeonhole completeness (no planted pair missed) and
-    # bucket precision (no phantom pair) at scale; the timing's
-    # subject is the single payload-hash pass + chunk-bucket join.
-    from flink_kafka_spark.operators.multimodal import phash_pairs
 
-    t0 = time.perf_counter()
+@row
+def media_phash_dedup(spark, s, tmp):
+    # 128-byte pseudo-random payloads, doc 10k+9 a VERBATIM byte copy of
+    # doc 10k+1 — so exactly n/10 Hamming-0 pairs are planted, and a
+    # random cross-pair needs a 64-bit hash within Hamming 3 of another
+    # (P ~ 2.4e-15/pair: unreachable at ~1e9 pairs). The EXACT pair set
+    # exercises both pigeonhole completeness (no planted pair missed)
+    # and bucket precision (no phantom pair); the timing's subject is
+    # the single payload-hash pass + chunk-bucket join.
+    n_docs = size(s, DOCS)
     media = spark.range(n_docs).select(
         F.col("id").alias("doc_id"),
         F.encode(
@@ -1030,9 +999,9 @@ def main() -> None:
         ).alias("payload"),
     )
     # one execution for both numbers: only the signature table is
-    # persisted inside phash_pairs, so a second action would re-run
-    # the chunk-bucket join and double the recorded wall
-    ph_stats = phash_pairs(media, max_hamming=3).agg(
+    # persisted inside phash_pairs, so a second action would re-run the
+    # chunk-bucket join
+    ph_stats = yield lambda: multimodal.phash_pairs(media, max_hamming=3).agg(
         F.count("*").alias("n_pairs"),
         F.sum(
             (
@@ -1040,22 +1009,446 @@ def main() -> None:
             ).cast("int")
         ).alias("bad"),
     ).collect()[0]
-    timings[f"media_phash_dedup_{n_docs}"] = round(time.perf_counter() - t0, 2)
     assert (ph_stats.bad or 0) == 0 and ph_stats.n_pairs == n_docs // 10, tuple(ph_stats)
 
-    print(
-        json.dumps(
-            {
-                "metric": "stress timings",
-                "unit": "sec",
-                "n_events": n_events,
-                "n_docs": n_docs,
-                "n_stream": n_stream,
-                "near_dup_pairs": n_pairs,
-                "timings": timings,
-            }
+
+# --- stream rows --------------------------------------------------------------
+
+
+class PeakState(StreamingQueryListener):
+    """State-store peaks (rows and bytes, over every state operator) of
+    one query, from its per-trigger progress records. Scanning
+    ``q.recentProgress`` after termination would be lossy: Spark keeps
+    only spark.sql.streaming.numRecentProgressUpdates (~100) entries,
+    fewer than a long availableNow replay's triggers."""
+
+    def __init__(self) -> None:
+        self.peak = {"peak_state_rows": 0, "peak_state_bytes": 0}
+        self.terminated = threading.Event()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        for so in json.loads(event.progress.json).get("stateOperators", []):
+            self.peak["peak_state_rows"] = max(self.peak["peak_state_rows"], so.get("numRowsTotal", 0))
+            self.peak["peak_state_bytes"] = max(
+                self.peak["peak_state_bytes"], so.get("memoryUsedBytes", 0)
+            )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self.terminated.set()
+
+
+def replay(spark, stream, tmp: str) -> dict:
+    """Run ``stream`` (a streaming DataFrame, into the noop sink, or a
+    configured writer) to completion under availableNow on the
+    checkpoint ``tmp``/ckpt and return its state-store peaks. A query
+    still running after 600 s is stopped and fails the row: it must
+    neither record 600 s as a datapoint nor run on under later rows."""
+    if isinstance(stream, DataFrame):
+        stream = stream.writeStream.outputMode("append").format("noop")
+    listener = PeakState()
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            stream.option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(f"stream on {tmp} still running after 600 s")
+        # progress events arrive on the listener's thread; the terminated
+        # event is the last, so every progress update has been folded in
+        listener.terminated.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.peak
+
+
+def manifest_sink(peak: dict):
+    """foreachBatch sink recording the largest emitted frame: a
+    monitor's whole driver-side state. Sink failures are kept in
+    ``peak["err"]`` for the row's check."""
+
+    def sink(df, epoch_id: int) -> None:
+        try:
+            peak["manifest_rows"] = max(peak.get("manifest_rows", 0), df.count())
+        except Exception as exc:
+            peak["err"] = repr(exc)
+
+    return sink
+
+
+@row
+def login_fail_stream(spark, s, tmp):
+    # 200 users, ~75% fails, 200 events/s -> long fail chains
+    src = write_lines(spark.range(size(s, STREAM)).select(csv_lines(
+        F.pmod("id", F.lit(200)),
+        F.lit("ip"),
+        F.when(F.pmod(F.xxhash64("id"), F.lit(4)) == 0, "success").otherwise("fail"),
+        F.lit(BASE_TS) + (F.col("id") / 200).cast("long"),
+    )), os.path.join(tmp, "login"))
+    stream = csv_replay_source(spark, src, LOGIN_EVENT).withWatermark("ts", "1 second")
+    return (yield lambda: replay(spark, stateful.login_fail_stream(stream, max_gap_s=2), tmp))
+
+
+def order_lines(spark, n: int):
+    """n/2 order ids: even ids create+pay, odd ids create only (they time
+    out when the watermark passes create_ts + 900)."""
+    ids = spark.range(n)
+    creates = ids.filter(F.pmod("id", F.lit(2)) == 0).select(csv_lines(
+        (F.col("id") / 2).cast("long"),
+        F.lit("create"),
+        F.lit(""),
+        F.lit(BASE_TS) + (F.col("id") / 100).cast("long"),
+    ))
+    pays = ids.filter(F.pmod("id", F.lit(4)) == 1).select(csv_lines(
+        ((F.col("id") - 1) / 2).cast("long"),
+        F.lit("pay"),
+        F.concat(F.lit("tx"), F.col("id").cast("string")),
+        F.lit(BASE_TS) + (F.col("id") / 100).cast("long") + 30,
+    ))
+    return creates.union(pays)
+
+
+@row
+def order_timeout_stream(spark, s, tmp):
+    src = write_lines(order_lines(spark, size(s, STREAM)), os.path.join(tmp, "orders"))
+    stream = csv_replay_source(spark, src, ORDER_EVENT).withWatermark("ts", "1 second")
+    return (yield lambda: replay(spark, stateful.order_timeout_stream(stream, timeout_s=900), tmp))
+
+
+@row
+def order_timeout_steady_stream(spark, s, tmp):
+    # steady state: n/2 orders within one 900 s timeout, three quarters
+    # never paid (~3n/8 pending at once), replayed as the row's input;
+    # then 20 micro-batches of 200 orders (one file per trigger) on the
+    # same checkpoint. Only those 20 are timed: each carries the whole
+    # pending set while touching few of its keys.
+    n = size(s, STREAM)
+    src = os.path.join(tmp, "steady")
+    os.makedirs(src)
+    rate = n / 2 / 900  # creates per event-second
+
+    def steady_file(name: str, ids: range, mtime: int) -> None:
+        path = os.path.join(src, name)
+        with open(path, "w") as f:
+            for i in ids:
+                ts = BASE_TS + int(i / rate)
+                f.write(f"{i},create,,{ts}\n")
+                if i % 4 == 1:  # a quarter pay 30 s later
+                    f.write(f"{i},pay,tx{i},{ts + 30}\n")
+        os.utime(path, (mtime, mtime))
+
+    steady_file("backlog.csv", range(n // 2), 1)
+    stream = csv_replay_source(
+        spark, src, ORDER_EVENT, max_files_per_trigger=1
+    ).withWatermark("ts", "1 second")
+    steady = stateful.order_timeout_stream(stream, timeout_s=900)
+    replay(spark, steady, tmp)
+    for b in range(20):
+        lo = n // 2 + 200 * b
+        steady_file(f"b{b:02d}.csv", range(lo, lo + 200), 2 + b)
+    return (yield lambda: replay(spark, steady, tmp))
+
+
+@row
+def tx_match_stream(spark, s, tmp):
+    # half the txs get a receipt 5 s later
+    n = size(s, STREAM)
+    txo = write_lines(spark.range(n // 2).select(csv_lines(
+        F.col("id"),
+        F.lit("pay"),
+        F.concat(F.lit("tx"), F.col("id").cast("string")),
+        F.lit(BASE_TS) + (F.col("id") / 100).cast("long"),
+    )), os.path.join(tmp, "txo"))
+    txr = write_lines(spark.range(n // 2).filter(F.pmod("id", F.lit(2)) == 0).select(csv_lines(
+        F.concat(F.lit("tx"), F.col("id").cast("string")),
+        F.lit("wechat"),
+        F.lit(BASE_TS) + (F.col("id") / 100).cast("long") + 5,
+    )), os.path.join(tmp, "txr"))
+    orders = csv_replay_source(spark, txo, ORDER_EVENT).withWatermark("ts", "1 second")
+    receipts = csv_replay_source(spark, txr, RECEIPT_EVENT).withWatermark("ts", "1 second")
+    return (yield lambda: replay(spark, stateful.tx_match_stream(orders, receipts), tmp))
+
+
+@row
+def blacklist_stream(spark, s, tmp):
+    # 100 users x 10 ads = 1000 keys, ~100 clicks per (user, ad) ->
+    # threshold=100 exercises the warn-once transition. ad must be an
+    # INDEPENDENT residue: id % 10 is fully determined by id % 100,
+    # which would collapse the keyspace to 100 keys at 10x the density.
+    src = write_lines(spark.range(size(s, STREAM)).select(csv_lines(
+        F.pmod("id", F.lit(100)),
+        F.pmod(F.xxhash64("id"), F.lit(10)),
+        F.lit("p"),
+        F.lit("c"),
+        F.lit(BASE_TS) + (F.col("id") / 1000).cast("long"),
+    )), os.path.join(tmp, "clicks"))
+    clicks = csv_replay_source(spark, src, AD_CLICK).withWatermark("ts", "1 second")
+    return (yield lambda: replay(spark, stateful.blacklist_stream(clicks, threshold=100), tmp))
+
+
+@row
+def dedup_stream(spark, s, tmp):
+    # exact streaming dedup (dropDuplicatesWithinWatermark): every key
+    # delivered twice 1 s apart -> n/2 survivors; state = the
+    # per-key-hash dedup store the watermark evicts
+    n = size(s, STREAM)
+    src = write_lines(spark.range(n).select(csv_lines(
+        F.pmod("id", F.lit(n // 2)),
+        F.lit("ip"),
+        F.lit("fail"),
+        F.lit(BASE_TS)
+        + (F.pmod("id", F.lit(n // 2)) / 200).cast("long")
+        + F.when(F.col("id") >= n // 2, 1).otherwise(0),
+    )), os.path.join(tmp, "dedup"))
+    stream = csv_replay_source(spark, src, LOGIN_EVENT)
+    return (yield lambda: replay(
+        spark, jobs.dedup_stream(stream, ["user_id"], delay="10 seconds"), tmp
+    ))
+
+
+@row
+def session_stats_stream(spark, s, tmp):
+    # native session windows (session_window merge state): 2000 users,
+    # 5-event sessions at 60 s spacing separated by 1 h gaps; the
+    # watermark closes sessions as the replay advances, so peak state =
+    # concurrently-open sessions, not total sessions
+    seq = (F.col("id") / 2000).cast("long")
+    src = write_lines(spark.range(size(s, STREAM)).select(csv_lines(
+        F.pmod("id", F.lit(2000)),
+        F.lit("ip"),
+        F.lit("fail"),
+        F.lit(BASE_TS) + (seq / 5).cast("long") * 3600 + F.pmod(seq, F.lit(5)) * 60,
+    )), os.path.join(tmp, "sessions"))
+    stream = csv_replay_source(spark, src, LOGIN_EVENT)
+    return (yield lambda: replay(
+        spark, jobs.session_stats_stream(stream, gap="10 minutes", delay="1 second"), tmp
+    ))
+
+
+# foreachBatch monitors: state lives driver-side as a sketch, so the
+# metric is the PEAK EMITTED MANIFEST (rows = the whole driver state),
+# not stateOperators. The input is 4 files replayed one per trigger ->
+# 4 micro-batches, so the driver-side merge path runs. Skewed keys in
+# the ip column: 20 hot keys carry ~30% of the stream, the tail spreads
+# over ~50k keys — the regime where exact per-key counting state would
+# be 50k rows but the MG/CM sketches stay at k / depth*width entries.
+MONITORS = {
+    "heavy_hitters_stream": lambda s, sink: jobs.heavy_hitters_stream(s, sink, col="ip", k=16),
+    "cms_stream": lambda s, sink: jobs.cms_stream(
+        s, sink, col="ip", watch=[f"k{i}" for i in range(20)], width=512, depth=4,
+    ),
+    "reservoir_stream": lambda s, sink: jobs.reservoir_stream(
+        s, sink, id_col="user_id",
+        weight_sql="CAST(pmod(user_id, 97) + 1 AS DOUBLE)",
+        stratum_col="login_state", m=64,
+    ),
+    "kmv_stream": lambda s, sink: jobs.kmv_stream(
+        s, sink, set_col="login_state", val_sql="CAST(user_id AS STRING)", k=128,
+    ),
+    # quantiles of a numeric stream per set: user_id mod 997 as the
+    # value domain (the ~uniform shape the batch rollup's rank-bound
+    # pytest plants)
+    "kll_stream": lambda s, sink: jobs.kll_stream(
+        s.withColumn("v", F.pmod("user_id", F.lit(997)).cast("double")),
+        sink, set_col="login_state", val_col="v", k=200,
+    ),
+    # an 8-dim vector synthesized from the user id, so the explode+sum
+    # path runs at stream volume; state = 2 strata x 8 dims of long pairs
+    "centroid_drift_stream": lambda s, sink: jobs.centroid_drift_stream(
+        s.withColumn(
+            "embedding",
+            F.expr(
+                "transform(sequence(0, 7), j -> CAST(pmod(xxhash64("
+                "user_id, j), 200) AS FLOAT) / 100.0 - 1.0)"
+            ),
+        ),
+        sink, group_col="login_state",
+    ),
+    # the ingest-contract monitor: one distributed agg per micro-batch,
+    # driver state = one number per counter
+    "dq_monitor_stream": lambda s, sink: jobs.dq_monitor_stream(
+        s, sink,
+        spec=(
+            ("completeness", "user_id"),
+            ("completeness", "login_state"),
+            ("min", "user_id", 0.0),
+            ("max", "user_id", 1e12),
+            ("accepted", "login_state", ("fail", "success")),
+        ),
+    ),
+    # the privacy-gate monitor: user_id mod 20 as the band domain,
+    # driver state = 2 classes x 20 bands of longs
+    "t_closeness_stream": lambda s, sink: jobs.t_closeness_stream(
+        s.withColumn("band", F.pmod("user_id", F.lit(20)).cast("long")),
+        sink, quasi_cols=["login_state"], sensitive_col="band",
+    ),
+}
+
+
+def monitor_row(build, spark, s, tmp):
+    key = F.when(
+        F.pmod(F.xxhash64("id"), F.lit(10)) < 3, F.pmod("id", F.lit(20))
+    ).otherwise(F.pmod(F.xxhash64("id", F.lit(7)), F.lit(50_000)) + 1000)
+    src = write_lines(spark.range(size(s, STREAM)).select(csv_lines(
+        F.col("id"),  # unique user_id (reservoir contract)
+        F.concat(F.lit("k"), key.cast("string")),  # sketch key in ip
+        F.when(F.pmod("id", F.lit(2)) == 0, "fail").otherwise("success"),
+        F.lit(BASE_TS) + (F.col("id") / 200).cast("long"),
+    )), os.path.join(tmp, "monitor"))
+    stream = csv_replay_source(spark, src, LOGIN_EVENT, max_files_per_trigger=1)
+    peak: dict = {}
+    yield lambda: replay(spark, build(stream, manifest_sink(peak)), tmp)
+    assert not peak.get("err"), peak["err"]
+    return {"driver_manifest_rows": peak.get("manifest_rows", 0)}
+
+
+for _name, _build in MONITORS.items():
+    row(functools.partial(monitor_row, _build), _name)
+
+
+def json_stream(spark, path: str):
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .json(path)
     )
+
+
+@row
+def media_phash_stream(spark, s, tmp):
+    # the media twin of incremental dedup: ~n/50 payloads (~180 B each)
+    # replayed in 4 micro-batches against a 1000-payload reference whose
+    # signature index is hashed ONCE before the stream starts (the
+    # stored-index pattern); half of each batch byte-collides with a
+    # reference payload (is_novel=0), half is fresh
+    def payload(key):
+        # deterministic ~180-byte payload, distinct per key value,
+        # >= PHASH_MIN_BYTES so every row is hashable
+        return F.concat_ws(
+            "-",
+            F.lit("payload"),
+            key.cast("string"),
+            F.repeat(F.concat(F.lit("x"), F.md5(key.cast("string"))), 5),
+        )
+
+    mkey = F.pmod(F.xxhash64("id"), F.lit(2000))
+    src = write_lines(spark.range(max(size(s, STREAM) // 50, 2_000)).select(
+        F.to_json(F.struct(F.col("id").alias("doc_id"), payload(mkey).alias("text"))).alias("value")
+    ), os.path.join(tmp, "media"))
+    ref = spark.range(1000).select(
+        F.col("id").alias("doc_id"),
+        F.encode(payload(F.col("id")), "UTF-8").alias("payload"),
+    )
+    media = json_stream(spark, src).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
+    peak: dict = {}
+    yield lambda: replay(spark, jobs.media_phash_stream(media, ref, manifest_sink(peak)), tmp)
+    assert not peak.get("err"), peak["err"]
+    return {"peak_batch_verdicts": peak.get("manifest_rows", 0)}
+
+
+@row
+def winnow_decontaminate_stream(spark, s, tmp):
+    # document feed vs a stored eval fingerprint index (the text twin of
+    # the media filter). Half of each batch embeds a verbatim 19-token
+    # run lifted from one of 500 eval docs (>= w + k - 1, so the
+    # guarantee fires); the other half is clean disjoint vocabulary.
+    def run(tag, key):
+        # 19 shard-tagged tokens — the verbatim run documents share
+        return F.concat_ws(
+            " ", *[F.concat(F.lit(f"{tag}t{i}e"), key.cast("string")) for i in range(19)]
+        )
+
+    eval_docs = spark.range(500).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("evalhead"), run("ev", F.col("id")), F.lit("evaltail")).alias("text"),
+    )
+    leaky = F.concat_ws(" ", F.lit("pre"), run("ev", F.pmod(F.xxhash64("id"), F.lit(500))), F.lit("post"))
+    src = write_lines(spark.range(max(size(s, STREAM) // 50, 2_000)).select(
+        F.to_json(
+            F.struct(
+                F.col("id").alias("doc_id"),
+                F.when(F.pmod("id", F.lit(2)) == 0, leaky).otherwise(run("cl", F.col("id"))).alias("text"),
+            )
+        ).alias("value")
+    ), os.path.join(tmp, "decon_docs"))
+    # stored-index production shape: fingerprint the eval set once
+    idx = text.winnow_eval_index(eval_docs).persist()
+    idx.count()
+    peak: dict = {}
+    yield lambda: replay(spark, jobs.winnow_decontaminate_stream(
+        json_stream(spark, src), None, manifest_sink(peak), eval_index=idx
+    ), tmp)
+    assert not peak.get("err"), peak["err"]
+    return {"peak_batch_flagged": peak.get("manifest_rows", 0)}
+
+
+@row
+def sequence_match_stream(spark, s, tmp):
+    # timer arming: n_seq keys each hold ONE live chain while ~40
+    # filler-only micro-batches advance the watermark. Timers armed at
+    # the earliest actionable instant mean those batches fire NO keys
+    # (nothing is actionable until the success events land); arming at
+    # watermark+1s re-fired every live key every batch — O(keys x
+    # batches) state-function invocations. The wall time is the
+    # observable.
+    n_seq = size(s, 10_000, step=1)
+    src = os.path.join(tmp, "seq")
+    os.makedirs(src)
+
+    def write_file(name: str, lines: list[str], order: int) -> None:
+        p = os.path.join(src, name)
+        with open(p, "w") as f:
+            f.write("\n".join(lines) + "\n")
+        os.utime(p, (1_000_000 + order, 1_000_000 + order))  # replay order
+
+    write_file("b000.csv", [f"{u},ip,fail,{BASE_TS}" for u in range(n_seq)], 0)
+    for i in range(40):  # one sentinel line per file -> one batch each
+        write_file(f"b{i + 1:03d}.csv", [f"999999,ip,success,{BASE_TS + 100 + i * 10}"], i + 1)
+    write_file("b998.csv", [f"{u},ip,success,{BASE_TS + 600}" for u in range(n_seq)], 98)
+    # trailing sentinel: watermark past the successes
+    write_file("b999.csv", [f"999999,ip,success,{BASE_TS + 5000}"], 99)
+
+    def matches():
+        stream = csv_replay_source(
+            spark, src, LOGIN_EVENT, max_files_per_trigger=1
+        ).withWatermark("ts", "1 second")
+        found = stateful.sequence_match_stream(
+            stream, "user_id", "ts",
+            [("fail", "login_state = 'fail'"), ("ok", "login_state = 'success'")],
+            within_s=3600,
+        )
+        return replay(spark, found.writeStream.outputMode("append").format("memory")
+                      .queryName("seq_stress"), tmp)
+
+    yield matches
+    n_matches = spark.sql("SELECT count(*) c FROM seq_stress").collect()[0].c
+    spark.catalog.dropTempView("seq_stress")
+    assert n_matches == n_seq, n_matches
+
+
+def main() -> None:
+    scale = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
+    spark = get_spark(app_name="stress")
+    spark.sparkContext.setLogLevel("ERROR")
+    timings = {}
+    for name in ROWS:
+        rec = run_row(spark, name, scale)
+        print(json.dumps(rec), flush=True)
+        timings[name] = rec["wall_s"]
+    print(json.dumps({
+        "metric": "stress timings", "unit": "sec", "scale": scale, "timings": timings,
+        "fuzzy_hot_block_cap_ratio": round(
+            timings["fuzzy_hot_block_uncapped"] / timings["fuzzy_hot_block_capped"], 2
+        ),
+    }))
 
 
 def _build_scaled_dir(spark, src_dir: str, out_dir: str, replicas: int) -> None:
@@ -1227,9 +1620,7 @@ def curve_main() -> None:
     Usage: python tools/stress.py --curve [replicas]
     """
     import math
-    import tempfile
 
-    from flink_kafka_spark import observe
     from flink_kafka_spark.queries import all_queries
 
     replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -1238,7 +1629,7 @@ def curve_main() -> None:
     qs = all_queries()
 
     def timed(name, sf_dir):
-        return round(observe.run(spark, qs[name], sf_dir)["wall_s"], 2)
+        return round(measure(spark, qs[name], sf_dir)["wall_s"], 2)
 
     results: dict[str, dict] = {}
     with tempfile.TemporaryDirectory() as td:
