@@ -119,32 +119,55 @@ def ngram_jaccard_pairs(
       construction. Raise ``stop_df`` (or inspect
       :func:`shingle_prune_stats`) when the corpus has heavy shingle
       reuse; MinHash+LSH is the production path for unknown corpora."""
+    pairs = _shared_key_pairs(shingles(df, id_col, n), id_col, "shingle", stop_df)
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")), 6
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _shared_key_pairs(
+    items: DataFrame, id_col: str, key_col: str, stop_df: int
+) -> DataFrame:
+    """The bucket-pairing plan shared by :func:`ngram_jaccard_pairs`,
+    :func:`containment_pairs` and
+    :func:`~flink_kafka_spark.operators.text.winnow_overlap_pairs`:
+    every unordered pair ``(id_a < id_b)`` of ids that share a
+    ``key_col`` value of ``items (id_col, key_col)``, unique per (id,
+    key), with ``n_inter`` = the shared keys counted over keys held by
+    at most ``stop_df`` ids, and ``size_a`` / ``size_b`` = each id's
+    FULL key count. Callers score from these three columns."""
     from ..caching import track
 
     # lazy cache, two consumers (sizes + buckets): the first stage to
     # run fills it and the block-manager's per-block locks make the
     # concurrent second wait-and-read — an eager count() would only
     # spend an extra job (same pattern as the MinHash sets persist)
-    sh = track(shingles(df, id_col, n).cache())
+    items = track(items.cache())
     # sizes persists too (r19): it joins the pair frame TWICE (the
     # id_a and id_b renames), and the rename above the aggregate
     # defeats exchange reuse — unpersisted, each side re-scanned the
-    # corpus-sized shingle cache and re-ran the groupBy for a frame
-    # that is one narrow row per doc (the signature-table class)
+    # corpus-sized item cache and re-ran the groupBy for a frame that
+    # is one narrow row per id (the signature-table class)
     sizes = track(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")).persist()
+        items.groupBy(id_col).agg(F.count(F.lit(1)).alias("n")).persist()
     )
     # Intersection counts via single-shuffle bucket pairing (the same
-    # shape as the MinHash band buckets): group each shingle's ids,
-    # drop stop-shingle buckets (df > stop_df) BEFORE any fan-out,
-    # stream ordered pairs out of the sorted id array with nested
-    # generators (peak memory O(bucket), bounded by stop_df), then
-    # count shared shingles per pair. The previous formulation
-    # (per-shingle df groupBy + join back + a×b self-join) shuffled
-    # the corpus-sized (id, shingle) frame three times for the same
-    # pair multiset.
+    # shape as the MinHash band buckets): group each key's ids, drop
+    # stop-key buckets (df > stop_df) BEFORE any fan-out, stream
+    # ordered pairs out of the sorted id array with nested generators
+    # (peak memory O(bucket), bounded by stop_df), then count shared
+    # keys per pair. The previous formulation (per-key df groupBy +
+    # join back + a×b self-join) shuffled the corpus-sized (id, key)
+    # frame three times for the same pair multiset.
     buckets = (
-        sh.groupBy("shingle")
+        items.groupBy(key_col)
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
     )
@@ -154,23 +177,12 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_shingles", "size_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_shingles", "size_b")
-    # no broadcast hint on the sizes joins: sizes is one row per DOC
+    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n", "size_a")
+    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n", "size_b")
+    # no broadcast hint on the sizes joins: sizes is one row per id
     # (corpus-sized at scale) while inter is the near-dup pair set
     # (small) — AQE broadcasts the pair side when it fits
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return inter.join(sa, "id_a").join(sb, "id_b")
 
 
 def containment_pairs(
@@ -204,33 +216,12 @@ def containment_pairs(
     join is doc-count-sized on the build side but pair-sized on the
     probe side, and AQE broadcasts the pair side when it fits —
     identical shape to the Jaccard twin, no new scale surface."""
-    from ..caching import track
-
-    sh = track(shingles(df, id_col, n).cache())
-    # persisted for the same two-rename reason as the Jaccard twin
-    sizes = track(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")).persist()
-    )
-    buckets = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
-    )
-    inter = (
-        buckets.select("ids", F.posexplode("ids").alias("_i", "id_a"))
-        .select("id_a", F.expr("explode(slice(ids, _i + 2, size(ids)))").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_shingles", "size_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_shingles", "size_b")
+    pairs = _shared_key_pairs(shingles(df, id_col, n), id_col, "shingle", stop_df)
     # floor-based round-half-up: n_inter/min(sizes) lands exactly on
     # decimal half-points (e.g. 1/2), where Spark's and DuckDB's
     # round() diverge (same convention as source_overlap_matrix)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
+        pairs.withColumn(
             "containment",
             F.expr("floor(n_inter / least(size_a, size_b) * 1000000 + 0.5) / 1000000"),
         )
@@ -1033,7 +1024,6 @@ def chunked_hamming_pairs(
     chunk_cols: "list[str]",
     max_hamming: int = 3,
     other: "DataFrame | None" = None,
-    broadcast_sig: bool = False,
 ) -> DataFrame:
     """Shared pigeonhole pair search over a signature table whose hash
     is pre-split into equal-width integer ``chunk_cols``: any pair
@@ -1048,15 +1038,12 @@ def chunked_hamming_pairs(
     (→ ``id_b``, same ``id_col``/``chunk_cols`` schema), never within
     either side — the incremental shape (tonight's batch against the
     stored reference index). No ordering filter applies; callers with
-    overlapping id spaces own that semantics. ``broadcast_sig=True``
-    hints ``sig``'s exploded buckets broadcast onto ``other`` — right
-    when the batch is genuinely small against a huge reference, but
-    OFF by default: a hint is a promise AQE can't retract, and a
-    corpus-sized "batch" (the registered parity-split query, a
-    backfill run) would die on the 8 GB broadcast ceiling instead of
-    degrading to a shuffle (the pagerank ``broadcast_ranks``
-    precedent). Unhinted, AQE still broadcasts a small side at
-    runtime.
+    overlapping id spaces own that semantics. The bucket join carries
+    no broadcast hint: either side can be as large as the corpus (the
+    registered parity-split query, a backfill run), and a hint is a
+    promise AQE can't retract — it would die on the 8 GB broadcast
+    ceiling instead of degrading to a shuffle. AQE still broadcasts a
+    side that turns out small at runtime.
 
     Returns (id_a, id_b, hamming) distinct; Hamming = summed
     ``bit_count(xor)`` over the chunk pairs."""
@@ -1082,17 +1069,9 @@ def chunked_hamming_pairs(
     a = _explode(sig, "a", "id_a")
     b = _explode(other if other is not None else sig, "b", "id_b")
     hamming = sum(F.bit_count(F.expr(f"_a{c} ^ _b{c}")) for c in range(k))
+    joined = a.join(b, ["chunk_id", "chunk"])
     if other is None:
-        joined = a.join(b, ["chunk_id", "chunk"]).filter(
-            F.col("id_a") < F.col("id_b")
-        )
-    else:
-        # post-persist stats are unknown, so the STATIC cross plan is
-        # an SMJ; at runtime AQE broadcasts the small side. The hint
-        # (opt-in, see docstring) forces it for known-small batches.
-        joined = (a.hint("broadcast") if broadcast_sig else a).join(
-            b, ["chunk_id", "chunk"]
-        )
+        joined = joined.filter(F.col("id_a") < F.col("id_b"))
     # Hamming filter BEFORE the pair dedup: a pair colliding in k of
     # the chunks appears k times, so the distinct must shuffle
     # whatever precedes it — filtering first means it shuffles only

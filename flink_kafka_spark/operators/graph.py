@@ -27,8 +27,6 @@ def pagerank(
     iterations: int = 12,
     damping_pct: int = 85,
     unit: int = 1_000_000_000,
-    broadcast_ranks: bool = False,
-    broadcast_wsum: bool = False,
 ) -> DataFrame:
     """Weighted PageRank over ``edges (src, dst, w BIGINT)`` and
     ``nodes (id_col)``: ``iterations`` fixed rounds of
@@ -55,17 +53,15 @@ def pagerank(
     Scale shape: the weighted-out-degree join is precomputed ONCE into
     a persisted (src, dst, w, wsum) frame; each round then costs one
     rank-frame join onto it plus one edges-sized groupBy(dst) shuffle —
-    the inherent PageRank cost. ``broadcast_ranks`` controls the
-    rank-side join strategy and defaults to FALSE: with no hint the
-    planner (and AQE at runtime) picks the join, which localizes tiny
-    rank frames anyway and — the scale contract — never plans a
-    driver-side broadcast build of a billion-node rank frame. The
-    hinted path additionally costs one broadcast-collect JOB per round
-    (the hint forces a collect even when the frame is already cached),
-    measured 6.6 s vs 3.8 s for the 12-round loop at sf0.1 — so the
-    hint is off even for the bounded source-level query, and
-    ``broadcast_ranks=True`` exists only for callers who have measured
-    a plan where the static SMJ shuffle on the edge side dominates.
+    the inherent PageRank cost. The rank-side join carries no
+    broadcast hint: the rank frame is node-count-sized, so the planner
+    (and AQE at runtime) picks the join, which localizes tiny rank
+    frames anyway and — the scale contract — never plans a driver-side
+    broadcast build of a billion-node rank frame. A hint would also
+    cost one broadcast-collect JOB per round (it forces a collect even
+    when the frame is already cached), measured 6.6 s vs 3.8 s for the
+    12-round loop at sf0.1, so even the bounded source-level query
+    runs unhinted.
     N is a single-int driver scalar (same justification as the CC
     convergence probe). Rank frames are LAZY-localCheckpointed with an
     explicit count() as the materializing action (the CC loop's
@@ -121,17 +117,14 @@ def pagerank(
     teleport = (100 - damping_pct) * base // 100
 
     # ONE-TIME setup join of the per-src weight sums onto the edges.
-    # No broadcast hint by default (r16, the broadcast_ranks/e266ddc
-    # discipline): wsum is NODE-COUNT-sized, so a forced broadcast is
-    # a driver collect that dies on the 8 GB ceiling for a
-    # billion-node graph, while AQE broadcasts it at runtime whenever
+    # No broadcast hint (the rank join's discipline): wsum is
+    # NODE-COUNT-sized, so a forced broadcast is a driver collect that
+    # dies on the 8 GB ceiling for a billion-node graph, while AQE
+    # broadcasts it at runtime whenever
     # it is genuinely small (the bounded source-level query here) and
     # degrades to a co-partitioned shuffle otherwise — and both edge
     # frames are persisted, so either plan executes exactly once.
-    # ``broadcast_wsum=True`` exists for callers who measured a static
-    # plan where the SMJ sort on the edge side dominates setup.
     wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    wsum_side = F.broadcast(wsum) if broadcast_wsum else wsum
     # pre-partitioned on src before the persist (r18, guide §2.4
     # "two operations keyed the same way can share one exchange") —
     # the CC loop's symmetrized-edge layout applied here: every round
@@ -141,7 +134,7 @@ def pagerank(
     # frame each of the `iterations` rounds; one extra setup exchange
     # buys `iterations` elided ones
     e = track(
-        edges.join(wsum_side, "src")
+        edges.join(wsum, "src")
         .select("src", "dst", "w", "wsum")
         .repartition("src")
         .persist()
@@ -151,12 +144,11 @@ def pagerank(
     # Checkpoint every CHK_EVERY rounds, not every round: the cut only
     # needs to keep the analyzed tree SHALLOW (depth <= 3 is cheap for
     # Catalyst), and results are identical wherever the lineage is cut
-    # (pure integer arithmetic). With the rank broadcast hint off, the
+    # (pure integer arithmetic). With no rank broadcast hint, the
     # loop's only job barriers are the CHK_EVERY materializations (4
     # for 12 rounds); measured cadence sweep at sf0.1 (3 trials, min):
     # chk2 4.0 s, chk3 3.7 s, chk4 3.7 s, chk6 4.3 s — flat around 3,
-    # so CHK_EVERY=3 stands. (The hinted loop pays a broadcast-collect
-    # job per round on top: 6.6 s at the same cadence.)
+    # so CHK_EVERY=3 stands.
     CHK_EVERY = 3
     # zero-contribution rows folded into the per-round groupBy replace
     # the old `node_frame LEFT JOIN broadcast(summed)`: same integer
@@ -168,8 +160,7 @@ def pagerank(
     for i in range(iterations):
         # one round: the rank-side join onto the persisted edge frame,
         # then the groupBy(dst) fold with the zero rows unioned in
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = e.join(rank_side, e["src"] == ranks["node"]).select(
+        contrib = e.join(ranks, e["src"] == ranks["node"]).select(
             F.col("dst").alias("node"), F.expr("(r * w) div wsum").alias("c")
         )
         ranks = (

@@ -352,7 +352,6 @@ def phash_incremental(
     reference: DataFrame,
     max_hamming: int = 3,
     ref_sig: "DataFrame | None" = None,
-    broadcast_batch: bool = False,
 ) -> DataFrame:
     """Incremental media dedup: every hashable batch payload flagged
     novel or near-duplicate of the reference corpus by perceptual
@@ -375,11 +374,11 @@ def phash_incremental(
     the 5-int signatures through the cross join; candidates are
     chunk-bucket collisions BETWEEN the corpora (pigeonhole-complete
     for Hamming <= 3, never all-pairs, never within either side).
-    ``broadcast_batch=True`` additionally hints the batch-side buckets
-    broadcast onto the reference — opt-in for genuinely small nightly
-    batches; the default lets AQE pick, so a corpus-sized "batch" (a
-    backfill, the parity-split registered query) degrades to a shuffle
-    instead of dying on the broadcast ceiling."""
+    The bucket join carries no broadcast hint: a batch can be as large
+    as the corpus (a backfill, the parity-split registered query), so
+    AQE picks — a small nightly batch is broadcast at runtime, a
+    corpus-sized one degrades to a shuffle instead of dying on the
+    broadcast ceiling."""
     from ..caching import track
     from .dedup import chunked_hamming_pairs
 
@@ -393,10 +392,7 @@ def phash_incremental(
         ref_sig = perceptual_hash(reference)
     # two consumers (chunk join + verdict base): hash the batch once
     bsig = track(perceptual_hash(batch).persist())
-    matches = chunked_hamming_pairs(
-        bsig, "doc_id", cols, max_hamming, other=ref_sig,
-        broadcast_sig=broadcast_batch,
-    )
+    matches = chunked_hamming_pairs(bsig, "doc_id", cols, max_hamming, other=ref_sig)
     per = matches.groupBy("id_a").agg(
         F.count(F.lit(1)).cast("long").alias("n_ref_dups"),
         F.min("hamming").cast("int").alias("best_hamming"),

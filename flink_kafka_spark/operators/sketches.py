@@ -49,18 +49,21 @@ def mg_partials(df: DataFrame, col: str, k: int) -> DataFrame:
     ``(NULL, n)`` row holding the partition's non-null row count (the
     sketch never holds a NULL item, so the two cannot collide) — the
     narrow first half of :func:`misra_gries`. The per-partition
-    histogram is a C-speed ``value_counts``, compressed once. Summing
-    the partials by item and applying :func:`_compress` is the whole
-    combine: the PODS'12 merge of k-summaries, equal to
+    histogram is a C-speed ``value_counts`` per Arrow batch, summed in
+    ONE unsorted groupby over their concatenation (adding each batch
+    into a running Series re-aligns the whole accumulated index every
+    time, batches x distinct keys; order is free, as :func:`_compress`
+    sorts before it cuts and consumers sum by item), and compressed
+    once. Summing the partials by item and applying :func:`_compress`
+    is the whole combine: the PODS'12 merge of k-summaries, equal to
     :func:`misra_gries`' distributed re-compression."""
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.Series | None = None
-        for pdf in batches:
-            c = pdf[col].value_counts()
-            acc = c if acc is None else acc.add(c, fill_value=0)
-        if acc is not None and len(acc):
-            acc = acc.astype("int64")
+        counts = [pdf[col].value_counts() for pdf in batches]
+        if not counts:
+            return
+        acc = pd.concat(counts).groupby(level=0, sort=False).sum().astype("int64")
+        if len(acc):
             part = _compress(acc, k)
             yield pd.DataFrame(
                 {

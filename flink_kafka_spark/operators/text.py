@@ -580,43 +580,28 @@ def winnow_overlap_pairs(
     sizes join is doc-count-sized on the build side and pair-sized on
     the probe side (AQE broadcasts the pair side when it fits) —
     byte-for-byte the containment_pairs shape over smaller input."""
-    from ..caching import track
+    from .dedup import _shared_key_pairs
 
-    fps = track(
+    fps = (
         winnow_fingerprints(df, id_col, text_col, k, w)
         .select(id_col, "fp_hash")
         .distinct()
-        .cache()
     )
-    # sizes persists too (r19): it joins the pair frame twice (id_a /
-    # id_b renames) and the rename defeats exchange reuse — each side
-    # otherwise re-scans the corpus-sized fps cache for a one-narrow-
-    # row-per-doc frame (the bucket-pairing family's shared fix)
-    sizes = track(
-        fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp")).persist()
-    )
-    buckets = (
-        fps.groupBy("fp_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
-    )
-    inter = (
-        buckets.select("ids", F.posexplode("ids").alias("_i", "id_a"))
-        .select("id_a", F.expr("explode(slice(ids, _i + 2, size(ids)))").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_fp", "fp_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_fp", "fp_b")
+    # the min_shared filter is on the pair count alone, so the
+    # optimizer pushes it below the sizes joins
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "overlap",
-            F.expr("floor(n_shared / least(fp_a, fp_b) * 1000000 + 0.5) / 1000000"),
+        _shared_key_pairs(fps, id_col, "fp_hash", stop_df)
+        .filter(F.col("n_inter") >= min_shared)
+        .select(
+            "id_a",
+            "id_b",
+            F.col("n_inter").alias("n_shared"),
+            F.col("size_a").alias("fp_a"),
+            F.col("size_b").alias("fp_b"),
+            F.expr(
+                "floor(n_inter / least(size_a, size_b) * 1000000 + 0.5) / 1000000"
+            ).alias("overlap"),
         )
-        .select("id_a", "id_b", "n_shared", "fp_a", "fp_b", "overlap")
     )
 
 
@@ -648,7 +633,6 @@ def winnow_decontaminate_multi(
     text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
-    broadcast_eval: bool = False,
 ) -> DataFrame:
     """Decontaminate ONE training corpus against MANY benchmarks in a
     single pass — the shape a production pre-training pipeline
@@ -673,9 +657,9 @@ def winnow_decontaminate_multi(
 
     Scale: identical to the single detector — the train side is the
     zero-shuffle fingerprint pipeline plus one per-doc distinct, the
-    index is benchmarks-sized (AQE broadcasts it;
-    ``broadcast_eval=True`` forces the hint), and everything after
-    the join is hit-sized, now keyed by (doc, bench) instead of doc.
+    index is benchmarks-sized (AQE broadcasts it at runtime; no hint),
+    and everything after the join is hit-sized, now keyed by (doc,
+    bench) instead of doc.
     The w + k - 1 verbatim-run guarantee applies per benchmark."""
     from ..caching import track
 
@@ -684,8 +668,6 @@ def winnow_decontaminate_multi(
             f"winnow_decontaminate_multi: id_col={id_col!r} collides with an "
             "internal column of the eval index — rename the id column first"
         )
-    if broadcast_eval:
-        eval_index = F.broadcast(eval_index)
     t_fps = (
         winnow_fingerprints(train, id_col, text_col, k, w)
         .select(id_col, "fp_hash")
@@ -716,7 +698,6 @@ def winnow_decontaminate(
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     eval_index: DataFrame | None = None,
-    broadcast_eval: bool = False,
 ) -> DataFrame:
     """Train-vs-eval decontamination on winnowing fingerprints: every
     training document sharing at least one winnowing-selected shingle
@@ -746,10 +727,9 @@ def winnow_decontaminate(
     Scale (100 TB train, benchmark-sized eval): the train side is the
     zero-shuffle fingerprint pipeline plus one per-doc distinct; the
     join key is a 40-bit hash, the eval index is benchmark-sized so
-    AQE broadcasts it (``broadcast_eval=True`` forces the hint for
-    pipelines that disable AQE); everything after the join is
-    pair-sized — two narrow aggregations on the matched ids, never on
-    the corpus. Text never shuffles."""
+    AQE broadcasts it at runtime from its measured size (no hint);
+    everything after the join is pair-sized — two narrow aggregations
+    on the matched ids, never on the corpus. Text never shuffles."""
     from ..caching import track
 
     if id_col in ("eval_id", "fp_hash"):
@@ -763,8 +743,6 @@ def winnow_decontaminate(
                 "winnow_decontaminate: pass eval_df or a stored eval_index"
             )
         eval_index = winnow_eval_index(eval_df, id_col, text_col, k, w)
-    if broadcast_eval:
-        eval_index = F.broadcast(eval_index)
     t_fps = (
         winnow_fingerprints(train, id_col, text_col, k, w)
         .select(id_col, "fp_hash")
@@ -1009,7 +987,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     k: int = 3,
     doc_filter: "Column | None" = None,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Top-k characteristic terms per document by tf·idf with a
     RATIONAL idf (N/df instead of log(N/df)): the ranking is the same
@@ -1035,17 +1012,13 @@ def tfidf_top_terms(
     inverted_index ``terms`` discipline).
 
     SCALE CONTRACT of the filtered branch (the multi_query_search
-    bounded-batch discipline): ``broadcast_vocab=True`` (default)
-    broadcast-hints the candidate-term semi filter and the dfreq
-    probe, which is right ONLY while the filter keeps a bounded doc
-    batch whose distinct vocabulary fits an executor — a broad
-    filter makes both frames corpus-vocabulary-sized and the hints
-    would force a driver-side collect of the whole vocabulary. For
-    wide filters pass ``broadcast_vocab=False``: the semi-join
-    pruning is kept but the join strategy is left to the planner —
-    AQE still broadcasts at runtime when the measured build side is
-    small, and degrades to a shuffle join instead of an OOM when it
-    is not.
+    bounded-batch discipline): the candidate-term semi filter and the
+    dfreq probe are broadcast-hinted, because both are bounded by the
+    filtered docs' distinct vocabulary. ``doc_filter`` must keep a
+    bounded doc batch whose vocabulary fits an executor — the one
+    engine caller, :func:`multi_query_search`, passes such a batch. A
+    broad filter makes both frames corpus-vocabulary-sized; rank the
+    unfiltered corpus instead and filter the output.
 
     PRECONDITION (both branches' df and inverted_index's dfreq window
     share it): ``id_col`` is unique — df counts one posting row per
@@ -1072,9 +1045,7 @@ def tfidf_top_terms(
             .groupBy(id_col, "n_tokens", "term")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        cand_terms = tc.select("term").distinct()
-        if broadcast_vocab:
-            cand_terms = F.broadcast(cand_terms)
+        cand_terms = F.broadcast(tc.select("term").distinct())
         # corpus df for candidate terms only: postings are unique per
         # (doc, term) by construction (array_distinct), so the count
         # needs no distinct shuffle; the semi filter prunes the
@@ -1087,7 +1058,7 @@ def tfidf_top_terms(
         )
         # dfreq is bounded by the filtered docs' vocabulary (see the
         # scale contract above)
-        scored = tc.join(F.broadcast(dfreq) if broadcast_vocab else dfreq, "term")
+        scored = tc.join(F.broadcast(dfreq), "term")
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     scored = scored.crossJoin(F.broadcast(n_docs)).withColumn(
         "_score", (F.col("cnt") * F.col("n_docs")) / (F.col("n_tokens") * F.col("dfreq"))

@@ -17,10 +17,8 @@ Scale design (100 TB):
 - The observed frame the grid left-joins is the POST-aggregation
   (key, bucket) frame, whose size is capped by the grid itself, so the
   broadcast hint is bounded by |keys| x |buckets| — the resample
-  resolution the caller chose — never by the corpus. For a resolution
-  too fine to broadcast (1 s buckets x 1 M keys), pass
-  ``broadcast_obs=False`` (every public entry point threads it) and
-  the same plan runs as a co-partitioned shuffle join on (key, bucket).
+  resolution the caller chose — never by the corpus. The hint is
+  therefore unconditional: the side is bounded by construction.
 - Forward-fill is ONE window pass per key (``last(..., ignorenulls)``
   over an unbounded-preceding frame), so the only post-grid exchange
   is the per-key sort — again grid-sized, not corpus-sized. Per-key
@@ -49,7 +47,6 @@ def _grid_obs(
     ts_col: str,
     value_col: str,
     step_s: int,
-    broadcast_obs: bool = True,
 ) -> DataFrame:
     """Shared grid machinery for both resample modes: the per-(key,
     bucket) count/sum aggregate (persisted — the grid-capped frame is
@@ -78,10 +75,10 @@ def _grid_obs(
         )
         .persist()
     )
-    return _densify(obs, step_s, broadcast_obs)
+    return _densify(obs, step_s)
 
 
-def _densify(obs: DataFrame, step_s: int, broadcast_obs: bool = True) -> DataFrame:
+def _densify(obs: DataFrame, step_s: int) -> DataFrame:
     """Bounds + executor-side dense grid + broadcast left join over an
     aggregated (key, bucket_s, ...) frame — the single copy of the
     grid construction shared by :func:`_grid_obs` (batch resample) and
@@ -99,8 +96,7 @@ def _densify(obs: DataFrame, step_s: int, broadcast_obs: bool = True) -> DataFra
             ).alias("bucket_s"),
         )
     )
-    probe = F.broadcast(obs) if broadcast_obs else obs
-    return grid.join(probe, ["key", "bucket_s"], "left")
+    return grid.join(F.broadcast(obs), ["key", "bucket_s"], "left")
 
 
 def resample_ffill(
@@ -109,7 +105,6 @@ def resample_ffill(
     ts_col: str,
     value_col: str,
     step_s: int,
-    broadcast_obs: bool = True,
 ) -> DataFrame:
     """Densify an event stream onto a ``step_s``-second grid per key.
 
@@ -129,7 +124,7 @@ def resample_ffill(
                        bucket (0 on observed rows, NULL before the
                        first observation).
     """
-    full = _grid_obs(df, key_col, ts_col, value_col, step_s, broadcast_obs)
+    full = _grid_obs(df, key_col, ts_col, value_col, step_s)
     return _ffill_project(full, key_col, step_s)
 
 
@@ -169,9 +164,7 @@ def _ffill_project(full: DataFrame, key_col: str, step_s: int) -> DataFrame:
     )
 
 
-def densify_buckets(
-    obs: DataFrame, key_col: str, step_s: int, broadcast_obs: bool = True
-) -> DataFrame:
+def densify_buckets(obs: DataFrame, key_col: str, step_s: int) -> DataFrame:
     """Densify an ALREADY-aggregated (key_col, bucket_s, cnt, vcnt,
     val_e4) bucket frame onto the step grid and forward-fill — the
     grid/ffill half of :func:`resample_ffill` without the raw-event
@@ -189,7 +182,7 @@ def densify_buckets(
             F.col(key_col).alias("key"), "bucket_s", "cnt", "vcnt", "val_e4"
         ).persist()
     )
-    return _ffill_project(_densify(obs, step_s, broadcast_obs), key_col, step_s)
+    return _ffill_project(_densify(obs, step_s), key_col, step_s)
 
 
 def resample_interp(
@@ -198,7 +191,6 @@ def resample_interp(
     ts_col: str,
     value_col: str,
     step_s: int,
-    broadcast_obs: bool = True,
 ) -> DataFrame:
     """The other standard resample mode: LINEAR interpolation between
     the surrounding observed bucket means instead of carrying the last
@@ -218,7 +210,7 @@ def resample_interp(
     in the blend always come from the same pair of anchor buckets.
     The blend is evaluated on exact e4 integers with an identical
     expression on both engines, so the doubles agree bit-for-bit."""
-    full = _grid_obs(df, key_col, ts_col, value_col, step_s, broadcast_obs)
+    full = _grid_obs(df, key_col, ts_col, value_col, step_s)
     back = (
         Window.partitionBy("key")
         .orderBy("bucket_s")

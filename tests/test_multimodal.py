@@ -266,15 +266,6 @@ def test_phash_incremental_verdicts_and_stored_index_path(spark):
         i: tuple(r) for i, r in via_index.items()
     }
 
-    # the opt-in small-batch broadcast hint changes the plan, never the rows
-    hinted = {
-        r.doc_id: r
-        for r in phash_incremental(batch, ref, broadcast_batch=True).collect()
-    }
-    assert {i: tuple(r) for i, r in out.items()} == {
-        i: tuple(r) for i, r in hinted.items()
-    }
-
     # an invalid bound must raise BEFORE the batch-signature persist is
     # registered (no stranded caching._LIVE entry)
     from flink_kafka_spark import caching

@@ -468,7 +468,7 @@ PLAN_BOUNDS = {
     # the registered query parity-splits the corpus, so its "batch" is
     # NOT small: no broadcast hints (a corpus-sized batch must degrade
     # to a shuffle, not die on the broadcast ceiling — the pagerank
-    # broadcast_ranks precedent); post-persist stats are unknown, so
+    # rank-join precedent); post-persist stats are unknown, so
     # the STATIC plan shows SMJs that AQE broadcasts at runtime when a
     # side is genuinely small (the media_features_check convention)
     "media_phash_incremental": (3, 1),
@@ -477,8 +477,7 @@ PLAN_BOUNDS = {
     # + the final id join. Post-persist stats are unknown, so the
     # STATIC plan shows 2 SMJs that AQE broadcasts at runtime when the
     # eval index / rollup side is genuinely small (the
-    # media_phash_incremental convention; broadcast_eval=True forces
-    # the hint for AQE-less pipelines). Every joined frame is
+    # media_phash_incremental convention). Every joined frame is
     # 40-bit-hash tuples from the ~2/(w+1) winnowed sub-sample — never
     # text, never the corpus.
     "winnow_decontaminate": (8, 1),  # +spread x2 (train + eval fingerprint passes)
@@ -609,6 +608,30 @@ def test_no_cartesian_or_unpinned_nested_loop_join(plan_sweep):
     assert not problems, "; ".join(problems)
 
 
+def test_no_operator_takes_a_join_strategy_option():
+    """The join-strategy rule: an operator hints a broadcast only where
+    the side is bounded by construction and otherwise leaves the choice
+    to AQE, so no operator function takes a ``broadcast_*`` parameter
+    that selects a plan. Signatures only; no Spark session."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import flink_kafka_spark.operators as ops
+
+    found = []
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ == mod.__name__:
+                found += [
+                    f"{mod.__name__}.{name}({p})"
+                    for p in inspect.signature(fn).parameters
+                    if p.startswith("broadcast_")
+                ]
+    assert not found, found
+
+
 def test_iterative_loop_body_shapes(spark):
     """The iterative operators (PageRank, the CC hash-to-min loop)
     return localCheckpoint frames whose lineage is cut, so the registry
@@ -617,10 +640,13 @@ def test_iterative_loop_body_shapes(spark):
     loop-round execution (the AQE final plan, live part only: the
     persisted edge frame's build plan is below its cache scan).
 
-    Auto-broadcast is off for the runs, so any BroadcastHashJoin comes
-    from a forced hint. The scale contract pinned here: the rank/label
-    side of a round's join is never hint-broadcast (a billion-node rank
-    frame must shuffle, not collect through the driver)."""
+    Auto-broadcast is off for the pinned runs, so any BroadcastHashJoin
+    comes from a forced hint. The scale contract pinned here: the
+    rank/label side of a round's join is never hint-broadcast (a
+    billion-node rank frame must shuffle, not collect through the
+    driver). A canary run of the same PageRank under the session's own
+    broadcast threshold shows that the count sees broadcasts at all:
+    there AQE broadcasts the tiny rank frame in every round."""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark import observe
@@ -640,31 +666,27 @@ def test_iterative_loop_body_shapes(spark):
     def pr(spark, _):
         return pagerank(*chain(spark), iterations=6)
 
-    def pr_hinted(spark, _):
-        return pagerank(*chain(spark), iterations=6, broadcast_ranks=True, broadcast_wsum=True)
-
     def cc(spark, _):
         edges, nodes = chain(spark)
         pairs = edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
         return connected_components(pairs, nodes, id_col="id")
 
+    def run(fn):
+        return loop_rounds(observe.read(
+            spark, observe.run(spark, Query(fn.__name__, fn), ""), sql=True
+        )["executions"])
+
+    auto = run(pr)
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try:
-        rounds = {
-            fn.__name__: loop_rounds(observe.read(
-                spark, observe.run(spark, Query(fn.__name__, fn), ""), sql=True
-            )["executions"])
-            for fn in (pr, pr_hinted, cc)
-        }
+        pr, cc = run(pr), run(cc)
     finally:
         # restore the SESSION'S configured value, not Spark's default:
         # conf.unset would fall back to the 10 MB ConfigEntry default
         # instead of session.py's 64 MB, leaking a 6x-smaller broadcast
         # threshold into every later test (session-scoped fixture)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-
-    pr, hinted, cc = rounds["pr"], rounds["pr_hinted"], rounds["cc"]
 
     def joins(execs):  # (live broadcast joins, live SMJ) per execution
         return [(e["live_broadcasts"], e["live_smj"]) for e in execs]
@@ -674,11 +696,10 @@ def test_iterative_loop_body_shapes(spark):
     # the cached setup join included.
     assert joins(pr) == [(0, 3)] * 2
     assert all(e["broadcasts"] == 0 and e["live_exchanges"] <= 4 for e in pr)
-    # the canary that forced hints show at all: every hinted round
-    # broadcasts its rank side, no SMJ remains, and the cached edge
-    # frame's build plan shows the wsum broadcast
-    assert joins(hinted) == [(3, 0)] * 2
-    assert all(e["broadcasts"] > e["live_broadcasts"] and e["live_exchanges"] <= 4 for e in hinted)
+    # the canary that the (0, 3) pin is not vacuous: with the session's
+    # threshold, AQE broadcasts the tiny rank frame in every round, so
+    # each execution's three rank joins are live broadcasts
+    assert joins(auto) == [(3, 0)] * 2
     # CC: 2 plain rounds (the msgs join + the min-groupBy), then
     # jumping rounds until convergence, which add the pointer-jumping
     # self-join (its two sides share the min-groupBy's exchange)

@@ -88,12 +88,10 @@ def test_tfidf_ranks_are_dense_topk(spark, sf_dir):
 
 
 def test_tfidf_doc_filter_broadcast_gate_row_identical(spark, sf_dir):
-    """r12 ADVICE: the doc_filter branch's vocabulary broadcasts are
-    now gated by ``broadcast_vocab`` (the bounded-batch scale
-    contract). The off switch must change ONLY join strategy, never
-    rows: both settings must equal the unfiltered ranking restricted
-    to the filtered docs, and the False plan must carry no FORCED
-    broadcast on the vocab frames (planner/AQE free to choose)."""
+    """The doc_filter branch's broadcast-hinted vocabulary joins (the
+    bounded-batch scale contract) change only join strategy, never
+    rows: the filtered ranking equals the unfiltered ranking
+    restricted to the filtered docs."""
     docs = load(spark, sf_dir, "documents")
     flt = F.col("doc_id") < 5
 
@@ -102,12 +100,6 @@ def test_tfidf_doc_filter_broadcast_gate_row_identical(spark, sf_dir):
 
     base = key(tfidf_top_terms(docs, k=3).filter(flt))
     assert key(tfidf_top_terms(docs, k=3, doc_filter=flt)) == base
-    unhinted = tfidf_top_terms(docs, k=3, doc_filter=flt, broadcast_vocab=False)
-    assert key(unhinted) == base
-    # no ResolvedHint remains in the analyzed plan for the vocab path
-    # (the scalar n_docs crossJoin keeps its 1-row broadcast hint)
-    analyzed = unhinted._jdf.queryExecution().analyzed().toString()
-    assert analyzed.count("ResolvedHint") <= 1, analyzed
 
 
 def test_degenerate_docs_no_crash(spark):

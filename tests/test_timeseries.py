@@ -524,20 +524,23 @@ def test_incremental_agg_multi_op_plus_side_applies_one_final_state(spark):
     assert got == {"s1": (1, 7), "s2": (1, 4)}
 
 
-def test_resample_broadcast_obs_flag_changes_join_strategy(spark):
-    """The module docstring's documented mitigation for too-fine grids
-    must actually exist: broadcast_obs=False drops the hint and the
-    grid join degrades to a shuffle join, with identical rows."""
+def test_resample_grid_join_is_hint_broadcast(spark):
+    """The grid left join broadcasts the observed frame by hint, not by
+    the planner's size estimate: it still plans a BroadcastHashJoin with
+    auto-broadcast off (the observed side is bounded by the grid the
+    caller chose, so the hint is unconditional)."""
     from flink_kafka_spark.operators.timeseries import resample_ffill
 
     df = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00", 1.0), (2, "2024-01-01 01:00:00", 2.0)],
         "k int, ts string, v double",
     ).selectExpr("k", "CAST(ts AS TIMESTAMP) ts", "v")
-    hinted = resample_ffill(df, "k", "ts", "v", 300, broadcast_obs=True)
-    plain = resample_ffill(df, "k", "ts", "v", 300, broadcast_obs=False)
-    p_h = hinted._jdf.queryExecution().executedPlan().toString()
-    p_p = plain._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p_h
-    assert "BroadcastHashJoin" not in p_p
-    assert sorted(map(tuple, hinted.collect())) == sorted(map(tuple, plain.collect()))
+    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    try:
+        out = resample_ffill(df, "k", "ts", "v", 300)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    assert "BroadcastHashJoin" in plan
+    assert len(out.collect()) == 2 * 13  # 2 keys x 13 five-minute buckets
