@@ -1,7 +1,7 @@
 """Lifecycle tracking for operator-internal persists.
 
-Several operators persist a multi-consumer subtree (MinHash signature
-table, shingle sets, the export-shard range pin): the persist is
+Several operators persist a multi-consumer subtree (LSH candidate
+pairs, shingle sets, the export-shard range pin): the persist is
 load-bearing — without it each downstream branch recomputes the full
 subtree — but the operator returns a LAZY DataFrame that still
 references the cached plan, so the operator itself can never unpersist.

@@ -197,7 +197,6 @@ def compact_parquet(
 def write_block_shuffled(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
     seed: int = 42,
     n_blocks: int = 64,
     mode: str = "overwrite",
@@ -226,7 +225,7 @@ def write_block_shuffled(
     post-compression, the bucket-sizing rule above)."""
     from .operators.sampling import block_assignment
 
-    routed = block_assignment(df, id_col, seed, n_blocks)
+    routed = block_assignment(df, seed, n_blocks)
     (
         routed.repartition(n_blocks, "block_id")
         .sortWithinPartitions("block_id", "_k")
@@ -240,8 +239,6 @@ def write_block_shuffled(
 def write_interleaved(
     df: DataFrame,
     path: str,
-    source_col: str = "source",
-    id_col: str = "doc_id",
     weights: "dict[str, int] | None" = None,
     seed: int = 42,
     shard_size: int = 100,
@@ -265,11 +262,11 @@ def write_interleaved(
     from .operators.sampling import source_interleave
 
     sched = source_interleave(
-        df, source_col, id_col, weights, seed=seed, shard_size=shard_size
-    ).select(id_col, "position", "shard_id")
+        df, weights, seed=seed, shard_size=shard_size
+    ).select("doc_id", "position", "shard_id")
     n_shards = sched.sparkSession.sparkContext.defaultParallelism
     (
-        df.join(sched, id_col)
+        df.join(sched, "doc_id")
         .repartition(n_shards, "shard_id")
         .sortWithinPartitions("shard_id", "position")
         .write.mode(mode)

@@ -29,7 +29,7 @@ SHINGLE_STOP_DF = 200  # prune shingles appearing in more docs than this
 
 
 def normalized_tokens(
-    df: DataFrame, text_col: str = "text", spread: bool = True
+    df: DataFrame, spread: bool = True
 ) -> DataFrame:
     """Lowercase, whitespace-split token array — shared normalization
     for every text/dedup operator.
@@ -46,24 +46,24 @@ def normalized_tokens(
     them keeps a handful of rows, so the spread buys no parallelism
     and costs a round-robin exchange plus a near-empty wide stage per
     invocation — pure dispatch overhead, amplified on a contended box
-    (the r18 driver flags on the minhash rows). On a many-file 100 TB
+    (flagged on the minhash rows). On a many-file 100 TB
     corpus the spread is a structural no-op either way, so the flag
-    only changes small-fixture plans (r19; guide §2.4)."""
+    only changes small-fixture plans (guide §2.4)."""
     from ..tables import spread_scan
 
     return (spread_scan(df) if spread else df).withColumn(
-        "tokens", F.split(F.lower(F.col(text_col)), r"\s+")
+        "tokens", F.split(F.lower(F.col("text")), r"\s+")
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup by content hash: keep the smallest id per distinct
     text, report the duplicate count. md5 on the normalized body means
     the shuffle moves 16-byte keys, not documents."""
     return (
-        df.select(id_col, F.md5(F.lower(F.col(text_col))).alias("text_hash"))
+        df.select("doc_id", F.md5(F.lower(F.col("text"))).alias("text_hash"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
@@ -99,7 +99,6 @@ def shingles(df: DataFrame, id_col: str, n: int = 3) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
     stop_df: int = SHINGLE_STOP_DF,
@@ -119,7 +118,7 @@ def ngram_jaccard_pairs(
       construction. Raise ``stop_df`` (or inspect
       :func:`shingle_prune_stats`) when the corpus has heavy shingle
       reuse; MinHash+LSH is the production path for unknown corpora."""
-    pairs = _shared_key_pairs(shingles(df, id_col, n), id_col, "shingle", stop_df)
+    pairs = _shared_key_pairs(shingles(df, "doc_id", n), "doc_id", "shingle", stop_df)
     return (
         pairs.withColumn(
             "jaccard",
@@ -150,7 +149,7 @@ def _shared_key_pairs(
     # concurrent second wait-and-read — an eager count() would only
     # spend an extra job (same pattern as the MinHash sets persist)
     items = track(items.cache())
-    # sizes persists too (r19): it joins the pair frame TWICE (the
+    # sizes persists too: it joins the pair frame TWICE (the
     # id_a and id_b renames), and the rename above the aggregate
     # defeats exchange reuse — unpersisted, each side re-scanned the
     # corpus-sized item cache and re-ran the groupBy for a frame that
@@ -187,7 +186,6 @@ def _shared_key_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.6,
     stop_df: int = SHINGLE_STOP_DF,
@@ -216,7 +214,7 @@ def containment_pairs(
     join is doc-count-sized on the build side but pair-sized on the
     probe side, and AQE broadcasts the pair side when it fits —
     identical shape to the Jaccard twin, no new scale surface."""
-    pairs = _shared_key_pairs(shingles(df, id_col, n), id_col, "shingle", stop_df)
+    pairs = _shared_key_pairs(shingles(df, "doc_id", n), "doc_id", "shingle", stop_df)
     # floor-based round-half-up: n_inter/min(sizes) lands exactly on
     # decimal half-points (e.g. 1/2), where Spark's and DuckDB's
     # round() diverge (same convention as source_overlap_matrix)
@@ -231,14 +229,14 @@ def containment_pairs(
 
 
 def shingle_prune_stats(
-    df: DataFrame, id_col: str = "doc_id", n: int = 3, stop_df: int = SHINGLE_STOP_DF
+    df: DataFrame, n: int = 3, stop_df: int = SHINGLE_STOP_DF
 ) -> DataFrame:
     """1-row visibility companion to :func:`ngram_jaccard_pairs`: how
     much the stop-shingle heuristic actually prunes on this corpus —
     distinct shingles dropped, and the fraction of (doc, shingle)
     occurrences those carried. A high ``occurrence_pruned_frac`` means
     the lower-bound jaccard is loose and ``stop_df`` should be raised."""
-    sh = shingles(df, id_col, n)
+    sh = shingles(df, "doc_id", n)
     per = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     return per.agg(
         F.count(F.lit(1)).alias("n_shingles"),
@@ -253,7 +251,6 @@ def shingle_prune_stats(
 
 def source_overlap_matrix(
     df: DataFrame,
-    text_col: str = "text",
     group_col: str = "source",
     n: int = 3,
 ) -> DataFrame:
@@ -288,7 +285,7 @@ def source_overlap_matrix(
 
     expr = f"array_distinct({_shingle_expr(n)})"
     per_sh = (
-        normalized_tokens(df, text_col)
+        normalized_tokens(df)
         .select(F.col(group_col).alias("grp"), F.explode(F.expr(expr)).alias("shingle"))
         .select("grp", F.md5("shingle").alias("sh"))
         .groupBy("sh")
@@ -409,31 +406,6 @@ def _salted_min_sigs(hash_arr, k: int):
     return nz, sigs
 
 
-def minhash_signatures(df: DataFrame, id_col: str, n: int = 3, k: int = 32) -> DataFrame:
-    """k-permutation MinHash signature per doc (empty docs — fewer
-    than n tokens, so no shingles — get an empty signature array).
-    Tokenize/shingle/base-hash stay JVM-side (pushdown- and
-    codegen-friendly); only the salted-min runs in the vectorized
-    Arrow kernel :func:`_salted_min_sigs`."""
-
-    @F.pandas_udf("array<long>")
-    def sig_udf(hash_arr: pd.Series) -> pd.Series:
-        import numpy as np
-
-        nz, sigs = _salted_min_sigs(hash_arr, k)
-        signed = sigs.view(np.int64)
-        out = [[] for _ in range(len(hash_arr))]
-        for row_i, doc_i in enumerate(np.flatnonzero(nz)):
-            out[doc_i] = signed[row_i].tolist()
-        return pd.Series(out)
-
-    return (
-        shingle_sets(df, id_col, n)
-        .withColumn("hash_arr", F.expr("transform(shingle_arr, s -> xxhash64(s))"))
-        .select(id_col, sig_udf("hash_arr").alias("signature"))
-    )
-
-
 def _band_hashes_udf(k: int, bands: int):
     """Arrow kernel: per doc, the ``bands`` LSH band keys directly —
     FNV-1a folded over each band's r=k/bands MinHash values — skipping
@@ -464,7 +436,6 @@ def _band_hashes_udf(k: int, bands: int):
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     k: int = 32,
     bands: int = 8,
@@ -479,7 +450,7 @@ def minhash_lsh_pairs(
     verification re-derives shingle sets for candidate ids only.
 
     ``max_bucket`` bounds the quadratic pair OUTPUT of a pathological
-    band bucket (the r13-verdict hardening; the fuzzy join's
+    band bucket (the fuzzy join's
     ``max_block`` is the sibling discipline): peak MEMORY was already
     O(bucket) via the generator enumeration below, but a boilerplate
     mega-bucket — 10⁵ copies of the same cookie banner hashing into
@@ -518,7 +489,7 @@ def minhash_lsh_pairs(
     # (id, shingle_arr, signature) and paid a whole extra eager-count
     # pass just to fill the cache). The salted-min + band fold runs in
     # the Arrow kernel (see :func:`_band_hashes_udf`).
-    banded = _lsh_bands(df, id_col, id_col, n, k, bands)
+    banded = _lsh_bands(df, "doc_id", "doc_id", n, k, bands)
     # Candidate pairs via ONE shuffle: group each (band, band_hash)
     # bucket, then stream ordered pairs out of the sorted id array with
     # two nested generators (posexplode + explode(slice)) — generator
@@ -527,7 +498,7 @@ def minhash_lsh_pairs(
     # with two shuffles of the same table.
     buckets = (
         banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     if max_bucket is not None:
@@ -569,15 +540,15 @@ def minhash_lsh_pairs(
     # lazy on purpose — the first broadcast build fills the cache and
     # the block-manager's per-block locks make a concurrent second
     # build wait-and-read, so an eager count() would only add a job.
-    cand_ids = candidates.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
+    cand_ids = candidates.select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
     sets = track(
         shingle_sets(
-            df.join(F.broadcast(cand_ids), id_col, "left_semi"),
-            id_col,
+            df.join(F.broadcast(cand_ids), "doc_id", "left_semi"),
+            "doc_id",
             n,
-            # NO layout spread on the verification pass (r19): it is
+            # NO layout spread on the verification pass: it is
             # candidate-bounded by construction — the semi-filter keeps
-            # a handful of rows — so the r18 spread bought no
+            # a handful of rows — so a spread would buy no
             # parallelism and cost a round-robin exchange plus a
             # near-empty 32-task stage per invocation, exactly the
             # dispatch-overhead shape a contended driver box amplifies.
@@ -585,7 +556,7 @@ def minhash_lsh_pairs(
             # way, so this changes nothing at scale.
             spread=False,
         )
-        .select(F.col(id_col).alias("_sid"), "shingle_arr")
+        .select(F.col("doc_id").alias("_sid"), "shingle_arr")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return (
@@ -607,8 +578,6 @@ def minhash_lsh_pairs(
 
 def span_dup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 10,
     stride: int = 1,
 ) -> DataFrame:
@@ -643,7 +612,7 @@ def span_dup_stats(
 
     if n < 1 or stride < 1:
         raise ValueError(f"n and stride must be >= 1 (got n={n}, stride={stride})")
-    toks = normalized_tokens(df, text_col)
+    toks = normalized_tokens(df)
     span_expr = f"""
       CASE WHEN tokens IS NULL OR size(tokens) < {n} THEN array()
            ELSE transform(sequence(1, size(tokens) - {n - 1}, {stride}),
@@ -652,9 +621,9 @@ def span_dup_stats(
     """
     # span COUNT is pure arithmetic on the token count — size() over the
     # transform above would compute (and discard) every slice+md5 a
-    # second time in this branch's corpus pass (round-7 review)
+    # second time in this branch's corpus pass
     base = toks.select(
-        id_col,
+        "doc_id",
         F.when(
             F.size("tokens") >= n,
             F.floor((F.size("tokens") - n) / stride) + 1,
@@ -664,14 +633,14 @@ def span_dup_stats(
         .alias("n_spans"),
     )
     occ = (
-        toks.select(id_col, F.explode(F.expr(span_expr)).alias("span_h"))
-        .groupBy("span_h", id_col)
+        toks.select("doc_id", F.explode(F.expr(span_expr)).alias("span_h"))
+        .groupBy("span_h", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
     dup = (
         occ.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy("span_h")))
         .filter(F.col("nd") > 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("n_occ").cast("long").alias("n_dup_spans"))
     )
     # doc-level left join: both sides are one row per doc; AQE picks
@@ -680,8 +649,8 @@ def span_dup_stats(
     # half-point whenever n_spans has a 2^7 factor with odd k (e.g.
     # n_spans=128), where Spark's HALF_UP and DuckDB's round() diverge
     # — the containment_pairs / source_overlap_matrix convention
-    return base.join(dup, id_col, "left").select(
-        id_col,
+    return base.join(dup, "doc_id", "left").select(
+        "doc_id",
         "n_spans",
         F.coalesce(F.col("n_dup_spans"), F.lit(0)).cast("long").alias("n_dup_spans"),
         F.when(
@@ -698,8 +667,6 @@ def span_dup_stats(
 
 def trim_duplicated_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 10,
 ) -> DataFrame:
     """The corpus-EDITING step of substring dedup (Lee et al.'s
@@ -732,7 +699,7 @@ def trim_duplicated_spans(
 
     if n < 1:
         raise ValueError(f"n must be >= 1 (got {n})")
-    toks = normalized_tokens(df, text_col)
+    toks = normalized_tokens(df)
     span_pos_expr = f"""
       CASE WHEN tokens IS NULL OR size(tokens) < {n} THEN array()
            ELSE transform(sequence(1, size(tokens) - {n - 1}),
@@ -741,21 +708,21 @@ def trim_duplicated_spans(
       END
     """
     spans = toks.select(
-        id_col, F.explode(F.expr(span_pos_expr)).alias("sp")
-    ).select(id_col, F.col("sp.pos").alias("pos"), F.col("sp.span_h").alias("span_h"))
+        "doc_id", F.explode(F.expr(span_pos_expr)).alias("sp")
+    ).select("doc_id", F.col("sp.pos").alias("pos"), F.col("sp.span_h").alias("span_h"))
     w = Window.partitionBy("span_h")
     # owner = lowest doc id sharing the span (min over the raw
     # occurrence rows — duplicates don't affect min). doc != owner by
     # itself PROVES cross-doc duplication (the owner is a different
-    # doc), so no distinct-doc count is needed: the round-7 review
-    # killed an earlier collect_set-per-row formulation here that was
+    # doc), so no distinct-doc count is needed: this replaces an
+    # earlier collect_set-per-row formulation that was
     # O(docs²) per hot boilerplate span — min() is constant-state.
     # Within-doc-only repetition never trims: its only doc IS the owner.
     flagged = spans.select(
-        id_col,
+        "doc_id",
         "pos",
-        F.min(id_col).over(w).alias("owner"),
-    ).filter(F.col(id_col) != F.col("owner"))
+        F.min("doc_id").over(w).alias("owner"),
+    ).filter(F.col("doc_id") != F.col("owner"))
     merge_expr = f"""
       aggregate(
         array_sort(pos_arr),
@@ -768,13 +735,13 @@ def trim_duplicated_spans(
                        concat(acc, array(named_struct('s', p, 'e', p + {n - 1})))))
     """
     per_doc = (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(F.collect_list("pos").alias("pos_arr"))
-        .select(id_col, F.expr(merge_expr).alias("islands"))
+        .select("doc_id", F.expr(merge_expr).alias("islands"))
     )
-    base = toks.select(id_col, "tokens")
-    return base.join(per_doc, id_col, "left").select(
-        id_col,
+    base = toks.select("doc_id", "tokens")
+    return base.join(per_doc, "doc_id", "left").select(
+        "doc_id",
         F.coalesce(F.size("tokens"), F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce(
             F.expr("aggregate(islands, 0, (acc, r) -> acc + r.e - r.s + 1)"), F.lit(0)
@@ -803,8 +770,8 @@ def _lsh_bands(
     spread: bool = True,
 ) -> DataFrame:
     """The shared banding pass: ``(out_id, band, band_hash)`` per doc.
-    The small-scan fan-out gate that lived here (round 7) moved to
-    ``tables.spread_scan`` in r18 and now runs inside
+    The small-scan fan-out gate lives in
+    ``tables.spread_scan`` and runs inside
     :func:`normalized_tokens` — one copy of the layout probe for EVERY
     tokenize-heavy operator, same placement for this pipeline (the
     exchange still precedes the shingle/minhash fan-out; keeping a
@@ -825,7 +792,6 @@ def _lsh_bands(
 
 def build_dedup_index(
     reference: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     k: int = 32,
     bands: int = 8,
@@ -844,7 +810,7 @@ def build_dedup_index(
 
     The (n, k, bands) parameters are baked into the index values; use
     the same ones when querying it."""
-    return _lsh_bands(reference, id_col, "ref_id", n, k, bands).select(
+    return _lsh_bands(reference, "doc_id", "ref_id", n, k, bands).select(
         "band", "band_hash", "ref_id"
     )
 
@@ -852,7 +818,6 @@ def build_dedup_index(
 def incremental_dedup_matches(
     batch: DataFrame,
     reference: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     k: int = 32,
     bands: int = 8,
@@ -882,40 +847,40 @@ def incremental_dedup_matches(
     from ..caching import track
 
     if ref_index is None:
-        ref_index = build_dedup_index(reference, id_col, n, k, bands)
-    batch_bands = _lsh_bands(batch, id_col, "batch_id", n, k, bands)
+        ref_index = build_dedup_index(reference, n, k, bands)
+    batch_bands = _lsh_bands(batch, "doc_id", "batch_id", n, k, bands)
     candidates = track(
         batch_bands.join(ref_index, ["band", "band_hash"])
         .select("batch_id", "ref_id")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # NO layout spread on either verification pass (r19, the
+    # NO layout spread on either verification pass (the
     # minhash_lsh_pairs rationale): both are candidate-bounded by the
-    # semi-filters, so the r18 per-subtree spread added two round-robin
+    # semi-filters, so a per-subtree spread would add two round-robin
     # exchanges and two near-empty 32-task stages per invocation for
     # frames of a few hundred rows — pure dispatch overhead, amplified
     # on a contended box. No-op difference on a many-file corpus.
     b_sets = shingle_sets(
         batch.join(
-            F.broadcast(candidates.select(F.col("batch_id").alias(id_col))),
-            id_col,
+            F.broadcast(candidates.select(F.col("batch_id").alias("doc_id"))),
+            "doc_id",
             "left_semi",
         ),
-        id_col,
+        "doc_id",
         n,
         spread=False,
-    ).select(F.col(id_col).alias("batch_id"), F.col("shingle_arr").alias("arr_b"))
+    ).select(F.col("doc_id").alias("batch_id"), F.col("shingle_arr").alias("arr_b"))
     r_sets = shingle_sets(
         reference.join(
-            F.broadcast(candidates.select(F.col("ref_id").alias(id_col))),
-            id_col,
+            F.broadcast(candidates.select(F.col("ref_id").alias("doc_id"))),
+            "doc_id",
             "left_semi",
         ),
-        id_col,
+        "doc_id",
         n,
         spread=False,
-    ).select(F.col(id_col).alias("ref_id"), F.col("shingle_arr").alias("arr_r"))
+    ).select(F.col("doc_id").alias("ref_id"), F.col("shingle_arr").alias("arr_r"))
     return (
         candidates.join(b_sets, "batch_id")
         .join(r_sets, "ref_id")
@@ -936,7 +901,6 @@ def incremental_dedup_matches(
 def incremental_dedup(
     batch: DataFrame,
     reference: DataFrame,
-    id_col: str = "doc_id",
     n: int = 3,
     k: int = 32,
     bands: int = 8,
@@ -955,7 +919,7 @@ def incremental_dedup(
     then a broadcast-friendly left join back onto the batch ids."""
     if matches is None:
         matches = incremental_dedup_matches(
-            batch, reference, id_col, n, k, bands, threshold, ref_index=ref_index
+            batch, reference, n, k, bands, threshold, ref_index=ref_index
         )
     per = matches.groupBy("batch_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_ref_dups"),
@@ -965,10 +929,10 @@ def incremental_dedup(
         ),
     )
     return (
-        batch.select(F.col(id_col).alias("batch_id"))
+        batch.select(F.col("doc_id").alias("batch_id"))
         .join(per, "batch_id", "left")
         .select(
-            F.col("batch_id").alias(id_col),
+            F.col("batch_id").alias("doc_id"),
             (F.col("n_ref_dups").isNull()).cast("int").alias("is_novel"),
             F.coalesce(F.col("n_ref_dups"), F.lit(0)).cast("long").alias("n_ref_dups"),
             "best_ref_id",
@@ -977,7 +941,7 @@ def incremental_dedup(
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 64) -> DataFrame:
     """64-bit SimHash per doc from unigram token hashes, computed as a
     vectorized Pandas UDF (bit-parallel numpy; genuinely awkward as SQL
     expressions). Near-dup = small Hamming distance; callers bucket by
@@ -986,8 +950,8 @@ def simhash(df: DataFrame, id_col: str = "doc_id", bits: int = 64) -> DataFrame:
     Python touches each DISTINCT token once per batch (md5, memoized —
     corpora repeat tokens heavily); everything after that is numpy:
     the token-hash→±1 bit matrix, the per-doc accumulation, and the
-    sign-pack back to one int64. The round-1 per-token-per-bit Python
-    loop was ~25× slower at sf0.1."""
+    sign-pack back to one int64. A per-token-per-bit Python loop was
+    ~25× slower at sf0.1."""
     @F.pandas_udf("long")
     def _simhash(tokens: pd.Series) -> pd.Series:
         import hashlib
@@ -1015,7 +979,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", bits: int = 64) -> DataFrame:
             out[row] = v - (1 << 64) if v >= (1 << 63) else v
         return pd.Series(out)
 
-    return normalized_tokens(df).select(id_col, _simhash("tokens").alias("simhash"))
+    return normalized_tokens(df).select("doc_id", _simhash("tokens").alias("simhash"))
 
 
 def chunked_hamming_pairs(
@@ -1085,7 +1049,7 @@ def chunked_hamming_pairs(
     )
 
 
-def simhash_pairs(df: DataFrame, id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs. Scale path: bucket on 4 × 16-bit chunks
     (any pair within Hamming ≤ 3 of 64 bits shares at least one exact
     16-bit chunk — pigeonhole) → equi-join per chunk, then exact
@@ -1093,8 +1057,8 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id", max_hamming: int = 3) -
     :func:`chunked_hamming_pairs` (max_hamming > 3 now raises — the
     old code silently returned incomplete pairs past the pigeonhole
     bound)."""
-    sh = simhash(df, id_col).select(
-        id_col,
+    sh = simhash(df).select(
+        "doc_id",
         *[
             F.shiftright("simhash", c * 16)
             .bitwiseAND(F.lit(0xFFFF))
@@ -1103,7 +1067,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id", max_hamming: int = 3) -
             for c in range(4)
         ],
     )
-    return chunked_hamming_pairs(sh, id_col, [f"sh{c}" for c in range(4)], max_hamming)
+    return chunked_hamming_pairs(sh, "doc_id", [f"sh{c}" for c in range(4)], max_hamming)
 
 
 def embedding_cosine_pairs(
@@ -1141,7 +1105,6 @@ def embedding_cosine_pairs(
 def canonicalize_clusters(
     df: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
     quality: "F.Column | None" = None,
     skew_safe: bool = False,
     max_iter: int = 25,
@@ -1186,12 +1149,12 @@ def canonicalize_clusters(
     # if the dup graph itself outgrows broadcast (billions of dups),
     # drop the hints and let AQE pick the strategy.
     labels = _cc_labels(edges, max_iter=max_iter).select(
-        F.col("node").alias(id_col), F.col("comp").alias("cluster_id")
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
-    q = df.select(F.col(id_col), quality.alias("quality_score"))
-    scored = q.join(F.broadcast(labels), id_col)
+    q = df.select(F.col("doc_id"), quality.alias("quality_score"))
+    scored = q.join(F.broadcast(labels), "doc_id")
     # ONE rank key shared verbatim by both plans so they cannot diverge
-    # on degenerate quality values (round-6 advice: min_by's struct
+    # on degenerate quality values (min_by's struct
     # ordering sorts a NULL field FIRST ascending while the window's
     # desc ordering put NULLs LAST — a NULL-quality member won under
     # skew_safe and lost under the default; NaN diverged the opposite
@@ -1205,7 +1168,7 @@ def canonicalize_clusters(
     _rank_key = (
         _q_bad.cast("int"),
         F.when(_q_bad, F.lit(0.0)).otherwise(-_qd),
-        F.col(id_col),
+        F.col("doc_id"),
     )
     if skew_safe:
         # per-cluster argmax as a partial-aggregatable reduction:
@@ -1214,29 +1177,29 @@ def canonicalize_clusters(
         # cluster (bounded by the cluster count, far below the member
         # count for mega-clusters) and broadcast back.
         winners = scored.groupBy("cluster_id").agg(
-            F.min_by(F.col(id_col), F.struct(*_rank_key)).alias("_win_id")
+            F.min_by(F.col("doc_id"), F.struct(*_rank_key)).alias("_win_id")
         )
         in_graph = scored.join(F.broadcast(winners), "cluster_id").select(
-            id_col,
+            "doc_id",
             "cluster_id",
             "quality_score",
-            (F.col(id_col) == F.col("_win_id")).cast("int").alias("keep"),
+            (F.col("doc_id") == F.col("_win_id")).cast("int").alias("keep"),
         )
     else:
         w = Window.partitionBy("cluster_id").orderBy(
             *[k.asc() for k in _rank_key]
         )
         in_graph = scored.select(
-            id_col,
+            "doc_id",
             "cluster_id",
             "quality_score",
             (F.row_number().over(w) == 1).cast("int").alias("keep"),
         )
     singletons = q.join(
-        F.broadcast(labels.select(id_col)), id_col, "left_anti"
+        F.broadcast(labels.select("doc_id")), "doc_id", "left_anti"
     ).select(
-        F.col(id_col),
-        F.col(id_col).alias("cluster_id"),
+        F.col("doc_id"),
+        F.col("doc_id").alias("cluster_id"),
         "quality_score",
         F.lit(1).cast("int").alias("keep"),
     )
@@ -1246,7 +1209,6 @@ def canonicalize_clusters(
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
-    id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 25,
@@ -1269,12 +1231,12 @@ def connected_components(
     :func:`_cc_labels` for the loop's checkpoint lifecycle.
     """
     in_graph = _cc_labels(edges, src_col, dst_col, max_iter).select(
-        F.col("node").alias(id_col), F.col("comp").alias("cluster_id")
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
     singletons = (
-        nodes.select(F.col(id_col))
-        .join(F.broadcast(in_graph.select(id_col)), id_col, "left_anti")
-        .withColumn("cluster_id", F.col(id_col))
+        nodes.select(F.col("doc_id"))
+        .join(F.broadcast(in_graph.select("doc_id")), "doc_id", "left_anti")
+        .withColumn("cluster_id", F.col("doc_id"))
     )
     return in_graph.unionByName(singletons)
 
@@ -1381,7 +1343,7 @@ def _cc_labels(
             # set BEFORE the probe action: localCheckpoint registers
             # its persist synchronously, so if the collect below raises
             # the except handler must release this round's blocks too,
-            # not just the previous round's (round-6 advice).
+            # not just the previous round's.
             live_ids = live_ids | new_ids
             cur_sum = labels.agg(
                 F.sum(F.col("comp").cast("decimal(38,0)"))

@@ -90,7 +90,7 @@ def approx_uniqueness(
     """HLL++ uniqueness ratio — the 100 TB substitute for
     :func:`uniqueness`: no expand, partial-aggregates map-side. The
     bound must leave the ±rsd estimator band, so ``lo`` defaults to
-    1 − 3·rsd (the documented key-check usage — r13 advisory: the old
+    1 − 3·rsd (the documented key-check usage: an
     unbounded default made every approx-uniqueness gate a silent
     always-pass). Pass ``lo``/``hi`` explicitly for non-key ratios, or
     ``lo=None`` wrapped in an explicit :class:`Expectation` if an

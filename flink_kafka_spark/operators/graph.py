@@ -87,8 +87,8 @@ def pagerank(
         # the delta window, and the first such job also materializes
         # the persisted edge frame — whose cache RDD id would then be
         # swept into `live` and destroyed at the next cut, silently
-        # recomputing edges+wsum every round thereafter (r10
-        # second-review finding). The caller materializes explicitly.
+        # recomputing edges+wsum every round thereafter. The caller
+        # materializes explicitly.
         before = persistent_rdd_ids(sc)
         out = df.localCheckpoint(eager=False)
         return out, frozenset(persistent_rdd_ids(sc) - before)
@@ -125,7 +125,7 @@ def pagerank(
     # degrades to a co-partitioned shuffle otherwise — and both edge
     # frames are persisted, so either plan executes exactly once.
     wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    # pre-partitioned on src before the persist (r18, guide §2.4
+    # pre-partitioned on src before the persist (guide §2.4
     # "two operations keyed the same way can share one exchange") —
     # the CC loop's symmetrized-edge layout applied here: every round
     # joins the rank frame on e.src, so a persisted hash(src) layout

@@ -238,7 +238,7 @@ def fuzzy_match_pairs(
     (few) hot keys; cold blocks take the exact original path."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    # layout spread BEFORE the candidate join (r19, guide §2.5): at
+    # layout spread BEFORE the candidate join (guide §2.5): at
     # test SF the block join broadcasts its build side, so the probe
     # side is the bare catalog scan — on an unsplittable single-file
     # input that is ONE task, and the whole candidate fan-out plus the
@@ -264,7 +264,7 @@ def fuzzy_match_pairs(
     # instead of O(len²), exact for every distance <= max_dist and -1
     # beyond — the verification filter keeps only distances <=
     # max_dist, so surviving rows carry the identical exact distance
-    # and the -1 band is exactly the discarded set (r18 measurement:
+    # and the -1 band is exactly the discarded set (measured:
     # the kernel was the candidate-verify wall).
     lev = F.when(F.col("a_name") == F.col("b_name"), F.lit(0)).otherwise(
         F.levenshtein("a_name", "b_name", max_dist)

@@ -6,8 +6,9 @@ extension scope from the build brief. Media are modeled as opaque
 ``binary`` payload columns plus typed metadata, and processed with
 Arrow-batched ``mapInPandas`` so the Spark-side plumbing — schema,
 partitioning, UDF signature, batch shape — is real even though the
-actual codec work is stubbed (no image/audio libraries exist in this
-container; see :func:`decode_image` / :func:`resample_audio`).
+actual codec work is stubbed (the engine depends on no image or audio
+codec library; :func:`wav_duration_ms` is the one real parse, on the
+standard library's ``wave``).
 
 Scale design (100 TB):
 - Every operator here is a **narrow** transformation — no shuffle. A
@@ -103,9 +104,8 @@ DECODED_META_SCHEMA = StructType(
 def decode_media_meta(media: DataFrame) -> DataFrame:
     """"Decode" each payload into typed metadata via ``mapInPandas``.
 
-    The decode itself is a deterministic fake (real codecs are not in
-    this container — the gated entry points are :func:`decode_image` /
-    :func:`resample_audio`): width/height derive from the first payload
+    The decode itself is a deterministic fake (the engine depends on no
+    codec library): width/height derive from the first payload
     bytes, duration from the byte length. The *plumbing* is the real
     thing being exercised: Arrow iterator-of-batches in, declared
     result schema out, payload column consumed and dropped so
@@ -243,8 +243,8 @@ def perceptual_hash(media: DataFrame) -> DataFrame:
     ``(ph0..ph3)`` — the aHash/pHash family shape for media near-dup
     (reference has no media surface; this is the LAION-style image-dedup
     stage of the extension scope). The payload bytes stand in for
-    decoded pixels (deterministic fake; real decode is the gated
-    :func:`decode_image`), but the hash math, Arrow plumbing, and the
+    decoded pixels (deterministic fake; the engine has no image
+    decoder), but the hash math, Arrow plumbing, and the
     downstream bucketed pair search are the real thing.
 
     Definition (pure INTEGER arithmetic, so DuckDB replays it
@@ -416,59 +416,6 @@ def phash_incremental(
     )
 
 
-# --- gated real-codec entry points -------------------------------------
-
-def decode_image(payload: bytes):
-    """Real image decode (Pillow). The container ships no image libs;
-    the gate keeps the API surface honest without a hard dependency."""
-    try:
-        from PIL import Image  # type: ignore
-    except ImportError as exc:  # pragma: no cover - no PIL in container
-        raise NotImplementedError(
-            "real image decode requires Pillow; this environment has no image "
-            "libraries — use decode_media_meta() (deterministic fake) instead"
-        ) from exc
-    import io
-
-    return Image.open(io.BytesIO(payload))  # pragma: no cover
-
-
-def resample_audio(payload: bytes, rate: int):
-    """Real audio resample — gated like :func:`decode_image`. Decodes
-    ``payload`` with soundfile and linearly interpolates each channel
-    onto the target ``rate`` grid (numpy; no librosa dependency —
-    linear resampling is sufficient for feature-extraction pipelines
-    and keeps the gate to one optional lib). Returns
-    ``(samples ndarray [n, channels], rate)``."""
-    # validate the argument BEFORE the decode (r16 advice): a bad rate
-    # is a caller bug and must not cost a full soundfile decode first
-    if rate <= 0:
-        raise ValueError(f"target rate must be positive, got {rate}")
-    try:
-        import soundfile  # type: ignore
-    except ImportError as exc:  # pragma: no cover - no audio libs
-        raise NotImplementedError(
-            "real audio resampling requires soundfile; not available "
-            "in this environment"
-        ) from exc
-    import io  # pragma: no cover - requires soundfile
-
-    import numpy as np  # pragma: no cover
-
-    data, src_rate = soundfile.read(io.BytesIO(payload), always_2d=True)  # pragma: no cover
-    if src_rate == rate or data.shape[0] == 0:  # pragma: no cover
-        return data, rate
-    n_out = max(int(round(data.shape[0] * rate / src_rate)), 1)  # pragma: no cover
-    # sample-position grid in source coordinates; endpoints clamp so
-    # the last output sample never extrapolates past the final frame
-    pos = np.linspace(0.0, data.shape[0] - 1, n_out)  # pragma: no cover
-    out = np.stack(  # pragma: no cover
-        [np.interp(pos, np.arange(data.shape[0]), data[:, c]) for c in range(data.shape[1])],
-        axis=1,
-    )
-    return out, rate  # pragma: no cover
-
-
 def wav_duration_ms(payload: bytes) -> "int | None":
     """Duration of a RIFF/WAV payload in milliseconds, read from the
     container header with the STDLIB ``wave`` module — the one real
@@ -487,61 +434,6 @@ def wav_duration_ms(payload: bytes) -> "int | None":
             return int(w.getnframes() * 1000 // fr)
     except (wave.Error, EOFError, OSError):
         return None
-
-
-def decode_media_meta_real(media: DataFrame) -> DataFrame:
-    """Real-codec twin of :func:`decode_media_meta`: IDENTICAL result
-    schema and plumbing (Arrow ``mapInPandas``, payload consumed and
-    dropped), but width/height come from an actual Pillow decode and
-    audio duration from an actual WAV header read
-    (:func:`wav_duration_ms`). Import-gated on Pillow at plan build
-    like :func:`decode_image`; rows whose payload a codec cannot parse
-    yield NULL metadata instead of failing the batch. The fake twin
-    carries the driver oracles (its outputs are deterministic functions
-    of the payload bytes); this twin exists so an environment WITH
-    codecs can run the same pipeline end-to-end
-    (tests/test_multimodal.py gates on the import)."""
-    try:
-        from PIL import Image  # type: ignore
-    except ImportError as exc:  # pragma: no cover - no PIL in container
-        raise NotImplementedError(
-            "decode_media_meta_real requires Pillow; use decode_media_meta "
-            "(deterministic fake, oracle-carried) in codec-less environments"
-        ) from exc
-    import io  # pragma: no cover - requires PIL
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        for pdf in batches:
-            widths, heights, durations = [], [], []
-            payloads = [bytes(p) for p in pdf["payload"]]
-            for kind, payload in zip(pdf["kind"], payloads):
-                w = h = d = None
-                if kind in ("image", "video"):
-                    try:
-                        with Image.open(io.BytesIO(payload)) as img:
-                            w, h = img.size
-                    except Exception:
-                        pass
-                if kind in ("audio", "video"):
-                    d = wav_duration_ms(payload)
-                widths.append(w)
-                heights.append(h)
-                durations.append(d)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "byte_len": pd.Series(
-                        [len(p) for p in payloads], index=pdf.index, dtype="int64"
-                    ),
-                    "checksum": [hashlib.md5(p).hexdigest() for p in payloads],
-                    "width": pd.array(widths, dtype="Int64"),
-                    "height": pd.array(heights, dtype="Int64"),
-                    "duration_ms": pd.array(durations, dtype="Int64"),
-                }
-            )
-
-    return media.mapInPandas(decode, DECODED_META_SCHEMA)  # pragma: no cover
 
 
 def resize_image_batch(media: DataFrame, width: int, height: int) -> DataFrame:

@@ -86,8 +86,6 @@ def stratified_sample(
 
 def pack_sequences(
     df: DataFrame,
-    id_col: str = "doc_id",
-    n_tokens_col: str = "n_tokens",
     budget: int = 1024,
     n_shards: int = 32,
 ) -> DataFrame:
@@ -112,14 +110,14 @@ def pack_sequences(
 
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        df.withColumn("shard", split_bucket_expr(id_col, n_shards))
-        .withColumn("start_offset", F.sum(n_tokens_col).over(w) - F.col(n_tokens_col))
+        df.withColumn("shard", split_bucket_expr("doc_id", n_shards))
+        .withColumn("start_offset", F.sum("n_tokens").over(w) - F.col("n_tokens"))
         .withColumn("bin_id", F.floor(F.col("start_offset") / budget))
-        .select(id_col, "shard", n_tokens_col, "start_offset", "bin_id")
+        .select("doc_id", "shard", "n_tokens", "start_offset", "bin_id")
     )
 
 
@@ -127,9 +125,6 @@ def mixture_resample(
     df: DataFrame,
     weights: dict[str, int],
     budget_permille: int = 500,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    n_tokens_col: str = "n_tokens",
     default_weight: int = 1,
 ) -> DataFrame:
     """Domain-mixture resampling under a token budget: mark which
@@ -157,9 +152,9 @@ def mixture_resample(
     """
     wsum = sum(weights.values()) or default_weight
     case = "CASE " + " ".join(
-        f"WHEN {source_col} = '{s}' THEN {w}" for s, w in sorted(weights.items())
+        f"WHEN source = '{s}' THEN {w}" for s, w in sorted(weights.items())
     ) + f" ELSE {default_weight} END"
-    totals = df.groupBy(source_col).agg(F.sum(n_tokens_col).alias("src_tokens"))
+    totals = df.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
     grand = totals.agg(F.sum("src_tokens").alias("grand_tokens"))
     thresholds = (
         totals.crossJoin(F.broadcast(grand))
@@ -178,18 +173,18 @@ def mixture_resample(
                 "/ src_tokens) AS BIGINT))"
             ),
         )
-        .select(F.col(source_col).alias("_th_src"), "keep_thresh")
+        .select(F.col("source").alias("_th_src"), "keep_thresh")
     )
     return (
         df.join(
             F.broadcast(thresholds),
-            F.col(source_col).eqNullSafe(F.col("_th_src")),
+            F.col("source").eqNullSafe(F.col("_th_src")),
         )
         .withColumn(
             "keep",
-            (split_bucket_expr(id_col, 1_000_000) < F.col("keep_thresh")).cast("int"),
+            (split_bucket_expr("doc_id", 1_000_000) < F.col("keep_thresh")).cast("int"),
         )
-        .select(id_col, source_col, n_tokens_col, "keep")
+        .select("doc_id", "source", "n_tokens", "keep")
     )
 
 
@@ -275,7 +270,7 @@ def export_shards(
     )
 
 
-def _shuffle_order_key(id_col: str, seed: int) -> Column:
+def _shuffle_order_key(seed: int) -> Column:
     """The deterministic shuffle order key shared by the global
     permutation (:func:`shuffle_corpus`) and the two-level block
     shuffle (:func:`block_assignment`): 32-hex md5(seed|id) then the
@@ -283,7 +278,7 @@ def _shuffle_order_key(id_col: str, seed: int) -> Column:
     lexicographic order equal (md5, id) order on any engine, and ONE
     definition keeps the two shuffles' claimed-identical determinism
     contract (and their DuckDB oracles) from drifting apart."""
-    sid = F.col(id_col).cast("string")
+    sid = F.col("doc_id").cast("string")
     return F.concat_ws(
         "|",
         F.md5(F.concat_ws("|", F.lit(str(seed)), sid)),
@@ -292,7 +287,7 @@ def _shuffle_order_key(id_col: str, seed: int) -> Column:
 
 
 def shuffle_corpus(
-    df: DataFrame, id_col: str = "doc_id", seed: int = 42, shard_size: int = 100
+    df: DataFrame, seed: int = 42, shard_size: int = 100
 ) -> DataFrame:
     """Deterministic global corpus shuffle: a pseudo-random but fully
     reproducible permutation of the corpus with contiguous positions
@@ -309,13 +304,13 @@ def shuffle_corpus(
     is uniform by construction, so the range partitions are balanced
     no matter how skewed the input file order was.
 
-    PRECONDITION: ``id_col`` values are NON-NULL (and unique — the
+    PRECONDITION: ``doc_id`` values are NON-NULL (and unique — the
     export_shards rule). ``concat_ws`` skips NULL segments, so every
     NULL-id row would collapse onto the identical key md5(seed) and
     their relative positions become partitioning-dependent (and the
     DuckDB oracle's '||' yields NULL instead, diverging entirely).
     """
-    key = _shuffle_order_key(id_col, seed)
+    key = _shuffle_order_key(seed)
     return (
         export_shards(df.withColumn("_shuffle_key", key), "_shuffle_key", shard_size)
         .withColumnRenamed("global_rn", "position")
@@ -324,7 +319,7 @@ def shuffle_corpus(
 
 
 def block_shuffle(
-    df: DataFrame, id_col: str = "doc_id", seed: int = 42, n_blocks: int = 64
+    df: DataFrame, seed: int = 42, n_blocks: int = 64
 ) -> DataFrame:
     """Two-level reproducible epoch shuffle: hash-assign each row to
     one of ``n_blocks`` blocks, then order within the block by
@@ -345,7 +340,7 @@ def block_shuffle(
     breaking ties, so re-runs on any partitioning, any cluster size,
     produce the identical (block_id, block_pos) for every row, and a
     new seed is a fresh shuffle. Payload columns pass through
-    untouched (the shuffle_corpus contract). Same NON-NULL ``id_col``
+    untouched (the shuffle_corpus contract). Same NON-NULL ``doc_id``
     precondition as shuffle_corpus (concat_ws skips NULL segments;
     the oracle's ``||`` nulls out instead).
     """
@@ -353,14 +348,14 @@ def block_shuffle(
 
     w = Window.partitionBy("block_id").orderBy("_k")
     return (
-        block_assignment(df, id_col, seed, n_blocks)
+        block_assignment(df, seed, n_blocks)
         .withColumn("block_pos", (F.row_number().over(w) - 1).cast("long"))
         .drop("_k")
     )
 
 
 def block_assignment(
-    df: DataFrame, id_col: str = "doc_id", seed: int = 42, n_blocks: int = 64
+    df: DataFrame, seed: int = 42, n_blocks: int = 64
 ) -> DataFrame:
     """Append the two-level-shuffle routing columns to ``df``:
     ``block_id`` (independent md5 hash of (b|seed|id) mod n_blocks)
@@ -371,15 +366,12 @@ def block_assignment(
     the query-side positions can never disagree."""
     if n_blocks < 1:
         raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
-    # column API throughout (r16 advice): interpolating id_col into an
-    # expr string broke on names needing backticks while the order key
-    # (column-API _shuffle_order_key) handled them fine
     block = F.pmod(
         F.conv(
             F.substring(
                 F.md5(
                     F.concat_ws(
-                        "|", F.lit("b"), F.lit(str(seed)), F.col(id_col).cast("string")
+                        "|", F.lit("b"), F.lit(str(seed)), F.col("doc_id").cast("string")
                     )
                 ),
                 1,
@@ -391,14 +383,12 @@ def block_assignment(
         F.lit(n_blocks),
     ).cast("long")
     return df.withColumn("block_id", block).withColumn(
-        "_k", _shuffle_order_key(id_col, seed)
+        "_k", _shuffle_order_key(seed)
     )
 
 
 def source_interleave(
     df: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
     weights: "dict[str, int] | None" = None,
     default_weight: int = 1,
     seed: int = 42,
@@ -418,7 +408,7 @@ def source_interleave(
     changes only WHEN each doc appears, keeping every doc exactly
     once).
 
-    Output: ``(id_col, source, src_rn, position, shard_id)`` —
+    Output: ``(doc_id, source, src_rn, position, shard_id)`` —
     ``src_rn`` the doc's 1-based rank inside its source's shuffled
     stream, ``position`` the contiguous 0-based global training
     position, ``shard_id`` = position div shard_size (the
@@ -432,7 +422,7 @@ def source_interleave(
     differ when one source name prefixes another ('src1|' sorts
     after 'src10' because '|' > '9'); the oracle encodes the same
     composite, so the spec cannot drift. NULL sources coalesce to ''
-    (and take ``default_weight``); ``id_col`` must be non-null and
+    (and take ``default_weight``); ``doc_id`` must be non-null and
     unique (the shuffle_corpus precondition).
 
     Scale design: one per-source shuffle ranks src_rn (the window
@@ -454,17 +444,11 @@ def source_interleave(
         raise ValueError(
             f"source_interleave: weights must be integers >= 1, got {bad}"
         )
-    internal = ("_src", "_ok", "_vt", "_w", "_key", "src_rn", "position", "shard_id")
-    if id_col in internal or source_col in internal:
-        raise ValueError(
-            f"source_interleave: id_col={id_col!r}/source_col={source_col!r} "
-            f"collides with an internal/output column {internal} — rename it first"
-        )
-    src = F.coalesce(F.col(source_col).cast("string"), F.lit(""))
+    src = F.coalesce(F.col("source").cast("string"), F.lit(""))
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         src.alias("_src"),
-        _shuffle_order_key(id_col, seed).alias("_ok"),
+        _shuffle_order_key(seed).alias("_ok"),
     )
     w = Window.partitionBy("_src").orderBy("_ok")
     ranked = base.withColumn("src_rn", F.row_number().over(w).cast("long"))
@@ -494,14 +478,14 @@ def source_interleave(
             "|",
             F.lpad(F.col("_vt").cast("string"), 20, "0"),
             F.col("_src"),
-            F.lpad(F.col(id_col).cast("string"), 20, "0"),
+            F.lpad(F.col("doc_id").cast("string"), 20, "0"),
         ),
     )
     return (
         export_shards(keyed, "_key", shard_size)
         .withColumnRenamed("global_rn", "position")
         .select(
-            id_col,
+            "doc_id",
             F.col("_src").alias("source"),
             "src_rn",
             "position",

@@ -34,14 +34,12 @@ def _as_double(df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: s
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine. The query side is
     broadcast; ranking is a per-query window (shuffle on query_id)."""
-    q = _as_double(queries, id_col, vec_col, "query_id", "qv")
-    c = _as_double(corpus, id_col, vec_col, "neighbor_id", "cv")
+    q = _as_double(queries, "vec_id", "embedding", "query_id", "qv")
+    c = _as_double(corpus, "vec_id", "embedding", "neighbor_id", "cv")
     scored = (
         F.broadcast(q)
         .crossJoin(c)
@@ -91,8 +89,6 @@ def srp_bucket(df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8) -> D
 
 def ivf_cells(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     seed: int = 42,
 ):
@@ -108,10 +104,10 @@ def ivf_cells(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array  # noqa: F401
 
-    v = _as_double(corpus, id_col, vec_col, id_col, "v")
+    v = _as_double(corpus, "vec_id", "embedding", "vec_id", "v")
     feat = v.withColumn("features", array_to_vector("v"))
     model = KMeans(k=n_cells, seed=seed, featuresCol="features", predictionCol="cell").fit(feat)
-    assigned = model.transform(feat).select(id_col, "v", "cell")
+    assigned = model.transform(feat).select("vec_id", "v", "cell")
     centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     return assigned, centroids
 
@@ -136,8 +132,6 @@ def _nearest_cells_expr(centroids: list[list[float]], nprobe: int) -> str:
 
 def build_ivf_index(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
@@ -154,18 +148,16 @@ def build_ivf_index(
 
     The (n_cells, seed) parameters are baked into the stored cells;
     ``nprobe`` stays a query-time knob."""
-    assigned, centroids = ivf_cells(corpus, id_col, vec_col, n_cells, seed)
+    assigned, centroids = ivf_cells(corpus, n_cells, seed)
     cent = local_frame(
         corpus.sparkSession, enumerate(centroids), "cell int, centroid array<double>"
     )
-    return assigned.select("cell", id_col, "v"), cent
+    return assigned.select("cell", "vec_id", "v"), cent
 
 
 def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 4,
@@ -190,13 +182,13 @@ def cosine_topk_ivf(
         ]
         if not centroids:
             raise ValueError("ivf_index centroid table is empty")
-        assigned = index_df.select(F.col(id_col), F.col("v"), F.col("cell"))
+        assigned = index_df.select(F.col("vec_id"), F.col("v"), F.col("cell"))
     else:
-        assigned, centroids = ivf_cells(corpus, id_col, vec_col, n_cells, seed)
-    q = _as_double(queries, id_col, vec_col, "query_id", "v").withColumn(
+        assigned, centroids = ivf_cells(corpus, n_cells, seed)
+    q = _as_double(queries, "vec_id", "embedding", "query_id", "v").withColumn(
         "cell", F.explode(F.expr(_nearest_cells_expr(centroids, nprobe)))
     ).select("query_id", F.col("v").alias("qv"), "cell")
-    c = assigned.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), "cell")
+    c = assigned.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "cell")
     scored = (
         q.join(c, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -222,8 +214,6 @@ def cosine_topk_ivf(
 def cosine_topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 8,
     probe_hamming: int = 1,
@@ -243,15 +233,15 @@ def cosine_topk_lsh(
             (1 << i) | (1 << j) for i in range(n_planes) for j in range(i + 1, n_planes)
         ]
     q = (
-        srp_bucket(queries, id_col, vec_col, n_planes)
+        srp_bucket(queries, "vec_id", "embedding", n_planes)
         .withColumn(
             "bucket",
             F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in probes])),
         )
-        .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"), "bucket")
+        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket")
     )
-    c = srp_bucket(corpus, id_col, vec_col, n_planes).select(
-        F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
+    c = srp_bucket(corpus, "vec_id", "embedding", n_planes).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
     )
     scored = (
         q.join(c, "bucket")
@@ -277,8 +267,6 @@ def cosine_topk_lsh(
 
 def pq_encode(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     n_codes: int = 16,
     seed: int = 42,
@@ -304,7 +292,7 @@ def pq_encode(
 
     from ..caching import track
 
-    v = track(_as_double(corpus, id_col, vec_col, id_col, "v").persist())
+    v = track(_as_double(corpus, "vec_id", "embedding", "vec_id", "v").persist())
     first = v.select("v").first()  # bounded: one row
     if first is None:
         raise ValueError("pq_encode: corpus is empty — nothing to train codebooks on")
@@ -342,7 +330,7 @@ def pq_encode(
             f"WHEN l.code < r.code THEN -1 ELSE 1 END)[0].code"
         )
     codes = v.select(
-        id_col, F.expr(f"array({', '.join(code_exprs)})").alias("codes")
+        "vec_id", F.expr(f"array({', '.join(code_exprs)})").alias("codes")
     )
     return codes, codebooks
 
@@ -350,8 +338,6 @@ def pq_encode(
 def cosine_topk_pq(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     m: int = 8,
     n_codes: int = 16,
@@ -370,7 +356,7 @@ def cosine_topk_pq(
     neighbor_id, cosine, rank) with the TRUE cosine (the re-rank makes
     every emitted score exact; approximation only affects which
     candidates survive the first pass)."""
-    codes, codebooks = pq_encode(corpus, id_col, vec_col, m, n_codes, seed)
+    codes, codebooks = pq_encode(corpus, m, n_codes, seed)
     sub = len(codebooks[0][0])
     # reconstructed corpus vector: concat of each subspace's centroid,
     # looked up by code from the codebook literal (m element_at calls)
@@ -382,9 +368,9 @@ def cosine_topk_pq(
         )
         cb_arrs.append(f"element_at(array({cents}), codes[{i}] + 1)")
     recon = f"concat({', '.join(cb_arrs)})"
-    q = _as_double(queries, id_col, vec_col, "query_id", "qv")
+    q = _as_double(queries, "vec_id", "embedding", "query_id", "qv")
     approx = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
+        codes.withColumnRenamed("vec_id", "neighbor_id")
         .crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
@@ -403,7 +389,7 @@ def cosine_topk_pq(
         .filter(F.col("_r") <= refine * k)
         .select("query_id", "neighbor_id", "qv")
     )
-    c = _as_double(corpus, id_col, vec_col, "neighbor_id", "cv")
+    c = _as_double(corpus, "vec_id", "embedding", "neighbor_id", "cv")
     rescored = cand.join(c, "neighbor_id").withColumn(
         "cosine",
         F.round(
@@ -424,9 +410,7 @@ def cosine_topk_pq(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of an embedding column: per-vector
     scale = 127 / max|x|, q_i = round-half-up(x_i · scale) ∈ [-127,127]
     — the standard storage/bandwidth compression before ANN serving
@@ -443,20 +427,20 @@ def quantize_embeddings(
     bandwidth at 100 TB.
     """
     v = df.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("_v"),
+        F.col("vec_id"),
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("_v"),
     ).withColumn(
         "scale",
         127.0 / F.expr("nullif(array_max(transform(_v, x -> abs(x))), CAST(0.0 AS DOUBLE))"),
     )
     return v.select(
-        id_col,
+        "vec_id",
         F.posexplode(
             F.expr("transform(_v, x -> CAST(floor(x * scale + 0.5) AS BIGINT))")
         ).alias("pos", "q"),
         "scale",
     ).select(
-        id_col, F.col("pos").cast("bigint").alias("pos"), "q", "scale"
+        "vec_id", F.col("pos").cast("bigint").alias("pos"), "q", "scale"
     )
 
 
@@ -516,8 +500,6 @@ def cosine_topk_int8(
 
 def semantic_dedup(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     threshold: float = 0.9,
     seed: int = 42,
@@ -554,11 +536,11 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    assigned, _ = ivf_cells(corpus, id_col, vec_col, n_cells, seed)
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
+    assigned, _ = ivf_cells(corpus, n_cells, seed)
 
     def _prune_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         n = len(pdf)
         x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -583,24 +565,22 @@ def semantic_dedup(
             pruned[start:end] = hit.any(axis=1)
         return pd.DataFrame(
             {
-                id_col: pdf[id_col],
+                "vec_id": pdf["vec_id"],
                 "cell": pdf["cell"],
                 "keep": (~pruned).astype("int32"),
             }
         )
 
     return (
-        assigned.select(id_col, "v", "cell")
+        assigned.select("vec_id", "v", "cell")
         .groupBy("cell")
-        .applyInPandas(_prune_cell, schema=f"{id_col} {id_type}, cell int, keep int")
+        .applyInPandas(_prune_cell, schema=f"vec_id {id_type}, cell int, keep int")
     )
 
 
 def mmr_rerank(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     lam: float = 0.7,
     n_candidates: int = 40,
@@ -630,10 +610,10 @@ def mmr_rerank(
 
     from ..caching import track
 
-    qid_t = queries.schema[id_col].dataType.simpleString()
-    nid_t = corpus.schema[id_col].dataType.simpleString()
-    cands = cosine_topk_bruteforce(queries, corpus, id_col, vec_col, n_candidates)
-    vecs = _as_double(corpus, id_col, vec_col, "nid", "nv")
+    qid_t = queries.schema["vec_id"].dataType.simpleString()
+    nid_t = corpus.schema["vec_id"].dataType.simpleString()
+    cands = cosine_topk_bruteforce(queries, corpus, n_candidates)
+    vecs = _as_double(corpus, "vec_id", "embedding", "nid", "nv")
     # candidate vectors: broadcast the small candidate list onto the
     # corpus scan; persisted once (three consumers: qsim frame + both
     # sides of the pairwise join)
@@ -714,7 +694,6 @@ def mmr_rerank(
 def centroid_drift(
     df: DataFrame,
     group_col: str = "label",
-    vec_col: str = "embedding",
     quant: float = 1e6,
 ) -> DataFrame:
     """Per-group embedding-centroid drift vs the corpus centroid:
@@ -741,14 +720,13 @@ def centroid_drift(
     back as a broadcast 1-row array.
     """
     return centroid_drift_from_sums(
-        centroid_sums(df, group_col, vec_col, quant), group_col
+        centroid_sums(df, group_col, quant), group_col
     )
 
 
 def centroid_sums(
     df: DataFrame,
     group_col: str = "label",
-    vec_col: str = "embedding",
     quant: float = 1e6,
 ) -> DataFrame:
     """The distributed half of :func:`centroid_drift`: exact-BIGINT
@@ -759,7 +737,7 @@ def centroid_sums(
         F.col(group_col).alias("g"),
         F.posexplode(
             F.expr(
-                f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
+                f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
                 f" * CAST({quant!r} AS DOUBLE) + 0.5) AS BIGINT))"
             )
         ).alias("pos", "q"),

@@ -161,7 +161,7 @@ def count_min_sketch(
     so ``count_min_sketch(vocab, col, weight_col="cnt")`` is
     bit-identical to running the raw occurrence frame through, while
     hashing each DISTINCT item once instead of once per occurrence
-    (r18: the occurrence path md5-hashed every token occurrence
+    (the occurrence path md5-hashes every token occurrence
     x depth). Use it when a caller already pays the exact groupBy
     (e.g. alongside an exact top-K baseline); the occurrence path
     stays the default because a pure sketch pass must NOT pay a
@@ -247,7 +247,7 @@ def kmv_minima(
     the union, and membership of a union-sketch value v in set A is
     decidable from A's sketch alone (v <= union h_k <= A's h_k).
 
-    Scale shape (r19, guide §2.3/§4.2 — ONE pass, EXACT): the k-min
+    Scale shape (guide §2.3/§4.2 — ONE pass, EXACT): the k-min
     per set is neither a per-set sort of all values nor the previous
     two-pass HLL-threshold prefilter (which sized every set with
     approx_count_distinct in a first full pass, then re-ran the whole
@@ -394,7 +394,7 @@ def kmv_pair_intersections(minima: DataFrame, k: int = 128) -> DataFrame:
 
     All arithmetic is fixed-point integer on the portable md5-prefix
     hash, so results are bit-identical across engines, partitionings
-    and runs. Scale shape (r19): ONE k-bounded groupBy collapses the
+    and runs. Scale shape: ONE k-bounded groupBy collapses the
     sketch frame to |sets| rows of (sorted hash array, n_kept, h_max);
     the pair matrix is a broadcast cross of that frame against itself
     and every count the estimators need is array set algebra inside
@@ -410,7 +410,7 @@ def kmv_pair_intersections(minima: DataFrame, k: int = 128) -> DataFrame:
     # ONE k-bounded aggregation collapses each set's sketch to a
     # sorted hash ARRAY (k longs — the sketch is k-row by contract),
     # and the whole pair algebra becomes array set-ops inside the pair
-    # projection (r19, guide §2.3/§2.4): the previous shape broadcast
+    # projection (guide §2.3/§2.4): the previous shape broadcast
     # the pair list onto the flat minima frame twice, unioned
     # 2 x |pairs| x k rows and paid a (pair, h) hash shuffle plus a
     # pair rollup shuffle to count memberships that

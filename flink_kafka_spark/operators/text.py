@@ -28,15 +28,15 @@ LANG_MARKERS = {
 }
 
 
-def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token/char counts + quality features per document."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = F.split(F.lower(F.col("text")), r"\s+")
     n_tokens = F.size(toks)
-    n_chars = F.length(text_col)
+    n_chars = F.length("text")
     avg_tok = F.round((n_chars - (n_tokens - 1)) / n_tokens, 4)
     n_distinct = F.size(F.array_distinct(toks))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tokens.alias("n_tokens"),
         n_chars.alias("n_chars_calc"),
         avg_tok.alias("avg_token_len"),
@@ -44,27 +44,27 @@ def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def quality_expr(text_col: str = "text") -> Column:
+def quality_expr() -> Column:
     """Quality score in [0,1] as a single expression (composable into
     one-pass pipelines). Terms stay unrounded until the final round so
     the result never lands exactly on a decimal half-point (where
     engines' round() semantics diverge)."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = F.split(F.lower(F.col("text")), r"\s+")
     n_tokens = F.size(toks)
     distinct_ratio = F.size(F.array_distinct(toks)) / n_tokens
     length_term = F.least(n_tokens / F.lit(200.0), F.lit(1.0))
     return F.round(0.5 * length_term + 0.5 * distinct_ratio, 4)
 
 
-def quality_score(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Deterministic quality score in [0,1]: rewards mid-length docs
     and lexical diversity (the usual cheap pre-filters before expensive
     model-based scoring)."""
-    return df.select(F.col(id_col), quality_expr(text_col).alias("quality_score"))
+    return df.select(F.col("doc_id"), quality_expr().alias("quality_score"))
 
 
 def quality_threshold_sweep(
-    df: DataFrame, text_col: str = "text", steps: int = 10
+    df: DataFrame, steps: int = 10
 ) -> DataFrame:
     """Pass-rate curve for the quality filter: for every threshold t in
     {0, 1/steps, …, 1}, the docs and whitespace-tokens that survive
@@ -90,9 +90,9 @@ def quality_threshold_sweep(
     if 10000 % steps:
         raise ValueError(f"steps must divide 10^4, got {steps}")
     width = 10000 // steps
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = F.split(F.lower(F.col("text")), r"\s+")
     scored = df.select(
-        F.floor(F.round(quality_expr(text_col) * 10000, 0) / width).cast("int").alias("bucket"),
+        F.floor(F.round(quality_expr() * 10000, 0) / width).cast("int").alias("bucket"),
         F.size(toks).cast("long").alias("n_tokens"),
     )
     hist = scored.groupBy("bucket").agg(
@@ -132,14 +132,14 @@ def quality_threshold_sweep(
     )
 
 
-def pred_lang_expr(text_col: str = "text") -> Column:
+def pred_lang_expr() -> Column:
     """Stopword-marker language ID as a single expression: argmax of
     marker-token frequency, deterministic tie-break on language code,
     'und' when nothing matches."""
     def score(lang: str) -> Column:
         in_list = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
         return F.expr(
-            f"size(filter(split(lower({text_col}), '\\\\s+'), t -> t IN ({in_list})))"
+            f"size(filter(split(lower(text), '\\\\s+'), t -> t IN ({in_list})))"
         )
 
     scores = {lang: score(lang) for lang in sorted(LANG_MARKERS)}
@@ -150,17 +150,17 @@ def pred_lang_expr(text_col: str = "text") -> Column:
     return pred
 
 
-def language_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return df.select(F.col(id_col), pred_lang_expr(text_col).alias("pred_lang"))
+def language_id(df: DataFrame) -> DataFrame:
+    return df.select(F.col("doc_id"), pred_lang_expr().alias("pred_lang"))
 
 
-def bpe_count_expr(text_col: str = "text") -> Column:
+def bpe_count_expr() -> Column:
     """Regex pre-tokenizer count — the cheap token-budget estimator."""
-    return F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_REGEX}', 0)"))
+    return F.size(F.expr(f"regexp_extract_all(lower(text), '{TOKEN_REGEX}', 0)"))
 
 
-def token_count_bpe(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return df.select(F.col(id_col), bpe_count_expr(text_col).alias("n_bpe_tokens"))
+def token_count_bpe(df: DataFrame) -> DataFrame:
+    return df.select(F.col("doc_id"), bpe_count_expr().alias("n_bpe_tokens"))
 
 
 # PII patterns kept to syntax that behaves identically under Java
@@ -170,17 +170,17 @@ PII_URL = "https?://[^ ]+"
 PII_DIGIT_RUN = "[0-9]{6,}"
 
 
-def pii_scan(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pii_scan(df: DataFrame) -> DataFrame:
     """Per-document PII surface counts (emails, URLs, long digit runs
     — the cheap pre-redaction scan every training-data pipeline runs
     before release). Pure single projection, no shuffle; the same
     regexes drive :func:`redact_pii`."""
     def n(pat: str) -> Column:
-        return F.size(F.expr(f"regexp_extract_all(lower({text_col}), '{pat}', 0)"))
+        return F.size(F.expr(f"regexp_extract_all(lower(text), '{pat}', 0)"))
 
     n_emails, n_urls, n_digits = n(PII_EMAIL), n(PII_URL), n(PII_DIGIT_RUN)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.alias("n_emails"),
         n_urls.alias("n_urls"),
         n_digits.alias("n_digit_runs"),
@@ -188,21 +188,19 @@ def pii_scan(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     )
 
 
-def redact_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Replace PII spans with typed placeholder tokens — the
     release-time counterpart of :func:`pii_scan`, same narrow
     projection shape."""
-    red = F.col(text_col)
+    red = F.col("text")
     for pat, tag in ((PII_EMAIL, "<EMAIL>"), (PII_URL, "<URL>"), (PII_DIGIT_RUN, "<NUM>")):
         red = F.regexp_replace(red, f"(?i){pat}", tag)
-    return df.select(F.col(id_col), red.alias("redacted_text"))
+    return df.select(F.col("doc_id"), red.alias("redacted_text"))
 
 
 def contamination_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: per corpus document, how many
@@ -218,19 +216,17 @@ def contamination_overlap(
     corpus never self-joins."""
     from .dedup import shingles
 
-    doc_sh = shingles(docs, id_col, n)
-    bench_sh = shingles(benchmark, id_col, n).select("shingle").distinct()
+    doc_sh = shingles(docs, "doc_id", n)
+    bench_sh = shingles(benchmark, "doc_id", n).select("shingle").distinct()
     return (
         doc_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
     )
 
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -253,11 +249,11 @@ def chunk_documents(
     the chunk slice, never the full body, so the post-chunk stage
     (embedding, dedup) sees bounded-size rows.
     """
-    toks = F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_REGEX}', 0)")
+    toks = F.expr(f"regexp_extract_all(lower(text), '{TOKEN_REGEX}', 0)")
     return (
-        df.select(F.col(id_col), toks.alias("_toks"))
+        df.select(F.col("doc_id"), toks.alias("_toks"))
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.expr(
                     "CASE WHEN size(_toks) = 0 THEN array() "
@@ -267,7 +263,7 @@ def chunk_documents(
             "_toks",
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("chunk_id").cast("bigint").alias("chunk_id"),
             F.expr(f"size(slice(_toks, _start + 1, {chunk}))").alias("n_chunk_tokens"),
             F.expr(f"array_join(slice(_toks, _start + 1, {chunk}), ' ')").alias("chunk_text"),
@@ -275,7 +271,7 @@ def chunk_documents(
     )
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: fraction of tokens
     belonging to the most-frequent unigram / bigram, and the duplicate-
     token fraction. High values flag boilerplate / degenerate text that
@@ -287,8 +283,8 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     book-length documents prefer an explode + two-level groupBy (one
     shuffle) instead of the quadratic per-row scan.
     """
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
-    d = df.select(F.col(id_col), ws.alias("ws"))
+    ws = F.split(F.lower(F.col("text")), r"\s+")
+    d = df.select(F.col("doc_id"), ws.alias("ws"))
     # Guard the single-token doc: sequence(0, -1) is the DESCENDING
     # array [0, -1], so ws[i+1] would throw INVALID_ARRAY_INDEX under
     # ANSI mode. Empty bigram list matches DuckDB's range(1, 1) = [].
@@ -297,7 +293,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         " transform(sequence(0, size(ws) - 2), i -> concat(ws[i], ' ', ws[i+1]))"
         " ELSE array() END"
     )
-    d = d.select(id_col, "ws", big.alias("bg"))
+    d = d.select("doc_id", "ws", big.alias("bg"))
 
     def top_frac(arr: str) -> Column:
         # nullif guards the 1-token doc (empty bigram list): NULL frac
@@ -311,7 +307,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         )
 
     return d.select(
-        id_col,
+        "doc_id",
         F.size("ws").alias("n_tokens"),
         top_frac("ws").alias("top_unigram_frac"),
         top_frac("bg").alias("top_bigram_frac"),
@@ -321,7 +317,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def unigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_lm(df: DataFrame) -> DataFrame:
     """Corpus unigram language model: ``(token, n_occ, logp)`` with
     ``logp = ln(n_occ / total_tokens)`` — the model behind the
     perplexity-proxy quality filter (CCNet-style: score each document
@@ -334,7 +330,7 @@ def unigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
     is vocab-sized (Zipf-bounded: ~millions of types for a TB-scale
     corpus, tens of MB), which is what makes the downstream scoring
     join broadcastable."""
-    toks = df.select(F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token"))
+    toks = df.select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occ"))
     total = counts.agg(F.sum("n_occ").alias("_total"))
     return counts.crossJoin(F.broadcast(total)).select(
@@ -346,8 +342,6 @@ def unigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def unigram_logprob(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     lm: DataFrame | None = None,
     oov_logp: float | None = None,
 ) -> DataFrame:
@@ -369,11 +363,11 @@ def unigram_logprob(
     shuffle of (id, partial sum/count) pairs. Document text never
     shuffles."""
     if lm is None:
-        lm = unigram_lm(df, text_col)
+        lm = unigram_lm(df)
     elif oov_logp is None:
         raise ValueError("scoring under an external lm requires oov_logp (OOV floor)")
     toks = df.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
+        F.col("doc_id"), F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     )
     lm_side = F.broadcast(lm.select("token", "logp"))
     if oov_logp is None:
@@ -382,18 +376,18 @@ def unigram_logprob(
     else:
         joined = toks.join(lm_side, "token", "left")
         lp = F.coalesce(F.col("logp"), F.lit(float(oov_logp)))
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.round(-F.avg(lp), 4).alias("avg_neg_logprob"),
     )
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """64-bit-hex content fingerprint over the whitespace-normalized
     lowercased body — stable across engines (md5)."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.substring(F.md5(norm), 1, 16).alias("fingerprint"),
     )
 
@@ -411,8 +405,6 @@ _WINNOW_P = 1 << 20
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
 ) -> DataFrame:
@@ -446,7 +438,7 @@ def winnow_fingerprints(
     rows; with 1..w shingles they emit exactly one fingerprint (the
     single all-covering window).
 
-    LAMBDA-BINDING RULE (the r16 scaling-curve find): a column
+    LAMBDA-BINDING RULE (found on the scaling curve): a column
     referenced inside a higher-order-function lambda BODY is re-
     evaluated on every lambda call once projection collapse inlines
     its defining expression — ``transform(sequence(1, size(hs) - 7),
@@ -471,14 +463,14 @@ def winnow_fingerprints(
     # only (id, text), never sibling columns.
     from ..tables import spread_scan
 
-    d = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("ws")
+    d = spread_scan(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), F.split(F.lower(F.col("text")), r"\s+").alias("ws")
     )
     # k-gram shingles; the CASE guards the descending-sequence trap
     # (sequence(1, 0) is [1, 0]) exactly like _shingle_expr in dedup,
     # and `t` binds the token array once per row (lambda-binding rule)
     d = d.select(
-        id_col,
+        "doc_id",
         F.expr(
             f"flatten(transform(array(ws), t -> "
             f"CASE WHEN t IS NULL OR size(t) < {k} THEN array() "
@@ -497,7 +489,7 @@ def winnow_fingerprints(
     # packed (hash, rightmost-wins position) per shingle; transform's
     # index is 0-based and `sh` is the HOF's direct input (one eval)
     d = d.select(
-        id_col,
+        "doc_id",
         F.expr(
             f"transform(sh, (s, i) -> "
             f"cast(conv(substr(md5(s), 1, 10), 16, 10) AS bigint) * {_WINNOW_P} "
@@ -508,7 +500,7 @@ def winnow_fingerprints(
     # 0 < |hs| <= w), deduplicated per doc before the explode; `h`
     # binds the hash array once per row (lambda-binding rule)
     d = d.select(
-        id_col,
+        "doc_id",
         F.expr(
             f"flatten(transform(array(hs), h -> "
             f"CASE WHEN size(h) = 0 THEN array() "
@@ -517,7 +509,7 @@ def winnow_fingerprints(
             f"s -> array_min(slice(h, s, {w})))) END))"
         ).alias("fps"),
     )
-    # explode_OUTER + null filter instead of a plain explode (r19): a
+    # explode_OUTER + null filter instead of a plain explode: a
     # non-outer Generate lets InferFiltersFromGenerate add a
     # `size(fps) > 0` predicate whose projection-collapsed form inlines
     # the ENTIRE fingerprint expression (split + md5 + window-min HOFs)
@@ -532,10 +524,10 @@ def winnow_fingerprints(
     # the fingerprint expression exactly once, after the spread.
     fp = F.explode_outer("fps").alias("fp")
     return (
-        d.select(id_col, fp)
+        d.select("doc_id", fp)
         .where(F.col("fp").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             F.expr(f"{_WINNOW_P - 1} - (fp % {_WINNOW_P})").cast("long").alias("fp_pos"),
             F.expr(f"fp div {_WINNOW_P}").cast("long").alias("fp_hash"),
         )
@@ -553,8 +545,6 @@ WINNOW_MIN_SHARED = 2
 
 def winnow_overlap_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     min_shared: int = WINNOW_MIN_SHARED,
@@ -583,14 +573,14 @@ def winnow_overlap_pairs(
     from .dedup import _shared_key_pairs
 
     fps = (
-        winnow_fingerprints(df, id_col, text_col, k, w)
-        .select(id_col, "fp_hash")
+        winnow_fingerprints(df, k, w)
+        .select("doc_id", "fp_hash")
         .distinct()
     )
     # the min_shared filter is on the pair count alone, so the
     # optimizer pushes it below the sizes joins
     return (
-        _shared_key_pairs(fps, id_col, "fp_hash", stop_df)
+        _shared_key_pairs(fps, "doc_id", "fp_hash", stop_df)
         .filter(F.col("n_inter") >= min_shared)
         .select(
             "id_a",
@@ -607,8 +597,6 @@ def winnow_overlap_pairs(
 
 def winnow_eval_index(
     eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
 ) -> DataFrame:
@@ -620,8 +608,8 @@ def winnow_eval_index(
     its own batch — the media-dedup ``ref_sig`` discipline
     (multimodal.py:phash_incremental) applied to text."""
     return (
-        winnow_fingerprints(eval_df, id_col, text_col, k, w)
-        .select(F.col(id_col).alias("eval_id"), "fp_hash")
+        winnow_fingerprints(eval_df, k, w)
+        .select(F.col("doc_id").alias("eval_id"), "fp_hash")
         .distinct()
     )
 
@@ -629,8 +617,6 @@ def winnow_eval_index(
 def winnow_decontaminate_multi(
     train: DataFrame,
     eval_index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
 ) -> DataFrame:
@@ -663,38 +649,31 @@ def winnow_decontaminate_multi(
     The w + k - 1 verbatim-run guarantee applies per benchmark."""
     from ..caching import track
 
-    if id_col in ("bench_id", "eval_id", "fp_hash"):
-        raise ValueError(
-            f"winnow_decontaminate_multi: id_col={id_col!r} collides with an "
-            "internal column of the eval index — rename the id column first"
-        )
     t_fps = (
-        winnow_fingerprints(train, id_col, text_col, k, w)
-        .select(id_col, "fp_hash")
+        winnow_fingerprints(train, k, w)
+        .select("doc_id", "fp_hash")
         .distinct()
     )
     hits = track(t_fps.join(eval_index, "fp_hash").persist())
-    shared = hits.groupBy(id_col, "bench_id").agg(
+    shared = hits.groupBy("doc_id", "bench_id").agg(
         F.countDistinct("fp_hash").alias("n_shared_fp")
     )
-    per_pair = hits.groupBy(id_col, "bench_id", "eval_id").agg(
+    per_pair = hits.groupBy("doc_id", "bench_id", "eval_id").agg(
         F.count(F.lit(1)).alias("n_shared")
     )
-    best = per_pair.groupBy(id_col, "bench_id").agg(
+    best = per_pair.groupBy("doc_id", "bench_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval_docs"),
         F.expr("min_by(eval_id, struct(-n_shared, eval_id))").alias("best_eval_id"),
         F.max("n_shared").alias("best_shared"),
     )
-    return shared.join(best, [id_col, "bench_id"]).select(
-        id_col, "bench_id", "n_shared_fp", "n_eval_docs", "best_eval_id", "best_shared"
+    return shared.join(best, ["doc_id", "bench_id"]).select(
+        "doc_id", "bench_id", "n_shared_fp", "n_eval_docs", "best_eval_id", "best_shared"
     )
 
 
 def winnow_decontaminate(
     train: DataFrame,
     eval_df: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     eval_index: DataFrame | None = None,
@@ -732,45 +711,38 @@ def winnow_decontaminate(
     on the matched ids, never on the corpus. Text never shuffles."""
     from ..caching import track
 
-    if id_col in ("eval_id", "fp_hash"):
-        raise ValueError(
-            f"winnow_decontaminate: id_col={id_col!r} collides with an "
-            "internal column of the eval index — rename the id column first"
-        )
     if eval_index is None:
         if eval_df is None:
             raise ValueError(
                 "winnow_decontaminate: pass eval_df or a stored eval_index"
             )
-        eval_index = winnow_eval_index(eval_df, id_col, text_col, k, w)
+        eval_index = winnow_eval_index(eval_df, k, w)
     t_fps = (
-        winnow_fingerprints(train, id_col, text_col, k, w)
-        .select(id_col, "fp_hash")
+        winnow_fingerprints(train, k, w)
+        .select("doc_id", "fp_hash")
         .distinct()
     )
     # two consumers (hash-level and pair-level rollups): join once
     hits = track(t_fps.join(eval_index, "fp_hash").persist())
-    shared = hits.groupBy(id_col).agg(
+    shared = hits.groupBy("doc_id").agg(
         F.countDistinct("fp_hash").alias("n_shared_fp")
     )
-    per_pair = hits.groupBy(id_col, "eval_id").agg(
+    per_pair = hits.groupBy("doc_id", "eval_id").agg(
         F.count(F.lit(1)).alias("n_shared")
     )
-    best = per_pair.groupBy(id_col).agg(
+    best = per_pair.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval_docs"),
         F.expr("min_by(eval_id, struct(-n_shared, eval_id))").alias("best_eval_id"),
         F.max("n_shared").alias("best_shared"),
     )
-    return shared.join(best, id_col).select(
-        id_col, "n_shared_fp", "n_eval_docs", "best_eval_id", "best_shared"
+    return shared.join(best, "doc_id").select(
+        "doc_id", "n_shared_fp", "n_eval_docs", "best_eval_id", "best_shared"
     )
 
 
 def winnow_contaminated_spans(
     train: DataFrame,
     eval_df: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     eval_index: DataFrame | None = None,
@@ -806,27 +778,22 @@ def winnow_contaminated_spans(
     positions only — a contamination-sized frame, not the corpus."""
     from pyspark.sql.window import Window
 
-    if id_col in ("eval_id", "fp_hash", "fp_pos"):
-        raise ValueError(
-            f"winnow_contaminated_spans: id_col={id_col!r} collides with an "
-            "internal column — rename the id column first"
-        )
     if eval_index is None:
         if eval_df is None:
             raise ValueError(
                 "winnow_contaminated_spans: pass eval_df or a stored eval_index"
             )
-        eval_index = winnow_eval_index(eval_df, id_col, text_col, k, w)
+        eval_index = winnow_eval_index(eval_df, k, w)
     gap = (w + k - 1) if merge_gap is None else merge_gap
     if gap < 1:
         raise ValueError(f"merge_gap must be >= 1, got {gap}")
     matched = (
-        winnow_fingerprints(train, id_col, text_col, k, w)
+        winnow_fingerprints(train, k, w)
         .join(eval_index.select("fp_hash").distinct(), "fp_hash", "left_semi")
-        .select(id_col, "fp_pos")
+        .select("doc_id", "fp_pos")
         .distinct()
     )
-    by_pos = Window.partitionBy(id_col).orderBy("fp_pos")
+    by_pos = Window.partitionBy("doc_id").orderBy("fp_pos")
     islands = matched.withColumn(
         "_new",
         F.when(
@@ -836,18 +803,16 @@ def winnow_contaminated_spans(
         "_island",
         F.sum("_new").over(by_pos.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    return islands.groupBy(id_col, "_island").agg(
+    return islands.groupBy("doc_id", "_island").agg(
         F.min("fp_pos").cast("long").alias("span_start"),
         (F.max("fp_pos") + (k - 1)).cast("long").alias("span_end"),
         F.count(F.lit(1)).cast("long").alias("n_fps"),
-    ).select(id_col, "span_start", "span_end", "n_fps")
+    ).select("doc_id", "span_start", "span_end", "n_fps")
 
 
 def winnow_decontaminate_trim(
     train: DataFrame,
     eval_df: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     eval_index: DataFrame | None = None,
@@ -884,48 +849,38 @@ def winnow_decontaminate_trim(
     span LISTS (contaminated docs only — broadcast-sized next to the
     corpus) and filters tokens in a per-row HOF, so the corpus itself
     crosses no extra shuffle and clean documents never explode."""
-    internal = ("_spans", "_kept", "_total", "_txt", "_s", "_e")
-    if id_col in internal or text_col in internal:
-        raise ValueError(
-            f"winnow_decontaminate_trim: id_col={id_col!r}/"
-            f"text_col={text_col!r} collides with an internal column "
-            f"{internal} — rename the column first"
-        )
     spans = winnow_contaminated_spans(
-        train, eval_df, id_col, text_col, k, w, eval_index=eval_index
+        train, eval_df, k, w, eval_index=eval_index
     )
     p = (w - 1) if pad is None else pad
     if p < 0:
         raise ValueError(f"pad must be >= 0, got {p}")
     per_doc = (
         spans.select(
-            id_col,
+            "doc_id",
             F.greatest(F.col("span_start") - p, F.lit(0)).alias("_s"),
             (F.col("span_end") + p).alias("_e"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_list(F.struct("_s", "_e")).alias("_spans"))
     )
     # tokens of the ORIGINAL text (same '\s+' boundaries the winnow
     # positions were computed on; lowering never moves whitespace);
-    # the 2-arg filter lambda gets the 0-based index Spark guarantees.
-    # text_col is pre-projected to the internal alias _txt via the
-    # column API so the raw expr never interpolates a user-supplied
-    # name (backtick-safe, the block_assignment precedent)
+    # the 2-arg filter lambda gets the 0-based index Spark guarantees
     return (
-        train.select(F.col(id_col), F.col(text_col).alias("_txt"))
-        .join(per_doc, id_col, "left")
+        train.select("doc_id", "text")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.expr(
-                "filter(split(_txt, '\\\\s+'), (t, i) -> "
+                "filter(split(text, '\\\\s+'), (t, i) -> "
                 "_spans IS NULL OR NOT exists(_spans, sp -> "
                 "i >= sp._s AND i <= sp._e))"
             ).alias("_kept"),
-            F.size(F.split(F.col("_txt"), r"\s+")).alias("_total"),
+            F.size(F.split(F.col("text"), r"\s+")).alias("_total"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.concat_ws(" ", F.col("_kept")).alias("clean_text"),
             (F.col("_total") - F.size("_kept")).cast("long").alias("n_removed"),
         )
@@ -934,8 +889,6 @@ def winnow_decontaminate_trim(
 
 def inverted_index(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 2,
     terms: DataFrame | None = None,
 ) -> DataFrame:
@@ -962,12 +915,12 @@ def inverted_index(
 
     from ..tables import spread_scan
 
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    ws = F.split(F.lower(F.col("text")), r"\s+")
     # layout spread before the tokenize/array_distinct/explode (guide
     # §2.5): single-file inputs otherwise build the whole posting
     # stream on one core; no-op on a many-file corpus
-    postings = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(F.array_distinct(ws)).alias("term")
+    postings = spread_scan(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), F.explode(F.array_distinct(ws)).alias("term")
     )
     if terms is not None:
         postings = postings.join(
@@ -977,14 +930,12 @@ def inverted_index(
     return (
         postings.withColumn("dfreq", dfreq)
         .filter(F.col("dfreq") >= min_df)
-        .select("term", "dfreq", id_col)
+        .select("term", "dfreq", "doc_id")
     )
 
 
 def tfidf_top_terms(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     doc_filter: "Column | None" = None,
 ) -> DataFrame:
@@ -1003,7 +954,7 @@ def tfidf_top_terms(
     natural key; no data passes through Python.
 
     ``doc_filter`` restricts the RANKED docs while keeping N and df
-    corpus-global — the query-construction pushdown (r12): the tf
+    corpus-global — the query-construction pushdown: the tf
     side reads only the filtered docs (the predicate reaches the
     scan), and df is counted from an array_distinct explode of the
     corpus broadcast-semi-pruned to the filtered docs' candidate
@@ -1021,18 +972,18 @@ def tfidf_top_terms(
     unfiltered corpus instead and filter the output.
 
     PRECONDITION (both branches' df and inverted_index's dfreq window
-    share it): ``id_col`` is unique — df counts one posting row per
+    share it): ``doc_id`` is unique — df counts one posting row per
     (doc, term), so a duplicated id would double-count its terms' df
     in the filtered branch while the unfiltered branch's tc groupBy
-    collapses it. ``id_col`` is the table key everywhere in-repo."""
+    collapses it. ``doc_id`` is the documents table's key."""
     from pyspark.sql.window import Window
 
-    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    ws = F.split(F.lower(F.col("text")), r"\s+")
     if doc_filter is None:
         ex = df.select(
-            F.col(id_col), F.size(ws).alias("n_tokens"), F.explode(ws).alias("term")
+            F.col("doc_id"), F.size(ws).alias("n_tokens"), F.explode(ws).alias("term")
         )
-        tc = ex.groupBy(id_col, "n_tokens", "term").agg(F.count(F.lit(1)).alias("cnt"))
+        tc = ex.groupBy("doc_id", "n_tokens", "term").agg(F.count(F.lit(1)).alias("cnt"))
         scored = tc.withColumn(
             "dfreq", F.count(F.lit(1)).over(Window.partitionBy("term"))
         )
@@ -1040,9 +991,9 @@ def tfidf_top_terms(
         tc = (
             df.filter(doc_filter)
             .select(
-                F.col(id_col), F.size(ws).alias("n_tokens"), F.explode(ws).alias("term")
+                F.col("doc_id"), F.size(ws).alias("n_tokens"), F.explode(ws).alias("term")
             )
-            .groupBy(id_col, "n_tokens", "term")
+            .groupBy("doc_id", "n_tokens", "term")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         cand_terms = F.broadcast(tc.select("term").distinct())
@@ -1063,12 +1014,12 @@ def tfidf_top_terms(
     scored = scored.crossJoin(F.broadcast(n_docs)).withColumn(
         "_score", (F.col("cnt") * F.col("n_docs")) / (F.col("n_tokens") * F.col("dfreq"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("_score").desc(), F.col("term").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("_score").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.expr("floor(_score * 10000 + 0.5) / 10000").alias("score"),
             "rank",
@@ -1084,8 +1035,6 @@ BM25_K1, BM25_B = "1.2", "0.75"
 def bm25_search(
     df: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 10,
 ) -> DataFrame:
     """Execute a keyword query over the corpus with BM25 ranking and a
@@ -1102,7 +1051,7 @@ def bm25_search(
     """
     from ..tables import spread_scan
 
-    ws = f"split(lower({text_col}), '\\\\s+')"
+    ws = "split(lower(text), '\\\\s+')"
     tf_cols = [
         F.expr(f"size(filter({ws}, t -> t = '{t}'))").alias(f"tf_{i}")
         for i, t in enumerate(query_terms)
@@ -1111,8 +1060,8 @@ def bm25_search(
     # stats agg and the scored projection) re-run this tokenize-heavy
     # scan — on a single-file input each would run on one core.
     # Integer tf/dl sums only, so the spread is result-invisible.
-    base = spread_scan(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.expr(f"size({ws})").alias("dl"), *tf_cols
+    base = spread_scan(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), F.expr(f"size({ws})").alias("dl"), *tf_cols
     )
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
@@ -1151,13 +1100,13 @@ def bm25_search(
     # from a driver-side take(k) of the sorted frame (k rows, bounded)
     # or accept the k-row WindowExec.
     top = (
-        scored.orderBy(F.col("_raw").desc(), F.col(id_col).asc())
+        scored.orderBy(F.col("_raw").desc(), F.col("doc_id").asc())
         .limit(k)
         .coalesce(1)
-        .sortWithinPartitions(F.col("_raw").desc(), F.col(id_col).asc())
+        .sortWithinPartitions(F.col("_raw").desc(), F.col("doc_id").asc())
     )
     return top.select(
-        id_col,
+        "doc_id",
         F.expr("floor(_raw * 10000 + 0.5) / 10000").alias("score"),
         (F.monotonically_increasing_id() + 1).cast("int").alias("rank"),
     )
@@ -1165,8 +1114,6 @@ def bm25_search(
 
 def rrf_fuse(
     rankings: list[DataFrame],
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     k: int = 10,
     c: int = 60,
 ) -> DataFrame:
@@ -1185,7 +1132,7 @@ def rrf_fuse(
     order-insensitive value hash would flag). ``rrf_score`` is the
     half-up 6-dp projection of that integer; ties break on the id.
 
-    Output: ``(id_col, rrf_score, n_lists, rank)`` — top-``k`` fused
+    Output: ``(doc_id, rrf_score, n_lists, rank)`` — top-``k`` fused
     rows, ``n_lists`` = how many input lists carried the candidate
     (a document absent from a list simply contributes nothing, the
     standard RRF convention).
@@ -1198,18 +1145,11 @@ def rrf_fuse(
         raise ValueError("rrf_fuse: pass at least one ranked frame")
     if c < 0:
         raise ValueError(f"rrf_fuse: c must be >= 0, got {c}")
-    internal = ("_e12", "_sum_e12", "_rank", "n_lists", "rrf_score")
-    if id_col in internal or rank_col in internal:
-        raise ValueError(
-            f"rrf_fuse: id_col={id_col!r}/rank_col={rank_col!r} collides "
-            f"with an internal/output column {internal} — rename it first"
-        )
-    # rank is pre-projected to an internal alias via the column API
-    # (backtick-safe — the winnow_decontaminate_trim precedent: never
-    # interpolate a user-supplied name into a raw expr), and NULL /
-    # non-positive ranks fail LOUDLY: in non-ANSI Spark a NULL rank
-    # would make the div NULL, F.sum would skip it, and n_lists would
-    # still count the list — a silently under-scored doc
+    # rank is read through the alias _rank (rank is also a SQL window
+    # function's name), and NULL / non-positive ranks fail LOUDLY: in
+    # non-ANSI Spark a NULL rank would make the div NULL, F.sum would
+    # skip it, and n_lists would still count the list — a silently
+    # under-scored doc
     contrib = F.expr(
         f"CASE WHEN _rank IS NULL OR _rank < 1 THEN "
         f"raise_error(concat('rrf_fuse: rank must be a positive "
@@ -1217,28 +1157,28 @@ def rrf_fuse(
         f"ELSE 1000000000000 div ({c} + _rank) END"
     ).alias("_e12")
     parts = [
-        r.select(F.col(id_col), F.col(rank_col).alias("_rank")).select(
-            F.col(id_col), contrib
+        r.select(F.col("doc_id"), F.col("rank").alias("_rank")).select(
+            F.col("doc_id"), contrib
         )
         for r in rankings
     ]
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    fused = u.groupBy(id_col).agg(
+    fused = u.groupBy("doc_id").agg(
         F.sum("_e12").cast("long").alias("_sum_e12"),
         F.count(F.lit(1)).cast("int").alias("n_lists"),
     )
     # same k-row rank-off-sorted-partition pattern (and the same
     # implementation-detail contract note) as bm25_search above
     top = (
-        fused.orderBy(F.col("_sum_e12").desc(), F.col(id_col).asc())
+        fused.orderBy(F.col("_sum_e12").desc(), F.col("doc_id").asc())
         .limit(k)
         .coalesce(1)
-        .sortWithinPartitions(F.col("_sum_e12").desc(), F.col(id_col).asc())
+        .sortWithinPartitions(F.col("_sum_e12").desc(), F.col("doc_id").asc())
     )
     return top.select(
-        id_col,
+        "doc_id",
         (
             F.expr("(_sum_e12 + 500000) div 1000000").cast("double") / 1000000.0
         ).alias("rrf_score"),
@@ -1247,7 +1187,7 @@ def rrf_fuse(
     )
 
 
-def bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_lm(df: DataFrame) -> DataFrame:
     """Corpus bigram language model: ``(w1, w2, n_b, n_c)`` — the
     observed count of each adjacent whitespace-token pair plus the
     context total ``n_c = Σ_w2 n_b(w1, ·)``, so the MLE transition
@@ -1265,7 +1205,7 @@ def bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
     and usually to broadcast for scoring."""
     from pyspark.sql import Window
 
-    arr = F.split(F.lower(F.col(text_col)), r"\s+")
+    arr = F.split(F.lower(F.col("text")), r"\s+")
     bi_expr = (
         "CASE WHEN size(_arr) < 2 THEN array() "
         "ELSE transform(sequence(2, size(_arr)), "
@@ -1284,8 +1224,6 @@ def bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def bigram_logprob(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     lam: float = 0.75,
 ) -> DataFrame:
     """Per-document average negative log-probability under an
@@ -1311,18 +1249,18 @@ def bigram_logprob(
     shuffle closes it; document text never shuffles."""
     if not 0.0 < lam < 1.0:
         raise ValueError(f"lam must be in (0, 1), got {lam}")
-    arr = F.split(F.lower(F.col(text_col)), r"\s+")
+    arr = F.split(F.lower(F.col("text")), r"\s+")
     bi_expr = (
         "CASE WHEN size(_arr) < 2 THEN array() "
         "ELSE transform(sequence(2, size(_arr)), "
         "i -> struct(element_at(_arr, i - 1) AS w1, element_at(_arr, i) AS w2)) END"
     )
     pos = (
-        df.select(F.col(id_col), arr.alias("_arr"))
-        .select(id_col, F.explode(F.expr(bi_expr)).alias("bg"))
-        .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        df.select(F.col("doc_id"), arr.alias("_arr"))
+        .select("doc_id", F.explode(F.expr(bi_expr)).alias("bg"))
+        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
-    model = bigram_lm(df, text_col)
+    model = bigram_lm(df)
     uni = (
         df.select(F.explode(arr).alias("token"))
         .groupBy("token")
@@ -1337,14 +1275,14 @@ def bigram_logprob(
         pos.join(model, ["w1", "w2"])
         .join(F.broadcast(uni.withColumnRenamed("token", "w2")), "w2")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
             F.round(-F.avg(lp), 4).alias("avg_neg_logprob"),
         )
     )
-    return df.select(id_col).join(scored, id_col, "left").select(
-        id_col,
+    return df.select("doc_id").join(scored, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
         F.coalesce("avg_neg_logprob", F.lit(0.0)).alias("avg_neg_logprob"),
     )
@@ -1360,9 +1298,7 @@ _CLF_MIX = 2654435761
 _CLF_PRIME = 1000003
 
 
-def classifier_score(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def classifier_score(df: DataFrame) -> DataFrame:
     """Model-based quality scoring with a hashed linear classifier —
     the fastText-shaped filtering stage of an LLM data pipeline
     (LLaMA/CCNet-style: a cheap linear model over hashed bag-of-words
@@ -1388,23 +1324,23 @@ def classifier_score(
     Scale design (100 TB): hash + weight are JVM expressions inside
     the scan projection; the only shuffle is the map-side-combined
     (id, n, Σw) rollup. No join, no model shipping, no UDF."""
-    tok = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
+    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     bucket = F.expr(
         f"cast(conv(substr(md5(token), 1, 8), 16, 10) AS bigint) % {CLF_BUCKETS}"
     )
     w_int = F.expr(f"(_bucket * {_CLF_MIX}L) % {_CLF_PRIME}")
     per_tok = (
-        df.select(F.col(id_col), tok)
+        df.select(F.col("doc_id"), tok)
         .withColumn("_bucket", bucket)
         .withColumn("_w", w_int)
     )
-    agg = per_tok.groupBy(id_col).agg(
+    agg = per_tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.sum("_w").cast("long").alias("_sw"),
     )
     logit = (F.col("_sw") * 2.0 / F.col("n_tokens")) / _CLF_PRIME - 1.0
     return agg.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         F.round(logit, 6).alias("clf_logit"),
         F.round(1.0 / (1.0 + F.exp(-4.0 * logit)), 4).alias("clf_score"),
@@ -1413,8 +1349,6 @@ def classifier_score(
 
 def vocab_coverage(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     vocab_size: int = 500,
 ) -> DataFrame:
     """Tokenizer-vocabulary coverage audit: score every document's
@@ -1436,7 +1370,7 @@ def vocab_coverage(
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     toks = df.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
+        F.col("doc_id"), F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     )
     vocab = (
         toks.groupBy("token")
@@ -1447,7 +1381,7 @@ def vocab_coverage(
     )
     return (
         toks.join(F.broadcast(vocab), "token", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             (F.count(F.lit(1)) - F.count("_in_vocab")).cast("long").alias("n_oov"),
@@ -1466,8 +1400,6 @@ _EMB_MIX_DIM = 40503
 
 def hashed_doc_embedding(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dim: int = 64,
 ) -> DataFrame:
     """Feature-hashing document embedder (the hashing trick / signed
@@ -1499,15 +1431,15 @@ def hashed_doc_embedding(
     # one task on a single-file input; no-op on a many-file corpus
     from ..tables import spread_scan
 
-    tok = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token")
+    tok = F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     bucket = F.expr(
         f"cast(conv(substr(md5(token), 1, 8), 16, 10) AS bigint) % {CLF_BUCKETS}"
     )
     per_bucket = (
-        spread_scan(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), tok)
-        .select(id_col, bucket.alias("_bucket"))
-        .groupBy(id_col, "_bucket")
+        spread_scan(df.select(F.col("doc_id"), F.col("text")))
+        .select(F.col("doc_id"), tok)
+        .select("doc_id", bucket.alias("_bucket"))
+        .groupBy("doc_id", "_bucket")
         .agg(F.count(F.lit(1)).alias("_cnt"))
     )
     # sign = parity of the SQUARED affine mix. The square matters: the
@@ -1526,36 +1458,33 @@ def hashed_doc_embedding(
     )
     return (
         per_bucket.select(
-            id_col,
+            "doc_id",
             "_bucket",
             "_cnt",
             F.explode(F.sequence(F.lit(0), F.lit(dim - 1))).alias("dim_idx"),
         )
-        .groupBy(id_col, "dim_idx")
+        .groupBy("doc_id", "dim_idx")
         .agg(F.sum(F.col("_cnt") * sign).cast("long").alias("val"))
     )
 
 
 def hashed_doc_embedding_vec(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dim: int = 64,
-    out_col: str = "embedding",
 ) -> DataFrame:
     """:func:`hashed_doc_embedding` folded to the ``array<float>``
     column shape the similarity operators consume (``(id, embedding)``
     — drop-in for the ``embeddings`` table's schema). One extra
     (id)-keyed shuffle to assemble the array; dims are densely filled
     (a dim with no contribution is exact 0)."""
-    long = hashed_doc_embedding(df, id_col, text_col, dim)
+    long = hashed_doc_embedding(df, dim)
     return (
-        long.groupBy(id_col)
+        long.groupBy("doc_id")
         .agg(
             F.expr(
                 "transform(array_sort(collect_list(struct(dim_idx, val))), "
                 "s -> CAST(s.val AS FLOAT))"
-            ).alias(out_col)
+            ).alias("embedding")
         )
     )
 
@@ -1566,14 +1495,14 @@ def hashed_doc_embedding_vec(
 # character, and C0 control bytes (minus \t\n\r). Every alternative
 # requires the FULL digraph — a bare 'â€' or 'Â' prefix is legitimate
 # text (French 'Âge', 'â' + Euro sign) and must not trip a gate that
-# suppresses documents (r7 advisory: the optional suffix classes were
-# high-recall false positives).
+# suppresses documents (the optional suffix classes were high-recall
+# false positives).
 ENC_MOJIBAKE = "Ã[©¨«¤¶¼±£ ]|â€[™œ¦“”]|Â[« »]"
 ENC_REPLACEMENT = "�"
 ENC_CONTROL = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"
 
 
-def encoding_flags(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def encoding_flags(df: DataFrame) -> DataFrame:
     """Encoding-damage audit per document: counts of UTF-8-decoded-as-
     Latin-1 mojibake digraphs (the 'Ã©'/'â€™' artifacts of a
     double-encoding bug somewhere upstream), U+FFFD replacement
@@ -1587,10 +1516,10 @@ def encoding_flags(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     bandwidth-bound at 100 TB like the rest of the text family."""
 
     def n(pat: str) -> Column:
-        return F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0)))
+        return F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
 
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n(ENC_MOJIBAKE).alias("n_mojibake"),
         n(ENC_REPLACEMENT).alias("n_replacement"),
         n(ENC_CONTROL).alias("n_control"),
@@ -1617,7 +1546,7 @@ _ENTITIES = [
 ]
 
 
-def strip_markup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def strip_markup(df: DataFrame) -> DataFrame:
     """Markup-to-text extraction — the boilerplate-stage predecessor of
     every text filter here: drop script/style/comment blocks wholesale
     (their CONTENT is code, not prose), strip remaining tags, unescape
@@ -1633,15 +1562,15 @@ def strip_markup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     the module constant documents). A full boilerplate extractor
     (jusText/trafilatura-class, DOM-aware) is a Pandas-UDF stage by
     nature; this is the JVM-side 95% that runs at scan speed."""
-    clean = F.regexp_replace(F.col(text_col), MARKUP_BLOCKS, " ")
+    clean = F.regexp_replace(F.col("text"), MARKUP_BLOCKS, " ")
     clean = F.regexp_replace(clean, MARKUP_TAG, " ")
     for ent, rep in _ENTITIES:
         clean = F.replace(clean, F.lit(ent), F.lit(rep))
     clean = F.trim(F.regexp_replace(clean, r"\s+", " "))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean.alias("clean_text"),
-        (F.length(text_col) - F.length(clean)).cast("int").alias("removed_chars"),
+        (F.length("text") - F.length(clean)).cast("int").alias("removed_chars"),
     )
 
 
@@ -1662,7 +1591,7 @@ def _bpe_merge_step(syms: "Column | str", left: str, right: str) -> Column:
       neighbors alone: emit left+right where (x, next) match, drop x
       where (prev, x) match, keep x otherwise. O(1) per element
       (two neighbor probes) vs the fold's O(len) accumulator copy per
-      element — the r18 opt-round rewrite; the fold's no-chaining
+      element; the fold's no-chaining
       argument (a freshly merged element equals left+right, never bare
       left) holds here as "merges happen only at original candidate
       positions".
@@ -1707,7 +1636,6 @@ def _bpe_merge_step(syms: "Column | str", left: str, right: str) -> Column:
 def bpe_learn_merges(
     docs: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
     return_vocab_state: bool = False,
 ) -> "DataFrame | tuple[DataFrame, DataFrame]":
     """Iterative BPE merge training (the loop behind
@@ -1739,7 +1667,7 @@ def bpe_learn_merges(
     FINAL per-word symbol frame ``(w, syms)`` — the vocabulary with
     every learned merge already applied, which is exactly what a
     tokenizer applying this merge table to the same corpus would
-    recompute from scratch (r19, guide §1.2 "don't compute things you
+    recompute from scratch (guide §1.2 "don't compute things you
     throw away": the learn-then-tokenize query paid the whole vocab
     rewrite — distinct + one projection layer per merge — twice). The
     state frame is backed by the final round's checkpoint blocks,
@@ -1763,7 +1691,7 @@ def bpe_learn_merges(
     from ..tables import spread_scan
 
     vocab = (
-        spread_scan(docs.select(F.col(text_col).alias("_t")))
+        spread_scan(docs.select(F.col("text").alias("_t")))
         .select(F.explode(F.split(F.lower("_t"), r"\s+")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
@@ -1843,8 +1771,6 @@ def bpe_learn_merges(
 def bpe_apply_merges(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenize with a LEARNED merge table (the apply half of
     :func:`bpe_learn_merges` — together they are the full no-model
@@ -1860,17 +1786,17 @@ def bpe_apply_merges(
     projection layer per merge, each the shared
     :func:`_bpe_merge_step` (vectorized neighbor-probe rewrite for
     left != right, the greedy fold for left == right). Practical
-    merge-count ceiling (r18 advisory): one SELECT layer per merge
+    merge-count ceiling: one SELECT layer per merge
     makes logical-plan depth linear in table size, so Catalyst's
     analyzer — not execution — becomes the wall somewhere in the
     low thousands of merges; tables near the ~100k production scale
     need the layering chunked with a periodic ``localCheckpoint``
     lineage cut (the trainer's own per-round discipline), which no
-    in-repo caller requires today. The rewrite
-    runs on the DISTINCT-word frame (the trainer's own collapse, r10
-    verdict item 3): a word seen a billion times is rewritten once and
-    its token count joins back to the occurrence stream, so merge work
-    scales with |vocab|, not corpus size. The join ships only (word, n_toks)
+    in-repo caller requires today. The rewrite runs on the
+    DISTINCT-word frame (the trainer's own collapse): a word seen a
+    billion times is rewritten once and its token count joins back to
+    the occurrence stream, so merge work scales with |vocab|, not
+    corpus size. The join ships only (word, n_toks)
     pairs — AQE turns it into a broadcast probe whenever the vocab
     fits an executor, leaving the occurrence stream unshuffled; at
     vocabularies past broadcast size it degrades to a narrow
@@ -1884,9 +1810,9 @@ def bpe_apply_merges(
     corpus-sized frame — the span_dup_stats trade, decided the same
     way: two narrow parquet passes beat a corpus-sized cache."""
     syms = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-    words = _bpe_words(docs, id_col, text_col)
+    words = _bpe_words(docs)
     # one SELECT LAYER per merge, each referencing the previous
-    # symbol column as an attribute (r18 opt round): the vectorized
+    # symbol column as an attribute: the vectorized
     # _bpe_merge_step probes its input array three times (transform
     # source + two neighbor F.get lookups), so composing merges as one
     # nested expression would triplicate the whole subtree per rank —
@@ -1903,10 +1829,10 @@ def bpe_apply_merges(
     vocab_toks = vocab_toks.select(
         "w", F.size("_s").cast("long").alias("n_toks")
     )
-    return _bpe_doc_stats(words, vocab_toks, id_col)
+    return _bpe_doc_stats(words, vocab_toks)
 
 
-def _bpe_words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _bpe_words(docs: DataFrame) -> DataFrame:
     """The occurrence stream both tokenizer paths probe: (id, word),
     normalized exactly like the trainer's vocabulary (lowercase,
     whitespace split, empties dropped). Layout-spread first (guide
@@ -1917,25 +1843,22 @@ def _bpe_words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from ..tables import spread_scan
 
     return (
-        spread_scan(docs.select(F.col(id_col), F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(text_col), r"\s+")).alias("w"),
-        )
+        spread_scan(docs.select("doc_id", "text"))
+        .select("doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w"))
         .where(F.col("w") != "")
     )
 
 
-def _bpe_doc_stats(words: DataFrame, vocab_toks: DataFrame, id_col: str) -> DataFrame:
+def _bpe_doc_stats(words: DataFrame, vocab_toks: DataFrame) -> DataFrame:
     """Per-doc token accounting from the occurrence stream and a
     (w, n_toks) vocabulary — the shared probe half of both tokenizer
     paths. The join ships only (word, n_toks) pairs; AQE broadcasts
     the vocab whenever it fits an executor, leaving the occurrence
     stream unshuffled."""
     per_word = words.join(vocab_toks, "w").select(
-        id_col, "n_toks", F.length("w").alias("n_chars")
+        "doc_id", "n_toks", F.length("w").alias("n_chars")
     )
-    return per_word.groupBy(id_col).agg(
+    return per_word.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum("n_chars").cast("long").alias("n_chars"),
         F.sum("n_toks").cast("long").alias("n_bpe_tokens"),
@@ -1945,14 +1868,12 @@ def _bpe_doc_stats(words: DataFrame, vocab_toks: DataFrame, id_col: str) -> Data
 def bpe_train_and_tokenize(
     docs: DataFrame,
     n_merges: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges and tokenize the SAME corpus with
     them, in one composition — result-identical to
     ``bpe_apply_merges(docs, [learned merges])`` but without the
     tokenizer's vocabulary rewrite: the trainer's final symbol frame
-    already IS the vocabulary with every merge applied (r19, guide
+    already IS the vocabulary with every merge applied (guide
     §1.2 — the previous composition re-ran the distinct-vocab scan
     plus one merge projection layer per rank, the single biggest stage
     of the learn-then-tokenize query, to recompute state the trainer
@@ -1967,7 +1888,7 @@ def bpe_train_and_tokenize(
     tests/test_textops_props.py::TestBpeTrainAndTokenize against the
     two-step composition)."""
     _, state = bpe_learn_merges(
-        docs, n_merges, text_col, return_vocab_state=True
+        docs, n_merges, return_vocab_state=True
     )
     vocab_toks = state.select("w", F.size("syms").cast("long").alias("n_toks"))
-    return _bpe_doc_stats(_bpe_words(docs, id_col, text_col), vocab_toks, id_col)
+    return _bpe_doc_stats(_bpe_words(docs), vocab_toks)

@@ -18,10 +18,9 @@ from pyspark.sql.window import Window
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
     content_cols: tuple[str, ...] = ("text",),
 ) -> DataFrame:
-    """Row-level diff of two snapshots keyed by ``id_col``: one row per
+    """Row-level diff of two snapshots keyed by ``doc_id``: one row per
     id present in either side with status ``added`` / ``removed`` /
     ``changed`` / ``unchanged``, comparing an md5 over the content
     columns instead of the payloads themselves. The digest input is the
@@ -37,12 +36,12 @@ def snapshot_diff(
     skew-free for the common republish case where most rows are
     unchanged."""
     fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in content_cols])))
-    o = old.select(F.col(id_col).alias("_oid"), fp.alias("_ofp"))
-    n = new.select(F.col(id_col).alias("_nid"), fp.alias("_nfp"))
+    o = old.select(F.col("doc_id").alias("_oid"), fp.alias("_ofp"))
+    n = new.select(F.col("doc_id").alias("_nid"), fp.alias("_nfp"))
     return (
         o.join(n, F.col("_oid") == F.col("_nid"), "full_outer")
         .select(
-            F.coalesce(F.col("_nid"), F.col("_oid")).alias(id_col),
+            F.coalesce(F.col("_nid"), F.col("_oid")).alias("doc_id"),
             F.when(F.col("_oid").isNull(), "added")
             .when(F.col("_nid").isNull(), "removed")
             .when(F.col("_ofp") != F.col("_nfp"), "changed")
@@ -55,7 +54,6 @@ def snapshot_diff(
 def changes_from_diff(
     old: DataFrame,
     new: DataFrame,
-    id_col: str = "doc_id",
     content_cols: tuple[str, ...] = ("text",),
 ) -> DataFrame:
     """The changelog a republish SHIPS: :func:`snapshot_diff` verdicts
@@ -67,15 +65,15 @@ def changes_from_diff(
     Scale: the diff shuffles fingerprints only; the payload join
     touches just the added/changed ids (broadcast-friendly for the
     common small-edit republish)."""
-    diff = snapshot_diff(old, new, id_col, content_cols)
+    diff = snapshot_diff(old, new, content_cols)
     upserts = (
         diff.filter(F.col("status").isin("added", "changed"))
-        .select(id_col)
-        .join(new, id_col)
-        .select(id_col, F.lit("upsert").alias("op"), *content_cols)
+        .select("doc_id")
+        .join(new, "doc_id")
+        .select("doc_id", F.lit("upsert").alias("op"), *content_cols)
     )
     deletes = diff.filter(F.col("status") == "removed").select(
-        id_col,
+        "doc_id",
         F.lit("delete").alias("op"),
         *[F.lit(None).cast(dict(new.dtypes)[c]).alias(c) for c in content_cols],
     )
@@ -85,7 +83,6 @@ def changes_from_diff(
 def apply_changes(
     base: DataFrame,
     changes: DataFrame,
-    id_col: str = "doc_id",
     content_cols: tuple[str, ...] = ("text",),
 ) -> DataFrame:
     """MERGE INTO without a table format: apply a
@@ -101,11 +98,11 @@ def apply_changes(
     upsert payloads. The changelog side is edit-volume-sized, so AQE
     broadcasts it for the common small-edit republish; the base is
     never shuffled."""
-    keyed = changes.select(F.col(id_col), "op", *content_cols)
-    survivors = base.select(id_col, *content_cols).join(
-        keyed.select(id_col), id_col, "left_anti"
+    keyed = changes.select(F.col("doc_id"), "op", *content_cols)
+    survivors = base.select("doc_id", *content_cols).join(
+        keyed.select("doc_id"), "doc_id", "left_anti"
     )
-    upserts = keyed.filter(F.col("op") == "upsert").select(id_col, *content_cols)
+    upserts = keyed.filter(F.col("op") == "upsert").select("doc_id", *content_cols)
     return survivors.unionByName(upserts)
 
 

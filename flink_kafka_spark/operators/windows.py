@@ -221,11 +221,11 @@ def windowed_uv_bloom(
     window, then one ``applyInPandas`` per window group runs the
     serial bloom insert over that O(UV) Arrow batch — the bit array
     lives only inside its group's batch, and the single-threaded term
-    is bounded by per-window cardinality, never event volume (r13
-    verdict item 2). Insert order is preserved exactly — first
-    occurrences were consumed in sorted ``(ts, user)`` order, and a
-    user's first occurrence is ``(min(ts), user)`` — so collision
-    behavior and counts are bit-identical to processing the raw rows. Streaming: per-window
+    is bounded by per-window cardinality, never event volume. Insert
+    order is preserved exactly — first occurrences were consumed in
+    sorted ``(ts, user)`` order, and a user's first occurrence is
+    ``(min(ts), user)`` — so collision behavior and counts are
+    bit-identical to processing the raw rows. Streaming: per-window
     state holds the packed bitmap (``applyInPandasWithState``), the
     exact analog of the reference's per-window Redis key, and is
     EVICTED once the event-time watermark passes window_end +
@@ -260,7 +260,7 @@ def windowed_uv_bloom(
         # occurrences in sorted (_ts, _u) order, and a user's first
         # occurrence in that order is exactly (min(_ts), _u) — so the
         # same bits are set in the same sequence and the count is
-        # bit-identical to the pre-r14 behavior (oracle unchanged).
+        # bit-identical to the per-row insert it replaced (oracle unchanged).
         distinct_users = keyed.groupBy("window_start_s", "_u").agg(
             F.min("_ts").alias("_ts")
         )

@@ -961,7 +961,7 @@ def kmv_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = track(kmv_minima(ev, "t", "ud", KMV_K).persist())
     est_set = kmv_estimate(kept, KMV_K).select(F.col("s").alias("t"), "est")
-    # persist the |types|-row exact aggregate (r19): it feeds the pair
+    # persist the |types|-row exact aggregate: it feeds the pair
     # enumeration (whose two sides each appear in the union-sketch
     # branch AND under the final assembly) plus the ea/eb broadcast
     # builds — unpersisted, every one of those ~5 plan occurrences
@@ -1199,7 +1199,7 @@ def events_value_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer e4 mean, floor-half-up, back to units in the terminal
         # projection — single division on exact integers, no sum-order.
         # CAST the divisor: a Spark `10000.0` literal is DECIMAL and
-        # drags the result into Decimal -> pandas object (r9 lesson)
+        # drags the result into Decimal -> pandas object
         F.expr(
             "floor(CAST(sum(c_e4) AS DOUBLE) / count(*) + 0.5)"
             " / CAST(10000 AS DOUBLE)"
@@ -1249,10 +1249,9 @@ QUERIES.append(
 # p50/p95/p99 (operators/sketches.py:kll_quantile_rollup) — the
 # quantile twin of the HLL rollup: a 100 TB pipeline materializes the
 # per-day sketch bytes once and answers any set-level quantile
-# question without re-reading data. ROWS-ONLY registration (the r12
-# ledger's restraint note): the estimates are Datasketches-internal
-# (DuckDB has no KLL), so driver verification is row-count/schema
-# while the VALUE surface is pinned by pytest — exact order statistics
+# question without re-reading data. ROWS-ONLY registration: the
+# estimates are Datasketches-internal (DuckDB has no KLL), so their
+# verification is row-count/schema while the VALUE surface is pinned by pytest — exact order statistics
 # below k, split-invariance, and the Karnin-Lang-Liberty rank-error
 # band on a planted distribution (tests/test_textops_props.py), the
 # same class as uv_hll_rollup.
@@ -1568,7 +1567,7 @@ QUERIES.append(
 
 # --- release-gate funnel compose (extension) --------------------------
 #
-# The round-13/14 families composed END-TO-END, one oracle pinning the
+# The dedup and privacy families composed END-TO-END, one oracle pinning the
 # interactions (the training_mix_snapshot principle): exact dedup
 # first, then the FULL privacy triad computed over the SURVIVORS —
 # k-anonymity, l-diversity, t-closeness, in that order (each gate
@@ -1590,8 +1589,7 @@ _RG_BAND = 100      # n_chars band width (the sensitive attribute)
 
 
 def release_gate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Six-stage release funnel (r18 adds the LEAK GATE the r17
-    verdict called the missing fifth wall): raw → exact dedup →
+    """Six-stage release funnel, the LEAK GATE its fifth wall: raw → exact dedup →
     k-anonymity → l-diversity → t-closeness → winnow decontamination.
     The final stage counts the docs of every class that passed the
     privacy gates whose dedup-group TEXT shares no winnowing
@@ -1616,7 +1614,7 @@ def release_gate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-pair evidence rollups (the funnel discards them), and —
     # because the eval split is a SUBSET of the same corpus — both
     # sides derive from ONE persisted fingerprint pass instead of the
-    # general operator's two (r18 perf: ~4.9 s -> one fingerprint
+    # general operator's two (~4.9 s -> one fingerprint
     # scan; semantics pinned unchanged by the oracle and the
     # planted-leak pytest)
     fps = track(
@@ -1636,7 +1634,7 @@ def release_gate_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast hint: contamination is leak-sized by ASSUMPTION, not
     # construction (a widely-mirrored benchmark can flag a large
     # corpus fraction), so AQE decides from the measured size instead
-    # of a forced driver collect that could OOM (r18 review finding)
+    # of a forced driver collect that could OOM
     canon = (
         d.groupBy(F.md5(F.lower("text")).alias("h"))
         .agg(

@@ -194,7 +194,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE computing min-reachable-id per node."""
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD)
-    cc = connected_components(pairs, docs, id_col="doc_id")
+    cc = connected_components(pairs, docs)
     return cc.withColumn(
         "keep", (F.col("doc_id") == F.col("cluster_id")).cast("int")
     )
@@ -246,7 +246,7 @@ def dedup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     simpler policy it replaces."""
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD)
-    return canonicalize_clusters(docs, pairs, id_col="doc_id")
+    return canonicalize_clusters(docs, pairs)
 
 
 def dedup_canonicalize_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,7 +256,7 @@ def dedup_canonicalize_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence between the two plans fails this row."""
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD)
-    return canonicalize_clusters(docs, pairs, id_col="doc_id", skew_safe=True)
+    return canonicalize_clusters(docs, pairs, skew_safe=True)
 
 
 DEDUP_CANONICALIZE_ORACLE = f"""
@@ -454,7 +454,7 @@ def dedup_incremental_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE matches execution for all three invariants: the frame feeds
     # the precision re-check, the recall semi-join, AND the doc-level
     # rollup below — unpersisted, each consumer re-ran the whole
-    # cross-corpus band join + verification (round-7 review).
+    # cross-corpus band join + verification.
     matches = track(
         incremental_dedup_matches(batch, ref, threshold=JACCARD_THRESHOLD).persist(
             StorageLevel.MEMORY_AND_DISK
@@ -545,8 +545,8 @@ SELECT CAST(0 AS BIGINT) AS precision_violations, CAST(1 AS INT) AS recall_ok,
 # --- property oracles for the hash-dependent (no_oracle) approx paths -
 #
 # The approx operators' outputs depend on Spark-side hashing (xxhash64,
-# md5 simhash) that DuckDB can't reproduce, so the driver recorded them
-# as "runs = OK" in round 1. These check queries turn their INVARIANTS
+# md5 simhash) that DuckDB can't reproduce, so a row-hash check can only
+# record them as "runs = OK". These check queries turn their INVARIANTS
 # into driver-hashable rows: each emitted pair must satisfy the exact
 # predicate recomputed independently (precision), and the approx path
 # must find at least a fixed fraction of the exact twin's pairs
@@ -569,7 +569,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=JACCARD_THRESHOLD)
-    cc = connected_components(pairs, docs, id_col="doc_id")
+    cc = connected_components(pairs, docs)
     return grouped_split(cc, "cluster_id")
 
 

@@ -835,7 +835,7 @@ FROM bm25_ranked WHERE rank <= {BM25_TOPK}
 QUERIES.append(Query("bm25_search", bm25_search_q, BM25_SEARCH_ORACLE, "ext: BM25 search"))
 
 
-# --- hybrid sparse+dense retrieval: reciprocal-rank fusion (r18) ------
+# --- hybrid sparse+dense retrieval: reciprocal-rank fusion ------------
 
 RRF_DEPTH = 50      # candidate depth taken from each ranker
 RRF_C = 60          # the SIGIR'09 paper's constant
@@ -844,7 +844,7 @@ RRF_DENSE_QUERY = 0  # the dense query vector (vec_id == doc_id linkage)
 
 
 def hybrid_rrf_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval (r18): the BM25 keyword ranking and the exact
+    """Hybrid retrieval: the BM25 keyword ranking and the exact
     dense-cosine ranking for query vector 0 (the corpus linkage
     vec_id == doc_id the doc_semantic rows already use) fused by
     reciprocal-rank fusion at depth 50 — the standard RAG/search
@@ -937,7 +937,7 @@ def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import shuffle_corpus
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    return shuffle_corpus(docs, "doc_id", seed=SHUFFLE_SEED, shard_size=EXPORT_SHARD_SIZE)
+    return shuffle_corpus(docs, seed=SHUFFLE_SEED, shard_size=EXPORT_SHARD_SIZE)
 
 
 CORPUS_SHUFFLE_ORACLE = f"""
@@ -1008,7 +1008,7 @@ def multi_query_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     result-identical) — the term shuffle carries ~15 terms' postings
     instead of the corpus vocabulary.
 
-    Query construction gets the same pushdown (r12): ranking tf·idf
+    Query construction gets the same pushdown: ranking tf·idf
     for the 5 query docs only needs (a) their own term counts — the
     doc filter reaches the parquet scan — and (b) the GLOBAL df of
     the terms those docs contain. Both live in the operator's
@@ -1220,7 +1220,7 @@ def word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     ).select("p.w1", "p.w2")
     cab = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
-    # persist the vocab-sized doc-frequency frame (r19): it broadcasts
+    # persist the vocab-sized doc-frequency frame: it broadcasts
     # twice (c_a and c_b renames), and unpersisted each broadcast build
     # re-ran the token explode + groupBy over the cached corpus arrays
     # (profiled: two identical ~4.5 s CPU stages at sf0.1) for a frame
@@ -1703,7 +1703,7 @@ def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the oracle interpolates the OPERATOR's pattern constants — one
 # source of truth, so a pattern tweak cannot silently diverge the two
-# engines (round-7 cleanup)
+# engines
 from ..operators.text import ENC_CONTROL as _ENC_CONTROL
 from ..operators.text import ENC_MOJIBAKE as _ENC_MOJ
 from ..operators.text import ENC_REPLACEMENT as _ENC_REP
@@ -2235,7 +2235,7 @@ CMS_TOPK = 20
 
 def cms_topk_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch built from the VOCABULARY, not the occurrence stream
-    (r18, guide §2.3 "aggregate before you shuffle"): this query
+    (guide §2.3 "aggregate before you shuffle"): this query
     already pays the full exact groupBy for its top-20 true-count
     baseline, so the same (tok, true_c) frame feeds the sketch via
     ``weight_col`` — each distinct token is md5-hashed depth times
@@ -2319,7 +2319,7 @@ QUERIES.append(
 # word) plus the invariant tests below the operator.
 
 def bpe_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-tokenize on one corpus: since r19 the fused
+    """Train-then-tokenize on one corpus: the fused
     composition reuses the trainer's final vocabulary state instead of
     re-deriving it through every merge layer (result-identical —
     pinned against the two-step composition in
@@ -2445,7 +2445,7 @@ QUERIES.append(
 )
 
 
-# --- winnowing fingerprints (r16) -----------------------------------
+# --- winnowing fingerprints ----------------------------------------
 # The MOSS selection rule (Schleimer/Wilkerson/Aiken, SIGMOD 2003) over
 # 4-token shingles and 8-hash windows; the oracle below hardcodes those
 # widths, so pin them against the operator's defaults.
@@ -2467,7 +2467,7 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The k=4/w=8 winnowing fingerprint pipeline as DuckDB CTEs — ONE
 # encoding of the hash width / position packing / window slicing,
 # shared by all three winnowing oracles below so the math can never
-# drift apart between them (r17 review finding).
+# drift apart between them.
 _WINNOW_HS_CTES = """toks AS (
   SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS ws FROM documents
 ),
@@ -2502,9 +2502,9 @@ _WINNOW_FPS_HASH_CTE = """fps AS (
 # ... and the position-bearing half — selected fingerprints unpacked
 # to (pos, hash), train-side positions matched against the eval-side
 # hash set, merged into islands at the 11-token (w + k - 1) guarantee
-# gap. ONE encoding shared by the spans and trim oracles (r17 review
-# finding: the chain had been re-inlined in both, re-opening the
-# drift the _WINNOW_HS_CTES extraction closed).
+# gap. ONE encoding shared by the spans and trim oracles (re-inlining
+# the chain in both would re-open the drift the _WINNOW_HS_CTES
+# extraction closed).
 _WINNOW_ISL_CTES = """fpp AS (
   SELECT doc_id,
          1048575 - (fp % 1048576) AS fp_pos,
@@ -2671,7 +2671,7 @@ DECON_MOD2 = 89  # the second synthetic benchmark's id split
 
 
 def winnow_decontaminate_multi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-benchmark decontamination (r18): every 97th doc plays
+    """Multi-benchmark decontamination: every 97th doc plays
     benchmark b0, every 89th benchmark b1 (a doc divisible by both
     belongs to both — real benchmark suites overlap), the rest the
     training batch; ONE train-side fingerprint pass attributes hits
@@ -2742,7 +2742,7 @@ from ..operators.text import winnow_contaminated_spans  # noqa: E402
 
 
 def winnow_contaminated_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WHERE the leak is (r17): matched fingerprint positions of every
+    """WHERE the leak is: matched fingerprint positions of every
     contaminated train doc merged into excisable token spans (islands
     at the w + k - 1 = 11 guarantee gap) — the surgical consumer of
     winnow_decontaminate, over the same every-97th-doc eval split."""
@@ -2775,7 +2775,7 @@ from ..operators.text import winnow_decontaminate_trim  # noqa: E402
 
 
 def winnow_decontaminate_trim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCISE the leak (r17): the releasable corpus — every train doc
+    """EXCISE the leak: the releasable corpus — every train doc
     with its contaminated spans (padded by w - 1, the
     guaranteed-superset bound proven in the operator docstring)
     removed; clean docs pass through token-rejoined. Same
@@ -2843,7 +2843,7 @@ def block_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import block_shuffle
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    return block_shuffle(docs, "doc_id", seed=SHUFFLE_SEED, n_blocks=BLOCK_SHUFFLE_BLOCKS)
+    return block_shuffle(docs, seed=SHUFFLE_SEED, n_blocks=BLOCK_SHUFFLE_BLOCKS)
 
 
 BLOCK_SHUFFLE_ORACLE = f"""
@@ -2871,7 +2871,7 @@ QUERIES.append(
 )
 
 
-# --- deterministic weighted source interleave (r18) -------------------
+# --- deterministic weighted source interleave ------------------------
 
 INTERLEAVE_WEIGHTS = {"src0": 3, "src1": 2}  # the rest default to 1
 INTERLEAVE_SCALE = 1_000_000_000
@@ -2879,7 +2879,7 @@ INTERLEAVE_SHARD = 100
 
 
 def source_interleave_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stride-scheduled training order (r18): every doc exactly once,
+    """Stride-scheduled training order: every doc exactly once,
     sources interleaved at 3:2:1... ratios by integer virtual time —
     the loader-side complement of mixture_resample (which reweights by
     sampling; this reweights only the ORDER). src0/src1 carry the

@@ -24,7 +24,7 @@ diverge at decimal half-points). Averages are derived from the exact
 decimal sums with an explicit floor-based half-up, which is a pure
 function of identical doubles on both engines.
 
-Output-dtype policy (round-2 hash fix): the FINAL projection casts
+Output-dtype policy: the FINAL projection casts
 every decimal aggregate to DOUBLE and every integer sum to BIGINT, on
 BOTH engines. In the pandas/Arrow comparison path Spark renders
 DECIMAL as Decimal objects and integer sums as int64, while DuckDB

@@ -205,7 +205,6 @@ def incremental_dedup_stream(
     docs_stream: DataFrame,
     reference: DataFrame,
     sink,
-    id_col: str = "doc_id",
     n: int = 3,
     k: int = 32,
     bands: int = 8,
@@ -242,14 +241,14 @@ def incremental_dedup_stream(
         # action — N batches = N full reference passes. Plain persist
         # (not caching.track): the index must live for the query's
         # lifetime, not until the next registered-query boundary.
-        ref_index = build_dedup_index(reference, id_col, n, k, bands).persist()
+        ref_index = build_dedup_index(reference, n, k, bands).persist()
         ref_index.count()
 
     return _foreach_batch(
         docs_stream,
         sink,
         lambda batch_df: incremental_dedup(
-            batch_df, reference, id_col, n, k, bands, threshold, ref_index=ref_index
+            batch_df, reference, n, k, bands, threshold, ref_index=ref_index
         ),
     )
 
@@ -333,7 +332,7 @@ def winnow_decontaminate_stream(
     stream). Returns the configured ``DataStreamWriter`` — caller sets
     trigger/checkpoint and ``.start()``s it.
 
-    CACHE LIFECYCLE (r17 review finding): the inline eval_df path
+    CACHE LIFECYCLE: the inline eval_df path
     persists the index it builds for as long as the app runs — there
     is no automatic unpersist because the stream that needs it has no
     defined end. The handle is exposed as ``eval_index_handle`` on
@@ -352,7 +351,7 @@ def winnow_decontaminate_stream(
     # resolve against the batch operator's canonical widths so a
     # retune there moves BOTH faces together — a streaming face on
     # stale defaults would equality-join fingerprints computed with
-    # different (k, w) and silently match nothing (r17 review finding)
+    # different (k, w) and silently match nothing
     k = WINNOW_K if k is None else k
     w = WINNOW_W if w is None else w
     if eval_index is None:
@@ -815,8 +814,6 @@ def reservoir_stream(
     m: int,
     ares_seed: int = 1,
     seed: "list[tuple[str, int, float]] | Snapshot | None" = None,
-    id_type: str = "long",
-    stratum_type: str = "string",
 ):
     """Continuous weighted reservoir (A-Res) over a stream: each
     micro-batch is sampled DISTRIBUTED (operators.sampling.
@@ -848,22 +845,25 @@ def reservoir_stream(
     via row_number — the batch-parity guarantee above holds only for
     per-stratum-unique ids.
 
-    ``id_type``/``stratum_type`` name the columns' Spark SQL types for
-    the driver-side manifest frame (the dq_monitor_stream group_type
-    convention) — ids must still be NUMERIC (the A-Res key is
-    arithmetic on the id; pre-hash string keys first)."""
+    The manifest's id and stratum columns keep the stream's own types.
+    Ids must be NUMERIC (the A-Res key is arithmetic on the id;
+    pre-hash string keys first)."""
     from ..operators.sampling import weighted_sample
 
     if isinstance(seed, int):
-        # the pre-r11 signature had `seed: int = 1` as the A-Res hash
-        # seed in this position; fail loudly instead of silently
-        # replaying an int as a restart manifest
+        # an older signature took the A-Res hash seed (`seed: int = 1`)
+        # in this position; fail loudly instead of silently replaying
+        # an int as a restart manifest
         raise TypeError(
             "reservoir_stream(seed=...) now takes the restart manifest "
             "(list of (stratum, id, wkey) rows); pass the A-Res hash "
             "seed as ares_seed=..."
         )
-    schema = f"{stratum_col} {stratum_type}, {id_col} {id_type}, wkey double, rank int"
+    types = events_stream.schema
+    schema = (
+        f"{stratum_col} {types[stratum_col].dataType.simpleString()}, "
+        f"{id_col} {types[id_col].dataType.simpleString()}, wkey double, rank int"
+    )
     state: dict[str, list] = {}  # stratum -> [(wkey, id)] sorted desc
 
     def merge(samples) -> None:
@@ -1063,8 +1063,7 @@ def _merge_extreme(cur: float, v: float, kind: str) -> float:
     min()/max() are order-dependent under NaN (every comparison is
     False, so whichever argument sits in the short-circuit slot wins),
     which would break the pinned row-identical parity between a
-    split-stream run and the batch run_expectations audit (r13
-    advisory)."""
+    split-stream run and the batch run_expectations audit."""
     import math
 
     if kind == "max":
@@ -1083,7 +1082,6 @@ def dq_monitor_stream(
     seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
     group_col: "str | None" = None,
-    group_type: str = "string",
 ):
     """Continuous data-quality expectation monitor — the streaming twin
     of the batch ``operators.dq.run_expectations`` audit (and the sixth
@@ -1125,18 +1123,15 @@ def dq_monitor_stream(
     hi, passed) frame — constant |spec| rows — after every batch.
 
     ``group_col`` runs the audit PER GROUP (the batch ``group_cols``
-    twin: "completeness per source", live), with ``group_type`` naming
-    its Spark SQL type for the emitted frame (default ``string``; pass
-    e.g. ``"bigint"`` for an int shard id — the centroid_drift_stream
-    convention, r13 advisory): the per-batch aggregation
+    twin: "completeness per source", live): the per-batch aggregation
     groups on it, driver state holds one counter set per group, and
-    the emitted frame leads with the group column — |groups|·|spec|
-    rows. The group must be a SEMANTIC dimension (source, state,
-    shard), not data-sized: the per-batch collect and the driver dict
-    are |groups|-bounded, the same contract as cms_stream's watch
-    manifest. Grouped parity to the batch audit and grouped
-    snapshot/seed restart hold by the same counter-merge argument
-    (pinned in tests/test_streaming.py)."""
+    the emitted frame leads with the group column, typed as in the
+    stream — |groups|·|spec| rows. The group must be a SEMANTIC
+    dimension (source, state, shard), not data-sized: the per-batch
+    collect and the driver dict are |groups|-bounded, the same
+    contract as cms_stream's watch manifest. Grouped parity to the
+    batch audit and grouped snapshot/seed restart hold by the same
+    counter-merge argument (pinned in tests/test_streaming.py)."""
     kinds = {"completeness", "min", "max", "accepted"}
     names = []
     for entry in spec:
@@ -1154,6 +1149,7 @@ def dq_monitor_stream(
         state: dict = dict(seeded)
     else:
         state = {g: dict(c) for g, c in seeded.items()}
+        group_type = events_stream.schema[group_col].dataType.simpleString()
 
     # one aggregate per state counter; completeness and accepted
     # checks on one column share its non-NULL count
@@ -1250,9 +1246,7 @@ def centroid_drift_stream(
     events_stream: DataFrame,
     sink,
     group_col: str = "label",
-    vec_col: str = "embedding",
     quant: float = 1e6,
-    group_type: str = "string",
     seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
 ):
@@ -1282,14 +1276,16 @@ def centroid_drift_stream(
     back.
 
     ``sink(df, epoch_id)`` receives (group, n_vecs, cos_to_global,
-    norm_ratio) — |groups| rows — after every batch."""
+    norm_ratio) — |groups| rows, the group typed as in the stream —
+    after every batch."""
     from ..operators.similarity import centroid_drift_from_sums, centroid_sums
 
+    group_type = events_stream.schema[group_col].dataType.simpleString()
     # state: {(g, pos): [s, c]} exact longs
     state: dict = {k: list(v) for k, v in (_payload(seed) or {}).items()}
 
     def fold(batch_df: DataFrame) -> None:
-        rows = centroid_sums(batch_df, group_col, vec_col, quant).collect()
+        rows = centroid_sums(batch_df, group_col, quant).collect()
         for r in rows:  # |groups| x dim — bounded collect
             if r["s"] is None:
                 # every component NULL for this (g, pos): SQL sum
@@ -1331,8 +1327,6 @@ def t_closeness_stream(
     quasi_cols: "list[str] | tuple[str, ...]" = ("label",),
     sensitive_col: str = "band",
     t: float = 0.2,
-    quasi_types: "str | list[str]" = "string",
-    sensitive_type: str = "bigint",
     seed: "dict | Snapshot | None" = None,
     state_snapshot=None,
 ):
@@ -1362,16 +1356,14 @@ def t_closeness_stream(
     back.
 
     ``sink(df, epoch_id)`` receives (quasi…, class_size, t_tvd, t_emd,
-    keep) — |classes| rows — after every batch."""
+    keep) — |classes| rows, the quasi columns typed as in the stream —
+    after every batch."""
     from ..operators.sampling import t_closeness
 
     quasi_cols = list(quasi_cols)
-    qt = (
-        list(quasi_types)
-        if isinstance(quasi_types, (list, tuple))
-        else [quasi_types] * len(quasi_cols)
-    )
-    quasi_schema = ", ".join(f"{c} {ty}" for c, ty in zip(quasi_cols, qt))
+    types = records_stream.schema
+    quasi_schema = ", ".join(f"{c} {types[c].dataType.simpleString()}" for c in quasi_cols)
+    sensitive_type = types[sensitive_col].dataType.simpleString()
     # state: {(quasi…, value): n} exact longs
     state: dict = dict(_payload(seed) or {})
 

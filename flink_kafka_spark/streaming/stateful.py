@@ -56,8 +56,8 @@ N_SHARDS = 32
 def _epoch_s(pdf: pd.DataFrame, col: str = "ts") -> np.ndarray:
     """Vectorized epoch-seconds from a timestamp column, unit-safe
     (Arrow may hand the stateful op datetime64[ns] or [us] frames).
-    Replaces per-row ``row[col].timestamp()`` — the iterrows() pattern
-    VERDICT r1 flagged as the streaming bottleneck at scale."""
+    Replaces per-row ``row[col].timestamp()``, an iterrows() pattern that
+    was the streaming bottleneck at scale."""
     return pdf[col].to_numpy().astype("datetime64[s]").astype("int64")
 
 
@@ -494,7 +494,6 @@ def sequence_match_stream(
     ts_col: str,
     steps: list[tuple[str, str]],
     within_s: int,
-    key_type: str = "long",
 ) -> DataFrame:
     """Streaming twin of ``operators.patterns.match_sequence``
     (relaxed / skip-till-next contiguity): the generic form of Flink
@@ -515,7 +514,8 @@ def sequence_match_stream(
     the reference's timer-based GC. An event-time timeout re-fires
     the key on watermark advance even with no new arrivals.
 
-    Emits one row per completed chain: (key, ts_<name>... epoch-s).
+    Emits one row per completed chain: (key, ts_<name>... epoch-s), the
+    key typed as in the stream.
     """
     k = len(steps)
     names = [n for n, _ in steps]
@@ -526,6 +526,7 @@ def sequence_match_stream(
         F.col(key_col), F.col(ts_col).alias("_ts"), F.expr(mask_expr).alias("_mask")
     )
     out_cols = [key_col] + [f"ts_{n}" for n in names]
+    key_type = events.schema[key_col].dataType.simpleString()
     out_schema = f"{key_col} {key_type}, " + ", ".join(f"ts_{n} long" for n in names)
     state_schema = "buf_ts array<long>, buf_mask array<long>, chains array<array<long>>"
 
@@ -579,7 +580,7 @@ def sequence_match_stream(
             # themselves) only needs a wake-up to be GC'd at
             # t0 + within. Arming at watermark+1s instead re-fired
             # EVERY live key on EVERY watermark advance — an O(live
-            # keys) sweep per micro-batch (round-3/4 verdict item).
+            # keys) sweep per micro-batch.
             wake_s = None
             if held:
                 wake_s = held[0][0]  # pending is ts-sorted → min held ts

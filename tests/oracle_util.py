@@ -2,10 +2,10 @@
 
 The driver converts both results through pandas (Spark ``toPandas()``
 vs DuckDB ``.df()``), sorts columns by name, and hashes serialized
-cell values. Round 1 lesson (VERDICT.md "What's wrong" #1/#2): a lax
-``round(v, 9) + ==`` harness let ``Decimal('5.00') == 5 == 5.0`` pass
-locally while the driver hashed them differently — 11 queries showed
-rows_match+schema_match but hash_match:false. This harness therefore
+cell values. A lax ``round(v, 9) + ==`` harness let
+``Decimal('5.00') == 5 == 5.0`` pass locally while the hashes told
+them apart — 11 queries showed rows_match+schema_match but
+hash_match:false. This harness therefore
 compares:
 
 - pandas dtypes per column (datetime-ish dtypes collapsed to one
@@ -47,8 +47,7 @@ def _dtype_bucket(series: pd.Series) -> str:
     """Dtype kind-bucket matching the driver's serialization: integer
     widths collapse (int32(5) and int64(5) hash alike), float widths
     collapse, temporal dtypes collapse — but int-vs-float and
-    decimal-object-vs-float stay DISTINCT (5 vs 5.0 hash differently,
-    the round-1 bug class)."""
+    decimal-object-vs-float stay DISTINCT (5 vs 5.0 hash differently)."""
     s = str(series.dtype)
     if s.startswith(_TEMPORAL_PREFIXES) or s == "date32[day][pyarrow]":
         return "temporal"
@@ -78,8 +77,8 @@ def _ser_cell(v) -> str:
         return v.isoformat()
     if isinstance(v, datetime.date):
         # DATE renders as date objects in Spark but midnight Timestamps
-        # in DuckDB .df(); the driver hashes them as equal (round-1
-        # click_blacklist passed) — serialize both as midnight datetime.
+        # in DuckDB .df(); both serialize as the midnight datetime, so
+        # they hash equal (click_blacklist depends on it).
         return datetime.datetime(v.year, v.month, v.day).isoformat()
     if isinstance(v, decimal.Decimal):
         return f"Decimal({v})"

@@ -1,5 +1,5 @@
 """The driver records only a 2,000-byte stdout TAIL of bench.py and
-parses the last line as JSON. Round 10 lost its bench record because
+parses the last line as JSON. A bench record was once lost because
 the single output line grew past that tail (per-query maps at 75
 queries). bench.py now prints the detail record first and a compact
 summary LAST; these tests pin the compact line's size so BENCH_QUERIES
@@ -98,7 +98,7 @@ def test_compact_line_carries_budget_capped_per_query_seconds():
 
 
 def test_vs_baseline_survives_zero_timing(monkeypatch):
-    """ADVICE r10: a 0.0-rounded median must not abort the bench via
+    """A 0.0-rounded median must not abort the bench via
     math.log(0)."""
     vs = bench._vs_baseline(
         {"q": 0.0, "z": 0.0}, calibration=0.5, loaded=({"q": 1.0, "z": 0.0}, 0.5)

@@ -73,8 +73,8 @@ def test_approx_uniqueness_tracks_exact_within_rsd(spark):
     (row,) = run_expectations(df, [approx_uniqueness(F.col("k"), "k", 0.02)]).collect()
     assert abs(row["metric"] - 0.8) <= 0.8 * 3 * 0.02
     # default bound is the key-check band lo = 1 - 3*rsd: a 0.8-unique
-    # column must FAIL it (r13 advisory: the old unbounded default was
-    # a silent always-pass gate)
+    # column must FAIL it (an unbounded default would be a silent
+    # always-pass gate)
     assert row["lo"] == 0.94
     assert row["passed"] == 0
     (key_row,) = run_expectations(

@@ -227,10 +227,10 @@ def test_write_block_shuffled_materializes_the_epoch_order(spark, sf_dir, tmp_pa
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
     out = str(tmp_path / "epoch0")
-    write_block_shuffled(docs, out, "doc_id", seed=42, n_blocks=8)
+    write_block_shuffled(docs, out, seed=42, n_blocks=8)
 
     expected: dict = {}
-    for r in block_shuffle(docs.select("doc_id"), "doc_id", seed=42, n_blocks=8).collect():
+    for r in block_shuffle(docs.select("doc_id"), seed=42, n_blocks=8).collect():
         expected.setdefault(r.block_id, []).append((r.block_pos, r.doc_id))
     back = spark.read.parquet(out)
     assert back.count() == docs.count()

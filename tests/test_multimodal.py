@@ -1,5 +1,6 @@
 """Multimodal plumbing: synthesized media table, mapInPandas decode /
-frame-sample / feature-extract, and the gated real-codec entry points.
+frame-sample / feature-extract, and the standard-library WAV header
+parse.
 Oracle equivalence for decode/frame-sample runs via test_oracle.py; here
 we pin the non-SQL pieces against pure-Python references."""
 
@@ -9,7 +10,6 @@ import numpy as np
 import pytest
 
 from flink_kafka_spark.operators.multimodal import (
-    decode_image,
     extract_features,
     frame_sample,
     resize_image_batch,
@@ -65,16 +65,11 @@ def test_resize_truncates_and_pads(media):
     assert all(r.meta.byte_len == 32 for r in out)
 
 
-def test_real_decode_is_gated():
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        decode_image(b"\x89PNG")
-
-
 def test_documents_fixture_is_ascii_everywhere(spark):
     """MEDIA_FEATURES_ORACLE (queries/multimodal.py) compares a
     character-based DuckDB recompute (ascii/substring/length) against
     ``extract_features`` operating on UTF-8 payload BYTES; the parity
-    holds only while every fixture text is single-byte (r8 ADVICE). If
+    holds only while every fixture text is single-byte. If
     a future fixture plants non-ASCII (e.g. mojibake for
     encoding_audit), fail HERE with the real cause rather than as an
     opaque driver hash mismatch."""
@@ -344,85 +339,3 @@ def test_wav_header_duration_is_a_real_container_parse():
     assert wav_duration_ms(_wav_bytes(rate=44100, seconds=0.5)) == 500
     assert wav_duration_ms(b"not a wav payload at all") is None
     assert wav_duration_ms(b"") is None
-
-
-def test_real_codec_image_e2e(spark):
-    """Opportunistic end-to-end decode through
-    the REAL Pillow codec — skips cleanly where PIL is absent (this
-    sandbox), runs the full Spark mapInPandas pipeline where it
-    exists: a generated 2x2 PNG decodes to width=height=2 and the
-    result schema is bit-identical to the fake twin's
-    (DECODED_META_SCHEMA), so downstream consumers cannot tell the
-    twins apart."""
-    Image = pytest.importorskip("PIL.Image")
-    import io
-
-    from flink_kafka_spark.operators.multimodal import (
-        DECODED_META_SCHEMA,
-        MEDIA_SCHEMA,
-        decode_media_meta_real,
-    )
-
-    buf = io.BytesIO()
-    Image.new("RGB", (2, 2), (255, 0, 0)).save(buf, format="PNG")
-    png = buf.getvalue()
-    assert decode_image(png).size == (2, 2)
-
-    wav = _wav_bytes(rate=8000, seconds=1.0)
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png), (len(png), "test")),
-            (2, "audio", bytearray(wav), (len(wav), "test")),
-            (3, "image", bytearray(b"corrupt"), (7, "test")),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = decode_media_meta_real(media)
-    assert out.schema == DECODED_META_SCHEMA
-    rows = {r.doc_id: r for r in out.collect()}
-    assert (rows[1].width, rows[1].height) == (2, 2)
-    assert rows[1].duration_ms is None
-    assert rows[2].duration_ms == 1000 and rows[2].width is None
-    assert rows[3].width is None and rows[3].height is None
-    assert rows[3].byte_len == 7  # corrupt payload yields NULL meta, not a failed batch
-
-
-def test_real_codec_resample_audio():
-    """Skips where soundfile is absent (this sandbox); where present,
-    a 1 s 8 kHz tone resampled to 4 kHz halves the frame count and
-    preserves the endpoint samples (linear interpolation pins both)."""
-    pytest.importorskip("soundfile")
-    from flink_kafka_spark.operators.multimodal import resample_audio
-
-    wav = _wav_bytes(rate=8000, seconds=1.0)
-    out, rate = resample_audio(wav, 4000)
-    assert rate == 4000
-    assert abs(out.shape[0] - 4000) <= 1
-    assert out.shape[1] == 1
-
-
-def test_real_codec_gates_raise_cleanly_without_libs():
-    """In codec-less environments the gated entry points must raise
-    NotImplementedError with a pointer to the fake twin — not
-    ImportError mid-batch. (Skipped where the libs exist: the e2e
-    tests above take over there.)"""
-    import importlib.util
-
-    from flink_kafka_spark.operators.multimodal import (
-        decode_media_meta_real,
-        resample_audio,
-    )
-
-    if importlib.util.find_spec("PIL") is None:
-        with pytest.raises(NotImplementedError, match="decode_media_meta"):
-            decode_media_meta_real(None)
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image(b"\x89PNG")
-    if importlib.util.find_spec("soundfile") is None:
-        with pytest.raises(NotImplementedError, match="soundfile"):
-            resample_audio(b"RIFF", 4000)
-    # argument validation precedes the decode AND the import gate
-    # (r16 advice: a bad rate must not cost a soundfile decode) — this
-    # executes in every environment, with or without the codec
-    with pytest.raises(ValueError, match="rate must be positive"):
-        resample_audio(b"RIFF", 0)

@@ -34,7 +34,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     ],
 )
 def test_harness_rejects_dtype_drift(spark, sf_dir, spark_sql, oracle_sql):
-    """The round-1 bug class (rows+schema match, driver hash fails) must
+    """The dtype-drift bug class (rows+schema match, hash fails) must
     be locally reproducible: a deliberately mis-typed pair fails."""
     with pytest.raises(AssertionError):
         compare_spark_duckdb(spark.sql(spark_sql), oracle_sql, sf_dir)
@@ -109,7 +109,7 @@ def _assert_flat_schemas(spark, sf_dir, items):
 def test_no_registered_query_emits_nested_columns(spark, sf_dir):
     """The driver's pandas canonicalizer sorts and hashes every cell,
     so array/map/struct output columns raise `unhashable type: 'list'`
-    and burn a window slot as a red row (round-7: media_features).
+    and burn a window slot as a red row (media_features once did).
     Flat long form is the registry contract. Schema resolution is lazy
     for MOST queries; the driver-loop operators (connected-components
     canonicalize, pagerank, the BPE trainer) genuinely execute while

@@ -7,15 +7,15 @@ window-function sweep (row_number/rank/lag/running frames) that pins
 the total-order-tiebreak and integer-frame-sum conventions, plus a
 grouping-sets sweep (CUBE/ROLLUP/GROUPING SETS) that pins the
 grouping_id ↔ GROUPING bit-order and NULL-cell conventions, plus a
-KMV-sketch sweep (r13) that drives the md5-prefix hash, per-set
+KMV-sketch sweep that drives the md5-prefix hash, per-set
 k-minima window and integer-division estimator — the full sketch
 pipeline the registered KMV rows replicate — through generated
 set/value/k combinations, with a coverage assert that both the
 exact-below-k and estimator branches execute, plus a DQ-audit sweep
-(r13) that compiles random expectation sets over four tables through
+that compiles random expectation sets over four tables through
 run_expectations and a hand-assembled DuckDB twin, pinning the audit's
 single-round(6)-ratio, NULL-bound and accepted-set conventions, plus a
-z-order sweep (r13) that renders the full bounds→scale→bit-interleave→
+z-order sweep that renders the full bounds→scale→bit-interleave→
 bucket pipeline into both dialects across generated (columns, bits,
 buckets) combinations — the shift/mask convention class
 (shiftleft/shiftright/& ↔ <</>>/&) the one registered zorder_layout
@@ -318,8 +318,8 @@ def _gen_kmv_spec(rng: random.Random) -> str:
     """One generated KMV-sketch query: the full estimator pipeline —
     md5-prefix hash, per-set k-minima ROW_NUMBER window, exact-below-k
     / integer-division estimator branch — as ONE dialect-token
-    template (r13: the sketch oracles became a registered family, so
-    their conventions get the same fuzz the scalar ones have). k and
+    template (the sketch oracles are a registered family, so their
+    conventions get the same fuzz the scalar ones have). k and
     the set/value expressions vary so both the exact (< k) and
     estimator (>= k) branches execute across the sweep."""
     k = rng.choice([16, 64, 128])
@@ -427,7 +427,7 @@ def test_kmv_sweep_exercises_both_estimator_branches(spark):
     assert exact > 0 and estimated > 0, (exact, estimated)
 
 
-# --- DQ expectation sweep (r13) ----------------------------------------
+# --- DQ expectation sweep ----------------------------------------------
 # The registered dq_expectations row pins ONE hand-picked check set over
 # lineitem; this sweep generates random expectation sets over four
 # tables and replays each through BOTH surfaces — the Python
@@ -608,7 +608,7 @@ def test_dq_sweep_exercises_pass_and_fail(spark):
     assert outcomes == {0, 1}, outcomes
 
 
-# --- z-order interleave sweep (r13) --------------------------------------
+# --- z-order interleave sweep --------------------------------------------
 # The bit-shift/mask interleave is a NEW convention class (Spark
 # shiftleft/shiftright/& vs DuckDB <</>>/&, exact-BIGINT scaling by
 # integer division against aggregate bounds); the one registered

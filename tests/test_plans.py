@@ -18,13 +18,13 @@ from flink_kafka_spark.queries import all_queries
 # query -> (max exchanges, max sort-merge joins)
 #
 # Every DRIVER_WINDOW query (plus the bench-only dedup_minhash_lsh) is
-# pinned at the ceiling observed at sf0.001-0.1 — round-4's lesson: the
-# MinHash rework changed plan shape and the only detector was the bench
-# number after the fact. SMJ ceilings > 0 are deliberate and commented;
+# pinned at the ceiling observed at sf0.001-0.1: a MinHash rework once
+# changed plan shape and the only detector was the bench number after
+# the fact. SMJ ceilings > 0 are deliberate and commented;
 # everywhere else a sort-merge join means a broadcast degraded.
 PLAN_BOUNDS = {
-    # r18 NOTE on "+spread" annotations below: tables.spread_scan (the
-    # guide-§2.5 unsplittable-input remedy, centralized from the r7
+    # NOTE on "+spread" annotations below: tables.spread_scan (the
+    # guide-§2.5 unsplittable-input remedy, centralized from the
     # _lsh_bands gate) adds ONE round-robin exchange per corpus
     # tokenize/fingerprint pass when — and only when — the input
     # arrives in fewer file splits than cores, which is always true of
@@ -66,8 +66,8 @@ PLAN_BOUNDS = {
     # SMJ-bound like media_features_check (both sides corpus-sized);
     # the edit-sized probe joins AQE-broadcast at runtime. The static
     # count includes the persisted changelog's build plan, once.
-    # (+2 exchanges r10: the advisory fix distincts the edit-sized
-    # changed-id set before the minus join; +1 late-r10: the plus side
+    # (+2 exchanges: the changed-id set is distinct before the minus
+    # join; +1: the plus side
     # resolves the changelog to one winning op per id through an
     # edit-sized window — multi-op changelogs apply one final state)
     "agg_incremental_update": (10, 2),
@@ -93,7 +93,7 @@ PLAN_BOUNDS = {
     # a driver constant); the fold runs on the distinct-vocab frame
     # (one w-shuffle), broadcast-joins n_toks back to the unshuffled
     # occurrence stream, then the per-doc groupBy
-    "bpe_tokenize_stats": (2, 0),  # +spread x1 (apply words pass); r19: the
+    "bpe_tokenize_stats": (2, 0),  # +spread x1 (apply words pass); the
     # tokenizer reuses the trainer's final vocab state, so the apply-side
     # distinct-vocab exchange and its spread are gone from the plan
     # corpus histogram shuffle + single-partition window over the
@@ -104,11 +104,11 @@ PLAN_BOUNDS = {
     "cms_topk_estimates": (3, 0),
     # corpus shuffles: ev distinct + exact self-join baseline; the
     # other exchanges are on <= k x |types| sketch frames, every join
-    # a broadcast. r19 one-pass kmv_minima: the HLL-threshold sizing
-    # pass (its groupBy + the distinct-vs-window re-exchange) is gone —
+    # a broadcast. One-pass kmv_minima: no HLL-threshold sizing pass
+    # (its groupBy + the distinct-vs-window re-exchange) —
     # one mapInPandas partial-top-k + one k-bounded groupBy remain
     "kmv_set_cardinality": (13, 0),
-    # sketch-only pair algebra: ONE corpus pass (r19 one-pass
+    # sketch-only pair algebra: ONE corpus pass (one-pass
     # kmv_minima — partial-top-k mapInPandas inside the scan stage,
     # then a single k-bounded groupBy whose (s) partitioning the pair
     # rollup REUSES); everything after runs on the |sets|-row
@@ -146,7 +146,7 @@ PLAN_BOUNDS = {
     # exchanges (operator cell re-agg, class_size, value histogram,
     # 1-row global fold; the per-class cum window and the keep join
     # reuse existing partitioning/broadcasts) -> 1-row funnel agg.
-    # r18 LEAK-GATE stage: ONE persisted fingerprint pass over the
+    # LEAK-GATE stage: ONE persisted fingerprint pass over the
     # corpus serves both decontamination sides (the eval split is a
     # subset of the same corpus — winnow_decontaminate's defining
     # equality join minus its evidence rollups), and the group gate
@@ -237,7 +237,7 @@ PLAN_BOUNDS = {
     # everything joinable must broadcast
     "heavy_hitters_check": (9, 0),
     # pair-count shuffle + vocab-bounded broadcast joins + global rank
-    # window over the pair frame. r19: the doc-frequency frame is
+    # window over the pair frame. The doc-frequency frame is
     # persisted, so its explode + groupBy subtree appears once instead
     # of once per broadcast rename (5 -> 4; one corpus token pass
     # instead of two at any scale)
@@ -262,11 +262,11 @@ PLAN_BOUNDS = {
     # retrieval: bounded shuffles on natural keys
     "inverted_index": (2, 0),  # narrow postings: per-row array_distinct; +spread
     "bm25_search": (3, 0),  # +spread x2 (both narrow passes inline the gated scan pre-AQE)
-    # r18 stride interleave: per-source rn shuffle + export_shards'
+    # stride interleave: per-source rn shuffle + export_shards'
     # two-pass range machinery (the persisted range repartition + the
     # per-partition row_number regroup); offsets broadcast
     "source_interleave": (3, 0),
-    # r18 hybrid fusion: the two rankers' exchanges (BM25 stats fold +
+    # hybrid fusion: the two rankers' exchanges (BM25 stats fold +
     # top-k, dense per-query rank regroup) + ONE candidate-sized
     # fusion groupBy — the fused frames never exceed 2 x RRF_DEPTH
     # rows, so fusion adds no corpus-scale shuffle
@@ -283,7 +283,7 @@ PLAN_BOUNDS = {
     "training_mix_snapshot": (9, 0),  # +spread x2 (decontaminate shingle passes)
     "encoding_audit": (0, 0),  # pure regexp projection
     "markup_strip": (0, 0),  # chained-regexp projection
-    # composed: query construction (r12 doc_filter pushdown inside
+    # composed: query construction (doc_filter pushdown inside
     # tfidf_top_terms: 5-doc tf groupBy + cand-terms distinct +
     # candidate-pruned array_distinct df groupBy + per-doc rank
     # window = 4, all but the df explode bounded by the query docs)
@@ -301,8 +301,8 @@ PLAN_BOUNDS = {
     "dedup_prune_stats": (3, 0),  # +spread
     # bench headline (not in DRIVER_WINDOW itself): fan-out repartition
     # + band-bucket groupBy + candidate distinct; everything else
-    # broadcasts. This pin would have caught the round-4 regression.
-    "dedup_minhash_lsh": (3, 0),  # +spread x1 (banding pass; r19 dropped the
+    # broadcasts. This pin catches the MinHash plan-shape regression.
+    "dedup_minhash_lsh": (3, 0),  # +spread x1 (banding pass; no
     # post-semi verify-pass spread — candidate-bounded, see normalized_tokens)
     "dedup_simhash_check": (5, 0),  # +spread x2 (query + exact-baseline passes)
     # CC runs to convergence while the plan is BUILT (iterative
@@ -333,13 +333,13 @@ PLAN_BOUNDS = {
     # broadcast-swaps at runtime when matches are small. 2 of the 5
     # exchanges are the small-scan fan-out gate (skips at scale).
     "dedup_incremental": (5, 1),  # +spread x2 (batch + reference banding;
-    # r19 dropped the two verify-pass spreads — candidate-bounded)
+    # no spread on the two verify passes — candidate-bounded)
     # check sweep composes matches (executed ONCE, persisted for its
     # three consumers) + exact twin + rollup (same class as
     # dedup_minhash_lsh_check: stats-less derived-frame SMJs are
     # expected inside *_check verification queries)
-    "dedup_incremental_check": (24, 2),  # +spread x3 (banding passes only
-    # since r19; the sweep's exact twin keeps its own corpus spreads)
+    "dedup_incremental_check": (24, 2),  # +spread x3 (banding passes
+    # only; the sweep's exact twin keeps its own corpus spreads)
     # ANN family: exact baselines are one top-k shuffle; the *_check
     # sweeps compare approx vs exact so they carry both plans' shuffles
     # (SMJ between two derived frames without stats is expected there)
@@ -352,7 +352,7 @@ PLAN_BOUNDS = {
     # SemDeDup: the cell self-join and the id-key prune join are both
     # corpus×corpus BY DESIGN (neither side broadcasts at 100 TB; with
     # one cell-key regroup feeding the per-cell BLAS applyInPandas —
-    # no pair join, no flag join (round-7 rework)
+    # no pair join, no flag join
     "semantic_dedup": (1, 0),
     # MMR: brute-force candidates + one corpus scan for vectors; the
     # candidate-candidate pair join and the cogroup run on query_id —
@@ -380,8 +380,8 @@ PLAN_BOUNDS = {
     "ann_lsh_check": (12, 2),
     "ann_ivf_check": (12, 2),
     "ann_pq_check": (12, 2),
-    "dedup_minhash_lsh_check": (18, 1),  # +spread x3 (r19: the query's
-    # verify-pass spread dropped — candidate-bounded)
+    "dedup_minhash_lsh_check": (18, 1),  # +spread x3 (no spread on the
+    # query's verify pass — candidate-bounded)
     "uv_approx_check": (6, 1),
     # text/decontam: broadcast benchmark shingles + one (id,1) shuffle
     "decontaminate": (4, 0),  # +spread x2 (train + eval shingle passes)
@@ -431,9 +431,9 @@ PLAN_BOUNDS = {
     # (a degrade to SMJ — the intended plan when neither catalog side
     # broadcasts at 100 TB — would fail this pin loudly, which is the
     # point: it means stats changed underneath the query)
-    # +2 narrow exchanges since r8: the armed max_block hot-block cap
+    # +2 narrow exchanges: the armed max_block hot-block cap
     # adds a block-count aggregation (broadcast back as the hot set)
-    # +spread (r19): the catalog scan is spread before the candidate
+    # +spread: the catalog scan is spread before the candidate
     # join (the probe side was ONE task on single-file input, with the
     # whole Levenshtein verify serialized on it); the spread subtree
     # appears under the hot agg and both join sides pre-AQE (4 static
@@ -499,11 +499,10 @@ PLAN_BOUNDS = {
 
 
 def test_every_registered_query_is_pinned():
-    """Round-4 verdict #4, widened in round 6 from the driver window to
-    the WHOLE registry: every registered query needs a plan pin so a
-    shape change (new shuffle, degraded broadcast) fails pytest before
-    the bench or a driver row measures it. Registering a query without
-    a PLAN_BOUNDS entry fails here."""
+    """The WHOLE registry, not just DRIVER_WINDOW: every registered
+    query needs a plan pin so a shape change (new shuffle, degraded
+    broadcast) fails pytest before the bench measures it. Registering
+    a query without a PLAN_BOUNDS entry fails here."""
     unpinned = [n for n in all_queries() if n not in PLAN_BOUNDS]
     assert not unpinned, f"registered queries without a plan pin: {unpinned}"
 
@@ -511,8 +510,8 @@ def test_every_registered_query_is_pinned():
 @pytest.fixture(scope="module")
 def plan_sweep(spark, sf_dir):
     """ONE registry sweep shared by the shape pins and the nested-loop
-    guard (r10 second-review finding: two independent sweeps each
-    rebuilt every query's plan, which for the driver-loop queries —
+    guard (two independent sweeps would each rebuild every query's
+    plan, which for the driver-loop queries —
     bpe_train_merges, bpe_tokenize_stats, source_pagerank, the CC
     family — means fully EXECUTING the iterative computation twice
     per pytest run for identical plan text)."""
@@ -632,6 +631,49 @@ def test_no_operator_takes_a_join_strategy_option():
     assert not found, found
 
 
+# operator -> the non-test caller that sets its column-name options to
+# another name than the default
+COLUMN_OPTION_CALLERS = {
+    "flink_kafka_spark.operators.graph.pagerank": (
+        "queries.dedup.source_pagerank (id_col='source')"
+    ),
+    "flink_kafka_spark.operators.dedup.embedding_cosine_pairs": (
+        "queries.textops.doc_semantic_pairs (id_col='doc_id'), "
+        "tools/stress.py row embedding_cosine_pairs (vec_col='v')"
+    ),
+}
+
+
+def test_operators_take_their_columns_from_their_input():
+    """Operators use the table's column names, and monitors read column
+    types from the stream's schema: no public function in
+    ``flink_kafka_spark.operators`` or ``flink_kafka_spark.streaming``
+    takes a ``*_type``/``*_types`` parameter, and only the operators in
+    COLUMN_OPTION_CALLERS take a defaulted ``id_col``/``text_col``/
+    ``vec_col``. Signatures only; no Spark session."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import flink_kafka_spark.operators as ops
+    import flink_kafka_spark.streaming as streaming
+
+    types, columns = [], set()
+    for pkg in (ops, streaming):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
+            for name, fn in inspect.getmembers(mod, inspect.isfunction):
+                if fn.__module__ != mod.__name__ or name.startswith("_"):
+                    continue
+                for p in inspect.signature(fn).parameters.values():
+                    if p.name.endswith(("_type", "_types")):
+                        types.append(f"{mod.__name__}.{name}({p.name})")
+                    if p.name in ("id_col", "text_col", "vec_col") and p.default is not p.empty:
+                        columns.add(f"{mod.__name__}.{name}")
+    assert not types, types
+    assert columns <= set(COLUMN_OPTION_CALLERS), sorted(columns - set(COLUMN_OPTION_CALLERS))
+
+
 def test_iterative_loop_body_shapes(spark):
     """The iterative operators (PageRank, the CC hash-to-min loop)
     return localCheckpoint frames whose lineage is cut, so the registry
@@ -669,7 +711,7 @@ def test_iterative_loop_body_shapes(spark):
     def cc(spark, _):
         edges, nodes = chain(spark)
         pairs = edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-        return connected_components(pairs, nodes, id_col="id")
+        return connected_components(pairs, nodes.withColumnRenamed("id", "doc_id"))
 
     def run(fn):
         return loop_rounds(observe.read(

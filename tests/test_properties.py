@@ -37,7 +37,7 @@ events_strategy = st.lists(
 
 @given(events=events_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): login_fail_detect's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: login_fail_detect's full DuckDB oracle runs in the default sweep
 def test_consecutive_alert_matches_python(spark, events):
     base = 1_700_000_000
     rows = [
@@ -72,7 +72,7 @@ order_strategy = st.lists(
 
 @given(events=order_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): order_timeout's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: order_timeout's full DuckDB oracle runs in the default sweep
 def test_create_pay_timeout_matches_python(spark, events):
     base = 1_700_000_000
     rows = [
@@ -109,7 +109,7 @@ pair_strategy = st.tuples(
 
 @given(data=pair_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): order_ship_interval_join's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: order_ship_interval_join's full DuckDB oracle runs in the default sweep
 def test_interval_join_matches_python(spark, data):
     lefts, rights = data
     base = 1_700_000_000
@@ -198,7 +198,7 @@ def test_canonicalize_keeps_best_quality_not_min_id(spark):
     assert all(v == 1 for v in per_cluster.values())
 
 
-@pytest.mark.slow  # slow tier (r19): both canonicalize rows' full DuckDB oracles run in the default sweep
+@pytest.mark.slow  # slow tier: both canonicalize rows' full DuckDB oracles run in the default sweep
 def test_canonicalize_skew_safe_path_is_row_identical(spark):
     """The skew_safe=True plan (min_by partial aggregation + broadcast
     winner join, for boilerplate mega-clusters that would skew the rank
@@ -206,8 +206,8 @@ def test_canonicalize_skew_safe_path_is_row_identical(spark):
     default window plan — including a planted 300-member mega-cluster
     where the winner has the highest id (so a wrong tie-break or a
     dropped partial shows up as a different keeper), a small cluster
-    with quality ties (lowest id must win), singletons, and — round-6
-    advice — NULL- and NaN-quality members: both must LOSE to any real
+    with quality ties (lowest id must win), singletons, and NULL- and
+    NaN-quality members: both must LOSE to any real
     quality in BOTH plans (min_by's struct ordering sorts NULL first
     ascending and NaN last, the window's desc ordering did the exact
     opposite — the shared rank key makes divergence impossible), and an
@@ -249,7 +249,7 @@ def test_canonicalize_skew_safe_path_is_row_identical(spark):
         q = r[2]
         return (r[0], r[1], "nan" if q is not None and math.isnan(q) else q, r[3])
 
-    kw = dict(id_col="doc_id", quality=quality)
+    kw = dict(quality=quality)
     default = sorted(
         _key(r) for r in canonicalize_clusters(docs, edges, **kw).collect()
     )
@@ -270,9 +270,7 @@ def test_canonicalize_skew_safe_path_is_row_identical(spark):
     )
     ne = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     for arm in (False, True):
-        out = canonicalize_clusters(
-            nd, ne, id_col="doc_id", quality=F.col("q"), skew_safe=arm
-        )
+        out = canonicalize_clusters(nd, ne, quality=F.col("q"), skew_safe=arm)
         assert [r["doc_id"] for r in out.filter("keep = 1").collect()] == [1]
 
 
@@ -290,7 +288,7 @@ def test_corpus_shuffle_is_a_partitioning_invariant_permutation(spark):
     for parts in (1, 8):
         df = spark.createDataFrame(rows, "doc_id long").repartition(parts)
         out[parts] = sorted(
-            tuple(r) for r in shuffle_corpus(df, "doc_id", seed=7, shard_size=50).collect()
+            tuple(r) for r in shuffle_corpus(df, seed=7, shard_size=50).collect()
         )
     assert out[1] == out[8]
     positions = sorted(r[1] for r in out[1])
@@ -302,13 +300,13 @@ def test_corpus_shuffle_is_a_partitioning_invariant_permutation(spark):
     assert shard_sizes[max(shard_sizes)] == len(ids) % 50
     df = spark.createDataFrame(rows, "doc_id long")
     other = sorted(
-        tuple(r) for r in shuffle_corpus(df, "doc_id", seed=8, shard_size=50).collect()
+        tuple(r) for r in shuffle_corpus(df, seed=8, shard_size=50).collect()
     )
     assert other != out[1]  # seed changes the permutation
 
 
 def test_cc_checkpoints_release_at_query_boundary(spark):
-    """Round-5 verdict item 1 as a mechanical guard: the CC loop's
+    """A mechanical guard: the CC loop's
     localCheckpoint persists are invisible to DataFrame
     unpersist/clearCache, so the loop must hold at most the FINAL
     labels checkpoint after it returns (earlier rounds unpersisted as
@@ -331,7 +329,7 @@ def test_cc_checkpoints_release_at_query_boundary(spark):
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     )
     nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    assert connected_components(edges, nodes, id_col="doc_id").count() == n
+    assert connected_components(edges, nodes).count() == n
     resident = jsc.getPersistentRDDs().size() - base
     assert resident <= 1, f"{resident} persistent RDDs after CC (want <=1: final labels)"
     release_all()
@@ -405,7 +403,7 @@ def test_trim_duplicated_spans_excises_non_owner_regions(spark):
     assert (out[4].n_tokens, out[4].n_removed_tokens, out[4].cleaned_text) == (20, 20, "")
 
 
-@pytest.mark.slow  # slow tier (r19): dedup_incremental_check's invariant oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: dedup_incremental_check's invariant oracle runs in the default sweep
 def test_incremental_dedup_flags_cross_corpus_dups_only(spark):
     """Incremental dedup: a batch doc near-duplicating a REFERENCE doc
     is flagged with the right best match; a batch doc that only
@@ -446,7 +444,7 @@ span_corpus_strategy = st.lists(
 
 @given(corpus=span_corpus_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): dedup_span_stats/_trim full DuckDB oracles run in the default sweep
+@pytest.mark.slow  # slow tier: dedup_span_stats/_trim full DuckDB oracles run in the default sweep
 def test_span_stats_and_trim_match_python(spark, corpus):
     """span_dup_stats and trim_duplicated_spans vs a naive Python
     oracle on arbitrary tiny-vocab corpora (4 tokens, so 3-token span
@@ -495,7 +493,7 @@ def test_span_stats_and_trim_match_python(spark, corpus):
     assert got_trim == want_trim
 
 
-@pytest.mark.slow  # slow tier (r19): the bucketed-index plan pin in test_io stays default
+@pytest.mark.slow  # slow tier: the bucketed-index plan pin in test_io stays default
 def test_prebuilt_dedup_index_matches_inline_banding(spark, tmp_path):
     """The production incremental-dedup path: build_dedup_index written
     to parquet, reloaded, and passed via ref_index must yield EXACTLY
@@ -594,7 +592,7 @@ def test_cc_pointer_jumping_converges_on_a_pathological_chain(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    out = connected_components(edges, nodes, id_col="doc_id", max_iter=25)
+    out = connected_components(edges, nodes, max_iter=25)
     labels = {r.cluster_id for r in out.collect()}
     assert labels == {0}  # one component, min-id label
 
@@ -759,9 +757,9 @@ def test_fuzzy_match_pairs_hot_block_cap_is_lossless(spark):
     assert pairs(max_block=10_000) == uncapped  # no block refined
 
 
-@pytest.mark.slow  # slow tier (r19): the cap is off in every registered row; dedup_minhash_lsh_check stays default
+@pytest.mark.slow  # slow tier: the cap is off in every registered row; dedup_minhash_lsh_check stays default
 def test_minhash_lsh_mega_bucket_cap_bounds_pairs_keeps_connectivity(spark):
-    """The r13-verdict LSH hardening: a planted 10k-id boilerplate
+    """The LSH hardening: a planted 10k-id boilerplate
     bucket (identical text → identical band hash in EVERY band) must
     complete under a bounded pair budget when ``max_bucket`` is armed —
     uncapped it would emit C(10k,2) ≈ 5·10⁷ candidate pairs per band.
@@ -818,7 +816,7 @@ def test_minhash_lsh_mega_bucket_cap_bounds_pairs_keeps_connectivity(spark):
         } == uncapped
 
 
-@pytest.mark.slow  # slow tier (r19): value_drift_psi's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: value_drift_psi's full DuckDB oracle runs in the default sweep
 def test_value_drift_psi_detects_planted_shift(spark, tmp_path):
     """PSI on a constructed stream: a type whose value distribution
     jumps between halves scores far above the 0.25 'shifted' alarm
@@ -918,7 +916,7 @@ psi_strategy = st.lists(
 
 @given(samples=psi_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): value_drift_psi's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: value_drift_psi's full DuckDB oracle runs in the default sweep
 def test_value_drift_psi_matches_naive(spark, samples, tmp_path_factory):
     """The registered PSI query against a from-scratch Python
     reimplementation (global equal-width buckets from the data's own
@@ -1076,7 +1074,7 @@ def test_apply_changes_roundtrip_and_changelog_shape(spark):
     assert applied == sorted(tuple(r) for r in new.collect())
 
 
-@pytest.mark.slow  # slow tier (r19): scd2_history's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: scd2_history's full DuckDB oracle runs in the default sweep
 def test_scd2_history_constructed_runs(spark, tmp_path):
     """Constructed per-user sequences: runs open/close exactly at value
     changes, intervals tile the user's timeline ([from, to) chaining
@@ -1111,7 +1109,7 @@ def test_scd2_history_constructed_runs(spark, tmp_path):
     ]
 
 
-@pytest.mark.slow  # slow tier (r19): purchase_attribution's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: purchase_attribution's full DuckDB oracle runs in the default sweep
 def test_purchase_attribution_last_touch(spark, tmp_path):
     """Constructed timeline: a purchase credits the most recent
     STRICTLY-preceding click (same-instant click at the purchase row's
@@ -1208,7 +1206,7 @@ def _py_pagerank(edges, nodes, iterations=12, damping=85, unit=10**9):
     return r
 
 
-@pytest.mark.slow  # slow tier (r19): source_pagerank's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: source_pagerank's full DuckDB oracle runs in the default sweep
 def test_pagerank_matches_python_reference_exactly(spark):
     """Weighted graph with asymmetric weights, a dangling node (no
     out-edges) and a hub: the Spark ranks must equal the pure-Python
@@ -1232,7 +1230,7 @@ def test_pagerank_matches_python_reference_exactly(spark):
     assert got["hub"] > max(got["a"], got["b"], got["c"])
 
 
-@pytest.mark.slow  # slow tier (r19): source_pagerank's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: source_pagerank's full DuckDB oracle runs in the default sweep
 def test_pagerank_star_center_dominates_and_mass_is_bounded(spark):
     from flink_kafka_spark.operators.graph import pagerank
 
@@ -1250,7 +1248,7 @@ def test_pagerank_star_center_dominates_and_mass_is_bounded(spark):
     assert sum(got.values()) <= 10**9  # floor-division only loses mass
 
 
-@pytest.mark.slow  # slow tier (r19): the loop-body plan pin (broadcasts=0) covers the discipline in test_plans
+@pytest.mark.slow  # slow tier: the loop-body plan pin (broadcasts=0) covers the discipline in test_plans
 def test_pagerank_plans_shuffle_rank_joins_without_broadcast(spark, monkeypatch):
     """The billion-node scale contract, executable: with the broadcast
     threshold disabled (simulating a rank frame too big to broadcast),
@@ -1465,7 +1463,7 @@ def test_t_closeness_null_quasi_class(spark):
     assert a["keep"] == n["keep"] == 1
 
 
-@pytest.mark.slow  # slow tier (r19): release_gate_snapshot's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: release_gate_snapshot's full DuckDB oracle runs in the default sweep
 def test_release_gate_funnel_planted(spark, monkeypatch, tmp_path):
     """Planted funnel: duplicates collapse BEFORE class sizing (a
     class that is k-anonymous only thanks to copies must be
@@ -1527,9 +1525,9 @@ def test_release_gate_funnel_planted(spark, monkeypatch, tmp_path):
     assert out3["l_diverse"] == 12  # upstream stages unchanged
 
 
-@pytest.mark.slow  # slow tier (r19): release_gate_snapshot's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: release_gate_snapshot's full DuckDB oracle runs in the default sweep
 def test_release_gate_leak_stage_planted_and_excised(spark, monkeypatch, tmp_path):
-    """r18 leak gate, end to end: a 20-token benchmark doc (id 97 —
+    """The leak gate, end to end: a 20-token benchmark doc (id 97 —
     the every-97th eval split) is verbatim-embedded in 2 of the 14
     docs of an otherwise-releasable class. The funnel's new
     'decontaminated' stage must drop exactly those 2 (20 >= w+k-1=11,
@@ -1694,7 +1692,7 @@ tcl_strategy = st.lists(
 
 @given(rows=tcl_strategy)
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): t_closeness_audit's full oracle + the hand-computed test stay default
+@pytest.mark.slow  # slow tier: t_closeness_audit's full oracle + the hand-computed test stay default
 def test_t_closeness_fuzz_vs_exact_fraction_reference(spark, rows):
     """Fuzz sweep vs an exact-Fraction Python reference (ICDE 2007
     definitions): for random small corpora, every class's emitted TVD
@@ -1891,7 +1889,7 @@ def test_source_interleave_stride_ratios_and_determinism(spark):
     weights=st.lists(st.integers(min_value=1, max_value=4), min_size=5, max_size=5),
 )
 @settings(**SETTINGS)
-@pytest.mark.slow  # slow tier (r19): source_interleave's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: source_interleave's full DuckDB oracle runs in the default sweep
 def test_source_interleave_virtual_time_prefix_counts_exact(spark, sizes, weights):
     """Hypothesis pin of the stride guarantee: doc j of a weight-w
     source sits at vt = j*scale div w, so j <= m*w  <=>  vt <= m*scale
@@ -1955,7 +1953,7 @@ class TestBandedLevenshtein:
 
 
 class TestUnspreadVerifyPass:
-    """r19: the LSH verification passes (candidate-bounded by the
+    """The LSH verification passes (candidate-bounded by the
     semi-filter) no longer take the layout spread — spread=False must
     be a pure plan change, row-identical to the spread path."""
 

@@ -43,7 +43,7 @@ def test_uv_approx_within_rsd(spark, sf_dir):
         assert abs(approx[w] - ex) <= max(0.1 * ex, 5), (w, ex, approx[w])
 
 
-@pytest.mark.slow  # slow tier (r19): dedup_simhash_check's invariant oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: dedup_simhash_check's invariant oracle runs in the default sweep
 def test_simhash_matches_python(spark, sf_dir):
     import hashlib
 
@@ -136,7 +136,7 @@ def test_connected_components_chain_and_singletons(spark):
     )
     got = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(edges, nodes, id_col="doc_id").collect()
+        for r in connected_components(edges, nodes).collect()
     }
     want = {(i, 100) for i in range(100, 112)} | {(200, 200), (201, 200), (300, 300)}
     assert got == want
@@ -189,7 +189,7 @@ def test_connected_components_nonconvergence_raises(spark):
     edges = spark.createDataFrame(chain, ["id_a", "id_b"])
     nodes = spark.createDataFrame([(i,) for i in range(51)], ["doc_id"])
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, id_col="doc_id", max_iter=3)
+        connected_components(edges, nodes, max_iter=3)
 
 
 def test_pii_scan_and_redact_on_crafted_text(spark):
@@ -265,7 +265,7 @@ def test_salted_join_equals_plain(spark, sf_dir):
 def test_split_bucket_extreme_ids_cross_engine(spark):
     """The Knuth split bucket must agree between Spark and DuckDB and
     never overflow int64 — including ids past ~3.47e9 where the raw
-    (unreduced) multiply used to wrap (ADVICE round 1). Max BIGINT id
+    (unreduced) multiply used to wrap. Max BIGINT id
     included: ANSI Spark would error on overflow rather than wrap."""
     import duckdb
 

@@ -56,7 +56,7 @@ def test_int8_recall_near_exact(spark, sf_dir, exact):
     assert _recall(got, exact) >= 0.8
 
 
-@pytest.mark.slow  # slow tier (r19): semantic_dedup_check's invariant oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: semantic_dedup_check's invariant oracle runs in the default sweep
 def test_semantic_dedup_planted_groups(spark):
     """Min-id survivor rule on a constructed corpus: three well-
     separated duplicate groups (k-means must isolate them) plus

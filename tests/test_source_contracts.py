@@ -92,7 +92,7 @@ def test_socket_source_plan_contract(spark):
 
 
 def test_socket_source_end_to_end(spark):
-    """S3 EXECUTED, not just plan-pinned (round-7 'What's missing' #2):
+    """S3 EXECUTED, not just plan-pinned:
     a localhost TCP server feeds CSV lines through the real built-in
     socket provider, the stream parses them with the positional schema
     and lands them in a memory sink. No external peer needed — the
@@ -118,7 +118,7 @@ def test_socket_source_end_to_end(spark):
     def serve():
         # accept in a loop: if Spark's socket source reconnects after a
         # transient reset, a one-shot accept would leave it hanging
-        # until the 60s deadline (r8 ADVICE) — serve every connection
+        # until the 60s deadline — serve every connection
         # until the test signals done, keeping each open for reads
         conns = []
         server.settimeout(0.5)

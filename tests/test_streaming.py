@@ -777,7 +777,7 @@ def test_unique_visitor_stream(spark, tmp_path):
 # --- every streaming job starts and produces a valid plan ---
 
 
-@pytest.mark.slow  # slow tier (r19): every job it smokes has an individual default-tier twin test
+@pytest.mark.slow  # slow tier: every job it smokes has an individual default-tier twin test
 def test_all_jobs_smoke(spark, tmp_path):
     """Each remaining job runs end-to-end on a minimal fixture (the
     detailed-semantics tests above cover the rest)."""
@@ -1771,7 +1771,7 @@ def test_heavy_hitters_fold_equals_misra_gries_on_the_same_partitions(spark, tmp
 
 
 def test_reservoir_stream_restart_seeded_from_manifest_is_exact(spark, tmp_path):
-    """ADVICE r10: the reservoir restart contract is now executable —
+    """The reservoir restart contract is executable —
     the emitted manifest carries wkey, so seeding a new monitor from
     the last manifest's (stratum, id, wkey) rows continues exactly:
     the seeded run's final manifest equals batch-sampling ALL rows."""
@@ -1823,7 +1823,7 @@ def test_reservoir_stream_restart_seeded_from_manifest_is_exact(spark, tmp_path)
     assert got == want
 
 
-@pytest.mark.slow  # slow tier (r19): batch kmv oracles + the manifest composition test stay default
+@pytest.mark.slow  # slow tier: batch kmv oracles + the manifest composition test stay default
 def test_kmv_stream_bit_matches_batch_and_restarts_exactly(spark, tmp_path):
     """The KMV monitor's merge (k smallest distinct hashes of the
     per-batch k-minima) must make the streamed sketch IDENTICAL to
@@ -1912,7 +1912,7 @@ def test_kmv_stream_bit_matches_batch_and_restarts_exactly(spark, tmp_path):
 
 
 def test_reservoir_stream_rejects_legacy_int_seed():
-    """The pre-r11 signature had `seed: int` as the A-Res hash seed;
+    """An older signature had `seed: int` as the A-Res hash seed;
     that meaning moved to `ares_seed`. An int in `seed` must fail
     loudly, not silently sample with a different key."""
     import pytest
@@ -1977,7 +1977,7 @@ def test_reservoir_stream_replay_after_seed_is_idempotent(spark, tmp_path):
     assert got == want  # no id occupies two ranks, nothing evicted
 
 
-@pytest.mark.slow  # slow tier (r19): batch kll bounds pytest stays default
+@pytest.mark.slow  # slow tier: batch kll bounds pytest stays default
 def test_kll_stream_exact_below_k_bounded_above_and_restarts(spark, tmp_path):
     """The KLL monitor's contract: streamed quantiles for a set whose
     total count stays <= k are EXACT order statistics equal to the
@@ -2286,7 +2286,7 @@ def test_monitor_restart_seeded_with_snapshot_merges_once(spark, tmp_path, monit
     assert case.measure(seen[epoch], snaps.get(epoch)) == case.want
 
 
-@pytest.mark.slow  # slow tier (r19): batch dq_expectations oracle + the remaining restart twins stay default
+@pytest.mark.slow  # slow tier: batch dq_expectations oracle + the remaining restart twins stay default
 def test_dq_monitor_stream_row_identical_to_batch_and_restarts(spark, tmp_path):
     """The DQ monitor's counters (integer sums, running extrema) merge
     exactly, so after ANY batch split the final emitted frame must be
@@ -2533,48 +2533,82 @@ def test_dq_monitor_stream_grouped_matches_batch_grouped(spark, tmp_path):
     assert norm(seen_b[max(seen_b)]) == batch
 
 
-def test_dq_monitor_stream_non_string_group_type(spark, tmp_path):
-    """r13 advisory: a non-string group column (an int shard id) must
-    emit cleanly when its Spark SQL type is named via group_type — the
-    centroid_drift_stream convention — and the emitted group column
-    must carry that type."""
+# monitor -> (stream DDL, rows, build(stream, sink), typed output
+# columns, check on the last emitted rows): every group, id, stratum
+# and quasi column is a non-default type, so the emitted frame must
+# take it from the stream's schema
+_TYPED_MONITORS = {
+    "centroid_drift_stream": (
+        "label int, embedding array<double>",
+        [{"label": i % 2, "embedding": [1.0, float(i)]} for i in range(6)],
+        lambda st, sink: jobs.centroid_drift_stream(st, sink),
+        {"label": "int"},
+        lambda rows: {r[0] for r in rows} == {0, 1},
+    ),
+    "t_closeness_stream": (
+        "q int, s int",
+        [{"q": i % 2, "s": i % 3} for i in range(12)],
+        lambda st, sink: jobs.t_closeness_stream(st, sink, quasi_cols=["q"], sensitive_col="s"),
+        {"q": "int"},
+        lambda rows: [(r[0], r[1]) for r in rows] == [(0, 6), (1, 6)],
+    ),
+    "reservoir_stream": (
+        "h int, shard int",
+        [{"h": i, "shard": i % 2} for i in range(20)],
+        lambda st, sink: jobs.reservoir_stream(
+            st, sink, id_col="h", weight_sql="CAST(h + 1 AS DOUBLE)", stratum_col="shard", m=4
+        ),
+        {"h": "int", "shard": "int"},
+        lambda rows: len(rows) == 8,  # 2 strata x m=4
+    ),
+    "dq_monitor_stream": (
+        "shard bigint, value double",
+        [
+            {"shard": g, "value": v}
+            for g, v in ((0, 1.0), (0, None), (1, 3.0), (1, 4.0), (2, None))
+        ],
+        lambda st, sink: jobs.dq_monitor_stream(
+            st, sink, (("completeness", "value"),), group_col="shard"
+        ),
+        {"shard": "bigint"},
+        # per shard: completeness of value, and passed against bound 1.0
+        lambda rows: {r[0]: (r[2], r[5]) for r in rows}
+        == {0: (0.5, 0), 1: (1.0, 1), 2: (0.0, 0)},
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_TYPED_MONITORS))
+def test_monitor_emits_the_stream_column_types(spark, tmp_path, name):
+    """A monitor's emitted frame types its group, id, stratum and
+    quasi columns as the input stream does, with no type option: an
+    int or bigint column emits as itself instead of failing the
+    epoch's local frame."""
     import json
 
-    from flink_kafka_spark.streaming.jobs import dq_monitor_stream
-
-    rows = [(0, 1.0), (0, None), (1, 3.0), (1, 4.0), (2, None)]
-    d = tmp_path / "ints"
+    ddl, rows, build, typed, check = _TYPED_MONITORS[name]
+    d = tmp_path / "in"
     d.mkdir()
-    (d / "f0.json").write_text(
-        "\n".join(json.dumps({"shard": s, "value": v}) for s, v in rows) + "\n"
-    )
-    stream = spark.readStream.schema("shard bigint, value double").json(str(d))
-    seen = {}
+    (d / "f0.json").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+    seen: dict[int, list] = {}
 
     def sink(df, e):
-        assert dict(df.dtypes)["shard"] == "bigint"
-        seen[e] = sorted(map(tuple, df.collect()))
+        assert {c: t for c, t in df.dtypes if c in typed} == typed
+        seen[e] = sorted(map(tuple, df.collect()), key=lambda t: (t[0] is None, t))
 
     q = (
-        dq_monitor_stream(
-            stream,
-            sink,
-            (("completeness", "value"),),
-            group_col="shard",
-            group_type="bigint",
-        )
+        build(spark.readStream.schema(ddl).json(str(d)), sink)
         .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_ints"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )
     q.awaitTermination(120)
-    got = {t[0]: t for t in seen[max(seen)]}
-    assert got[0][2] == 0.5 and got[1][2] == 1.0 and got[2][2] == 0.0
-    assert got[1][5] == 1 and got[0][5] == 0  # completeness bound 1.0
+    assert q.exception() is None, q.exception()
+    assert seen and check(seen[max(seen)]), seen
 
 
 def test_dq_merge_extreme_matches_spark_nan_ordering(spark):
-    """r13 advisory: Python min()/max() are order-dependent under NaN.
+    """Python min()/max() are order-dependent under NaN.
     The monitor's cross-batch merge must follow Spark's ordering (NaN
     greater than any double) in BOTH argument orders, and agree with
     what Spark's min/max aggregates actually return on the same
@@ -2597,7 +2631,7 @@ def test_dq_merge_extreme_matches_spark_nan_ordering(spark):
     assert row["mn"] == 2.0 and math.isnan(row["mx"])
 
 
-@pytest.mark.slow  # slow tier (r19): batch embedding_drift oracle + the remaining restart twins stay default
+@pytest.mark.slow  # slow tier: batch embedding_drift oracle + the remaining restart twins stay default
 def test_centroid_drift_stream_row_identical_to_batch_and_restarts(spark, tmp_path):
     """The centroid monitor holds the batch operator's exact integer
     (group, dim) sums and scores them through the SAME
@@ -2662,7 +2696,7 @@ def test_centroid_drift_stream_row_identical_to_batch_and_restarts(spark, tmp_pa
     assert seen_b[max(seen_b)] == batch
 
 
-@pytest.mark.slow  # slow tier (r19): batch t_closeness oracle + the remaining restart twins stay default
+@pytest.mark.slow  # slow tier: batch t_closeness oracle + the remaining restart twins stay default
 def test_t_closeness_stream_row_identical_to_batch_and_restarts(spark, tmp_path):
     """The t-closeness monitor's state is the (class, value) cell
     count table — exact integer additions — and scoring runs the batch
@@ -2797,9 +2831,9 @@ def test_monitor_streams_survive_null_group_keys(spark, tmp_path):
         "\n".join(
             json.dumps(r)
             for r in [
-                {"s": None, "v": 3.0, "emb": [1.0, None]},
-                {"s": "a", "v": 1.0, "emb": [0.5, 0.25]},
-                {"s": "a", "v": 2.0, "emb": [0.5, None]},
+                {"s": None, "v": 3.0, "embedding": [1.0, None]},
+                {"s": "a", "v": 1.0, "embedding": [0.5, 0.25]},
+                {"s": "a", "v": 2.0, "embedding": [0.5, None]},
             ]
         )
         + "\n"
@@ -2807,7 +2841,7 @@ def test_monitor_streams_survive_null_group_keys(spark, tmp_path):
 
     def replay():
         return spark.readStream.schema(
-            "s string, v double, emb array<double>"
+            "s string, v double, embedding array<double>"
         ).json(str(d))
 
     seen: dict[int, list] = {}
@@ -2837,7 +2871,6 @@ def test_monitor_streams_survive_null_group_keys(spark, tmp_path):
                 map(tuple, df.collect()), key=lambda t: (t[0] is None, str(t[0]))
             )),
             group_col="s",
-            vec_col="emb",
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ck_cd_null"))
@@ -2846,47 +2879,6 @@ def test_monitor_streams_survive_null_group_keys(spark, tmp_path):
     q2.awaitTermination(120)
     final2 = seen2[max(seen2)]
     assert {row[0] for row in final2} == {"a", None}
-
-
-def test_reservoir_stream_non_long_id_type(spark, tmp_path):
-    """id_type/stratum_type parity with dq_monitor_stream's group_type:
-    a non-long numeric id and a non-string stratum (int shard ids)
-    must emit cleanly instead of failing schema verification inside
-    foreachBatch. (String ids stay out of contract: the A-Res key is
-    arithmetic on the id — pre-hash to numeric first.)"""
-    import json
-
-    from flink_kafka_spark.streaming.jobs import reservoir_stream
-
-    d = tmp_path / "res_int"
-    d.mkdir()
-    (d / "f0.json").write_text(
-        "\n".join(
-            json.dumps({"h": i, "shard": i % 2}) for i in range(20)
-        )
-        + "\n"
-    )
-    stream = spark.readStream.schema("h int, shard int").json(str(d))
-    seen: dict[int, list] = {}
-    q = (
-        reservoir_stream(
-            stream,
-            lambda df, e: seen.__setitem__(e, sorted(map(tuple, df.collect()))),
-            id_col="h",
-            weight_sql="CAST(h + 1 AS DOUBLE)",
-            stratum_col="shard",
-            m=4,
-            id_type="int",
-            stratum_type="int",
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_res_int"))
-        .start()
-    )
-    q.awaitTermination(120)
-    final = seen[max(seen)]
-    assert len(final) == 8  # 2 strata x m=4
-    assert all(isinstance(r[0], int) and isinstance(r[1], int) for r in final)
 
 
 def test_drift_monitor_catches_downward_shift(spark, tmp_path):

@@ -103,7 +103,7 @@ def test_tfidf_doc_filter_broadcast_gate_row_identical(spark, sf_dir):
 
 
 def test_degenerate_docs_no_crash(spark):
-    """ADVICE r2: zero-token docs crashed chunk_documents ('Illegal
+    """Zero-token docs crashed chunk_documents ('Illegal
     sequence boundaries') and 1-token docs crashed repetition_stats
     (descending sequence -> ws[i+1] INVALID_ARRAY_INDEX under ANSI).
     Both must now degrade gracefully, matching the DuckDB oracle:
@@ -506,7 +506,7 @@ def test_hashed_embedding_geometry(spark):
 
     assert vecs[1] == vecs[2]
     assert cos(vecs[1], vecs[3]) > cos(vecs[1], vecs[4])
-    # absolute decorrelation bound, not just ordering: the round-7
+    # absolute decorrelation bound, not just ordering: a
     # linear-parity sign bug produced ~0.9 cosines between DISJOINT
     # vocabularies (all sign vectors near-parallel) while still
     # passing the relative assertion above — guard the JL noise floor
@@ -853,7 +853,7 @@ def test_kmv_estimate_exact_below_k_and_bounded_error_above(spark):
 
 
 def test_kmv_minima_cross_batch_merge_and_null_semantics(spark):
-    """r19 one-pass internals (replaces the retired prefilter-miss
+    """One-pass internals (replaces the retired prefilter-miss
     test: the exact partial-top-k reducer has no threshold to miss, so
     the old loud-failure invariant is vacuous — exactness is now
     structural and pinned by the brute-force test above). Two
@@ -907,7 +907,7 @@ def test_kmv_minima_state_guard_fails_loudly(spark, monkeypatch):
 
 def test_kmv_pair_intersections_exact_and_estimated_match_python_replay(spark):
     """KMV set algebra: est_a/est_b/est_union/est_intersection and the
-    r13 difference columns est_a_minus_b/est_b_minus_a must bit-match
+    difference columns est_a_minus_b/est_b_minus_a must bit-match
     a pure-Python replay of the same integer estimator over the same
     md5-prefix hashes (the determinism contract), the both-exact pair
     must come out EXACT, and the sketch-path estimates must land
@@ -1085,7 +1085,7 @@ def test_bpe_apply_round_trips_the_learned_merges(spark):
 
 
 def test_kmv_pair_intersections_query_registered_surface(spark, sf_dir):
-    """Registered-query invariants for the r13 full-oracle row (the
+    """Registered-query invariants for the full-oracle row (the
     bit-exact value contract is the DuckDB oracle + the operator's
     Python-replay test): one row per unordered source pair, estimates
     positive, union >= each side's estimate would NOT hold for a
@@ -1110,7 +1110,7 @@ def test_kmv_pair_intersections_query_registered_surface(spark, sf_dir):
 
 
 def test_kll_quantile_rollup_query_registered_surface(spark, sf_dir):
-    """Registered-query invariants for the r13 rows-only row (value
+    """Registered-query invariants for the rows-only row (value
     bounds live in the operator pytests above): one row per event_type
     with non-NULL values, exact n_vals accounting, and monotone
     quantile columns."""
@@ -1136,7 +1136,7 @@ def test_kll_quantile_rollup_query_registered_surface(spark, sf_dir):
         assert r["q_50"] <= r["q_95"] <= r["q_99"]
 
 
-# --- winnowing fingerprints (r16) -----------------------------------
+# --- winnowing fingerprints ----------------------------------------
 
 def _py_winnow(text: str, k: int = 4, w: int = 8) -> set:
     """Pure-Python reference of the MOSS selection rule, mirroring
@@ -1250,7 +1250,7 @@ def test_winnow_overlap_pairs_detects_planted_run(spark):
 
 
 def test_winnow_plan_does_not_duplicate_the_hash_pipeline(spark, sf_dir):
-    """Regression pin for the r16 lambda-binding quadratic: when a
+    """Regression pin for the lambda-binding quadratic: when a
     stage's input array is referenced inside a HOF lambda body (rather
     than bound as the lambda's argument), projection collapse inlines
     the defining expression into every reference and the runtime
@@ -1270,7 +1270,7 @@ def test_winnow_plan_does_not_duplicate_the_hash_pipeline(spark, sf_dir):
 
 
 def test_winnow_decontaminate_planted_and_stored_index(spark):
-    """The decontamination consumer's contract (r17):
+    """The decontamination consumer's contract:
 
     - PLANTED LEAK — a train doc copying a w + k - 1 = 11-token run
       from an eval doc is flagged (the SIGMOD'03 guarantee end to
@@ -1370,43 +1370,7 @@ def test_winnow_rejects_over_long_documents(spark):
         winnow_fingerprints(big).collect()
 
 
-def test_block_assignment_handles_names_needing_backticks(spark):
-    """r16 advice: block_assignment interpolated id_col into a raw SQL
-    expr, so a column name with a space/dot/hyphen broke the block
-    hash while the column-API order key handled it fine. Both columns
-    now go through the column API — pin with a spaced name, and pin
-    that the rewrite did NOT change the hash (same (block_id, _k) as
-    the plain-named twin)."""
-    from flink_kafka_spark.operators.sampling import block_assignment
-
-    rows = [(i,) for i in range(50)]
-    plain = spark.createDataFrame(rows, "doc_id long")
-    spaced = plain.withColumnRenamed("doc_id", "doc id")
-    a = {
-        r["doc_id"]: (r["block_id"], r["_k"])
-        for r in block_assignment(plain, "doc_id").collect()
-    }
-    b = {
-        r["doc id"]: (r["block_id"], r["_k"])
-        for r in block_assignment(spaced, "doc id").collect()
-    }
-    assert a == b, "block assignment depends on the column NAME, not the values"
-
-
-def test_winnow_decontaminate_rejects_colliding_id_column(spark):
-    """Internal-column collision guard: an id column literally named
-    eval_id or fp_hash would silently mis-join against the eval index
-    — refuse loudly instead."""
-    import pytest as _pytest
-
-    from flink_kafka_spark.operators.text import winnow_decontaminate
-
-    df = spark.createDataFrame([(1, "a b c d e")], "eval_id long, text string")
-    with _pytest.raises(ValueError, match="collides with an internal column"):
-        winnow_decontaminate(df, df, id_col="eval_id")
-
-
-@pytest.mark.slow  # slow tier (r19): winnow_contaminated_spans' full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: winnow_contaminated_spans' full DuckDB oracle runs in the default sweep
 def test_winnow_contaminated_spans_localizes_planted_runs(spark):
     """The excision consumer's contract: a train doc leaking TWO
     separated eval runs yields exactly two spans, each inside its
@@ -1579,24 +1543,6 @@ def test_winnow_decontaminate_multi_single_bench_reduces_to_single(spark, sf_dir
     assert reduced == single
 
 
-def test_rrf_fuse_and_interleave_reject_colliding_columns(spark):
-    """The internal-column collision guards (the winnow-family rule
-    applied to the r18 operators): a caller whose id column happens to
-    be named like an internal/output column gets a loud error, not a
-    silently corrupted frame."""
-    import pytest
-
-    from flink_kafka_spark.operators.sampling import source_interleave
-    from flink_kafka_spark.operators.text import rrf_fuse
-
-    r = spark.createDataFrame([(1, 1)], "n_lists long, rank int")
-    with pytest.raises(ValueError, match="collides"):
-        rrf_fuse([r], id_col="n_lists")
-    d = spark.createDataFrame([(1, "a")], "position long, source string")
-    with pytest.raises(ValueError, match="collides"):
-        source_interleave(d, id_col="position")
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -1661,7 +1607,7 @@ class TestWeightedCms:
 
 
 class TestBpeTrainAndTokenize:
-    """r19: bpe_tokenize_stats reuses the trainer's final vocabulary
+    """bpe_tokenize_stats reuses the trainer's final vocabulary
     state instead of re-deriving it merge-layer by merge-layer. The
     fused composition must be row-identical to the two-step one
     (learn, collect the table, apply) — including the learned merge
@@ -1693,7 +1639,7 @@ class TestBpeTrainAndTokenize:
         sym0 = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
         from flink_kafka_spark.operators.text import _bpe_merge_step, _bpe_words
 
-        vocab = _bpe_words(docs, "doc_id", "text").select("w").distinct().select(
+        vocab = _bpe_words(docs).select("w").distinct().select(
             "w", sym0.alias("_s")
         )
         for left, right in merges:

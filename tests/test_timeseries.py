@@ -1,4 +1,4 @@
-"""Crafted-fixture semantics tests for the round-9 additions:
+"""Crafted-fixture semantics tests for the time-series operators:
 grid resample + forward-fill, RANGE-interval moving aggregates,
 first-arrival dedup (batch twin of dropDuplicatesWithinWatermark),
 and BPE merge-candidate induction."""
@@ -276,7 +276,8 @@ def test_dedup_late_packing_bound_holds():
     the min only orders correctly while event_id < 1e9 (and ts_s <
     ~9.2e9 for BIGINT headroom). The oracle shares the expression, so
     a fixture/generator drift past the bound would be silently wrong —
-    guard it loudly here (the r8 ASCII-guard precedent)."""
+    guard it loudly here (the ASCII-guard precedent in
+    test_multimodal)."""
     import os
 
     import duckdb
@@ -299,7 +300,7 @@ def test_dedup_late_packing_bound_holds():
     assert checked, "no testdata fixture found — the guard checked nothing"
 
 
-@pytest.mark.slow  # slow tier (r19): agg_incremental_update's full DuckDB oracle runs in the default sweep
+@pytest.mark.slow  # slow tier: agg_incremental_update's full DuckDB oracle runs in the default sweep
 def test_incremental_agg_handles_group_moves_adds_and_deletes(spark):
     """The fixture republish only edits text; this pins the cases it
     can't reach — an upsert MOVING an id between groups (subtract from
@@ -425,7 +426,7 @@ def test_key_skew_report_planted_hot_key_and_tie(spark):
 def test_resample_mixed_null_bucket_uses_nonnull_denominator(spark):
     """A bucket mixing NULL and non-null values must average over the
     non-null values only (conventional AVG): [2.0, NULL] -> cnt=2 but
-    bucket_avg=2.0, not a deflated 1.0 (r9 advisory)."""
+    bucket_avg=2.0, not a deflated 1.0."""
     from flink_kafka_spark.operators.timeseries import resample_ffill
 
     base = 1_700_000_000 - (1_700_000_000 % 60)
@@ -449,8 +450,8 @@ def test_resample_mixed_null_bucket_uses_nonnull_denominator(spark):
 def test_incremental_agg_multi_op_changelog_subtracts_once(spark):
     """A changelog carrying BOTH a delete and an upsert for the same id
     (not producible by changes_from_diff, but legal for the public
-    operator) must subtract that id's old contribution exactly once —
-    the r9 advisory's double-subtract case."""
+    operator) must subtract that id's old contribution exactly once,
+    not twice."""
     from flink_kafka_spark.operators.versioning import incremental_agg_maintenance
 
     facts = spark.createDataFrame(
@@ -472,7 +473,7 @@ def test_incremental_agg_multi_op_changelog_subtracts_once(spark):
 
 
 def test_incremental_agg_multi_op_plus_side_applies_one_final_state(spark):
-    """r10 second-review finding: the plus side must mirror the minus
+    """The plus side must mirror the minus
     side's multi-op tolerance — each id contributes AT MOST ONE final
     state. Two upserts for one id must not double-add, and with an
     ordered log (seq_col) upsert-then-delete must REMOVE the id, not

@@ -273,9 +273,9 @@ def connected_components(spark, s, tmp):
     # diameter 9 forces multiple rounds
     n = size(s, DOCS)
     edges, nodes = chain_graph(spark, n)
-    n_components = yield lambda: dedup.connected_components(
-        edges, nodes, id_col="doc_id"
-    ).select("cluster_id").distinct().count()
+    n_components = yield lambda: dedup.connected_components(edges, nodes).select(
+        "cluster_id"
+    ).distinct().count()
     assert n_components == n // 10, n_components
 
 
@@ -293,7 +293,7 @@ def canonicalize(spark, s, tmp):
     )
     planted = F.when(winner, F.lit(1.0)).otherwise(F.lit(0.1))
     stats = yield lambda: dedup.canonicalize_clusters(
-        nodes, edges, id_col="doc_id", quality=planted
+        nodes, edges, quality=planted
     ).filter("keep = 1").agg(
         F.count("*").alias("n"),
         F.sum((~winner).cast("int")).alias("wrong_winner"),
@@ -317,7 +317,7 @@ def cc_single_chain(spark, s, tmp):
     )
     chain_nodes = spark.range(n_chain).select(F.col("id").alias("doc_id"))
     n_comp = yield lambda: dedup.connected_components(
-        chain_edges, chain_nodes, id_col="doc_id", max_iter=25
+        chain_edges, chain_nodes, max_iter=25
     ).select("cluster_id").distinct().count()
     assert n_comp == 1, n_comp
 
@@ -465,7 +465,7 @@ def leakage_safe_split(spark, s, tmp):
     # three splits must all be non-empty. The labels are the row's
     # input; the split and its checks are timed.
     edges, nodes = chain_graph(spark, size(s, DOCS))
-    cc = dedup.connected_components(edges, nodes, id_col="doc_id")
+    cc = dedup.connected_components(edges, nodes)
 
     def split():
         sp = sampling.grouped_split(cc, "cluster_id")
@@ -1637,7 +1637,7 @@ def curve_main() -> None:
         t0 = time.perf_counter()
         _build_scaled_dir(spark, "/root/testdata/sf0.1", scaled, replicas)
         build_s = round(time.perf_counter() - t0, 2)
-        # warm each query shape once (codegen/reader init) — r9 lesson:
+        # warm each query shape once (codegen/reader init):
         # never time a session's first execution of a plan
         observe.warm(spark, [qs[name] for name in CURVE_QUERIES])
         failures = []
