@@ -38,9 +38,14 @@ WARM_DIR = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
 def run(spark, query, sf_dir: str) -> dict:
     """Build ``query`` at ``sf_dir`` and write it to the ``noop`` sink.
     ``wall_s`` is build + action; the release afterwards is untimed.
-    ``leaked_rdds`` counts RDDs still persistent after the release."""
+    ``leaked_rdds`` counts RDDs still persistent after the release.
+    ``codegen_compiles`` counts the classes Spark compiled in the
+    driver JVM during the run, each a generated-code cache miss; in
+    local mode the tasks run in that JVM, so theirs count too."""
     sc = spark.sparkContext
     group = f"observe:{query.name}:{uuid.uuid4().hex}"
+    compilations = _compilations(sc)
+    compiled = compilations.getCount()
     sc.setJobGroup(group, query.name)
     try:
         t0 = time.perf_counter()
@@ -54,12 +59,26 @@ def run(spark, query, sf_dir: str) -> dict:
         spark.catalog.clearCache()
         leaked = len(persistent_rdd_ids(sc))
     return {"name": query.name, "group": group, "build_s": t1 - t0,
-            "action_s": t2 - t1, "wall_s": t2 - t0, "leaked_rdds": leaked}
+            "action_s": t2 - t1, "wall_s": t2 - t0, "leaked_rdds": leaked,
+            "codegen_compiles": compilations.getCount() - compiled}
+
+
+def _compilations(sc):
+    """The JVM's histogram of Spark ``CodeGenerator`` compile times, its
+    count the classes compiled so far. Looking it up takes ~1.8 ms of
+    py4j calls on 4 cores, reading the count on the held object 0.05 ms."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME()
 
 
 def warm(spark, queries) -> None:
     """One untimed run of each query at sf0.001 (codegen, parquet reader
-    and broadcast init), so timed runs measure the steady state."""
+    and broadcast init), so timed runs measure the steady state. The
+    compiled classes last while the queries' distinct classes fit the
+    session's generated-code cache (8192 entries; the whole registry
+    compiles 2,614 at sf0.001), and they serve a timed run whose plan
+    generates the same code: a plan that AQE changes at a larger scale
+    factor compiles its new classes in the first timed run."""
     for q in queries:
         try:
             run(spark, q, WARM_DIR)

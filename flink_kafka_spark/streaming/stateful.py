@@ -141,7 +141,6 @@ def login_fail_stream(events: DataFrame, max_gap_s: int = 2, max_fails: int = 2)
 def _pair_match(
     tagged: DataFrame,
     key_col: str,
-    key_type: str,
     cols: tuple[str, str],
     waits: tuple[int, int],
     lone: tuple[str, str],
@@ -151,7 +150,8 @@ def _pair_match(
     tx_match_stream: per key, the first-arriving side waits for its
     partner under an event-time timer.
 
-    ``tagged`` holds ``key_col``, ``ts`` and ``_second`` (True for a
+    ``tagged`` holds ``key_col`` (bigint or string; its type is read
+    from ``tagged``'s schema), ``ts`` and ``_second`` (True for a
     second-side row). Per key, rows apply in ``ts`` order (stable, so
     ties keep arrival order): a row whose partner is pending emits
     ``(key, first_ts, second_ts, matched(first_ts, second_ts))`` and
@@ -176,7 +176,8 @@ def _pair_match(
     """
     out_cols = [key_col, *cols, "result_type"]
     wait_ms = np.array(waits, dtype=np.int64) * 1000
-    key_arrow = {"long": pa.int64(), "string": pa.string()}[key_type]
+    key_type = tagged.schema[key_col].dataType.simpleString()
+    key_arrow = {"bigint": pa.int64(), "string": pa.string()}[key_type]
     shard_schema = pa.schema([("key", key_arrow), ("ts", pa.int64()), ("second", pa.bool_())])
     # Arrow hands a long column holding NULLs over as float64, which
     # rounds ids above 2^53: a NULL key travels as a flag instead
@@ -283,7 +284,6 @@ def order_timeout_stream(orders: DataFrame, timeout_s: int = 900) -> DataFrame:
     return _pair_match(
         tagged,
         "order_id",
-        "long",
         ("create_ts_s", "pay_ts_s"),
         (timeout_s, timeout_s),
         ("order timeout", "payed but not found created log"),
@@ -318,7 +318,6 @@ def tx_match_stream(
     return _pair_match(
         pays.unionByName(rec),
         "tx_id",
-        "string",
         ("pay_ts_s", "receipt_ts_s"),
         (pay_wait_s, receipt_wait_s),
         ("unmatched_pay", "unmatched_receipt"),

@@ -113,3 +113,25 @@ def test_read_attributes_only_the_runs_jobs(spark):
     again = observe.read(spark, rec)
     assert (again["jobs"], again["stages"], again["tasks"]) == (
         first["jobs"], first["stages"], first["tasks"])
+
+
+# the ten queries of the benchmark's reference_surface workload
+REFERENCE_SURFACE = (
+    "hot_items_topn page_views unique_visitors channel_stats login_fail_detect "
+    "order_timeout sessionize funnel_conversions tpch_q3 tpch_q6"
+).split()
+
+
+def test_steady_pass_compiles_no_class(spark, sf_dir):
+    """Spark's generated-code cache holds the engine's working set, so
+    a query run a second time compiles nothing. The ten queries here
+    compile 108 distinct classes at sf0.001, more than Spark's default
+    of 100 entries: at that default the second pass compiled 58 of
+    them again."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+    qs = all_queries()
+    passes = [
+        sum(observe.run(spark, qs[n], sf_dir)["codegen_compiles"] for n in REFERENCE_SURFACE)
+        for _ in range(2)
+    ]
+    assert passes[1] == 0, passes

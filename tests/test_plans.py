@@ -750,6 +750,51 @@ def test_iterative_loop_body_shapes(spark):
     assert all(e["live_exchanges"] <= (2 if i < 2 else 4) for i, e in enumerate(cc))
 
 
+def test_kept_broadcast_hints_plan_broadcast_joins(spark, sf_dir):
+    """The operators hint a broadcast only where a side is bounded by
+    construction, and each kept hint must still plan a broadcast join
+    when the size estimate alone would not. PLAN_BOUNDS cannot see a
+    deleted hint at test scale, where auto-broadcast picks the same
+    join, so auto-broadcast is off here and every broadcast join comes
+    from a hint:
+
+    - the gap-fill grid's left join onto the observed buckets
+      (``timeseries._densify``), beside its 1-row bounds cross;
+    - the filtered tf-idf branch's candidate-term semi filter and its
+      dfreq join (``text.tfidf_top_terms`` with ``doc_filter``);
+    - ``text.inverted_index``'s query-term semi filter.
+
+    Their caller is multi_query_search for the last two; events_gapfill
+    and the streaming gap-fill emitter for the first."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_spark.caching import release_all
+    from flink_kafka_spark.operators.text import inverted_index, tfidf_top_terms
+    from flink_kafka_spark.operators.timeseries import resample_ffill
+    from flink_kafka_spark.tables import load
+
+    def joins(df):  # (broadcast hash, broadcast nested-loop, sort-merge)
+        a = audit(df)
+        return a["broadcasts"], a["bnlj"], a["smj"]
+
+    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    try:
+        docs = load(spark, sf_dir, "documents")
+        gapfill = joins(resample_ffill(load(spark, sf_dir, "events"), "event_type", "ts", "value", 300))
+        ranked = joins(tfidf_top_terms(docs, doc_filter=F.col("doc_id") < 5))
+        index = joins(inverted_index(docs, terms=spark.createDataFrame([("the",)], "term string")))
+    finally:
+        release_all()
+        # the session's value, not Spark's 10 MB default (see above)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    # the nested-loop join is the 1-row bucket bounds' hinted cross
+    assert gapfill == (1, 1, 0)
+    # the nested-loop join is the 1-row document count's hinted cross
+    assert ranked == (2, 1, 0)
+    assert index == (1, 0, 0)
+
+
 def test_audit_is_stable_across_cache_materialization(spark):
     """Auditing the same frame before and after its persisted input is
     materialized gives the same counts: the walk reads AQE's initial

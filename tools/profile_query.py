@@ -7,9 +7,11 @@ round-robin timed runs. For each query it prints where the last run's
 wall time went — per-stage executor time vs DRIVER GAPS (time inside
 the run covered by no running job: Catalyst analysis, AQE re-planning,
 collect processing, job submission latency), read from Spark's status
-stores. The last stdout line is JSON: median, min and all runs in
-seconds per query. This is the builder's measurement tool, not the
-driver contract; bench.py stays the one bench.
+stores, and how many classes each run compiled (``codegen_compiles``,
+each a generated-code cache miss). The last stdout line is JSON:
+median, min and all runs in seconds, and each run's compile count,
+per query. This is the builder's measurement tool, not the driver
+contract; bench.py stays the one bench.
 
 Usage: python tools/profile_query.py q1 [q2 ...] --sf DIR [--reps N]
            [--sql] [--explain TAG]
@@ -39,6 +41,7 @@ def _report(name: str, runs: list[float], rec: dict, r: dict, show_sql: bool) ->
     print(
         f"\n=== {name}: wall {rec['wall_s']:.3f}s (build {rec['build_s']:.3f}s, "
         f"action {rec['action_s']:.3f}s; all reps {[round(w, 3) for w in runs]}), "
+        f"codegen compiles {rec['codegen_compiles']}, "
         f"{r['jobs']} jobs, {r['stages']} stages, {r['tasks']} tasks, "
         f"executorRunTime {r['executor_run_s']:.2f}s, cpu {r['executor_cpu_s']:.2f}s, "
         f"spill {r['spill_bytes'] >> 10}K, driver gaps {r['driver_gap_s']:.2f}s"
@@ -77,11 +80,13 @@ def main() -> None:
     observe.warm(spark, queries)
 
     runs: dict[str, list[float]] = {n: [] for n in args.names}
+    compiles: dict[str, list[int]] = {n: [] for n in args.names}
     last: dict[str, tuple[dict, dict]] = {}
     for rep in range(args.reps):
         for q in queries:
             rec = observe.run(spark, q, args.sf)
             runs[q.name].append(rec["wall_s"])
+            compiles[q.name].append(rec["codegen_compiles"])
             if rep == args.reps - 1:  # read before later runs age it out
                 last[q.name] = rec, observe.read(spark, rec, sql=args.sql or bool(args.explain))
 
@@ -95,7 +100,7 @@ def main() -> None:
             print(f"wrote {path}", file=sys.stderr)
     print(json.dumps({
         n: {"median": round(sorted(w)[len(w) // 2], 3), "min": round(min(w), 3),
-            "runs": [round(x, 3) for x in w]}
+            "runs": [round(x, 3) for x in w], "codegen_compiles": compiles[n]}
         for n, w in runs.items() if w
     }))
 
