@@ -39,15 +39,18 @@ def run(spark, query, sf_dir: str) -> dict:
     """Build ``query`` at ``sf_dir`` and write it to the ``noop`` sink.
     ``wall_s`` is build + action; the release afterwards is untimed.
     ``leaked_rdds`` counts RDDs still persistent after the release.
-    ``codegen_compiles`` counts the classes Spark compiled in the
-    driver JVM during the run, each a generated-code cache miss; in
-    local mode the tasks run in that JVM, so theirs count too."""
+    ``action_epoch_ms`` is the wall clock (whole ms, like Spark's job
+    times) when the action started, which :func:`read` uses to split the
+    run's jobs. ``codegen_compiles`` counts the classes Spark compiled
+    in the driver JVM during the run, each a generated-code cache miss;
+    in local mode the tasks run in that JVM, so theirs count too."""
     sc = spark.sparkContext
     group = f"observe:{query.name}:{uuid.uuid4().hex}"
     compilations = _compilations(sc)
     compiled = compilations.getCount()
     sc.setJobGroup(group, query.name)
     try:
+        epoch0 = time.time()
         t0 = time.perf_counter()
         df = query.fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -59,15 +62,19 @@ def run(spark, query, sf_dir: str) -> dict:
         spark.catalog.clearCache()
         leaked = len(persistent_rdd_ids(sc))
     return {"name": query.name, "group": group, "build_s": t1 - t0,
-            "action_s": t2 - t1, "wall_s": t2 - t0, "leaked_rdds": leaked,
+            "action_s": t2 - t1, "wall_s": t2 - t0,
+            "action_epoch_ms": int((epoch0 + t1 - t0) * 1e3),
+            "leaked_rdds": leaked,
             "codegen_compiles": compilations.getCount() - compiled}
 
 
 def _compilations(sc):
     """The JVM's histogram of Spark ``CodeGenerator`` compile times, its
-    count the classes compiled so far. Looking it up takes ~1.8 ms of
-    py4j calls on 4 cores, reading the count on the held object 0.05 ms."""
-    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    count the classes compiled so far. One fully qualified lookup: py4j
+    resolves a dotted attribute chain one package segment at a time
+    (~1.8 ms on 4 cores). Reading the count on the held object takes
+    0.05 ms."""
+    metrics = getattr(sc._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return metrics.METRIC_COMPILATION_TIME()
 
 
@@ -87,20 +94,24 @@ def warm(spark, queries) -> None:
 
 
 def read(spark, record: dict, sql: bool = False) -> dict:
-    """Jobs, stages, tasks, executor time, shuffle and spill bytes and
-    driver-gap seconds (wall time covered by no job) of one run, plus
-    per-stage rows. ``sql=True`` adds ``operators`` (plan nodes ranked
-    by timing-metric seconds), ``executions`` (per SQL execution in id
-    order, its plan-audit counts, see :func:`_count_graph`) and
-    ``plan`` (the formatted final plan of the run's last execution)."""
+    """Jobs, ``build_jobs`` (the eager jobs of the DataFrame build, those
+    submitted before the action started), stages, tasks, executor time,
+    shuffle and spill bytes and driver-gap seconds (wall time covered by
+    no job) of one run, plus per-stage rows. ``sql=True`` adds
+    ``operators`` (plan nodes ranked by timing-metric seconds),
+    ``executions`` (per SQL execution in id order, its plan-audit
+    counts, see :func:`_count_graph`) and ``plan`` (the formatted final
+    plan of the run's last execution)."""
     sc = spark.sparkContext
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     job_ids = tracker.getJobIdsForGroup(record["group"])
-    spans, stage_ids = [], set()
+    spans, stage_ids, build_jobs = [], set(), 0
     for jid in job_ids:
         job = store.job(jid)
+        submitted = _epoch(job.submissionTime())
+        build_jobs += submitted < record["action_epoch_ms"] / 1e3
         if job.completionTime().isDefined():
-            spans.append((_epoch(job.submissionTime()), _epoch(job.completionTime())))
+            spans.append((submitted, _epoch(job.completionTime())))
         stage_ids.update(tracker.getJobInfo(jid).stageIds)
     stages = []
     for sid in sorted(stage_ids):
@@ -122,7 +133,7 @@ def read(spark, record: dict, sql: bool = False) -> dict:
             "shuffle_write_bytes": st.shuffleWriteBytes(),
             "spill_bytes": st.memoryBytesSpilled() + st.diskBytesSpilled(),
         })
-    out = {"jobs": len(job_ids), "stages": len(stages)}
+    out = {"jobs": len(job_ids), "build_jobs": build_jobs, "stages": len(stages)}
     for key in ("tasks", "executor_run_s", "executor_cpu_s", "shuffle_read_bytes",
                 "shuffle_write_bytes", "spill_bytes"):
         out[key] = sum(s[key] for s in stages)

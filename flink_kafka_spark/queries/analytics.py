@@ -973,9 +973,12 @@ def kmv_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     types = exact_set.select("t")
+    # both sides are the same |types|-row cache; without the hint the
+    # build side varied between runs of the same plan, and the join's
+    # generated code differs by side, so a rerun compiled new classes
     pairs = (
         types.select(F.col("t").alias("t1"))
-        .join(types.select(F.col("t").alias("t2")), F.col("t1") < F.col("t2"))
+        .join(F.broadcast(types.select(F.col("t").alias("t2"))), F.col("t1") < F.col("t2"))
     )
 
     # union sketch per pair: k smallest of the two kept sets' union

@@ -6,6 +6,19 @@ real multi-executor cluster at ~100 TB scale:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join
   strategy switch) so plans self-correct at scale.
+- AQE's coalescing floor (``coalescePartitions.minPartitionSize``) is
+  64 KB; Spark's default is 1 MB. AQE packs a shuffle into partitions
+  of ``max(floor, min(advisory size, total / defaultParallelism))``, so
+  at 1 MB every shuffle under about 1 MB ran its next stage as one
+  task. The benchmark's reference surface (sf0.1, 4 cores) writes
+  11.9 MB of shuffle per pass from 12 map stages of under 1 KB to
+  3.4 MB; at 1 MB the stages after them ran on 1 or 2 tasks
+  (login_fail_detect's 1.9 MB window shuffle on one), at 64 KB every
+  shuffle of 250 KB or more runs on all 4 cores. A shuffle larger than
+  the floor x the parallelism (here 256 KB) is coalesced exactly as
+  before, so large inputs are unchanged; a smaller one gets at most
+  total / 64 KB partitions, for example 16 for 1 MB. Streaming plans
+  run with AQE off, so streaming state partitioning does not change.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a
   cluster AQE's coalescing makes the initial number less critical.
 - Session timezone pinned to UTC so event-time semantics (and the
@@ -22,6 +35,16 @@ real multi-executor cluster at ~100 TB scale:
   recompiling costs more than keeping it. Every executor JVM keeps its
   own cache and compiles the same plans; the setting is a static SQL
   conf, so it reaches them through the session's conf.
+- Generated classes are not named after their codegen stage
+  (``spark.sql.codegen.useIdInClassName`` false; Spark's default puts
+  the stage id in the name). The id differs between two runs of the
+  same plan, so with it each run compiled renamed copies of classes
+  the cache already held: a second sf0.001 pass over the registry
+  compiled 125 classes, kmv_set_cardinality 10 of them on its second
+  run. Without it (4 cores) the first pass compiled 2,144 classes
+  against 2,606, because identical code in different stages shares one
+  class, and the second pass 19, from source_pagerank, profile_documents
+  and ann_ivf_check.
 """
 
 from __future__ import annotations
@@ -54,6 +77,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", str(64 * 1024))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -65,6 +89,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

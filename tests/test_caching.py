@@ -104,6 +104,7 @@ def test_read_attributes_only_the_runs_jobs(spark):
     rec = observe.run(spark, Query("two_jobs", build), "")
     first = observe.read(spark, rec, sql=True)
     assert first["jobs"] == 2
+    assert first["build_jobs"] == 1
     assert first["stages"] == len(first["stage_rows"]) >= 2
     assert first["tasks"] >= 2
     assert 0.0 <= first["driver_gap_s"] <= rec["wall_s"]
@@ -135,3 +136,14 @@ def test_steady_pass_compiles_no_class(spark, sf_dir):
         for _ in range(2)
     ]
     assert passes[1] == 0, passes
+
+
+def test_rerun_generates_the_same_classes(spark, sf_dir):
+    """With ``spark.sql.codegen.useIdInClassName`` off, a generated class
+    is named after its code, not after the stage id of the run, so a
+    plan run again finds its classes in the cache. kmv_set_cardinality
+    recompiled 10 classes on its second sf0.001 run with the id in the
+    name."""
+    q = all_queries()["kmv_set_cardinality"]
+    observe.run(spark, q, sf_dir)
+    assert observe.run(spark, q, sf_dir)["codegen_compiles"] == 0

@@ -762,13 +762,17 @@ def test_kept_broadcast_hints_plan_broadcast_joins(spark, sf_dir):
       (``timeseries._densify``), beside its 1-row bounds cross;
     - the filtered tf-idf branch's candidate-term semi filter and its
       dfreq join (``text.tfidf_top_terms`` with ``doc_filter``);
-    - ``text.inverted_index``'s query-term semi filter.
+    - ``text.inverted_index``'s query-term semi filter;
+    - the TPC-H dimension tables: q5's nation and region, q7's two
+      filtered nation sides;
+    - q22's 1-row scalar average, crossed onto customer.
 
-    Their caller is multi_query_search for the last two; events_gapfill
-    and the streaming gap-fill emitter for the first."""
+    Their caller is multi_query_search for the tf-idf and index hints;
+    events_gapfill and the streaming gap-fill emitter for the grid."""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark.caching import release_all
+    from flink_kafka_spark.queries.tpch import tpch_q5, tpch_q7, tpch_q22
     from flink_kafka_spark.operators.text import inverted_index, tfidf_top_terms
     from flink_kafka_spark.operators.timeseries import resample_ffill
     from flink_kafka_spark.tables import load
@@ -784,6 +788,7 @@ def test_kept_broadcast_hints_plan_broadcast_joins(spark, sf_dir):
         gapfill = joins(resample_ffill(load(spark, sf_dir, "events"), "event_type", "ts", "value", 300))
         ranked = joins(tfidf_top_terms(docs, doc_filter=F.col("doc_id") < 5))
         index = joins(inverted_index(docs, terms=spark.createDataFrame([("the",)], "term string")))
+        q5, q7, q22 = (joins(q(spark, sf_dir)) for q in (tpch_q5, tpch_q7, tpch_q22))
     finally:
         release_all()
         # the session's value, not Spark's 10 MB default (see above)
@@ -793,6 +798,11 @@ def test_kept_broadcast_hints_plan_broadcast_joins(spark, sf_dir):
     # the nested-loop join is the 1-row document count's hinted cross
     assert ranked == (2, 1, 0)
     assert index == (1, 0, 0)
+    # the fact-table joins shuffle; each hinted dimension broadcasts
+    assert q5 == (2, 0, 2)
+    assert q7 == (2, 0, 3)
+    # the nested-loop join is the hinted 1-row average's non-equi cross
+    assert q22 == (0, 1, 1)
 
 
 def test_audit_is_stable_across_cache_materialization(spark):
@@ -832,3 +842,28 @@ def test_executed_live_counts_stop_at_the_cache(spark):
     rec = observe.run(spark, Query("cached_agg", build), "")
     [e] = observe.read(spark, rec, sql=True)["executions"]
     assert (e["exchanges"], e["live_exchanges"]) == (2, 1)
+
+
+def test_small_shuffle_keeps_every_core(spark):
+    """AQE coalesces a shuffle's partitions up to at least
+    ``coalescePartitions.minPartitionSize``. At Spark's 1 MB default a
+    shuffle of a few hundred KB ran its post-shuffle stage as one task;
+    the session's 64 KB floor lets a shuffle of parallelism x 64 KB or
+    more keep a task per core (capped by the shuffle's partitions; with
+    more partitions than cores, AQE packs them into about one target
+    size per core, and uneven ones pack into a few more)."""
+    from pyspark.sql import functions as F
+
+    from flink_kafka_spark import observe
+    from flink_kafka_spark.queries import Query
+
+    par = spark.sparkContext.defaultParallelism
+
+    def build(spark, _):  # ~150 KB of shuffle per core: a distinct hash per row
+        key = F.sha2(F.col("id").cast("string"), 256)
+        return spark.range(par * 2500).groupBy(key.alias("k")).count()
+
+    r = observe.read(spark, observe.run(spark, Query("small_shuffle", build), ""))
+    [post] = [s for s in r["stage_rows"] if s["shuffle_read_bytes"]]
+    assert r["shuffle_write_bytes"] >= par * 64 * 1024
+    assert post["tasks"] >= min(par, int(spark.conf.get("spark.sql.shuffle.partitions")))

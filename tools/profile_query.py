@@ -7,7 +7,8 @@ round-robin timed runs. For each query it prints where the last run's
 wall time went — per-stage executor time vs DRIVER GAPS (time inside
 the run covered by no running job: Catalyst analysis, AQE re-planning,
 collect processing, job submission latency), read from Spark's status
-stores, and how many classes each run compiled (``codegen_compiles``,
+stores, how many of its jobs ran eagerly inside the DataFrame build,
+and how many classes each run compiled (``codegen_compiles``,
 each a generated-code cache miss). The last stdout line is JSON:
 median, min and all runs in seconds, and each run's compile count,
 per query. This is the builder's measurement tool, not the driver
@@ -42,7 +43,8 @@ def _report(name: str, runs: list[float], rec: dict, r: dict, show_sql: bool) ->
         f"\n=== {name}: wall {rec['wall_s']:.3f}s (build {rec['build_s']:.3f}s, "
         f"action {rec['action_s']:.3f}s; all reps {[round(w, 3) for w in runs]}), "
         f"codegen compiles {rec['codegen_compiles']}, "
-        f"{r['jobs']} jobs, {r['stages']} stages, {r['tasks']} tasks, "
+        f"{r['jobs']} jobs ({r['build_jobs']} in the build), "
+        f"{r['stages']} stages, {r['tasks']} tasks, "
         f"executorRunTime {r['executor_run_s']:.2f}s, cpu {r['executor_cpu_s']:.2f}s, "
         f"spill {r['spill_bytes'] >> 10}K, driver gaps {r['driver_gap_s']:.2f}s"
     )
